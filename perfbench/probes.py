@@ -59,6 +59,25 @@ class ProcTree:
         return total / CLK_TCK
 
     @staticmethod
+    def jit_cpu_s(pid: int | None) -> float:
+        """CPU of one JVM's JIT compiler threads ("C1/C2 CompilerThread")."""
+        total = 0
+        try:
+            tids = os.listdir(f"/proc/{pid}/task") if pid else []
+        except OSError:
+            tids = []
+        for tid in tids:
+            try:
+                with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                    raw = f.read()
+            except OSError:
+                continue
+            if "CompilerThre" in raw[: raw.rindex(")")]:
+                st = raw[raw.rindex(")") + 2 :].split()
+                total += int(st[11]) + int(st[12])
+        return total / CLK_TCK
+
+    @staticmethod
     def _status_kb(pid: int, key: str) -> int:
         try:
             with open(f"/proc/{pid}/status") as f:

@@ -14,7 +14,7 @@ Workloads (see ``workloads.py`` and ``METRICS.md``):
   generated ``documents`` / ``embeddings`` tables of 300 rows.
 
 A run sets up ``SETUPS`` times (Spark session, inputs, frozen schema),
-then warms up with ``WARM_UP_PASSES`` passes over the workload's ops;
+then warms up with the workload's ``warm_up_passes`` passes over its ops;
 ``setup_s`` is the median set-up plus the warm-up. It then runs whole passes, each a seeded
 permutation of the workload's ops, until ``--seconds`` have passed and
 at least ``MIN_PASSES`` are done. Every op's output, warm-up included,
@@ -27,17 +27,22 @@ Spans are kept in memory and written to ``.bench_work/traces/`` at the
 end.
 
 The last line of stdout is one JSON object: ``correct``, ``attempted``,
-``failed`` and ``metrics``. The gated end-to-end metrics are CPU and
-memory figures plus ``setup_s``. The line before it gives the wall-clock
-``op_p50_s`` and ``ops_per_s``, ``failed_frac``, ``op_p90_s`` when a run
-holds at least 100 ops, and on ``ingest_batch`` the ingest throughput and
-storage ratio.
+``failed`` and ``metrics``. The gated end-to-end metrics are
+``setup_s``, ``cpu_per_op_vs_ref`` and ``peak_rss_mb``.
+``cpu_per_op_vs_ref`` is ``cpu_s_per_op`` (each row's median CPU, JIT
+compiler threads left out, averaged over the rows) divided by the mean
+CPU seconds of a fixed reference loop run before each op. The line
+before the result gives ``cpu_s_per_op`` itself, the wall-clock
+``op_p50_s``, ``ops_per_s`` and ``pass_s``, ``failed_frac``,
+``op_p90_s`` when a run holds at least 100 ops, the JIT CPU per op, and
+on ``ingest_batch`` the ingest throughput and storage ratio.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import multiprocessing
 import os
 import random
 import shutil
@@ -50,8 +55,8 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SETUPS = 3
-WARM_UP_PASSES = 2
 MIN_PASSES = 2
+REFERENCE_STEPS = 150_000
 
 
 def _boot_clock() -> float:
@@ -87,7 +92,10 @@ def _session(get_spark, work: str):
         "perfbench",
         extra_conf={
             "spark.ui.enabled": "false",
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work}/tmp -XX:-UsePerfData -Xms1536m -XX:+AlwaysPreTouch",
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work}/tmp -XX:-UsePerfData -Xms1536m -XX:+AlwaysPreTouch"
+            # compiler threads live as long as the JVM, so their CPU can be
+            # told apart from the program's (see run_op)
+            " -XX:-UseDynamicNumberOfCompilerThreads",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -120,8 +128,28 @@ def _shutdown(spark, tree) -> None:
             pass
 
 
+def _reference_loop(_=None) -> float:
+    """CPU seconds of a fixed pure-Python loop: how fast the CPU it runs
+    on is right now. Other tenants slow this host's CPUs by up to 1.6x
+    from one minute to the next, which moves CPU seconds per op as much
+    as it moves this."""
+    t0 = time.thread_time()
+    d: dict[int, int] = {}
+    for i in range(REFERENCE_STEPS):
+        d[i % 997] = (d.get(i % 991, 0) + i) & 0xFFFF
+    return time.thread_time() - t0
+
+
 def _median(xs) -> float:
     return statistics.median(xs) if xs else 0.0
+
+
+def _row_medians(ops, key: str) -> dict[str, float]:
+    """Median of ``op[key]`` per row."""
+    by_row: dict[str, list] = {}
+    for op in ops:
+        by_row.setdefault(op["name"], []).append(op[key])
+    return {row: _median(xs) for row, xs in by_row.items()}
 
 
 def _layer_metrics(workload, traced, untraced, session_starts, jvm_rss_mb, written) -> dict:
@@ -130,6 +158,7 @@ def _layer_metrics(workload, traced, untraced, session_starts, jvm_rss_mb, writt
     out = {k: sum(op["layers"][k] for op in traced) / n for k in keys}
     out["session.start_s"] = _median(session_starts)
     out["session.jvm_rss_mb"] = jvm_rss_mb
+    out["session.jit_cpu_s"] = sum(op["jit"] for op in traced) / n
     out["sources.schema_infer_s"] = workload.schema_infer_s
     ops = max(len(traced) + len(untraced), 1)
     out["sources.files_written"] = written["files"] / ops
@@ -167,6 +196,11 @@ def main(argv=None) -> int:
     from workloads import WORKLOADS, Tracer
 
     tree = probes.ProcTree()
+    # One reference loop per core, side by side, so that every CPU the
+    # program's threads run on is sampled, not just one. Forked before
+    # Spark starts any thread; left out of the memory figures.
+    ref_pool = multiprocessing.get_context("fork").Pool(cores)
+    ref_pids = {p.pid for p in multiprocessing.active_children()}
     workload = WORKLOADS[args.workload](work, args.seed)
     spark, setups, session_starts = None, [], []
     for i in range(SETUPS):
@@ -180,9 +214,12 @@ def main(argv=None) -> int:
         workload.setup(spark, f"setup{i}")
         setups.append(_boot_clock() - t0)
     tracer = Tracer(spark)
+    jvm = tree.jvm_pid()
 
     def run_op(name: str) -> dict:
+        ref = statistics.mean(ref_pool.map(_reference_loop, range(cores), chunksize=1))
         tracer.begin()
+        j0 = tree.jit_cpu_s(jvm)
         c0 = tree.cpu_s()
         t0 = time.perf_counter()
         try:
@@ -191,7 +228,13 @@ def main(argv=None) -> int:
             traceback.print_exc()
             result = None
         latency = time.perf_counter() - t0
-        op = {"name": name, "latency": latency, "cpu": tree.cpu_s() - c0, "traced": tracer.enabled}
+        cpu = tree.cpu_s() - c0
+        jit = tree.jit_cpu_s(jvm) - j0
+        # JIT compiling is the JVM warming up, not the op's work: after
+        # the warm-up it was still about half the op's CPU, fell pass by
+        # pass, and carried most of the run-to-run spread.
+        op = {"name": name, "latency": latency, "cpu": cpu - jit, "jit": jit, "ref": ref,
+              "traced": tracer.enabled}
         if result is None:
             op["failed"] = True
         else:
@@ -200,22 +243,23 @@ def main(argv=None) -> int:
                 op["steps"] = tracer.step_seconds()
             op["fingerprint"], op["written"] = workload.check(spark, name, result)
         spark.catalog.clearCache()
-        print(f"# op {name} {latency:.3f}s traced={int(tracer.enabled)}", file=sys.stderr)
+        print(f"# op {name} {latency:.3f}s cpu={op['cpu']:.3f}s jit={jit:.3f}s ref={ref:.4f}s traced={int(tracer.enabled)}", file=sys.stderr)
         return op
 
     # Warm-up, part of the set-up: untraced passes in listed order. The
-    # first pays class loading and codegen; the JIT keeps speeding ops up
-    # through the second, and timing that pass spreads run medians ~2x.
+    # first pays class loading and codegen, 3-15x a later op's CPU. The
+    # JIT keeps speeding ops up after it; each row's median over the
+    # measured passes absorbs what is left.
     t0 = _boot_clock()
-    warm_ops = [run_op(name) for _ in range(WARM_UP_PASSES) for name in workload.rows]
+    warm_ops = [run_op(name) for _ in range(workload.warm_up_passes) for name in workload.rows]
     warm_up_s = _boot_clock() - t0
 
     rng = random.Random(args.seed)
     ops = []
     now = time.perf_counter
     t_start, passes, first_traced = now(), 0, None
-    # At least two passes, so every run holds the same number of samples
-    # per row (and a traced run traces each row once).
+    # At least two passes, so every row has two samples (and a traced run
+    # traces each row once).
     while passes < MIN_PASSES or now() - t_start < args.seconds:
         order = list(workload.rows)
         rng.shuffle(order)
@@ -228,8 +272,7 @@ def main(argv=None) -> int:
             ops.append(run_op(name))
         passes += 1
     measured_s = now() - t_start
-    peak_rss_mb = tree.peak_rss_mb()
-    jvm = tree.jvm_pid()
+    peak_rss_mb = tree.peak_rss_mb([p for p in tree.pids() if p not in ref_pids])
     jvm_rss_mb = tree.peak_rss_mb([jvm]) if jvm else 0.0
 
     checked = [op for op in warm_ops + ops if "fingerprint" in op]
@@ -238,6 +281,8 @@ def main(argv=None) -> int:
         if op["fingerprint"] != expected.get(op["name"]):
             print(f"# wrong result: {op['name']}", file=sys.stderr)
             op["failed"] = True
+    ref_pool.close()
+    ref_pool.join()
     _shutdown(spark, tree)
 
     good = [op for op in ops if not op.get("failed")]
@@ -247,11 +292,19 @@ def main(argv=None) -> int:
     lat = [op["latency"] for op in untraced]
     setup_s = _median(setups) + warm_up_s
     attempted = len(warm_ops) + len(ops)
+    # Each row's median, averaged over the rows: every row weighs the
+    # same, and one slow sample (or a mix that puts the median op on the
+    # edge between two rows) does not move the figure.
+    row_cpu = _row_medians(untraced, "cpu")
+    cpu_s_per_op = sum(row_cpu.values()) / max(len(row_cpu), 1)
     # Wall-clock figures: what a user waits for, but on a shared host
-    # their run-to-run spread (25-33% over ten runs) exceeds any usable
+    # their run-to-run spread (15-33% over ten runs) exceeds any usable
     # regression bound, so they are reported here and not gated.
     extra = {"failed_frac": failed / attempted, "op_p50_s": _median(lat),
              "ops_per_s": len(lat) / sum(lat) if lat else 0.0, "ops": len(ops), "passes": passes,
+             "pass_s": sum(_row_medians(untraced, "latency").values()),
+             "cpu_s_per_op": cpu_s_per_op, "ref_cpu_s": _median([op["ref"] for op in untraced]),
+             "jit_s_per_op": sum(op["jit"] for op in untraced) / max(len(untraced), 1),
              "measured_s": measured_s, "setup_first_s": setups[0], "warm_up_s": warm_up_s}
     if len(lat) >= 100:
         extra["op_p90_s"] = statistics.quantiles(lat, n=10)[-1]
@@ -270,14 +323,12 @@ def main(argv=None) -> int:
         with open(os.path.join(trace_dir, f"{args.workload}-{args.seed}.json"), "w") as f:
             json.dump({"spans": tracer.spans, "ops": ops}, f)
     else:
-        cpu = [op["cpu"] for op in untraced]
         metrics = {
             "setup_s": setup_s,
-            "op_cpu_p50_s": _median(cpu),
-            "cpu_s_per_op": sum(cpu) / max(len(cpu), 1),
+            "cpu_per_op_vs_ref": cpu_s_per_op / statistics.mean(op["ref"] for op in untraced),
             "peak_rss_mb": peak_rss_mb,
         }
-        units = {"setup_s": "s", "op_cpu_p50_s": "s", "cpu_s_per_op": "s", "peak_rss_mb": "MB"}
+        units = {"setup_s": "s", "cpu_per_op_vs_ref": "x", "peak_rss_mb": "MB"}
     shutil.rmtree(work, ignore_errors=True)
     print("# " + " ".join(f"{k}={v:.6g}" if isinstance(v, float) else f"{k}={v}" for k, v in extra.items()))
     print(json.dumps({
