@@ -22,6 +22,9 @@ previous DataFrame registered under the same key. Consequences:
 - Concurrent pipelines sharing a call site can at worst unpersist each
   other's staging mid-query, which costs recomputation, never
   correctness (Spark recomputes unpersisted partitions from lineage).
+  The release-and-register swap runs under one lock, so every generation
+  a caller displaces is released exactly once and none is left cached
+  with no registry entry to release it.
 
 The registry holds only DataFrame handles (plans), never rows or
 results, and is keyed by call site, never by data path — each call
@@ -31,29 +34,37 @@ survives between invocations.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 _STAGED: dict[str, DataFrame] = {}
+_LOCK = threading.Lock()
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session gone / already unpersisted — nothing to hold
 
 
 def staged_persist(df: DataFrame, key: str) -> DataFrame:
     """Persist ``df`` as the single live staging generation for ``key``,
     releasing whichever DataFrame the same call site registered before."""
-    prev = _STAGED.get(key)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass  # session gone / already unpersisted — nothing to hold
-    _STAGED[key] = df
-    return df.persist()
+    with _LOCK:
+        # unpersist before persisting: a rebuilt identical plan shares the
+        # old generation's cache entry, which the reverse order would drop
+        prev = _STAGED.pop(key, None)
+        if prev is not None:
+            _unpersist(prev)
+        _STAGED[key] = df
+        return df.persist()
 
 
 def release(key: str) -> None:
     """Explicitly release ``key``'s staging generation (test hook)."""
-    prev = _STAGED.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
+    with _LOCK:
+        prev = _STAGED.pop(key, None)
+        if prev is not None:
+            _unpersist(prev)

@@ -50,35 +50,39 @@ def score_rows(labs: DataFrame) -> DataFrame:
     because the aliases are non-cheap and multiply referenced). Same
     values, same single codegen stage."""
     cols = _colmap(labs)
-    out = labs
     # layer 1: every penalty ladder evaluated exactly once
-    for disease in DISEASE_WEIGHTS:
-        key = disease.lower()
-        for analyte, pcol in disease_penalty_columns(disease, cols).items():
-            out = out.withColumn(f"penalty_{key}_{analyte.lower()}", pcol)
+    out = labs.withColumns(
+        {
+            f"penalty_{disease.lower()}_{analyte.lower()}": pcol
+            for disease in DISEASE_WEIGHTS
+            for analyte, pcol in disease_penalty_columns(disease, cols).items()
+        }
+    )
     # layer 2: subscores + labels from the staged penalty columns
+    layer2 = {}
     for disease in DISEASE_WEIGHTS:
         key = disease.lower()
         staged_pens = {
             a: F.col(f"penalty_{key}_{a.lower()}") for a in DISEASE_WEIGHTS[disease]
         }
-        out = out.withColumn(
-            f"subscore_{key}", subscore_from_penalties(disease, staged_pens)
-        )
-        out = out.withColumn(f"label_{key}", overall_label(disease, staged_pens))
+        layer2[f"subscore_{key}"] = subscore_from_penalties(disease, staged_pens)
+        layer2[f"label_{key}"] = overall_label(disease, staged_pens)
+    out = out.withColumns(layer2)
     # layer 3: chips from staged labels, wellness from staged subscores
     subs = {d: F.col(f"subscore_{d.lower()}") for d in DISEASE_WEIGHTS}
     w, conf, used = wellness(subs)
-    for disease in DISEASE_WEIGHTS:
-        key = disease.lower()
-        out = out.withColumn(
-            f"chip_{key}", chip_for_label(disease, F.col(f"label_{key}"))
-        )
-    return (
-        out.withColumn("wellness", w)
-        .withColumn("wellness_confidence", conf)
-        .withColumn("wellness_areas_used", used)
-        .withColumn("patterns", detect_patterns(cols))
+    chips = {
+        f"chip_{d.lower()}": chip_for_label(d, F.col(f"label_{d.lower()}"))
+        for d in DISEASE_WEIGHTS
+    }
+    return out.withColumns(
+        {
+            **chips,
+            "wellness": w,
+            "wellness_confidence": conf,
+            "wellness_areas_used": used,
+            "patterns": detect_patterns(cols),
+        }
     )
 
 

@@ -9,6 +9,11 @@ chosen for correctness at small scale and sane behavior at large scale:
   cluster AQE coalesces from a high initial number, so leaving it larger is
   fine — pass ``shuffle_partitions`` explicitly.
 - Arrow enabled for the few pandas_udf paths (XGBoost scoring, multimodal).
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``): left on, every
+  ``Column`` function makes about five extra py4j round trips to record
+  its Python call site for error messages, which nearly quadruples the driver's
+  plan-building traffic. Error messages lose only that Python call site.
 """
 
 from __future__ import annotations
@@ -46,6 +51,12 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Call-site capture wraps every Column function in ~5 extra py4j
+        # round trips: one build of report_cvd sends 1,392 py4j commands
+        # with it, 372 without. PySpark caches the flag process-wide at
+        # the first Column call under an active session, so it must be
+        # set here, before any plan is built, not with spark.conf.set.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         # Timestamps in testdata are TIMESTAMP_NTZ-like micros; keep session

@@ -616,6 +616,17 @@ def test_mixture_draw_target_zero_source_emits_nothing(spark):
     assert all(r.epoch >= 0 for r in out), "negative epoch leaked"
 
 
+def _data_memo_names(mod) -> list[str]:
+    """Module-level dicts named like the banned memos (``_KNN_EDGES_CACHE``,
+    ``_MIX_FACTORS``, ``_IVF_CENTROIDS``, ``_PQ_BOOKS``)."""
+    return [
+        n
+        for n, v in vars(mod).items()
+        if isinstance(v, dict) and n.startswith("_")
+        and n.endswith(("_CACHE", "_FACTORS", "_CENTROIDS", "_BOOKS"))
+    ]
+
+
 def test_no_module_level_data_memos_in_query_modules():
     """r15 verdict #2 (generalized r16): no plan module may hold
     module-level DATA-derived state keyed on the corpus path — memoized
@@ -628,13 +639,16 @@ def test_no_module_level_data_memos_in_query_modules():
     import healthcare_aws_data_engineering_spark.plans.training_data_queries as t
 
     for mod in (a, c, t):
-        offenders = [
-            n
-            for n, v in vars(mod).items()
-            if isinstance(v, dict) and n.isupper() is False and n.startswith("_")
-            and n.endswith(("_CACHE", "_FACTORS", "_CENTROIDS", "_BOOKS"))
-        ]
+        offenders = _data_memo_names(mod)
         assert not offenders, (mod.__name__, offenders)
+
+
+def test_data_memo_scan_flags_an_injected_memo(monkeypatch):
+    """The scan above must catch the upper-case names it bans."""
+    import healthcare_aws_data_engineering_spark.plans.corpus_queries as c
+
+    monkeypatch.setattr(c, "_X_CACHE", {}, raising=False)
+    assert "_X_CACHE" in _data_memo_names(c)
 
 
 def test_mixture_draw_exact_hits_targets_exactly(spark):

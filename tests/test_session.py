@@ -1,0 +1,84 @@
+"""Fixed per-op costs the session and the package remove: DataFrame
+call-site capture on the driver (``session.py``) and per-task zip
+directory re-reads on the Python workers (the package ``__init__``)."""
+
+from __future__ import annotations
+
+import sys
+import zipimport
+
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+import py4j.java_gateway
+from pyspark.sql import functions as F
+
+import healthcare_aws_data_engineering_spark as pkg
+from healthcare_aws_data_engineering_spark.plans.testdata_queries import QUERIES
+
+
+def test_session_turns_off_call_site_capture(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def _tiny_events(path: str) -> None:
+    n = 200
+    kinds = ["click", "view", "signup", "purchase", "error"]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(
+                    [1_704_067_200_000_000 + i * 3_600_000_000 * 7 for i in range(n)],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([i % 9 for i in range(n)], pa.int64()),
+                "event_type": [kinds[i % 5] for i in range(n)],
+                "value": [float(50 + (i * 37) % 200) for i in range(n)],
+                "props": ['{"k": 0}'] * n,
+            }
+        ),
+        f"{path}/events.parquet",
+    )
+
+
+def test_wellness_build_py4j_traffic_is_bounded(spark, tmp_path, monkeypatch):
+    """One build of wellness_monthly sends 7,500-8,200 py4j commands with
+    call-site capture on and one withColumn call per column, about 2,200
+    with capture off and one withColumns call per scoring layer."""
+    _tiny_events(str(tmp_path))
+    build = QUERIES["wellness_monthly"]
+    build(spark, str(tmp_path))  # caches the table schema
+    sent = [0]
+    send = py4j.java_gateway.GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counting)
+    df = build(spark, str(tmp_path))
+    monkeypatch.undo()
+    assert sent[0] < 3500, sent[0]
+    assert df.count() > 0
+
+
+def test_worker_shim_keeps_zip_directories_driver_untouched(spark):
+    @F.pandas_udf("boolean")
+    def shim_installed(ids: pd.Series) -> pd.Series:
+        import zipimport
+
+        import healthcare_aws_data_engineering_spark as pkg
+
+        shimmed = zipimport.zipimporter.invalidate_caches is pkg._keep_zip_directories
+        return pd.Series([shimmed] * len(ids))
+
+    rows = (
+        spark.range(0, 8, numPartitions=4)
+        .select(shim_installed("id").alias("shimmed"))
+        .collect()
+    )
+    assert len(rows) == 8
+    assert all(r.shimmed == (sys.version_info < (3, 13)) for r in rows)
+    assert zipimport.zipimporter.invalidate_caches is not pkg._keep_zip_directories
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"

@@ -78,3 +78,45 @@ def test_staged_persist_replaces_previous_generation(spark):
     staging.release("test.site")
     assert not df2.storageLevel.useMemory
     staging.release("test.site")  # idempotent, no KeyError
+
+
+def test_concurrent_callers_leave_no_orphaned_generation(spark):
+    """Callers racing on one call site: once the site is released, no
+    generation any of them registered may still be cached. Without the
+    lock two callers can read the same previous generation, and the one
+    whose registration is overwritten stays persisted with no owner."""
+    import sys
+    import threading
+
+    spark.catalog.clearCache()
+    base = _docs(spark).select("doc_id")
+    n_threads, rounds = 8, 6
+    made: list = []
+    errors: list = []
+
+    def caller(t: int) -> None:
+        try:
+            for r in range(rounds):
+                df = base.where(F.col("doc_id") != t * rounds + r)
+                made.append(df)
+                staging.staged_persist(df, "test.race")
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=caller, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads), "callers hung"
+    assert not errors, errors
+    assert len(made) == n_threads * rounds
+    staging.release("test.race")
+    orphans = [df for df in made if df.storageLevel.useMemory]
+    assert not orphans, f"{len(orphans)} generations left cached with no owner"
+    spark.catalog.clearCache()
