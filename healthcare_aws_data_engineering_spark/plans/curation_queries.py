@@ -39,7 +39,7 @@ BM25_K = 25
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return decontaminate(spread(load_table(spark, sf_dir, "documents")))
+    return decontaminate(load_table(spark, sf_dir, "documents"))
 
 
 def q_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,7 +48,7 @@ def q_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction — result-identical to `decontaminate`, so it shares that
     query's oracle verbatim (the strongest correctness statement a scale
     variant can make)."""
-    return bloom_decontaminate(spread(load_table(spark, sf_dir, "documents")))
+    return bloom_decontaminate(load_table(spark, sf_dir, "documents"))
 
 
 def q_ledger_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -532,14 +532,14 @@ def trigram_lm_score(
 
 
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lm_score(spread(load_table(spark, sf_dir, "documents")))
+    return lm_score(load_table(spark, sf_dir, "documents"))
 
 
 def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-1 LM filter (r14, promoted to a driver-oracled row in r15
     via the capacity policy's retire clause) at its pinned defaults:
     unpruned bigram table, Laplace k=1, threshold -6.0."""
-    return bigram_lm_score(spread(load_table(spark, sf_dir, "documents")))
+    return bigram_lm_score(load_table(spark, sf_dir, "documents"))
 
 
 _LM_SCORE_SQL = rf"""

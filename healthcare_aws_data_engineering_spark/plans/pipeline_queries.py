@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..operators.dedup import word_shingles
 from ..operators.skew import skew_audit_sql
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table
 
 SESSION_GAP_MS = 30 * 60 * 1000  # classic 30-minute inactivity gap
 
@@ -326,7 +326,7 @@ def vocab_topk(docs: DataFrame, k: int = 100, text_col: str = "text") -> DataFra
 
 
 def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return vocab_topk(spread(load_table(spark, sf_dir, "documents")))
+    return vocab_topk(load_table(spark, sf_dir, "documents"))
 
 
 _VOCAB_TOPK_SQL = r"""

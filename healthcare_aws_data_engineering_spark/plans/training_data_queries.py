@@ -697,7 +697,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs — work ∝ vocabulary, not corpus."""
     from ..operators.bpe import END, word_counts
 
-    wc = word_counts(_docs_s(spark, sf_dir))
+    wc = word_counts(load_table(spark, sf_dir, "documents"))
     syms = F.concat(F.split(F.col("word"), ""), F.array(F.lit(END)))
     staged = wc.select("n", syms.alias("s"))
     pair = F.filter(

@@ -14,6 +14,15 @@ chosen for correctness at small scale and sane behavior at large scale:
   ``Column`` function makes about five extra py4j round trips to record
   its Python call site for error messages, which nearly quadruples the driver's
   plan-building traffic. Error messages lose only that Python call site.
+- Generated-code class cache at 1,000 entries
+  (``spark.sql.codegen.cache.maxEntries``, Spark's default is 100): one
+  pass of the batch jobs (FHIR ingest, graph_pagerank, vocab_topk) needs
+  about 180 generated classes, so at 100 every op evicted the next op's
+  classes and compiled its own again with Janino: 68 compiles per ingest
+  op, 103-105 per graph_pagerank op and 11 per vocab_topk op, every pass.
+  At 1,000 each class compiles once per JVM, and those ops compile none
+  from the second pass on, except graph_pagerank's 2 and 6 in the
+  second and third.
 """
 
 from __future__ import annotations
@@ -57,6 +66,13 @@ def get_spark(
         # the first Column call under an active session, so it must be
         # set here, before any plan is built, not with spark.conf.set.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache: Spark keeps 100 compiled classes, one pass
+        # of the batch jobs needs about 180, so every op recompiled its
+        # classes with Janino (68 compiles per ingest op, 103-105 per
+        # graph_pagerank op, 0.45-0.75 s of Janino per op). At 1,000 each
+        # class is compiled once per JVM. A static conf: CodeGenerator
+        # reads it once per JVM, so it must be set here.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         # Timestamps in testdata are TIMESTAMP_NTZ-like micros; keep session

@@ -1,5 +1,6 @@
 """Fixed per-op costs the session and the package remove: DataFrame
-call-site capture on the driver (``session.py``) and per-task zip
+call-site capture on the driver and recompiling generated classes evicted
+from a too-small codegen cache (``session.py``), and per-task zip
 directory re-reads on the Python workers (the package ``__init__``)."""
 
 from __future__ import annotations
@@ -19,6 +20,28 @@ from healthcare_aws_data_engineering_spark.plans.testdata_queries import QUERIES
 
 def test_session_turns_off_call_site_capture(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_session_sizes_codegen_cache(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_codegen_cache_holds_a_batch_working_set(spark):
+    """150 distinct projections generate about 300 classes, more than
+    Spark's default 100-entry cache holds: at that size the second sweep
+    compiles all of them again, at 1,000 it compiles none."""
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+
+    def sweep() -> None:
+        for i in range(150):
+            spark.range(8).select((F.col("id") * 7 + i).alias("v")).collect()
+
+    sweep()
+    before = compiles.getCount()
+    sweep()
+    assert compiles.getCount() == before
 
 
 def _tiny_events(path: str) -> None:
