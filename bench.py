@@ -47,6 +47,57 @@ def ambient_suspect(n_flagged: int, total_ratio: float) -> bool:
     return n_flagged > 0 and total_ratio < AMBIENT_TOTAL_OK
 
 
+def warm_up(spark, fn, sf_dir: str) -> None:
+    """Suite-level JVM warm-up: three collects of ``fn``, then clear the
+    cache. The FIRST timed query otherwise pays one-time costs (executor
+    pool spin-up, shuffle infra, codegen framework JIT) that its single
+    per-query warm-up run does not amortize. The r5 gate rotation made
+    this visible: moving a 0.2 s query into position 1 benched it at a
+    stable ~2.2x its r4 last-position value across three otherwise-quiet
+    runs."""
+    for _ in range(3):
+        fn(spark, sf_dir).collect()
+    spark.catalog.clearCache()
+
+
+def time_query(spark, fn, sf_dir: str) -> list[tuple[float, float, int]]:
+    """The one timing protocol: ``(build_s, exec_s, jobs)`` for each of
+    RUNS timed samples of ``fn(spark, sf_dir).collect()``.
+
+    - One warm-up collect first (JVM, file listing, codegen).
+    - Then clear the cache (r15 verdict #8), so a staging-persist change
+      cannot borrow its warm-up materialization: the first timed run
+      pays its own persists.
+    - A sample's build is ``fn()``, its exec the ``collect()``; their sum
+      is the time from before ``fn()`` to after ``collect()``. ``jobs``
+      is the ``dagScheduler().nextJobId()`` delta, read outside the
+      timed interval; jobs fired while building count too.
+    - Clear the cache again at the end, so one query's persisted
+      intermediates (scored tables, LSH stagings) cannot accumulate
+      across the suite and distort later rows.
+    """
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    fn(spark, sf_dir).collect()
+    spark.catalog.clearCache()
+    samples = []
+    for _ in range(RUNS):
+        job0 = scheduler.nextJobId()
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.collect()
+        t2 = time.perf_counter()
+        samples.append((t1 - t0, t2 - t1, scheduler.nextJobId() - job0))
+    spark.catalog.clearCache()
+    return samples
+
+
+def median_total(samples: list[tuple[float, float, int]]) -> float:
+    """Median build+exec seconds of ``time_query`` samples: the figure
+    bench.py records for a row."""
+    return round(statistics.median(b + e for b, e, _ in samples), 4)
+
+
 def _baselines() -> dict[str, float]:
     """Per-query accrued baselines parsed from BASELINE.md's protocol
     tables (rows `| name | 0.1 | sec |`; suite-total rows don't match
@@ -126,42 +177,12 @@ def main() -> None:
             ),
         }
 
-    # Suite-level JVM warm-up: the FIRST timed query otherwise pays
-    # one-time costs (executor pool spin-up, shuffle infra, codegen
-    # framework JIT) that its single per-query warm-up run does not
-    # amortize. The r5 gate rotation made this visible: moving a 0.2 s
-    # query into position 1 benched it at a stable ~2.2x its r4
-    # last-position value across three otherwise-quiet runs.
-    first_fn = next(iter(QUERIES.values()))
-    for _ in range(3):
-        first_fn(spark, sf_dir).collect()
-    spark.catalog.clearCache()
+    warm_up(spark, next(iter(QUERIES.values())), sf_dir)
 
     timings: dict[str, float] = {}
     probe_fns = extra_ml_fast()
     for name, fn in {**QUERIES, **probe_fns}.items():
-        fn(spark, sf_dir).collect()  # warm-up: JVM, file listing, codegen
-        # Honesty tweak (r15 verdict #8): drop whatever the warm-up run
-        # persisted BEFORE the timed runs, so a staging-persist change
-        # cannot borrow its warm-up materialization — the first timed
-        # run pays its own persists. (Operator persists are additionally
-        # generation-bounded per call — operators/staging.py — so each
-        # timed run re-stages regardless; this clear covers any future
-        # persist that escapes that discipline.)
-        spark.catalog.clearCache()
-        samples = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).collect()
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(samples), 4)
-        # Drop this query's persisted intermediates (scored tables, LSH
-        # stagings) so caches can't accumulate across 100 queries and
-        # distort later rows. Module-level index artifacts (IVF/SemDeDup
-        # centroid lists, the knn edge cache) are per-query-local in
-        # time: their cached data is only read by the query that built
-        # them, whose timed runs have already finished.
-        spark.catalog.clearCache()
+        timings[name] = median_total(time_query(spark, fn, sf_dir))
 
     # Gate-clean capture discipline: under the uniform-inflation
     # signature, re-measure over-gate rows instead of recording noise.
@@ -186,15 +207,7 @@ def main() -> None:
             file=sys.stderr,
         )
         for name in flagged:
-            fn = QUERIES[name]
-            fn(spark, sf_dir).collect()
-            samples = []
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).collect()
-                samples.append(time.perf_counter() - t0)
-            timings[name] = round(statistics.median(samples), 4)
-            spark.catalog.clearCache()
+            timings[name] = median_total(time_query(spark, QUERIES[name], sf_dir))
     else:
         ambient = ambient_suspect(
             len(_over_gate(timings)), _total_ratio(timings)

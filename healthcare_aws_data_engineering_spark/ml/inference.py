@@ -44,21 +44,6 @@ def imputed_columns() -> dict[str, Column]:
     }
 
 
-def scaled_columns() -> dict[str, Column]:
-    """Impute → standardize, one expression per feature (fused, no
-    intermediate materialization)."""
-    p = sklearn_pipeline()
-    out: dict[str, Column] = {}
-    for n, med, mu, s in zip(
-        p["feature_names"],
-        p["imputer"]["statistics"],
-        p["scaler"]["mean"],
-        p["scaler"]["scale"],
-    ):
-        out[n] = (impute_expr(n, med) - F.lit(float(mu))) / F.lit(float(s))
-    return out
-
-
 # -------------------------------------------------------------------- M3 --
 # DECIMAL(18,6): exact sums like the old 28,6, but precision ≤ 18 keeps
 # Spark's Decimal on its compact-long fast path (28 → per-op BigDecimal,

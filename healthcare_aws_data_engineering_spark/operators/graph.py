@@ -52,14 +52,16 @@ def connected_components(
     - ``"label"`` (default) — min-label propagation; rounds = graph
       DIAMETER. The right choice for verified near-dup pair graphs,
       which are dense clique-ish clusters (measured: 2 rounds to
-      fixpoint on the sf0.1 MinHash graph, ``tools/cc_rounds_probe.py``).
+      fixpoint on the sf0.1 MinHash graph; SCALING.md, "Connected-
+      components: rounds to fixpoint").
     - ``"star"`` — alternating large-star/small-star (Kiveris et al.,
       "Connected Components in MapReduce and Beyond", SoCC'14);
       O(log² n) rounds REGARDLESS of diameter. Use for graphs whose
       diameter grows with corpus size — e.g. clustering a k-NN graph,
       whose giant component measured diameter 9 at just 2k vectors
-      (same probe; a path-shaped control needs >40 label rounds but 8
-      star rounds). Identical output labels (component min).
+      (same SCALING.md section; a path-shaped control needs >40 label
+      rounds but 8 star rounds). Identical output labels (component
+      min).
 
     ``max_iter`` bounds the rounds (label: ≥ diameter needed for an
     exact answer; star: ≥ ~log² of the largest component — both stop

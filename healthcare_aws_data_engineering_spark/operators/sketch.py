@@ -47,14 +47,6 @@ def digest_halves(value: Column) -> tuple[Column, Column]:
     return h1, h2
 
 
-def uniform_hash(value: Column, perm: int) -> Column:
-    """md5-double-hash uniform [0,1) for permutation ``perm`` (standalone
-    form — inlines the md5; prefer staging ``digest_halves`` when many
-    permutations share one value)."""
-    h1, h2 = digest_halves(value)
-    return ((h1 + perm * h2) % _TWO32) / F.lit(float(_TWO32))
-
-
 def distinct_sketch(
     df: DataFrame,
     group_col: str,

@@ -35,7 +35,7 @@ lowest-expected-count pieces per round instead of computing each
 piece's exact likelihood-loss-on-removal. The exact criterion is
 implemented (``prune_to_size(criterion="exact_loss")``, r15) and its
 cost vs the default measured on a golden corpus
-(`tools/unigram_prune_probe.py`, table in SCALING.md r15);
+(SCALING.md, "r15 probe: unigram pruning criterion");
 single-character pieces are never pruned under either criterion, so
 encoding stays lossless on any text composed of seen characters.
 """

@@ -7,6 +7,9 @@ over-gate row under a healthy suite ratio is re-measured (and, if it
 persists, the capture self-declares ambient_contaminated) — while a
 genuinely regressed suite (ratio >= AMBIENT_TOTAL_OK) is never
 retried, so real regressions ship as recorded.
+
+The last test pins the cache discipline of ``time_query``, the one
+timing protocol that bench.py's loops and tools/profile_queries.py share.
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import AMBIENT_TOTAL_OK, ambient_suspect
+from bench import AMBIENT_TOTAL_OK, RUNS, ambient_suspect, time_query
 
 
 def test_single_over_gate_row_triggers_retry():
@@ -39,3 +42,21 @@ def test_regressed_suite_is_not_ambient():
     # uniform-ambient signature; ship the numbers (real regression)
     assert not ambient_suspect(3, AMBIENT_TOTAL_OK)
     assert not ambient_suspect(1, 1.8)
+
+
+def test_time_query_starts_timing_from_an_empty_cache(spark):
+    # no timed sample may read what the warm-up collect persisted, and
+    # nothing time_query persisted may outlive it
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    empty_at_call = []
+
+    def fn(s, _sf_dir):
+        empty_at_call.append(cache_manager.isEmpty())
+        return s.range(16).selectExpr("id * 2 AS x").persist()
+
+    samples = time_query(spark, fn, "unused")
+    assert len(empty_at_call) == 1 + RUNS
+    assert empty_at_call[1], empty_at_call
+    assert cache_manager.isEmpty()
+    assert len(samples) == RUNS
+    assert all(jobs >= 1 for _, _, jobs in samples), samples

@@ -1,13 +1,13 @@
-"""Per-query wall-time decomposition: DataFrame build (driver-side plan
-construction, py4j traffic) vs action (collect), median over N runs.
+"""Per-row timing on bench.py's protocol, split into DataFrame build
+(driver-side plan construction, py4j traffic) and action (collect) —
+the per-row A/B tool.
 
-Usage: python tools/profile_queries.py [sf_dir] [runs] [query ...]
+Usage: python tools/profile_queries.py [sf_dir] [query ...]
 
-The bench times ``fn(spark, sf_dir).collect()`` as one unit; this tool
-splits the two so optimization effort lands where the time is (guide
-§1.1: decide WHERE the time goes before changing anything). Job counts
-per query come from the status tracker — a query that triggers eager
-jobs at build time (localCheckpoint) shows them in the build column.
+Runs ``bench.warm_up`` on the first named query, then ``bench.time_query``
+on each, so a row's total is the median bench.py records for it. Jobs
+count every job a sample fires: a query that triggers eager jobs at build
+time (localCheckpoint) shows them here although its exec time is small.
 """
 
 from __future__ import annotations
@@ -15,50 +15,32 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import median_total, time_query, warm_up
 from healthcare_aws_data_engineering_spark.plans.testdata_queries import QUERIES
 from healthcare_aws_data_engineering_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    only = sys.argv[3:]
-    names = only or list(QUERIES)
+    names = sys.argv[2:] or list(QUERIES)
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    # suite warm-up (same as bench.py)
-    first = QUERIES[names[0]]
-    for _ in range(2):
-        first(spark, sf_dir).collect()
-    spark.catalog.clearCache()
+    warm_up(spark, QUERIES[names[0]], sf_dir)
 
     print(f"{'query':28} {'build':>7} {'exec':>7} {'total':>7} {'jobs':>5}")
+    suite = 0.0
     for name in names:
-        fn = QUERIES[name]
-        fn(spark, sf_dir).collect()  # warm-up
-        spark.catalog.clearCache()
-        builds, execs, jobs = [], [], 0
-        for _ in range(runs):
-            ids0 = sc._jsc.sc().dagScheduler().nextJobId()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.collect()
-            t2 = time.perf_counter()
-            ids1 = sc._jsc.sc().dagScheduler().nextJobId()
-            builds.append(t1 - t0)
-            execs.append(t2 - t1)
-            jobs = ids1 - ids0
-            spark.catalog.clearCache()
-        b = statistics.median(builds)
-        e = statistics.median(execs)
-        print(f"{name:28} {b:7.3f} {e:7.3f} {b + e:7.3f} {jobs:5d}")
+        samples = time_query(spark, QUERIES[name], sf_dir)
+        build = statistics.median(s[0] for s in samples)
+        execute = statistics.median(s[1] for s in samples)
+        total = median_total(samples)
+        jobs = statistics.median_low(s[2] for s in samples)
+        suite += total
+        print(f"{name:28} {build:7.3f} {execute:7.3f} {total:7.3f} {jobs:5d}")
+    print(f"{'TOTAL':28} {'':7} {'':7} {suite:7.3f}")
 
 
 if __name__ == "__main__":
