@@ -5,7 +5,7 @@ Parity targets in ``mrp_website.py``:
 - disease weights              :58-64
 - wellness weights             :67-73
 - ``penalty_for_value``        :169-181
-- ``disease_subscore``         :184-204
+- ``subscore_from_penalties``  :184-204
 - ``wellness_score``           :207-225
 - ``detect_patterns``          :231-248
 - ``overall_label_for_disease``:379-411
@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import Column, functions as F
 
 INF = math.inf
 
@@ -78,47 +78,29 @@ def penalty(analyte: str, value: Column) -> Column:
     return expr.otherwise(F.lit(int(pens[-1])))
 
 
-def disease_subscore(disease: str, cols: dict[str, Column] | None = None) -> Column:
-    """Subscore 0–100 (``disease_subscore``, mrp_website.py:184-204):
-    ``100 − Σ pᵢwᵢ · 100/3`` over *present* analytes, clamped to [0,100];
-    NULL when nothing is present. Weights are NOT renormalized here —
-    matching mrp_website.py:201-203 (see NOTE below); renormalization
-    happens only at the wellness level.
-
-    ``cols`` maps analyte name → Column (defaults to same-named columns,
-    absent analytes handled by passing NULL literals explicitly).
-    """
-    weights = DISEASE_WEIGHTS[disease]
-    get = (cols or {}).get
-    legs = []
-    for analyte, w in weights.items():
-        v = get(analyte, F.col(analyte) if cols is None else F.lit(None).cast("double"))
-        present = v.isNotNull()
-        legs.append(
-            (
-                F.when(present, penalty(analyte, v) * F.lit(w)).otherwise(F.lit(0.0)),
-                F.when(present, F.lit(w)).otherwise(F.lit(0.0)),
-            )
-        )
-    weighted = sum((p for p, _ in legs), F.lit(0.0))
-    total_w = sum((w for _, w in legs), F.lit(0.0))
-    # NOTE: the reference does NOT renormalize by present weight mass here —
-    # ``weighted`` is divided by the fixed max penalty only (:201-203); the
-    # renormalization happens at the wellness level. total_w>0 only gates
-    # the NULL case.
-    sub = F.lit(100.0) - weighted * F.lit(100.0 / MAX_PENALTY)
-    clamped = F.greatest(F.lit(0.0), F.least(F.lit(100.0), sub))
-    return F.when(total_w > 0, clamped)
+def disease_penalty_columns(disease: str, cols: dict[str, Column]) -> dict[str, Column]:
+    """Per-analyte penalty columns for a disease; NULL (not 0) when the
+    analyte value is absent — mirrors the ``pens`` dict only containing
+    present analytes (mrp_website.py:192-199). ``cols`` maps analyte name →
+    Column; an analyte missing from it is absent."""
+    out = {}
+    for analyte in DISEASE_WEIGHTS[disease]:
+        v = cols.get(analyte, F.lit(None).cast("double"))
+        out[analyte] = F.when(v.isNotNull(), penalty(analyte, v))
+    return out
 
 
 def subscore_from_penalties(disease: str, pens: dict[str, Column]) -> Column:
-    """Identical math to :func:`disease_subscore`, but derived from the
-    staged NULL-when-absent penalty columns of
-    :func:`disease_penalty_columns` — so a plan that needs penalties,
-    subscore AND label evaluates each penalty CASE ladder exactly once
-    (Catalyst CSE does not reach into when/otherwise branches; see the
-    r5 text_stats note in BASELINE.md). ``pens[a] IS NULL ⟺ value
-    absent``, so coalesce/isNotNull reproduce the presence gating."""
+    """Subscore 0–100 (mrp_website.py:184-204):
+    ``100 − Σ pᵢwᵢ · 100/3`` over *present* analytes, clamped to [0,100];
+    NULL when nothing is present.
+
+    ``pens`` are the NULL-when-absent penalty columns of
+    :func:`disease_penalty_columns` (``pens[a] IS NULL ⟺ value absent``,
+    so coalesce/isNotNull reproduce the presence gating). Staging them
+    lets a plan that needs penalties, subscore AND label evaluate each
+    penalty CASE ladder exactly once (Catalyst CSE does not reach into
+    when/otherwise branches; see the r5 text_stats note in BASELINE.md)."""
     weights = DISEASE_WEIGHTS[disease]
     weighted = sum(
         (
@@ -134,21 +116,13 @@ def subscore_from_penalties(disease: str, pens: dict[str, Column]) -> Column:
         ),
         F.lit(0.0),
     )
+    # NOTE: the reference does NOT renormalize by present weight mass here —
+    # ``weighted`` is divided by the fixed max penalty only (:201-203); the
+    # renormalization happens at the wellness level. total_w>0 only gates
+    # the NULL case.
     sub = F.lit(100.0) - weighted * F.lit(100.0 / MAX_PENALTY)
     clamped = F.greatest(F.lit(0.0), F.least(F.lit(100.0), sub))
     return F.when(total_w > 0, clamped)
-
-
-def disease_penalty_columns(disease: str, cols: dict[str, Column] | None = None) -> dict[str, Column]:
-    """Per-analyte penalty columns for a disease; NULL (not 0) when the
-    analyte value is absent — mirrors the ``pens`` dict only containing
-    present analytes (mrp_website.py:192-199)."""
-    weights = DISEASE_WEIGHTS[disease]
-    out = {}
-    for analyte in weights:
-        v = (cols or {}).get(analyte, F.col(analyte)) if cols is None or analyte in (cols or {}) else F.lit(None).cast("double")
-        out[analyte] = F.when(v.isNotNull(), penalty(analyte, v))
-    return out
 
 
 def wellness(subscores: dict[str, Column]) -> tuple[Column, Column, Column]:

@@ -3,8 +3,8 @@
 of the reference (``test.py:326``; names locked by imputer.joblib's
 ``feature_names_in_``).
 
-Composition = W1 (latest per key, tie-broken by row id) + A2 (MAX-CASE
-pivot) + F22/F23 (sex/age). Over the driver's testdata the *observation*
+Composition = W1 + A2 (:func:`..operators.pivot.latest_pivot`: latest
+value per key, tie-broken by row id, pivoted) + F22/F23 (sex/age). Over the driver's testdata the *observation*
 analog is the events table and demographics come from ``customer``:
 
 - five event types → five lab features (documented mapping below);
@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.pivot import latest_pivot
 from .params import feature_names
 
 # event_type → feature-column mapping (the events→labs analog, FIXTURES.md §5)
@@ -34,29 +35,6 @@ EVENTS_ML_KEYS: dict[str, str] = {
     "cholesterol_total_latest": "signup",
     "creatinine_latest": "error",
 }
-
-
-def latest_value_pivot(
-    events: DataFrame, keys: dict[str, str] = EVENTS_ML_KEYS
-) -> DataFrame:
-    """Latest value per (user, event_type) pivoted to one column per
-    feature. ``max_by`` with a (ts, event_id) struct = latest-per-key with
-    deterministic tie-break, as a single hash aggregate (cheaper than the
-    row_number window: partial agg map-side, no sort)."""
-    order = F.struct(F.col("ts"), F.col("event_id"))
-    return (
-        events.filter(F.col("event_type").isin(list(keys.values())))
-        .groupBy(F.col("user_id").alias("patient_id"))
-        .agg(
-            *[
-                F.max_by(
-                    F.when(F.col("event_type") == ev, F.col("value")),
-                    F.when(F.col("event_type") == ev, order),
-                ).alias(feat)
-                for feat, ev in keys.items()
-            ]
-        )
-    )
 
 
 def demographics(customer: DataFrame) -> DataFrame:
@@ -81,7 +59,13 @@ def feature_table(events: DataFrame, customer: DataFrame) -> DataFrame:
     that exchange and only the demo side shuffles; AQE may still demote
     to broadcast at runtime when a side is genuinely small — that choice
     is adaptive and safe, an explicit hint is not."""
-    labs = latest_value_pivot(events)
+    labs = latest_pivot(
+        events.filter(F.col("event_type").isin(list(EVENTS_ML_KEYS.values()))),
+        F.col("user_id").alias("patient_id"),
+        "event_type",
+        {feat: ([ev], F.col("value")) for feat, ev in EVENTS_ML_KEYS.items()},
+        [F.col("ts"), F.col("event_id")],
+    )
     demo = demographics(customer)
     joined = demo.join(labs, "patient_id", "left")
     cols = [F.col("patient_id")]

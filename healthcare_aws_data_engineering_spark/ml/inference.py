@@ -11,7 +11,8 @@ by ``tools/extract_ml_params.py``):
 - M5 XGB scoring ×3  → Arrow-vectorized pandas UDF; trees loaded
   per-executor from package params (no joblib/xgboost dependency: the
   boosters are traversed directly with numpy)
-- M6 threshold/band  → ``F.when`` ladders (classify_risk, test.py:157-163)
+- M6 threshold/band  → ``F.when`` ladder (``functions.banding.risk_prob_band``,
+  test.py:157-163)
 
 Everything before M5 is pure JVM column math inside whole-stage codegen —
 no Python in the hot path; M5 transfers one Arrow batch per partition.
@@ -26,7 +27,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .params import DISEASES, feature_names, model_features, sklearn_pipeline, xgb_trees
+from ..functions.banding import risk_prob_band
+from .params import DISEASES, model_features, sklearn_pipeline, xgb_trees
 
 THRESHOLD = 0.5
 
@@ -254,24 +256,6 @@ def _score_matrix(X, disease: str):
     return _sigmoid(margin)
 
 
-def xgb_probability(disease: str, feature_cols: list[str]) -> Column:
-    """Probability column from the named disease's booster over the given
-    14 feature columns (model_features order)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # no type hints: the hinted form rejects *args signatures; the legacy
-    # inference path maps an unhinted *cols to a SCALAR pandas UDF.
-    @pandas_udf("double")
-    def score(*cols):
-        import numpy as np
-
-        X = np.column_stack([c.to_numpy(dtype=np.float32) for c in cols])
-        return pd.Series(_score_matrix(X, disease))
-
-    return score(*[F.col(c) for c in feature_cols])
-
-
 def xgb_probabilities_all(feature_cols: list[str]) -> Column:
     """All three boosters in ONE pandas UDF → struct<cvd,anemia,ckd>.
     One Arrow batch transfer and one feature-matrix build instead of
@@ -291,30 +275,29 @@ def xgb_probabilities_all(feature_cols: list[str]) -> Column:
     return score(*[F.col(c) for c in feature_cols])
 
 
-# -------------------------------------------------------------------- M6 --
-def classify_risk(prob: Column) -> Column:
-    """test.py:157-163 banding: <0.25 Low, <0.5 Moderate, else High."""
-    return (
-        F.when(prob < 0.25, F.lit("Low"))
-        .when(prob < 0.5, F.lit("Moderate"))
-        .otherwise(F.lit("High"))
-    )
-
-
 # ------------------------------------------------------------ composition --
-def _staged_scaled(features: DataFrame, id_col: str, extra: list[Column]):
-    """Stage impute+scale as real columns (__s_<name>) so each of the 14
-    z-expressions references a cheap attribute instead of re-inlining the
-    scale expression 19× (CollapseProject keeps non-cheap exprs used more
-    than once staged). Returns (staged_df, name→staged-ref map)."""
-    names = sklearn_pipeline()["feature_names"]
+def _z_cluster(
+    features: DataFrame, id_col: str, carried: dict[str, Column], parity: bool
+) -> DataFrame:
+    """id + ``carried`` columns + 14 PCA components + cluster id.
+
+    Impute+scale is staged as real columns (__s_<name>) first, so each of
+    the 14 z-expressions references a cheap attribute instead of
+    re-inlining the scale expression 19× (CollapseProject keeps non-cheap
+    exprs used more than once staged)."""
+    p = sklearn_pipeline()
     smap = _scaled_sql_map()
     staged = features.select(
         F.col(id_col),
-        *extra,
-        *[F.expr(smap[n]).alias(f"__s_{n}") for n in names],
+        *[c.alias(n) for n, c in carried.items()],
+        *[F.expr(smap[n]).alias(f"__s_{n}") for n in p["feature_names"]],
     )
-    return staged, {n: f"__s_{n}" for n in names}
+    refs = {n: f"__s_{n}" for n in p["feature_names"]}
+    z = staged.select(
+        F.col(id_col), *[F.col(n) for n in carried], *pca_columns(refs, parity)
+    )
+    znames = [f"z{j}" for j in range(len(p["pca"]["components"]))]
+    return z.withColumn("cluster", kmeans_cluster_expr(znames, parity))
 
 
 def preprocess(
@@ -329,30 +312,24 @@ def preprocess(
     sums — the production path when no cross-engine hash must match
     (~2× cheaper per-row math; ~1e-5 z drift from the grid, pinned by
     test)."""
-    staged, refs = _staged_scaled(features, id_col, [])
-    z = staged.select(F.col(id_col), *pca_columns(refs, parity))
-    znames = [f"z{j}" for j in range(len(sklearn_pipeline()["pca"]["components"]))]
-    return z.withColumn("cluster", kmeans_cluster_expr(znames, parity))
+    return _z_cluster(features, id_col, {}, parity)
 
 
 def predict_diseases(
     features: DataFrame,
     id_col: str = "patient_id",
     threshold: float = THRESHOLD,
-    score_partitions: int | None = None,
     parity: bool = True,
 ) -> DataFrame:
     """Full M1→M6 chain as ONE linear flow (no self-join): imputed model
     inputs ride along through the z/cluster stages, then the fused
     3-booster UDF scores once.
 
-    ``score_partitions``: explicit repartition width for the Python
-    scoring stage. The 1200-tree UDF is orders of magnitude more
-    expensive per byte than the shuffle heuristics assume, so AQE happily
-    coalesces a small feature table to ONE partition and serializes the
-    scoring. Default (None) = the session's default parallelism; pass 0
-    to skip when the upstream partitioning already saturates the cluster
-    (the 100-TB case — input splits ≫ cores).
+    The scoring input is repartitioned to the session's default
+    parallelism: the 1200-tree UDF is orders of magnitude more expensive
+    per byte than the shuffle heuristics assume, so AQE would otherwise
+    coalesce a small feature table to ONE partition and serialize the
+    scoring.
 
     ``parity=False``: production fast path — plain-double z/cluster
     folds instead of the exact DECIMAL(18,6) oracle grid (see
@@ -360,23 +337,14 @@ def predict_diseases(
     features are the raw imputed values plus the cluster id)."""
     mf = model_features()  # includes 'cluster'
     imput = imputed_columns()
-    carried = [imput[n].alias(n) for n in mf if n != "cluster"]
-    znames = [f"z{j}" for j in range(len(sklearn_pipeline()["pca"]["components"]))]
-    staged, refs = _staged_scaled(features, id_col, carried)
-    z = staged.select(
-        F.col(id_col),
-        *[F.col(n) for n in mf if n != "cluster"],
-        *pca_columns(refs, parity),
-    )
-    scored_in = z.withColumn("cluster", kmeans_cluster_expr(znames, parity)).select(
-        id_col, "cluster", *[F.col(n) for n in mf if n != "cluster"]
-    )
-    if score_partitions != 0:
-        n_parts = (
-            score_partitions
-            or scored_in.sparkSession.sparkContext.defaultParallelism
+    carried = {n: imput[n] for n in mf if n != "cluster"}
+    scored_in = (
+        _z_cluster(features, id_col, carried, parity)
+        .select(id_col, "cluster", *[F.col(n) for n in carried])
+        .repartition(
+            features.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
         )
-        scored_in = scored_in.repartition(n_parts, F.col(id_col))
+    )
     out = scored_in.withColumn("__p", xgb_probabilities_all(mf))
     cols = [F.col(id_col), F.col("cluster")]
     for d in DISEASES:
@@ -384,7 +352,7 @@ def predict_diseases(
         cols += [
             p.alias(f"prob_{d}"),
             (p >= threshold).cast("int").alias(f"flag_{d}"),
-            classify_risk(p).alias(f"risk_{d}"),
+            risk_prob_band(p).alias(f"risk_{d}"),
         ]
     return out.select(*cols)
 

@@ -27,6 +27,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from .pivot import latest_leg
+
 
 def latest_per_key(
     df: DataFrame,
@@ -88,21 +90,17 @@ def height_weight(
     test.py:454-464): ``weight_kg / (height_cm/100)²`` when both present."""
     is_h = F.col(code_col).isin(list(height_names))
     is_w = F.col(code_col).isin(list(weight_names))
-    ordk = F.struct(
+    order = [
         F.col(order_col).isNotNull().cast("int"),
         F.col(order_col),
         F.col(tiebreak),
-    )
+    ]
     out = (
         obs.filter(is_h | is_w)
         .groupBy(F.col(patient_col))
         .agg(
-            F.max_by(F.when(is_h, F.col(value_col)), F.when(is_h, ordk)).alias(
-                "height_cm"
-            ),
-            F.max_by(F.when(is_w, F.col(value_col)), F.when(is_w, ordk)).alias(
-                "weight_kg"
-            ),
+            latest_leg(is_h, F.col(value_col), order).alias("height_cm"),
+            latest_leg(is_w, F.col(value_col), order).alias("weight_kg"),
         )
     )
     if with_bmi:

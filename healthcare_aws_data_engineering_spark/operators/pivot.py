@@ -1,40 +1,58 @@
-"""MAX(CASE WHEN key=k THEN expr END) conditional pivot (SURVEY §2.4 A2).
+"""Latest-value conditional pivot (SURVEY §2.4 A2 + §2.5 W1).
 
-Reference: ``Athena_queries_for_reports.sql:17-31, 98-112`` — one output
-column per analyte, numeric and text legs mixed in one GROUP BY.
+Reference: ``Athena_queries_for_reports.sql:17-31, 98-112`` — ROW_NUMBER
+latest row per (patient, analyte), then MAX(CASE WHEN key=k THEN expr END),
+one output column per analyte, numeric and text legs mixed in one GROUP BY.
+
+The composition "latest row per (group, key), then MAX over the single
+surviving row" is exactly ``max_by(value, order) FILTER (WHERE key = k)``
+per output column, so the window collapses into the pivot's aggregate:
+one hash aggregate with map-side partial aggregation — one shuffle
+regardless of how many output columns (a join-per-analyte alternative
+would be K shuffles, the window form shuffles every qualifying row).
 
 We deliberately do NOT use ``DataFrame.pivot``: the reference mixes
 ``TRY_CAST(... AS DOUBLE)`` legs with ``LOWER(TRIM(text))`` legs in one pivot
 (SURVEY §7.4.4), and per-column agg expressions preserve each leg's type
-exactly. Physically this is a single hash aggregate with map-side partial
-aggregation — one shuffle regardless of how many output columns, which is the
-scalable shape (a join-per-analyte alternative would be K shuffles).
+exactly.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def max_case_pivot(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    legs: Mapping[str, tuple[object, Column]],
-) -> DataFrame:
-    """``legs`` maps output column name → (key match, value expression).
+def latest_leg(cond: Column, value: Column, order: Sequence[Column]) -> Column:
+    """argmax(value by struct(order)) restricted to rows matching ``cond``.
 
-    The key match is a single value or a list/tuple/set of values (IN-list
-    leg, as in the urine-glucose pivot at
-    ``Athena_queries_for_reports.sql:106-108``).
+    ``max_by`` ignores rows whose ordering expression is NULL, so gating the
+    ordering struct with the same condition restricts the argmax to the
+    matching rows without a separate filter/window.
+    """
+    return F.max_by(F.when(cond, value), F.when(cond, F.struct(*order)))
+
+
+def latest_pivot(
+    df: DataFrame,
+    group: Column | str,
+    key_col: str,
+    legs: Mapping[str, tuple[Sequence[object], Column]],
+    order: Sequence[Column],
+) -> DataFrame:
+    """One hash aggregate: per ``group``, per leg, the value expression of
+    the latest (greatest ``order``) row whose ``key_col`` matches.
+
+    ``legs`` maps output name → (key list, value expression). A leg over
+    several keys takes the greatest of each key's latest value, as the
+    reference's MAX() over per-analyte latest rows does (urine glucose,
+    ``Athena_queries_for_reports.sql:106-108``) — NOT the globally-latest
+    row. Callers filter ``df`` to the keys they pivot.
     """
     aggs = []
-    for out_name, (match, value_expr) in legs.items():
-        if isinstance(match, (list, tuple, set, frozenset)):
-            cond = F.col(key_col).isin(list(match))
-        else:
-            cond = F.col(key_col) == F.lit(match)
-        aggs.append(F.max(F.when(cond, value_expr)).alias(out_name))
-    return df.groupBy(group_col).agg(*aggs)
+    for out_name, (keys, value) in legs.items():
+        per_key = [latest_leg(F.col(key_col) == k, value, order) for k in keys]
+        leg = per_key[0] if len(per_key) == 1 else F.greatest(*per_key)
+        aggs.append(leg.alias(out_name))
+    return df.groupBy(group).agg(*aggs)

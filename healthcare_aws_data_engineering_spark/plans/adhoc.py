@@ -2,7 +2,6 @@
 
 Parity: ``AWS_Athena_queries.sql`` —
 - database + 4 external-table DDL (:1-67) → ``CREATE TABLE ... USING PARQUET``
-- full-table scans (:70-73)
 - ordered scan + time-range filter (:75-77; the reference text is
   syntactically broken — ``ORDER BY`` and ``;`` precede the ``WHERE`` — the
   intended query is repaired here)
@@ -59,17 +58,6 @@ def register_curated_tables(
             f"CREATE TABLE IF NOT EXISTS {database}.{name} ({_DDL[name]}) "
             f"USING PARQUET LOCATION '{curated_path.rstrip('/')}/{name}'"
         )
-
-
-def register_curated_views(spark: SparkSession, curated_path: str) -> None:
-    """Session-local alternative to a persistent catalog (temp views)."""
-    for name in CURATED_TABLES:
-        spark.read.parquet(f"{curated_path.rstrip('/')}/{name}").createOrReplaceTempView(name)
-
-
-def scan_table(spark: SparkSession, table: str) -> DataFrame:
-    """``select * from <table>`` (:70-73)."""
-    return spark.sql(f"SELECT * FROM {table}")
 
 
 def observations_in_range(

@@ -9,7 +9,10 @@ documenting the reference DDL's ``class`` mismatch, SURVEY §1.3).
 Spark-first deviations from the reference, all deliberate:
 
 1. ``entries`` is cached before the four per-resource extractions — the
-   reference rebuilds the explode lineage four times (SURVEY §3.1).
+   reference rebuilds the explode lineage four times (SURVEY §3.1). Both
+   the batch ETL and the streaming ingest's ``foreachBatch``
+   (:mod:`..streaming.incremental`) go through :func:`write_curated`, which
+   owns that cache and releases it before returning.
 2. Extraction expressions are schema-adaptive plan-time builders
    (:mod:`..functions.fhir_extract`) instead of per-row to_json probing.
 3. ``dropDuplicates`` on a key keeps an *arbitrary* row; pass
@@ -192,6 +195,41 @@ def extract_observations(entries: DataFrame, deterministic_dedup: bool = False) 
     return _dedup(out, "observation_id", deterministic_dedup)
 
 
+EXTRACTORS = {
+    "patient": extract_patients,
+    "encounter": extract_encounters,
+    "condition": extract_conditions,
+    "observation": extract_observations,
+}
+
+
+def write_curated(
+    entries: DataFrame,
+    curated_path: str,
+    observation_partitions: Sequence[str] | None = None,
+    deterministic_dedup: bool = False,
+) -> dict[str, str]:
+    """Exploded bundle entries → the four curated tables (reference
+    :60-199), appended under ``curated_path``; returns table → path.
+
+    ``entries`` is cached for the four extractions and released before
+    returning, so the four writes share one scan+explode (SURVEY §3.1
+    flags the reference's 4× re-scan)."""
+    entries.cache()
+    try:
+        return {
+            name: write_parquet(
+                extract(entries, deterministic_dedup),
+                curated_path,
+                name,
+                partitions=observation_partitions if name == "observation" else None,
+            )
+            for name, extract in EXTRACTORS.items()
+        }
+    finally:
+        entries.unpersist()
+
+
 def fhir_etl(
     spark: SparkSession,
     raw_path: str,
@@ -201,24 +239,8 @@ def fhir_etl(
     deterministic_dedup: bool = False,
     schema=None,
 ) -> dict[str, str]:
-    """Full raw→curated pipeline (reference :52-199 end to end).
-
-    The exploded ``entries`` frame is cached: four extractions share one
-    scan+explode instead of four (the reference omits this — SURVEY §3.1
-    flags the 4× re-scan)."""
+    """Full raw→curated pipeline (reference :52-199 end to end)."""
     bundles = read_bundles(spark, raw_path, multiline=multiline, schema=schema)
-    entries = explode_entries(bundles).cache()
-    try:
-        outputs = {
-            "patient": extract_patients(entries, deterministic_dedup),
-            "encounter": extract_encounters(entries, deterministic_dedup),
-            "condition": extract_conditions(entries, deterministic_dedup),
-            "observation": extract_observations(entries, deterministic_dedup),
-        }
-        paths = {}
-        for name, df in outputs.items():
-            parts = observation_partitions if name == "observation" else None
-            paths[name] = write_parquet(df, curated_path, name, partitions=parts)
-        return paths
-    finally:
-        entries.unpersist()
+    return write_curated(
+        explode_entries(bundles), curated_path, observation_partitions, deterministic_dedup
+    )

@@ -472,10 +472,13 @@ def q_etl_obs_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
     curated shape) → parquet scan → ``extract_observations``. The fixture
     is deterministic in the events table, so it is written once per
     process (bench's warm-up + timed runs share it); a fresh process
-    always rewrites."""
+    always rewrites. The fixture path is keyed on the absolute ``sf_dir``,
+    so two data directories with the same base name never share it."""
+    import hashlib
     import os
 
-    path = f"/tmp/hsp_fixtures/glue_choice_obs_{os.path.basename(sf_dir.rstrip('/'))}.parquet"
+    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
+    path = f"/tmp/hsp_fixtures/glue_choice_obs_{key}.parquet"
     if path not in _CHOICE_WRITTEN:
         _choice_entries(spark, sf_dir).write.mode("overwrite").parquet(path)
         _CHOICE_WRITTEN.add(path)

@@ -7,15 +7,9 @@ Reference: ``Athena_queries_for_reports.sql``
 Reference plan shape: ROW_NUMBER latest-per-(patient,analyte) → MAX(CASE)
 pivot → CASE banding — i.e. TWO shuffles (window sort, then hash agg).
 
-Spark-first plan here: ONE hash aggregate per report. The composition
-"latest row per (patient, analyte), then MAX over the single surviving row"
-is exactly ``max_by(value, order) FILTER (WHERE analyte = k)`` per output
-column, so the window collapses into the same groupBy(patient_id) that does
-the pivot:
-
-    groupBy(patient_id).agg(
-        max_by(CASE WHEN code=k THEN value END,
-               CASE WHEN code=k THEN struct(ts, obs_id) END) AS k, ...)
+Spark-first plan here: ONE hash aggregate per report
+(:func:`..operators.pivot.latest_pivot`): the window collapses into the
+same groupBy(patient_id) that does the pivot —
 
 - one shuffle, with map-side partial aggregation (the window form must
   shuffle *every* qualifying row; this reduces per-partition first);
@@ -37,6 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.banding import case_ladder
+from ..operators.pivot import latest_pivot
 
 # Canonical analyte keys (LOINC display strings) from
 # Athena_queries_for_reports.sql:10-15, 91-96.
@@ -56,45 +51,19 @@ T2D_URINE_KEYS = (
 )
 
 
-def _latest_leg(cond: Column, value: Column, order_cols: Sequence[Column]) -> Column:
-    """argmax(value by order) restricted to rows matching ``cond``.
-
-    ``max_by`` ignores rows whose ordering expression is NULL, so gating the
-    ordering struct with the same condition restricts the argmax to the
-    analyte's rows without a separate filter/window.
-    """
-    return F.max_by(F.when(cond, value), F.when(cond, F.struct(*order_cols)))
-
-
 def _pivot_latest(
     obs: DataFrame,
     legs: dict[str, tuple[Sequence[str], Column]],
 ) -> DataFrame:
-    """One hash-aggregate: per patient, per leg, the value expression of the
-    latest qualifying row. ``legs`` maps output name → (key list, value expr).
-    """
+    """Per patient, per leg, the value expression of the latest qualifying
+    row, over the observations of the legs' analytes only."""
     all_keys = sorted({k for keys, _ in legs.values() for k in keys})
-    order = [F.col("effective_datetime"), F.col("observation_id")]
-    aggs = []
-    for out_name, (keys, value_expr) in legs.items():
-        if len(keys) == 1:
-            # Single analyte: the latest row's value.
-            cond = F.col("code_display") == keys[0]
-            aggs.append(_latest_leg(cond, value_expr, order).alias(out_name))
-        else:
-            # Reference takes MAX() over the per-analyte latest rows when an
-            # output column spans several keys (urine glucose,
-            # Athena_queries_for_reports.sql:106-108): lexicographic max of
-            # each key's latest value — NOT the globally-latest row.
-            per_key = [
-                _latest_leg(F.col("code_display") == k, value_expr, order)
-                for k in keys
-            ]
-            aggs.append(F.greatest(*per_key).alias(out_name))
-    return (
-        obs.filter(F.col("code_display").isin(all_keys))
-        .groupBy(F.col("patient_id").alias("patient"))
-        .agg(*aggs)
+    return latest_pivot(
+        obs.filter(F.col("code_display").isin(all_keys)),
+        F.col("patient_id").alias("patient"),
+        "code_display",
+        legs,
+        [F.col("effective_datetime"), F.col("observation_id")],
     )
 
 

@@ -27,6 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..operators.latest import first_last_delta, latest_per_key
+from ..operators.pivot import latest_leg
 from ..sources.tables import load_table, observation_view_from_events, spread
 from .reports import cvd_report, prediabetes_report
 
@@ -136,14 +137,8 @@ FROM piv
 
 
 def q_report_prediabetes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    obs = ev.select(
-        F.col("event_id").alias("observation_id"),
-        F.col("user_id").alias("patient_id"),
-        F.col("event_type").alias("code_display"),
-        F.col("value").alias("value_quantity"),
-        F.col("ts").alias("effective_datetime"),
-        _qualitative_value_string(F.col("props")).alias("value_string"),
+    obs = _obs(spark, sf_dir).withColumn(
+        "value_string", _qualitative_value_string(F.col("value_string"))
     )
     return prediabetes_report(
         obs,
@@ -567,11 +562,10 @@ def _monthly_labs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _monthly_labs_from(ev: DataFrame) -> DataFrame:
     month = F.date_trunc("month", F.col("ts")).cast("date")
-    ordk = F.struct(F.col("ts"), F.col("event_id"))
+    order = [F.col("ts"), F.col("event_id")]
     aggs = []
     for analyte, (etype, scale) in _LABS_MAP.items():
-        cond = F.col("event_type") == etype
-        val = F.max_by(F.when(cond, F.col("value")), F.when(cond, ordk))
+        val = latest_leg(F.col("event_type") == etype, F.col("value"), order)
         aggs.append((val / F.lit(scale)).alias(analyte))
     return ev.groupBy(
         F.col("user_id").alias("patient_id"), month.alias("month")

@@ -5,8 +5,9 @@
 Glue run (``Glue_tranformation_json_parquet.py:52-57`` source + ``:186-199``
 append/commit): a Structured Streaming JSON file source with
 ``trigger(availableNow=True)`` drains all files not yet recorded in the
-checkpoint, applies the SAME four extraction pipelines as the batch ETL
-(:mod:`..plans.etl`) inside ``foreachBatch``, appends Parquet, and stops.
+checkpoint, runs the batch ETL's own :func:`..plans.etl.write_curated`
+inside ``foreachBatch`` (the same four extractions and Parquet appends as
+``fhir_etl``), and stops.
 Re-running after new files land processes ONLY the new files — exactly the
 job-bookmark contract (checkpoint dir ≙ bookmark state; ``job.commit()`` ≙
 checkpoint commit).
@@ -15,8 +16,9 @@ Scale notes:
 - the file source lists incrementally and splits work across executors;
   ``maxFilesPerTrigger`` (latched via ``options``) bounds batch size for
   backfills so one giant drop doesn't produce one giant micro-batch;
-- ``foreachBatch`` caches the exploded entries once per micro-batch and
-  fans out the four extractions, same as the batch ETL;
+- ``write_curated`` caches the exploded entries once per micro-batch,
+  fans out the four extractions and releases the cache before the batch
+  commits;
 - per-batch dedup is WITHIN the batch (matching the reference, which
   dedups within each bookmarked run, not against already-curated data —
   cross-run keyed dedup would need a MERGE-capable table format, recorded
@@ -25,19 +27,11 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
-from ..plans.etl import (
-    extract_conditions,
-    extract_encounters,
-    extract_observations,
-    extract_patients,
-)
-from ..sources.fhir import explode_entries
-from ..sources.writers import write_parquet
-
-RESOURCES = ("patient", "encounter", "condition", "observation")
+from ..plans.etl import write_curated
+from ..sources.fhir import explode_entries, read_bundles
 
 
 def infer_bundle_schema(spark: SparkSession, raw_path: str, multiline: bool = True) -> StructType:
@@ -45,25 +39,7 @@ def infer_bundle_schema(spark: SparkSession, raw_path: str, multiline: bool = Tr
     sources need an explicit schema; the reference leaned on Glue's per-run
     inference. Pin the returned schema in config for production so late
     fields can't silently change extraction."""
-    reader = spark.read.option("recursiveFileLookup", "true")
-    if multiline:
-        reader = reader.option("multiLine", "true")
-    return reader.json(raw_path).schema
-
-
-def _process_batch(batch: DataFrame, curated_path: str, deterministic_dedup: bool) -> None:
-    entries = explode_entries(batch).cache()
-    try:
-        outputs = {
-            "patient": extract_patients(entries, deterministic_dedup),
-            "encounter": extract_encounters(entries, deterministic_dedup),
-            "condition": extract_conditions(entries, deterministic_dedup),
-            "observation": extract_observations(entries, deterministic_dedup),
-        }
-        for name, df in outputs.items():
-            write_parquet(df, curated_path, name)
-    finally:
-        entries.unpersist()
+    return read_bundles(spark, raw_path, multiline=multiline).schema
 
 
 def incremental_fhir_ingest(
@@ -95,7 +71,9 @@ def incremental_fhir_ingest(
 
     query = (
         stream.writeStream.foreachBatch(
-            lambda batch, _id: _process_batch(batch, curated_path, deterministic_dedup)
+            lambda batch, _id: write_curated(
+                explode_entries(batch), curated_path, deterministic_dedup=deterministic_dedup
+            )
         )
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)

@@ -1,0 +1,34 @@
+"""``tools/explain_all.py`` prints plans that diff cleanly between
+checkouts: session-global counters are renumbered per query, so building
+the same query twice prints the same text."""
+
+from __future__ import annotations
+
+import importlib.util
+from pathlib import Path
+
+from test_session import _tiny_events
+
+from healthcare_aws_data_engineering_spark.plans.testdata_queries import QUERIES
+
+_spec = importlib.util.spec_from_file_location(
+    "tools_explain_all", Path(__file__).resolve().parents[1] / "tools" / "explain_all.py"
+)
+explain_all = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(explain_all)
+
+
+def test_normalize_renumbers_by_first_appearance():
+    plan = "a#17, b#9, a#17 lambda x_52#3 lambda x_61 [plan_id=40] [plan_id=7]"
+    assert explain_all.normalize(plan) == (
+        "a#0, b#1, a#0 lambda x_0#2 lambda x_1 [plan_id=0] [plan_id=1]"
+    )
+
+
+def test_two_builds_print_identical_plans(spark, tmp_path):
+    _tiny_events(str(tmp_path))
+    build = QUERIES["wellness_monthly"]
+    first, second = build(spark, str(tmp_path)), build(spark, str(tmp_path))
+    raw = [df._jdf.queryExecution().toString() for df in (first, second)]
+    assert raw[0] != raw[1]  # fresh expression ids and lambda variables
+    assert explain_all.plan_text(first) == explain_all.plan_text(second)

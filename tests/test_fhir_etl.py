@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,6 +22,7 @@ from healthcare_aws_data_engineering_spark.plans.etl import (
     extract_patients,
     fhir_etl,
 )
+from healthcare_aws_data_engineering_spark.plans.etl_queries import q_etl_obs_choice
 from healthcare_aws_data_engineering_spark.sources.fhir import (
     explode_entries,
     read_bundle_string,
@@ -269,6 +272,36 @@ def test_etl_append_and_partitioning(spark, tmp_path):
     # partition pruning visible in the plan
     plan = obs.filter(F.col("status") == "final")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(status" in plan
+
+
+def _events_dir(path, n: int) -> str:
+    path.mkdir(parents=True)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(
+                    [1_704_067_200_000_000 + i * 60_000_000 for i in range(n)],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([i % 7 for i in range(n)], pa.int64()),
+                "event_type": ["click"] * n,
+                "value": [float(i) for i in range(n)],
+                "props": ["{}"] * n,
+            }
+        ),
+        str(path / "events.parquet"),
+    )
+    return str(path)
+
+
+def test_obs_choice_fixture_keyed_on_full_data_dir(spark, tmp_path):
+    """Two data directories sharing a base name each get their own
+    once-per-process choice fixture."""
+    first = _events_dir(tmp_path / "a" / "sfx", 1000)
+    second = _events_dir(tmp_path / "b" / "sfx", 500)
+    assert q_etl_obs_choice(spark, first).count() == 1000
+    assert q_etl_obs_choice(spark, second).count() == 500
 
 
 def test_deterministic_dedup(spark):

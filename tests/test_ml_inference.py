@@ -12,7 +12,7 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from healthcare_aws_data_engineering_spark.ml import inference as I
 from healthcare_aws_data_engineering_spark.ml import params as P
@@ -106,7 +106,7 @@ def test_xgb_udf_matches_scalar_walk(spark, disease):
     out = {
         r.rid: r.p
         for r in df.select(
-            "rid", I.xgb_probability(disease, mf).alias("p")
+            "rid", I.xgb_probabilities_all(mf)[disease].alias("p")
         ).collect()
     }
     for r in rows:
@@ -115,14 +115,6 @@ def test_xgb_udf_matches_scalar_walk(spark, disease):
         x32 = [None if math.isnan(v) else float(np.float32(v)) for v in x]
         assert out[r.rid] == pytest.approx(_scalar_xgb(disease, x32), abs=1e-6), r.rid
         assert 0.0 <= out[r.rid] <= 1.0
-
-
-def test_classify_risk_bands(spark):
-    df = spark.createDataFrame(
-        [Row(p=0.0), Row(p=0.249), Row(p=0.25), Row(p=0.49), Row(p=0.5), Row(p=0.99)]
-    )
-    out = [r.b for r in df.select(I.classify_risk(F.col("p")).alias("b")).collect()]
-    assert out == ["Low", "Low", "Moderate", "Moderate", "High", "High"]
 
 
 def test_predict_diseases_schema_and_flags(spark):
@@ -134,7 +126,7 @@ def test_predict_diseases_schema_and_flags(spark):
             p = r[f"prob_{d}"]
             assert 0.0 <= p <= 1.0
             assert r[f"flag_{d}"] == int(p >= 0.5)
-            assert r[f"risk_{d}"] in ("Low", "Moderate", "High")
+            assert r[f"risk_{d}"] == ("Low" if p < 0.25 else "Moderate" if p < 0.5 else "High")
         assert r.cluster in (0, 1, 2, 3)
 
 

@@ -6,7 +6,7 @@ from healthcare_aws_data_engineering_spark.operators.latest import (
     first_last_delta,
     latest_per_key,
 )
-from healthcare_aws_data_engineering_spark.operators.pivot import max_case_pivot
+from healthcare_aws_data_engineering_spark.operators.pivot import latest_pivot
 
 EV_SCHEMA = "event_id long, user_id long, code string, v double, ts string"
 ROWS = [
@@ -54,23 +54,35 @@ def test_first_last_delta(spark):
     assert out[2]["last_value"] == 2.0
 
 
-def test_max_case_pivot_mixed_types(spark):
+def test_latest_pivot_mixed_types(spark):
+    """Numeric and text legs keep their types; each leg takes its key's
+    latest row (ties broken by id); a leg over several keys takes the
+    greatest of each key's latest value, not the globally latest row."""
     df = spark.createDataFrame(
-        [(1, "k1", 5.0, "x"), (1, "k2", None, "Pos"), (2, "k1", 9.0, None)],
-        "pid long, key string, num double, txt string",
+        [
+            (1, 1, "k1", 5.0, "x", 2),
+            (1, 2, "k1", 8.0, None, 1),
+            (1, 3, "k2", None, "Pos", 1),
+            (1, 4, "k2", None, "Zzz", 0),
+            (1, 5, "k3", None, "Neg", 3),
+            (2, 6, "k1", 9.0, None, 1),
+            (2, 7, "k1", 4.0, None, 1),  # ts tie with id 6 → id 7 wins
+        ],
+        "pid long, id long, key string, num double, txt string, ts long",
     )
-    out = max_case_pivot(
+    out = latest_pivot(
         df,
-        group_col="pid",
+        group="pid",
         key_col="key",
         legs={
-            "n1": ("k1", F.col("num")),
+            "n1": (["k1"], F.col("num")),
             "t2": (["k2", "k3"], F.lower(F.col("txt"))),
         },
+        order=[F.col("ts"), F.col("id")],
     )
     rows = {r.pid: r for r in out.collect()}
     assert rows[1].n1 == 5.0 and rows[1].t2 == "pos"
-    assert rows[2].n1 == 9.0 and rows[2].t2 is None
+    assert rows[2].n1 == 4.0 and rows[2].t2 is None
     assert dict(out.dtypes)["n1"] == "double"
     assert dict(out.dtypes)["t2"] == "string"
 

@@ -19,8 +19,9 @@ from healthcare_aws_data_engineering_spark.functions.scoring import (
     DISEASE_WEIGHTS,
     PENALTY_REFS,
     WELLNESS_WEIGHTS,
-    disease_subscore,
+    disease_penalty_columns,
     penalty,
+    subscore_from_penalties,
     wellness,
 )
 
@@ -41,6 +42,11 @@ SETTINGS = settings(
 
 
 _SCHEMA = "rid int, " + ", ".join(f"`{a}` double" for a in ANALYTES)
+
+
+def _subscore(disease, cols):
+    """The subscore exactly as ``wellness.score_rows`` composes it."""
+    return subscore_from_penalties(disease, disease_penalty_columns(disease, cols))
 
 
 def _df(spark, rows):
@@ -80,7 +86,7 @@ def test_subscore_range_and_presence(spark, rows):
     out = df.select(
         "rid",
         *[
-            disease_subscore(d, cols).alias(f"s_{d}")
+            _subscore(d, cols).alias(f"s_{d}")
             for d in DISEASE_WEIGHTS
         ],
     ).collect()
@@ -101,7 +107,7 @@ def test_wellness_is_convex_combination(spark, rows):
     [min, max]; confidence equals the present weight mass."""
     df = _df(spark, rows)
     cols = {a: F.col(a) for a in ANALYTES}
-    subs = {d: disease_subscore(d, cols) for d in DISEASE_WEIGHTS}
+    subs = {d: _subscore(d, cols) for d in DISEASE_WEIGHTS}
     w, conf, used = wellness(subs)
     out = df.select(
         "rid",

@@ -27,7 +27,10 @@ import math
 import numpy as np
 import pytest
 
-from healthcare_aws_data_engineering_spark.ml.inference import _score_matrix
+from healthcare_aws_data_engineering_spark.ml.inference import (
+    _score_matrix,
+    xgb_probabilities_all,
+)
 from healthcare_aws_data_engineering_spark.ml.params import (
     DISEASES,
     model_features,
@@ -156,3 +159,23 @@ def test_batch_consistency_with_walker():
             assert got[i] == pytest.approx(
                 _prob_raw(d, list(X[i].astype(float))), abs=1e-9
             ), (d, n)
+
+
+def test_scoring_udf_matches_golden(spark):
+    """The pandas UDF the queries run (``xgb_probabilities_all``) reproduces
+    every golden pin through Spark and Arrow, all three boosters at once."""
+    mf = model_features()
+    vectors = {**FORCED_VECTORS, **RANDOM_VECTORS}
+    golden = {**GOLDEN_FORCED, **GOLDEN_RANDOM}
+    df = spark.createDataFrame(
+        [(case, *x) for case, x in vectors.items()],
+        "case string, " + ", ".join(f"{n} double" for n in mf),
+    )
+    out = {
+        r.case: r.p
+        for r in df.select("case", xgb_probabilities_all(mf).alias("p")).collect()
+    }
+    assert set(out) == set(golden)
+    for case, want in golden.items():
+        for d in DISEASES:
+            assert out[case][d] == pytest.approx(want[d], abs=1e-10), (case, d)

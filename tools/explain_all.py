@@ -2,9 +2,13 @@
 
 Usage: python tools/explain_all.py [sf_dir] [query ...]
 
-Prints the op tree (formatted mode, without the per-node detail section)
-plus scan-level pushdown info for each query, so plan regressions are easy
-to eyeball; the enforced invariants live in tests/test_plan_quality.py.
+Prints each query's formatted physical plan (op tree plus per-node
+detail, pushed filters included) with the session-global counters in it
+renumbered per query: expression ids (``#123``), lambda variables
+(``lambda x_45``) and exchange plan ids (``plan_id=6``) become their
+order of first appearance. Two builds of an unchanged query then print the
+same text, so ``diff`` between the output of two checkouts shows only real
+plan changes. The enforced invariants live in tests/test_plan_quality.py.
 """
 
 from __future__ import annotations
@@ -17,6 +21,26 @@ sys.path.insert(0, ".")
 from healthcare_aws_data_engineering_spark.session import get_spark
 from __spark_entry__ import queries
 
+_COUNTERS = (r"(#)(\d+)", r"(lambda \w+?_)(\d+)", r"(plan_id=)(\d+)")
+
+
+def normalize(plan: str) -> str:
+    """Renumber each session-global counter in order of first appearance."""
+    for pattern in _COUNTERS:
+        seen: dict[str, int] = {}
+        plan = re.sub(
+            pattern,
+            lambda m: f"{m.group(1)}{seen.setdefault(m.group(2), len(seen))}",
+            plan,
+        )
+    return plan
+
+
+def plan_text(df) -> str:
+    """The normalized formatted physical plan of ``df``."""
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return normalize(df._jdf.queryExecution().explainString(mode.fromString("formatted")))
+
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -26,17 +50,10 @@ def main() -> None:
     for name, fn in queries().items():
         if only and name not in only:
             continue
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = plan_text(fn(spark, sf_dir))
         tree = plan.split("\n\n(1)")[0]
         print(f"\n{'=' * 70}\n{name}\n{'=' * 70}")
-        print(tree.replace("== Physical Plan ==\n", "").rstrip())
-        for m in re.finditer(r"(PushedFilters|PartitionFilters): \[[^\]]*\]", plan):
-            print(f"  {m.group(0)}")
+        print(plan.replace("== Physical Plan ==\n", "").rstrip())
         n_shuffle = len(re.findall(r"[+:]- Exchange ", tree))
         n_bcast = tree.count("BroadcastExchange")
         print(f"  [shuffles={n_shuffle} broadcasts={n_bcast}]")
