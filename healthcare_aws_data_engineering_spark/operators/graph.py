@@ -25,10 +25,12 @@ Scale notes (100 TB shape)
   equality of consecutive rounds IS convergence (no expensive
   changed-rows anti-join).
 - Near-dup graphs have tiny diameter (clusters are dense cliques-ish),
-  so the round count stays single-digit. For adversarial path-shaped
-  graphs, switch to alternating large-star/small-star (Kiveris et al.,
-  "Connected Components in MapReduce and Beyond", SoCC'14), which
-  converges in O(log^2 n) — documented trade, not needed for dedup.
+  so the round count stays single-digit (measured: 2 rounds to fixpoint
+  on the sf0.1 MinHash graph). A graph whose diameter grows with its
+  size — a path, or a k-NN graph's giant component — needs one round
+  per hop; SCALING.md ("Connected-components: rounds to fixpoint")
+  measures that case against alternating large-star/small-star
+  (Kiveris et al., SoCC'14, O(log² n) rounds), which no caller needs.
 """
 
 from __future__ import annotations
@@ -41,36 +43,14 @@ def connected_components(
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iter: int = 25,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Label every node of the undirected pair graph with the MIN node id
     reachable from it. Returns ``(node, cluster_id)`` — one row per
     distinct node appearing in ``pairs``.
 
-    ``algorithm``:
-
-    - ``"label"`` (default) — min-label propagation; rounds = graph
-      DIAMETER. The right choice for verified near-dup pair graphs,
-      which are dense clique-ish clusters (measured: 2 rounds to
-      fixpoint on the sf0.1 MinHash graph; SCALING.md, "Connected-
-      components: rounds to fixpoint").
-    - ``"star"`` — alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond", SoCC'14);
-      O(log² n) rounds REGARDLESS of diameter. Use for graphs whose
-      diameter grows with corpus size — e.g. clustering a k-NN graph,
-      whose giant component measured diameter 9 at just 2k vectors
-      (same SCALING.md section; a path-shaped control needs >40 label
-      rounds but 8 star rounds). Identical output labels (component
-      min).
-
-    ``max_iter`` bounds the rounds (label: ≥ diameter needed for an
-    exact answer; star: ≥ ~log² of the largest component — both stop
-    early the round after fixpoint).
+    ``max_iter`` bounds the rounds (≥ the graph diameter for an exact
+    answer); the loop stops the round after fixpoint.
     """
-    if algorithm == "star":
-        return _connected_components_star(pairs, src_col, dst_col, max_iter)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     fwd = pairs.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
@@ -114,102 +94,6 @@ def connected_components(
             break
         prev = cur
     return labels.select(F.col("node"), F.col("lbl").alias("cluster_id"))
-
-
-def _connected_components_star(
-    pairs: DataFrame,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-) -> DataFrame:
-    """Alternating large-star/small-star rounds (Kiveris et al. 2014).
-
-    Per round, TWO keyed shuffles (a groupBy-min and a join per star) over
-    an edge set that only ever shrinks toward one (node → component-min)
-    star edge per non-root node — no label table rides along, and round
-    count is O(log² n) in the largest component instead of its diameter.
-
-    - large-star(u): every neighbor v > u re-attaches to
-      m = min(Γ(u) ∪ {u}). Each undirected edge is processed from its
-      smaller endpoint exactly once.
-    - small-star(u): edges oriented (hi=u, lo=v); every lo-neighbor and u
-      itself re-attach to m = min(Γ⁻(u)).
-
-    Convergence: the deduped edge set is stationary — checked as the
-    O(1) driver pair (count, xxhash64-sum), the same trick as the label
-    variant's (sum, count). Output matches ``algorithm="label"`` exactly:
-    one row per distinct input node, cluster_id = component min.
-    """
-    raw = pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    # Node coverage comes from the RAW pairs, BEFORE the self-loop filter:
-    # a node appearing only as (x, x) is still a (singleton) node of the
-    # graph and the label variant emits it — so must we.
-    all_nodes = (
-        raw.select(F.col("u").alias("node"))
-        .union(raw.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        raw.filter(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint(eager=True)
-    )
-    prev: tuple | None = None
-    for _ in range(max_iter):
-        # ---- large-star: neighbors above u hook onto u's min
-        nbrs = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("__mn"))
-            .select("u", F.least("__mn", "u").alias("m"))
-        )
-        edges = (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates(["u", "v"])
-        )
-        # ---- small-star: orient (hi, lo); lo-neighbors and hi hook onto min
-        oriented = edges.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).dropDuplicates(["u", "v"])
-        mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        edges = (
-            oriented.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates(["u", "v"])
-            # lazily marked; materialized by the stationarity collect
-            # below — one job per round, not two (see the label variant)
-            .localCheckpoint(eager=False)
-        )
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: a BIGINT sum of ~2^63-scale
-            # hashes overflows (ANSI error); decimal sums are exact and
-            # order-independent
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).collect()[0]
-        cur = (row["n"], row["h"])
-        if cur == prev:
-            break
-        prev = cur
-    # At fixpoint every non-root node carries exactly one (node, min)
-    # edge; the min-agg is a no-op then, but keeps the answer a valid
-    # (coarser) labeling even if max_iter cut the loop early. Roots
-    # appear only on the right side — attach them to themselves.
-    parent = edges.groupBy(F.col("u").alias("node")).agg(
-        F.min("v").alias("cluster_id")
-    )
-    return all_nodes.join(parent, "node", "left").select(
-        "node", F.coalesce("cluster_id", F.col("node")).alias("cluster_id")
-    )
 
 
 def dup_clusters(

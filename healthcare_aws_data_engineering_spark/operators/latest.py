@@ -5,16 +5,11 @@ ORDER BY effective_datetime DESC) ... WHERE rn = 1``
 (``Athena_queries_for_reports.sql:8-9,29`` and ``:86-89,110``) and the pandas
 "sort desc, iloc[0]" argmax (``test.py:282-291``).
 
-Two physical strategies, same result:
-
-- ``strategy="agg"`` (default): ``groupBy(keys).agg(max_by(value,
-  struct(order, tiebreak)))``. Hash aggregate with map-side partial
-  aggregation — ONE shuffle of partially-reduced rows. At 100 TB this is the
-  plan you want: no per-partition sort, no carrying every row through a
-  window. The struct ordering key makes tie-breaking deterministic.
-- ``strategy="window"``: faithful ROW_NUMBER form. Needs a full shuffle +
-  sort of *all* rows; kept for parity testing and for callers that need the
-  whole winning row without enumerating value columns.
+Physical form: ``groupBy(keys).agg(max_by(value, struct(order,
+tiebreak)))``. Hash aggregate with map-side partial aggregation — ONE
+shuffle of partially-reduced rows. At 100 TB this is the plan you want: no
+per-partition sort, no carrying every row through a window. The struct
+ordering key makes tie-breaking deterministic.
 
 Tie-breaking: the reference's ROW_NUMBER breaks ties arbitrarily (SURVEY
 §7.4.5). We stabilize with ``tiebreak`` (e.g. the row id) so Spark and any
@@ -25,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .pivot import latest_leg
 
@@ -36,7 +31,6 @@ def latest_per_key(
     order_col: str,
     value_cols: Sequence[str],
     tiebreak: str | None = None,
-    strategy: str = "agg",
 ) -> DataFrame:
     """One row per ``keys`` holding the ``value_cols`` of the row with the
     greatest ``(order_col, tiebreak)``; output columns = keys + value_cols +
@@ -44,19 +38,11 @@ def latest_per_key(
     order_key: list[Column] = [F.col(order_col)]
     if tiebreak:
         order_key.append(F.col(tiebreak))
-    if strategy == "agg":
-        ord_struct = F.struct(*order_key)
-        aggs = [
-            F.max_by(F.col(c), ord_struct).alias(c) for c in value_cols
-        ] + [F.max(F.col(order_col)).alias(order_col)]
-        return df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-    if strategy == "window":
-        w = W.partitionBy(*keys).orderBy(*[c.desc() for c in order_key])
-        out = df.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") == 1
-        )
-        return out.select(*keys, *value_cols, order_col)
-    raise ValueError(f"unknown strategy: {strategy}")
+    ord_struct = F.struct(*order_key)
+    aggs = [
+        F.max_by(F.col(c), ord_struct).alias(c) for c in value_cols
+    ] + [F.max(F.col(order_col)).alias(order_col)]
+    return df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
 
 
 # test.py:133-141 — the display-name sets the app probes for vitals

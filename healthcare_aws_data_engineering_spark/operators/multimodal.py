@@ -830,7 +830,6 @@ def dhash_near_dup_pairs(
     max_hamming: int = 6,
     n_bands: int | None = None,
     max_bucket: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Banded Hamming near-dup join over a (media_id, dhash) frame —
     the MinHash-LSH recipe applied to the perceptual hash: split the 16
@@ -860,13 +859,10 @@ def dhash_near_dup_pairs(
     treat the cap as a cost governor for adversarial mega-buckets with
     a budgeted loss, never as an approximation of the exact join.
 
-    ``checkpoint=True`` (the default) localCheckpoints the slim
-    (media_id, dhash) projection before the self-join — NOTE this makes
-    the call EAGER (it triggers a Spark job at plan-build time and
-    pins the result in executor-local storage). Pass
-    ``checkpoint=False`` when ``hashes`` is already materialized
-    (persisted/checkpointed upstream, e.g. the probe tool's cached
-    frame) to skip the redundant materialization (r11 advice)."""
+    The slim (media_id, dhash) projection is localCheckpointed before
+    the self-join — NOTE this makes the call EAGER (it triggers a Spark
+    job at plan-build time and pins the result in executor-local
+    storage)."""
     n_bands = derive_dhash_bands(max_hamming, n_bands)
     # Checkpoint the slim (media_id, dhash) table before the self-join:
     # both join sides reference it, their subtrees are NOT canonically
@@ -875,9 +871,7 @@ def dhash_near_dup_pairs(
     # ran TWICE (MapInPandas x2 in the executed plan, no
     # ReusedExchange). At 100 TB the decode pass is the dominant cost;
     # the checkpoint is 2 scalar columns per image, paid once.
-    slim = hashes.select("media_id", "dhash")
-    if checkpoint:
-        slim = slim.localCheckpoint()
+    slim = hashes.select("media_id", "dhash").localCheckpoint()
     bands = explode_dhash_bands(slim, n_bands)
     if max_bucket is not None:
         # Same single-subtree window-count shape as dedup._bucket_cap:

@@ -33,14 +33,12 @@ from .similarity import (
     dot_q_arrow,
     _centroid_cell,
     _centroid_cell_two_level,
+    _coarse_centroids,
     _non_null,
     _resolve_index,
     band_keys_from_chunks,
-    cells_for,
-    kmeans_centroids,
     quantize_vec,
     resolve_assign,
-    sample_centroids,
     sig_chunks_q,
 )
 
@@ -53,7 +51,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     max_cluster: int = 256,
     target_cluster: int = 200,
-    centroid_method: str = "sample",
     assign: str = "auto",
 ) -> DataFrame:
     """SemDeDup: coarse-cluster the embedding space, then drop the
@@ -78,7 +75,9 @@ def semantic_dedup(
     - an ``int``: explicit count, sampled centroids.
     - an explicit ``list[list[float]]`` matrix: engine-pinned literals —
       what the driver query uses, because its DuckDB oracle bakes the
-      centroid values into SQL.
+      centroid values into SQL — or :func:`similarity.kmeans_centroids`
+      output, which co-locates similar pairs better when the corpus is
+      actually clustered.
 
     ``max_cluster`` caps self-join membership per cluster: members are
     ranked by ``(md5(id), id)`` — an unbiased deterministic sample — and
@@ -108,25 +107,9 @@ def semantic_dedup(
     the bounded-literal form is what the probe and oracle exercise.
     """
     corpus = _non_null(corpus, vec_col)
-    if centroids is None or isinstance(centroids, int):
-        n_cells = (
-            cells_for(corpus.count(), target_cluster)
-            if centroids is None
-            else centroids
-        )
-        # "sample": md5-stratified corpus sample — deterministic on any
-        # engine, zero training cost; "kmeans": seed-fixed trained
-        # coarse quantizer — costs one training pass but co-locates
-        # similar pairs better when the corpus is actually clustered
-        # (same trade as ivf_topk's centroid choice).
-        if centroid_method == "sample":
-            centroids = sample_centroids(
-                corpus, n_cells, id_col=id_col, vec_col=vec_col
-            )
-        elif centroid_method == "kmeans":
-            centroids = kmeans_centroids(corpus, n_cells, vec_col=vec_col)
-        else:
-            raise ValueError(f"unknown centroid_method {centroid_method!r}")
+    centroids = _coarse_centroids(
+        corpus, centroids, target_cluster, id_col, vec_col
+    )
     assign = resolve_assign(assign, len(centroids))
     staged = corpus.select(
         F.col(id_col).alias("vec_id"),

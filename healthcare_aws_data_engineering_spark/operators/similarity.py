@@ -164,9 +164,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     label_col: str = "label",
     exact: bool = False,
-    method: str = "exact",
-    overfetch: int = 3,
-    lsh_kwargs: dict | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor
     (query) vector, the ``k`` most cosine-similar corpus vectors whose
@@ -175,54 +172,15 @@ def hard_negatives(
     easy; mining the hardest cross-label neighbors is the standard
     curriculum, e.g. dense-retrieval trainers like DPR/ANCE).
 
-    ``method='exact'`` (default, oracle-checked): same execution shape
-    as :func:`cosine_topk` — the bounded anchor batch broadcasts (with
-    its labels), the corpus streams through one pass, the
-    label-mismatch predicate drops same-class candidates (and self)
-    BEFORE the per-anchor top-k window, so the k survivors are
-    guaranteed genuine negatives rather than a post-filtered shorter
-    list.
-
-    ``method='lsh'`` (the corpus-scale anchor path): candidates come
-    from :func:`lsh_topk` with ``k × overfetch`` over-fetch (bucketed
-    probe join, derived index geometry — never a cross join), labels
-    join back (anchor side broadcast-bounded, candidate rows ≤
-    anchors × k × overfetch so the candidate relation broadcasts into
-    the corpus label lookup), then the same label-mismatch filter +
-    per-anchor re-rank. Over-fetch absorbs same-label candidates that
-    the filter removes; recall vs the exact path is pinned in pytest.
+    Same execution shape as :func:`cosine_topk` (oracle-checked): the
+    bounded anchor batch broadcasts (with its labels), the corpus
+    streams through one pass, the label-mismatch predicate drops
+    same-class candidates (and self) BEFORE the per-anchor top-k window,
+    so the k survivors are guaranteed genuine negatives rather than a
+    post-filtered shorter list.
     """
     corpus = _non_null(corpus, vec_col)
     queries = _non_null(queries, vec_col)
-    if method == "lsh":
-        cands = lsh_topk(
-            corpus,
-            queries,
-            k=k * overfetch,
-            id_col=id_col,
-            vec_col=vec_col,
-            exact=exact,
-            **(lsh_kwargs or {}),
-        ).drop("rank")
-        labels_q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(label_col).alias("anchor_label")
-        )
-        labels_c = corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(label_col).alias("neg_label")
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            F.broadcast(cands.join(F.broadcast(labels_q), "query_id"))
-            .join(labels_c, "neighbor_id")
-            .filter(F.col("neg_label") != F.col("anchor_label"))
-            .select("query_id", "anchor_label", "neighbor_id", "neg_label", "sim")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    if method != "exact":
-        raise ValueError(f"unknown method {method!r} (use 'exact' or 'lsh')")
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
@@ -722,7 +680,6 @@ def lsh_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    planes: int | None = None,
     bands: int | None = None,
     plane_matrix: list[list[int]] | None = None,
     exact: bool = False,
@@ -757,19 +714,7 @@ def lsh_topk(
     ``bands`` is also None, band count from ``design_cos`` /
     ``target_recall`` (:func:`bands_for` — holds the recall floor as
     width grows; see :func:`derive_index`). ``exact`` switches the
-    rerank cosine to the decimal-folded form (oracle hash-equality).
-    ``planes`` is DEPRECATED and has no effect — the plane count always
-    comes from ``plane_matrix`` (given or derived); passing it warns."""
-    if planes is not None:
-        import warnings
-
-        warnings.warn(
-            "lsh_topk(planes=...) is deprecated and ignored: the plane "
-            "count comes from plane_matrix (explicit or derived from the "
-            "corpus). Pass plane_matrix, or bands/target_bucket.",
-            DeprecationWarning,
-            stacklevel=2,
-        )
+    rerank cosine to the decimal-folded form (oracle hash-equality)."""
     corpus = _non_null(corpus, vec_col)
     queries = _non_null(queries, vec_col)
     plane_matrix, width, bands = _resolve_index(
@@ -1112,18 +1057,49 @@ def kmeans_centroids(
     max_iter: int = 20,
 ) -> list[list[float]]:
     """Trained coarse quantizer: seed-fixed ``pyspark.ml.clustering.KMeans``
-    centers (deterministic for a fixed corpus/seed). Centers are the only
-    driver-side state (n × dim floats). Prefer over :func:`sample_centroids`
-    when corpus geometry is clustered — probing trained cells recovers more
-    true neighbors at equal n_probe."""
+    centers. Centers are the only driver-side state (n × dim floats).
+    Prefer over :func:`sample_centroids` when corpus geometry is
+    clustered — probing trained cells recovers more true neighbors at
+    equal n_probe.
+
+    The fit is a SINGLE-TASK fit over the corpus sorted by vector:
+    k-means|| seeds by sampling each partition with a per-partition
+    seed and Lloyd's steps fold per partition, so a multi-partition fit
+    gives centers that depend on the input layout (and so on the core
+    count). One sorted partition makes them a function of the corpus
+    and ``seed`` alone. It runs on one core: fit a sample of a large
+    corpus."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feats = _non_null(corpus, vec_col).select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+    feats = (
+        _non_null(corpus, vec_col)
+        .select(F.col(vec_col).cast("array<double>").alias("__v"))
+        .coalesce(1)
+        .sortWithinPartitions("__v")
+        .select(array_to_vector(F.col("__v")).alias("features"))
     )
     model = KMeans(k=n, seed=seed, maxIter=max_iter).fit(feats)
     return [[float(x) for x in c] for c in model.clusterCenters()]
+
+
+def _coarse_centroids(
+    corpus: DataFrame,
+    centroids: list[list[float]] | int | None,
+    target_cell: int,
+    id_col: str,
+    vec_col: str,
+) -> list[list[float]]:
+    """The coarse quantizer of an IVF or SemDeDup index. ``None`` derives
+    the cell count from the corpus at index-build time (:func:`cells_for`,
+    expected cell population ≈ ``target_cell``) and an ``int`` fixes it;
+    both take the :func:`sample_centroids` sample. A list of centers —
+    engine-pinned literals, or :func:`kmeans_centroids` output on a
+    clustered corpus — is used as given."""
+    if centroids is None or isinstance(centroids, int):
+        n = cells_for(corpus.count(), target_cell) if centroids is None else centroids
+        return sample_centroids(corpus, n, id_col, vec_col)
+    return [[float(x) for x in c] for c in centroids]
 
 
 def ivf_topk(
@@ -1134,7 +1110,7 @@ def ivf_topk(
     vec_col: str = "embedding",
     n_centroids: int | None = None,
     n_probe: int = 4,
-    centroids: str | list[list[float]] = "sample",
+    centroids: list[list[float]] | None = None,
     exact: bool = False,
     target_cell: int = 200,
     assign: str = "auto",
@@ -1164,12 +1140,12 @@ def ivf_topk(
     practice sizes cells ∝ √n or n/target; n/target is used for
     consistency with the rest of the family.
 
-    ``centroids``: ``"sample"`` (md5-stratified deterministic sample —
-    engine-reproducible, so a SQL oracle can re-derive the same cells),
-    ``"kmeans"`` (seed-fixed trained coarse quantizer,
-    :func:`kmeans_centroids` — better cells on clustered corpora), or an
-    explicit list of centers. ``exact``: decimal-folded distances + rerank
-    cosine (oracle hash-equality).
+    ``centroids``: ``None`` (default) takes ``n_centroids`` centers from
+    the md5-stratified deterministic sample — engine-reproducible, so a
+    SQL oracle can re-derive the same cells; an explicit list of centers
+    (e.g. :func:`kmeans_centroids` — better cells on clustered corpora)
+    is used as given (:func:`_coarse_centroids`). ``exact``:
+    decimal-folded distances + rerank cosine (oracle hash-equality).
 
     Scale shape: assignment is a projection against broadcast-literal
     centroids (no shuffle; centroid counts past ~10⁴ belong in a
@@ -1178,14 +1154,10 @@ def ivf_topk(
     rerank cost is |candidates| dot products."""
     corpus = _non_null(corpus, vec_col)
     queries = _non_null(queries, vec_col)
-    if n_centroids is None:
-        n_centroids = cells_for(corpus.count(), target_cell)
-    if centroids == "sample":
-        cents = sample_centroids(corpus, n_centroids, id_col, vec_col)
-    elif centroids == "kmeans":
-        cents = kmeans_centroids(corpus, n_centroids, vec_col)
-    else:
-        cents = [[float(x) for x in c] for c in centroids]
+    cents = _coarse_centroids(
+        corpus, n_centroids if centroids is None else centroids,
+        target_cell, id_col, vec_col,
+    )
     # exact mode: distances run on the staged quantized vector (__q)
     c_pre = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -1210,7 +1182,7 @@ def ivf_topk(
     qdists = _cell_dists(F.col("__v"), cents, exact)
     indexed = F.zip_with(
         qdists,
-        F.sequence(F.lit(0), F.lit(n_centroids - 1)),
+        F.sequence(F.lit(0), F.lit(len(cents) - 1)),
         lambda d, i: F.struct(d.alias("d"), i.cast("int").alias("cell")),
     )
     ranked_cells = F.slice(
@@ -1562,7 +1534,7 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     n_centroids: int | None = None,
     n_probe: int = 4,
-    centroids: str | list[list[float]] = "sample",
+    centroids: list[list[float]] | None = None,
     codebooks: list[list[list[int]]] | None = None,
     target_cell: int = 200,
     residual: bool = False,
@@ -1613,14 +1585,10 @@ def ivfpq_topk(
     """
     corpus = _non_null(corpus, vec_col)
     queries = _non_null(queries, vec_col)
-    if n_centroids is None:
-        n_centroids = cells_for(corpus.count(), target_cell)
-    if centroids == "sample":
-        cents = sample_centroids(corpus, n_centroids, id_col, vec_col)
-    elif centroids == "kmeans":
-        cents = kmeans_centroids(corpus, n_centroids, vec_col)
-    else:
-        cents = [[float(x) for x in c] for c in centroids]
+    cents = _coarse_centroids(
+        corpus, n_centroids if centroids is None else centroids,
+        target_cell, id_col, vec_col,
+    )
     if codebooks is None:
         codebooks = (
             residual_codebooks(corpus, cents, id_col=id_col, vec_col=vec_col)

@@ -30,14 +30,14 @@ for the same reason production trainers do it:
 Honest deviations from Kudo's algorithm 2, documented rather than
 hidden: the E-step uses exact forward-backward expected counts (pinned
 against brute-force enumeration over ALL segmentations in
-tests/test_unigram.py), but DEFAULT pruning drops the
-lowest-expected-count pieces per round instead of computing each
-piece's exact likelihood-loss-on-removal. The exact criterion is
-implemented (``prune_to_size(criterion="exact_loss")``, r15) and its
-cost vs the default measured on a golden corpus
-(SCALING.md, "r15 probe: unigram pruning criterion");
-single-character pieces are never pruned under either criterion, so
-encoding stays lossless on any text composed of seen characters.
+tests/test_unigram.py), but pruning drops the lowest-expected-count
+pieces per round instead of computing each piece's exact
+likelihood-loss-on-removal. On a golden corpus (SCALING.md, "r15
+probe: unigram pruning criterion") the expected-count rule is
+near-equivalent at mild compression and 17% worse LL per token when
+vocab is squeezed, at 1/100–1/500 of the exact criterion's cost.
+Single-character pieces are never pruned, so encoding stays lossless
+on any text composed of seen characters.
 """
 
 # NOTE: no `from __future__ import annotations` here — it stringifies
@@ -187,79 +187,36 @@ def corpus_loglik(
     return total
 
 
-def _removal_losses(
-    freqs: dict[str, int], logp: dict[str, float], multi: list[str]
-) -> dict[str, float]:
-    """Kudo's algorithm-2 pruning criterion, computed EXACTLY: for each
-    candidate piece, the corpus log-likelihood DROP when that piece is
-    removed and the remaining probability mass renormalized. O(|multi|)
-    full corpus-likelihood evaluations — driver-side and vocabulary-
-    bounded, but quadratic-ish in vocab: usable to a few thousand
-    pieces (the probe regime); ``criterion="expected_count"`` is the
-    corpus-size-and-vocab-cheap default (near-equivalent at mild
-    compression, 17% worse LL when vocab is squeezed — SCALING.md r15
-    unigram pruning table)."""
-    base = corpus_loglik(freqs, logp)
-    # exp() folded in sorted piece order — deterministic float sums
-    mass = {p: math.exp(logp[p]) for p in sorted(logp)}
-    total = sum(mass[p] for p in sorted(mass))
-    losses: dict[str, float] = {}
-    for p in multi:
-        adj = math.log(total - mass[p])
-        rest = {q: v - adj for q, v in logp.items() if q != p}
-        losses[p] = base - corpus_loglik(freqs, rest)
-    return losses
-
-
 def prune_to_size(
     freqs: dict[str, int],
     logp: dict[str, float],
     vocab_size: int,
     keep_frac: float = 0.75,
     em_iters: int = 1,
-    criterion: str = "expected_count",
 ) -> dict[str, float]:
     """Shrink the piece table to ``vocab_size``: per round, keep the
     top ``keep_frac`` of multi-char pieces (ties broken
     lexicographically), re-fit with ``em_iters`` EM passes, repeat.
     Single-char pieces are never pruned (lossless-encode guarantee).
 
-    ``criterion`` ranks the keepers: ``"expected_count"`` (default —
-    frequency-weighted expected piece count, one forward-backward pass
-    per round) or ``"exact_loss"`` (Kudo's exact
-    likelihood-loss-on-removal, :func:`_removal_losses` — O(|multi|)
-    corpus-likelihood evaluations per round). Measured on the r15
-    morphological golden corpus (SCALING.md r15 table): at MILD
-    compression (vocab ≈ 0.64·|words|) the two are near-equivalent
-    (0.08% corpus-LL gap, 99.5% encode parity); at AGGRESSIVE
-    compression (vocab ≈ 0.38·|words|) exact_loss is 17% better LL per
-    token at equal vocab — but costs ~100–500× (it is the quadratic
-    driver-side path; at production scale, 32k vocab over a 1M-word
-    head, it is infeasible in this form, which is why SentencePiece
-    itself ships an analytic approximation). Default stays
-    expected_count; reach for exact_loss when vocab is squeezed far
-    below the natural piece inventory and the table is small."""
-    if criterion not in ("expected_count", "exact_loss"):
-        raise ValueError(
-            "criterion must be 'expected_count' or 'exact_loss', "
-            f"got {criterion!r}"
-        )
+    Keepers are ranked by frequency-weighted expected piece count (one
+    forward-backward pass per round), the analytic stand-in for Kudo's
+    exact likelihood-loss-on-removal; SCALING.md ("r15 probe: unigram
+    pruning criterion") records what the exact criterion buys and
+    costs."""
     while True:
         chars = [p for p in logp if len(p) == 1]
         multi = [p for p in logp if len(p) > 1]
         if len(chars) + len(multi) <= vocab_size or not multi:
             return logp
         max_len = max(len(p) for p in logp)
-        if criterion == "exact_loss":
-            acc = _removal_losses(freqs, logp, multi)
-        else:
-            acc = {}
-            for w in sorted(freqs):
-                exp, ll = _forward_backward(w, logp, max_len)
-                if ll == float("-inf"):
-                    continue
-                for p, c in exp.items():
-                    acc[p] = acc.get(p, 0.0) + freqs[w] * c
+        acc: dict[str, float] = {}
+        for w in sorted(freqs):
+            exp, ll = _forward_backward(w, logp, max_len)
+            if ll == float("-inf"):
+                continue
+            for p, c in exp.items():
+                acc[p] = acc.get(p, 0.0) + freqs[w] * c
         budget = max(vocab_size - len(chars), 0)
         # budget < len(multi) here (the entry check returned otherwise),
         # so capping at len(multi)-1 keeps >= budget AND guarantees the
@@ -321,14 +278,13 @@ def unigram_train(
     max_piece_len: int = 8,
     seed_size: int = 20_000,
     em_iters: int = 2,
-    prune_criterion: str = "expected_count",
 ) -> dict[str, float]:
     """Train a unigram-LM piece table from a corpus: distributed word
     count (the ONE corpus-scale pass, shared with :func:`bpe.bpe_train`
     — same bounded top-``max_vocab`` head contract, same
     TakeOrdered-not-full-sort collect) → driver-side seed → EM → prune
-    to ``vocab_size`` (``prune_criterion`` as in :func:`prune_to_size`).
-    Returns piece → log-probability."""
+    to ``vocab_size`` (:func:`prune_to_size`). Returns piece →
+    log-probability."""
     wc = word_counts(docs, text_col, min_count)
     if max_vocab is not None:
         wc = wc.orderBy(F.col("n").desc(), F.col("word").asc()).limit(max_vocab)
@@ -340,7 +296,7 @@ def unigram_train(
             f"min_count={min_count}; lower min_count or check text_col"
         )
     logp = em_fit(freqs, pieces, em_iters)
-    return prune_to_size(freqs, logp, vocab_size, criterion=prune_criterion)
+    return prune_to_size(freqs, logp, vocab_size)
 
 
 def unigram_encode(

@@ -94,9 +94,7 @@ def spread(df: DataFrame) -> DataFrame:
     per-row stage (md5 chains, shingle HOFs, Arrow UDFs) runs on ONE
     core no matter how many the session has (measured r15/r16: the
     whole suite's 8-vs-32-core ratios sit near 1). Spreading the rows
-    first lets those stages use the cores the driver granted; at
-    cluster scale, where ``maxPartitionBytes`` produces real splits,
-    the same call is a cheap rebalance of an already-parallel scan.
+    first lets those stages use the cores the driver granted.
 
     Scale-adaptive by construction: the target count is
     ``defaultParallelism`` (from ``local[$SPARK_GRAFT_CPUS]`` here, the
@@ -109,8 +107,19 @@ def spread(df: DataFrame) -> DataFrame:
 
     Use at heavy per-row-work call sites only — an extra exchange on a
     0.2 s scan+agg query is pure overhead.
+
+    An input already split at least ``defaultParallelism`` ways — a
+    cluster-scale scan, where ``maxPartitionBytes`` produces real
+    splits — is returned unchanged: a round-robin to the core count
+    would SHRINK its parallelism. Reading a scan's partition count
+    plans it and lists its splits but runs no job; pass scans only —
+    on an input whose plan holds a shuffle, adaptive execution runs
+    that stage to count its partitions.
     """
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= n:
+        return df
+    return df.repartition(n)
 
 
 def load_tables(

@@ -19,9 +19,13 @@ _spec.loader.exec_module(explain_all)
 
 
 def test_normalize_renumbers_by_first_appearance():
-    plan = "a#17, b#9, a#17 lambda x_52#3 lambda x_61 [plan_id=40] [plan_id=7]"
+    plan = (
+        "a#17, b#9, a#17 lambda x_52#3 lambda x_61 [plan_id=40] [plan_id=7]"
+        " MapPartitionsRDD[95] at localCheckpoint, RDD[12], RDD[95]"
+    )
     assert explain_all.normalize(plan) == (
         "a#0, b#1, a#0 lambda x_0#2 lambda x_1 [plan_id=0] [plan_id=1]"
+        " MapPartitionsRDD[0] at localCheckpoint, RDD[1], RDD[0]"
     )
 
 

@@ -79,8 +79,9 @@ def test_cc_matches_union_find(spark, edges):
 
 
 def test_star_equals_label_fixture_graphs(spark):
-    # Clusters + a 500-node path (the adversarial diameter the star
-    # variant exists for) + a hub star + self-pair singletons, one graph.
+    # Clusters + a 500-node path (diameter 499: one label round per hop)
+    # + hub stars + self-pair singletons, one graph, pinned against
+    # union-find.
     edges = (
         [(1, 2), (2, 3), (3, 1)]                    # triangle cluster
         + [(1000 + i, 1000 + i + 1) for i in range(499)]  # 500-node path
@@ -88,44 +89,15 @@ def test_star_equals_label_fixture_graphs(spark):
         + [(7000 + i, 6000) for i in range(1, 20)]  # star, hub = max
         + [(9001, 9001), (9002, 9002)]              # self-pair singletons
     )
-    df = _pairs(spark, edges)
     label = {
         r.node: r.cluster_id
-        for r in connected_components(df, algorithm="label", max_iter=600).collect()
+        for r in connected_components(
+            _pairs(spark, edges), max_iter=600
+        ).collect()
     }
-    star = {
-        r.node: r.cluster_id
-        for r in connected_components(df, algorithm="star", max_iter=64).collect()
-    }
-    assert star == label
-    assert star[9001] == 9001 and star[9002] == 9002  # self-pairs kept
-    assert star[1499] == 1000  # far end of the path reached
-
-
-edge_loops = st.tuples(
-    st.integers(min_value=0, max_value=15), st.integers(min_value=0, max_value=15)
-)
-
-
-@given(edges=st.lists(edge_loops, min_size=1, max_size=12))
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_star_matches_label_property(spark, edges):
-    # Self-loops allowed here on purpose: degenerate (x, x) pairs must
-    # yield identical node coverage in both variants (r4 advice fix).
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    label = {
-        r.node: r.cluster_id
-        for r in connected_components(df, algorithm="label").collect()
-    }
-    star = {
-        r.node: r.cluster_id
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    assert star == label
+    assert label == _union_find_labels(edges)
+    assert label[9001] == 9001 and label[9002] == 9002  # self-pairs kept
+    assert label[1499] == 1000  # far end of the path reached
 
 
 def test_dup_clusters_keeper_and_size(spark):

@@ -15,6 +15,7 @@ from healthcare_aws_data_engineering_spark.operators.similarity import (
     derive_planes,
     embedding_near_dup,
     hyperplane_signature_q,
+    kmeans_centroids,
     quantize_vec,
     rademacher_planes,
     sig_chunks_q,
@@ -328,14 +329,12 @@ def test_semantic_dedup_kmeans_centroids(spark):
     )
     corpus = base.unionByName(clones)
     out = semantic_dedup(
-        corpus, 3, threshold=0.99, centroid_method="kmeans"
+        corpus, kmeans_centroids(corpus, 3), threshold=0.99
     ).collect()
     assert len(out) == 45
     dropped = {r["vec_id"]: r["kept_by"] for r in out if r["keep"] == 0}
     for vid in range(5):
         assert dropped.get(vid + 10_000) == vid
-    with pytest.raises(ValueError, match="centroid_method"):
-        semantic_dedup(corpus, 3, centroid_method="nope")
 
 
 def test_null_embeddings_are_not_index_members(spark):

@@ -516,30 +516,6 @@ def test_dhash_near_dup_bucket_cap(spark):
     assert capped == {(100, 101)}
 
 
-def test_dhash_near_dup_checkpoint_false_parity(spark):
-    """r11 advice: checkpoint=False (for already-materialized inputs)
-    must return the identical pair set as the eager default — the flag
-    only skips the localCheckpoint materialization, never the banding
-    or verify logic."""
-    rows = [(100, "00" * 8), (101, "01" + "00" * 7), (200, "f0" * 8)]
-    df = spark.createDataFrame(rows, ["media_id", "dhash"]).persist()
-    df.count()
-    try:
-        eager = {
-            (r.media_a, r.media_b, r.hamming)
-            for r in M.dhash_near_dup_pairs(df, max_hamming=3).collect()
-        }
-        lazy = {
-            (r.media_a, r.media_b, r.hamming)
-            for r in M.dhash_near_dup_pairs(
-                df, max_hamming=3, checkpoint=False
-            ).collect()
-        }
-        assert eager == lazy == {(100, 101, 1)}
-    finally:
-        df.unpersist()
-
-
 def test_media_dhash_rejects_bad_passthrough(spark):
     """r11 advice: a passthrough name colliding with the hash output
     columns (or absent from the input) must fail at call time, not as

@@ -20,18 +20,18 @@ ROWS = [
 
 
 def test_latest_per_key_strategies_agree(spark):
+    # max_by over (ts, event_id): the latest row wins, ts ties go to the
+    # higher id.
     df = spark.createDataFrame(ROWS, EV_SCHEMA)
-    kwargs = dict(
+    out = latest_per_key(
+        df,
         keys=["user_id", "code"],
         order_col="ts",
         value_cols=["v"],
         tiebreak="event_id",
     )
-    agg = latest_per_key(df, strategy="agg", **kwargs)
-    win = latest_per_key(df, strategy="window", **kwargs)
-    a = {(r.user_id, r.code): r.v for r in agg.collect()}
-    w = {(r.user_id, r.code): r.v for r in win.collect()}
-    assert a == w == {(1, "a"): 20.0, (1, "b"): 7.0, (2, "a"): 2.0}
+    got = {(r.user_id, r.code): r.v for r in out.collect()}
+    assert got == {(1, "a"): 20.0, (1, "b"): 7.0, (2, "a"): 2.0}
 
 
 def test_first_last_delta(spark):

@@ -633,3 +633,41 @@ def test_ivfpq_serve_from_persisted_index_same_shape(spark, tmp_path):
     assert re.search(r"hashpartitioning\(query_id", plan), plan
     tree = plan.split("\n\n(1)")[0]
     assert tree.count("WindowGroupLimit") == 2, plan
+
+
+def test_spread_keeps_an_already_split_input(spark):
+    """spread() round-robins a frame with fewer partitions than cores and
+    leaves one split at least that many ways untouched, so a large scan
+    never shrinks to the core count."""
+    from healthcare_aws_data_engineering_spark.sources.tables import spread
+
+    dp = spark.sparkContext.defaultParallelism
+
+    def round_robins(df) -> int:
+        return plan_string(spread(df)).count("RoundRobinPartitioning")
+
+    assert round_robins(spark.range(0, 100, numPartitions=2 * dp)) == 0
+    assert round_robins(spark.range(0, 100, numPartitions=dp)) == 0
+    assert round_robins(spark.range(0, 100, numPartitions=1)) == 1
+
+
+def test_pricing_summary_sums_do_not_depend_on_layout(spark):
+    """pricing_summary sums through dsum (DECIMAL(28,6)), so the spread
+    ahead of its aggregate cannot change its result: on values where a
+    double sum depends on the addition order, dsum gives the same answer
+    in every order and over 1 or 7 partitions."""
+    from pyspark.sql import functions as F
+
+    from healthcare_aws_data_engineering_spark.plans.sqlsum import dsum
+
+    def total(values, parts, agg):
+        df = spark.createDataFrame([(v,) for v in values], "x double")
+        # coalesce(1) keeps the listed order; repartition(7) scatters it
+        df = df.coalesce(1) if parts == 1 else df.repartition(parts)
+        return df.agg(agg(F.col("x")).alias("s")).first().s
+
+    assert total([1e16, 1.0, -1e16], 1, F.sum) == 0.0
+    assert total([1e16, -1e16, 1.0], 1, F.sum) == 1.0
+    for values in ([1e16, 1.0, -1e16], [1e16, -1e16, 1.0]):
+        for parts in (1, 7):
+            assert total(values, parts, dsum) == 1.0

@@ -124,69 +124,6 @@ def test_unigram_train_empty_inventory_raises_clear_error(spark):
         U.unigram_train(docs, min_count=10)
 
 
-def test_removal_losses_match_brute_force():
-    """r15 (exact pruning criterion): _removal_losses — corpus-LL drop
-    when a piece is removed and the rest renormalized — pinned against
-    the same quantity computed via the brute-force ENUMERATION
-    likelihood (the independent algorithm), per candidate piece."""
-    freqs = {"abab": 10, "ab": 5, "ba": 3, "abc": 2}
-    pieces = U.seed_pieces(freqs, max_piece_len=4, seed_size=30)
-    logp = U.em_fit(freqs, pieces, 2)
-    multi = sorted(p for p in logp if len(p) > 1)
-    got = U._removal_losses(freqs, logp, multi)
-
-    def brute_ll(table):
-        total = 0.0
-        for w in sorted(freqs):
-            _, ll = brute_expected_counts(w, table)
-            if ll != float("-inf"):
-                total += freqs[w] * ll
-        return total
-
-    base = brute_ll(logp)
-    mass = {p: math.exp(lp) for p, lp in logp.items()}
-    z = sum(mass.values())
-    for p in multi:
-        adj = math.log(z - mass[p])
-        rest = {q: v - adj for q, v in logp.items() if q != p}
-        want = base - brute_ll(rest)
-        assert got[p] == pytest.approx(want, abs=1e-9), p
-
-
-def test_prune_exact_loss_reaches_size_and_beats_default_when_squeezed():
-    """The exact criterion returns the requested vocab, never drops a
-    single-char piece, and on this fixed morphological corpus achieves
-    corpus LL >= the expected-count default at equal (squeezed) vocab —
-    the empirical pin of the SCALING.md r15 table's direction."""
-    freqs = {
-        w: max(200 // (i + 1), 1)
-        for i, w in enumerate(
-            sorted(
-                st + su
-                for st in ("walk", "jump", "talk", "read", "flip")
-                for su in ("", "s", "ing", "ed", "er")
-            )
-        )
-    }
-    pieces = U.seed_pieces(freqs, max_piece_len=6, seed_size=200)
-    logp0 = U.em_fit(freqs, pieces, 2)
-    chars = {p for p in logp0 if len(p) == 1}
-    vocab = len(chars) + 6  # squeeze: far fewer multi slots than words
-    cheap = U.prune_to_size(freqs, dict(logp0), vocab)
-    exact = U.prune_to_size(
-        freqs, dict(logp0), vocab, criterion="exact_loss"
-    )
-    for model in (cheap, exact):
-        assert len(model) == vocab
-        assert chars <= set(model)
-    assert U.corpus_loglik(freqs, exact) >= U.corpus_loglik(freqs, cheap)
-
-
-def test_prune_criterion_validated():
-    with pytest.raises(ValueError, match="criterion"):
-        U.prune_to_size({"ab": 1}, {"a": -1.0, "b": -1.0}, 1, criterion="x")
-
-
 def test_em_is_monotone_on_corpus_loglik():
     freqs = {"abab": 10, "ab": 5, "ba": 3, "abc": 2, "cab": 1}
     pieces = U.seed_pieces(freqs, max_piece_len=4, seed_size=50)

@@ -5,8 +5,9 @@ Usage: python tools/explain_all.py [sf_dir] [query ...]
 Prints each query's formatted physical plan (op tree plus per-node
 detail, pushed filters included) with the session-global counters in it
 renumbered per query: expression ids (``#123``), lambda variables
-(``lambda x_45``) and exchange plan ids (``plan_id=6``) become their
-order of first appearance. Two builds of an unchanged query then print the
+(``lambda x_45``), exchange plan ids (``plan_id=6``) and the RDD ids of
+checkpointed frames (``MapPartitionsRDD[95]``) become their order of
+first appearance. Two builds of an unchanged query then print the
 same text, so ``diff`` between the output of two checkouts shows only real
 plan changes. The enforced invariants live in tests/test_plan_quality.py.
 """
@@ -21,7 +22,9 @@ sys.path.insert(0, ".")
 from healthcare_aws_data_engineering_spark.session import get_spark
 from __spark_entry__ import queries
 
-_COUNTERS = (r"(#)(\d+)", r"(lambda \w+?_)(\d+)", r"(plan_id=)(\d+)")
+_COUNTERS = (
+    r"(#)(\d+)", r"(lambda \w+?_)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)"
+)
 
 
 def normalize(plan: str) -> str:

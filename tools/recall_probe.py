@@ -202,6 +202,15 @@ def multiprobe_leg(spark, embs0) -> None:
     embs.unpersist()
 
 
+def quantizers(embs, n_cells: int) -> dict:
+    """The two coarse quantizers the probe compares, each fitted on
+    call: the md5-stratified sample and seed-fixed KMeans."""
+    return {
+        "sample": lambda: S.sample_centroids(embs, n_cells),
+        "kmeans": lambda: S.kmeans_centroids(embs, n_cells),
+    }
+
+
 def ivf_leg(spark, embs0, m: int) -> None:
     """IVF derived-cells recall: with cells ∝ n (bounded per-probe cost),
     a FIXED n_probe covers a shrinking corpus fraction — the IVF
@@ -217,11 +226,11 @@ def ivf_leg(spark, embs0, m: int) -> None:
     q = embs.filter(F.col("vec_id") < 100)
     qids = [int(i) for i in ids if i < 100]
     n_cells = S.cells_for(n, 200)
-    for method in ("sample", "kmeans"):
+    for method, fit in quantizers(embs, n_cells).items():
         for n_probe in (1, 4, min(16, n_cells)):
             t0 = time.perf_counter()
             got = S.ivf_topk(
-                embs, q, k=10, n_probe=n_probe, centroids=method
+                embs, q, k=10, n_probe=n_probe, centroids=fit()
             ).collect()
             sec = round(time.perf_counter() - t0, 2)
             approx: dict[int, set[int]] = {}
@@ -323,10 +332,10 @@ def main() -> None:
             }), flush=True)
 
         # ---- semantic_dedup, derived cells: sampled vs trained ----
-        for method in ("sample", "kmeans"):
+        for method, fit in quantizers(embs, S.cells_for(n, 200)).items():
             t0 = time.perf_counter()
             sd = semantic_dedup(
-                embs, None, threshold=NEAR_DUP_T, centroid_method=method
+                embs, fit(), threshold=NEAR_DUP_T
             ).persist()
             removed = sd.filter(F.col("keep") == 0).count()
             cell_sizes = sd.groupBy("cluster").count()
