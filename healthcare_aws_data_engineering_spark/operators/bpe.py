@@ -2,7 +2,7 @@
 
 Extension beyond the reference (no counterpart in ``/root/reference/``;
 flagged per SURVEY §7.2 step 7): the training-data pipeline step that
-token *counting* (``text.bpe_ish_token_count``) approximates — actually
+token *counting* (``text.token_count``) approximates — actually
 LEARNING the subword merge table (Sennrich et al. 2016, "Neural Machine
 Translation of Rare Words with Subword Units") and encoding documents
 with it.

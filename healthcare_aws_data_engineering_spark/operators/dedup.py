@@ -1,30 +1,30 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Extensions beyond the reference (SURVEY §7.2 step 7). Five families:
+Extensions beyond the reference (SURVEY §7.2 step 7). Four families:
 
-- :func:`exact_dedup` — hash-groupBy on the (normalized) content hash.
-- :func:`minhash_signature` / :func:`minhash_lsh_pairs` — MinHash + banded
-  LSH candidate generation (shingle → K min-hashes → band → bucket join).
-- :func:`simhash_signature` / :func:`simhash_pairs` — 64-bit SimHash with
-  Hamming-ball candidate matching via band exactness.
+- :func:`exact_dedup` — hash-groupBy on the normalized content hash.
+- :func:`minhash_lsh_pairs` — MinHash + banded LSH candidate generation
+  (shingle → K min-hashes → band → bucket join).
+- :func:`simhash_pairs` — 32-bit SimHash with Hamming-ball candidate
+  matching via band exactness.
 - :func:`ngram_jaccard` — exact word-n-gram Jaccard verification on
   candidate pairs.
 - embedding-cosine near-dup lives in :mod:`.similarity` (same bucketing).
 
 Scale design notes (the point of these operators):
 
-- Everything before the candidate join is a PROJECTION (array functions
-  over each row — no explode, no shuffle); signatures are computed fused
-  with the scan.
-- The only shuffles are (a) groupBy(band_hash) — each doc emits B rows, so
-  shuffle volume is B×docs small fixed-width rows, not text; (b) the
-  verification join, which touches only candidate pairs.
+- Signatures are an explode of each doc's shingles plus a map-side
+  combined aggregate, so each shingle is hashed once and the shuffle
+  carries one fixed-width row per doc, never text.
+- The remaining shuffles are (a) the (band, key) bucket — each doc emits
+  B rows of small fixed-width values; (b) the verification join, which
+  touches only candidate pairs.
 - Bucket skew (a degenerate band bucket with millions of docs) is the real
   100 TB hazard: ``max_bucket`` caps pair fan-out per bucket; AQE skew-join
   handles the joins.
-- Two hash backends: ``xxhash64`` (JVM codegen, the production path) and
-  ``md5`` (slower; exists in every engine — used by the DuckDB oracle
-  harness so the whole LSH pipeline is cross-checkable).
+- Every hash is reproducible in DuckDB where a registry row is
+  oracle-checked: MinHash has an ``md5`` backend next to the cheaper
+  ``xxhash64`` one, and SimHash votes come from md5 hex digits.
 """
 
 from __future__ import annotations
@@ -36,53 +36,19 @@ from .text import normalize_text
 
 # ----------------------------------------------------------------- exact --
 def exact_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    normalized: bool = True,
-    max_ids: int = 100,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Exact duplicate groups: md5 of (normalized) text → min id kept.
-    Output: one row per duplicate GROUP (dup_count ≥ 2) with the keeper id.
-    Single hash aggregate; map-side partial agg keeps shuffle tiny.
-
-    ``doc_ids`` is a bounded SAMPLE of the group capped at ``max_ids``
-    members (the ``max_ids`` smallest ids, so deterministic): a degenerate
-    group — millions of empty/boilerplate docs hashing identically after
-    normalization — must not materialize one unbounded array row at
-    100 TB. The cap is applied BEFORE collect_list (row_number over the
-    same hash partitioning the groupBy needs, so one exchange total) —
-    slicing after a full collect_list would still buffer the whole group.
-    ``dup_count`` is always the exact group size (window count over the
-    uncapped partition); pass ``max_ids=0`` to drop the id list and the
-    window entirely, leaving the pure single-hash-agg scale path."""
-    from pyspark.sql import Window as W
-
-    t = F.col(text_col)
-    h = F.md5((normalize_text(t) if normalized else t).cast("binary"))
-    if max_ids <= 0:
-        return (
-            docs.groupBy(h.alias("content_hash"))
-            .agg(
-                F.min(F.col(id_col)).alias("keep_id"),
-                F.count(F.lit(1)).alias("dup_count"),
-            )
-            .filter(F.col("dup_count") >= 2)
-        )
-    base = docs.select(h.alias("content_hash"), F.col(id_col).alias("__id"))
-    wp = W.partitionBy("content_hash")
-    ranked = base.withColumn(
-        "__rn", F.row_number().over(wp.orderBy("__id"))
-    ).withColumn("__cnt", F.count(F.lit(1)).over(wp))
-    return (
-        ranked.filter(F.col("__rn") <= max_ids)
-        .groupBy("content_hash")
-        .agg(
-            F.min("__id").alias("keep_id"),
-            F.first("__cnt").alias("dup_count"),
-            F.sort_array(F.collect_list("__id")).alias("doc_ids"),
-        )
-        .filter(F.col("dup_count") >= 2)
+    """Exact duplicate groups: md5 of the normalized text → min id kept.
+    Output: ``content_hash, keep_id, dup_count``, one row per distinct
+    normalized content (``dup_count`` 1 for unique docs; filter
+    ``dup_count >= 2`` for the duplicate groups). A single hash
+    aggregate: map-side partial aggregation keeps the shuffle to one
+    fixed-width row per distinct hash per task, and no group ever
+    materializes its member list."""
+    h = F.md5(normalize_text(F.col(text_col)).cast("binary"))
+    return docs.groupBy(h.alias("content_hash")).agg(
+        F.min(id_col).alias("keep_id"),
+        F.count(F.lit(1)).alias("dup_count"),
     )
 
 
@@ -122,9 +88,10 @@ def _bucket_cap(
     members, via a window count over the bucket shuffle (single subtree —
     see callers). The default ``min_bucket=2`` is a SELF-join
     optimization (a singleton bucket cannot produce a within-corpus
-    pair); probe-against-index callers (``streaming.near_dup_stream``)
-    must pass ``min_bucket=1`` — there a stream doc legitimately matches
-    an index doc that is alone in its bucket."""
+    pair); probe-against-index callers
+    (``streaming.neardup.dhash_near_dup_stream``) must pass
+    ``min_bucket=1`` — there a stream doc legitimately matches an index
+    doc that is alone in its bucket."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy("band", key_col)
@@ -142,27 +109,6 @@ def _shingle_hash(shingle: Column, perm: int, backend: str) -> Column:
         # is reproducible in any engine with md5().
         return F.md5(F.concat(shingle, F.lit(f"#{perm}")).cast("binary"))
     raise ValueError(f"unknown hash backend: {backend}")
-
-
-def minhash_signature(
-    text: Column, num_perm: int = 8, backend: str = "xxhash64"
-) -> Column:
-    """Array of ``num_perm`` min-hashes over the word-3-gram shingles.
-    Pure projection: transform + array_min per permutation."""
-    sh = word_shingles(text)
-
-    # NB: the per-permutation closure must be UNARY — a two-parameter
-    # lambda (e.g. ``lambda s, p=p``) is treated by F.transform as the
-    # (element, index) form, silently rebinding p to the array index.
-    def _hasher(p: int):
-        return lambda s: _shingle_hash(s, p, backend)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, _hasher(p)))
-            for p in range(num_perm)
-        ]
-    )
 
 
 def minhash_lsh_pairs(
@@ -187,10 +133,10 @@ def minhash_lsh_pairs(
     r = num_perm // bands
     # Signature via explode + partial-agg min: each shingle is hashed ONCE
     # per permutation and map-side combine reduces to num_perm mins per doc
-    # before the (doc_id-keyed, fixed-width) shuffle. The projection-only
-    # form (minhash_signature) re-evaluates the whole shingle array per
-    # permutation in interpreted HOF eval — fine for one-off column use,
-    # ~10x slower as the pipeline backbone.
+    # before the (doc_id-keyed, fixed-width) shuffle. A projection-only
+    # form (array_min over a transform per permutation) re-evaluates the
+    # whole shingle array per permutation in interpreted HOF eval — ~10x
+    # slower as the pipeline backbone.
     shingled = docs.select(
         F.col(id_col).alias("doc"),
         F.explode(word_shingles(F.col(text_col))).alias("__s"),
@@ -248,63 +194,6 @@ def minhash_lsh_pairs(
 
 
 # ---------------------------------------------------------------- simhash --
-def simhash_votes(text: Column, bits: int = 64) -> Column:
-    """Per-bit ±1 vote totals (array<int>) over the word shingles — the
-    expensive half of SimHash, kept as its own projection so the cheap
-    bit-packing half can reference it ``bits`` times without Catalyst
-    duplicating this aggregate."""
-    sh = word_shingles(text)
-    return F.aggregate(
-        sh,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(F.xxhash64(s), i).bitwiseAND(1) == 1, 1
-                    ).otherwise(-1)
-                    for i in range(bits)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-
-
-def simhash_from_votes(votes: Column, bits: int = 64) -> Column:
-    """Pack the sign of each vote into a 64-bit long.
-
-    References ``votes`` exactly ONCE (zip_with positions, OR-fold) so the
-    votes aggregate is never duplicated in the expression tree — inlining
-    it per-bit blows the tree up 64x and OOMs codegen."""
-    def signed64(i: int) -> int:
-        v = 1 << i
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    masks = F.array(*[F.lit(signed64(i)).cast("long") for i in range(bits)])
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            masks,
-            lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
-def simhash_signature(text: Column, bits: int = 64) -> Column:
-    """SimHash over word shingles: per-bit ±1 votes from each shingle's
-    xxhash64, sign of the sum becomes the bit. Projection-only: the per-doc
-    bit vector is built with array transform/aggregate, no explode.
-
-    NOTE: inlines the votes aggregate ``bits`` times — fine for tests and
-    small selects; the distributed path (:func:`simhash_pairs`) uses the
-    two-step votes→pack projection instead."""
-    return simhash_from_votes(simhash_votes(text, bits), bits)
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -316,56 +205,39 @@ def simhash_pairs(
     bands: int = 4,
     max_hamming: int = 6,
     max_bucket: int = 50,
-    backend: str = "xxhash64",
 ) -> DataFrame:
-    """Near-dup candidates whose SimHashes agree on at least one of
-    ``bands`` equal-width bands (guarantees recall for Hamming ≤ bands-1 by
-    pigeonhole), verified with an exact Hamming threshold.
+    """Near-dup candidates whose 32-bit SimHashes agree on at least one
+    of ``bands`` equal-width bands (guarantees recall for Hamming ≤
+    bands-1 by pigeonhole), verified with an exact Hamming threshold.
 
-    ``backend``: per-shingle bit-vote source.
-
-    - ``"xxhash64"`` (default, 64-bit): bit i of xxhash64(shingle) —
-      cheapest, engine-specific (rows-only correctness check).
-    - ``"md5digit"`` (32-bit): bits = the first 8 hex digits of
-      md5(shingle) parsed as a 32-bit integer (Spark ``conv(_,16,10)``,
-      DuckDB ``('0x'||substr)::BIGINT``) — one md5 + one parse per
-      shingle, then the same cheap shiftright votes as the xxhash64
-      path; reproducible in any engine with md5(), so the DuckDB oracle
-      replays the full pipeline. (An earlier form compared each hex
-      digit with substr — 32 string ops per shingle, ~25% slower.)
+    Per-shingle bit votes come from the first 8 hex digits of
+    md5(shingle) parsed as a 32-bit integer (Spark ``conv(_,16,10)``,
+    DuckDB ``('0x'||substr)::BIGINT``) — one md5 + one parse per
+    shingle, then cheap shiftright votes; reproducible in any engine
+    with md5(), so the DuckDB oracle replays the full pipeline. (An
+    earlier form compared each hex digit with substr — 32 string ops
+    per shingle, ~25% slower.)
     """
-    bits = 64 if backend == "xxhash64" else 32
+    bits = 32
     width = bits // bands
     # Explode + partial-agg bit votes: each shingle is hashed ONCE and
     # the per-bit ±1 sums combine map-side; the shuffle carries one
-    # fixed-width row per doc. (The projection-only simhash_votes form is
-    # interpreted HOF eval — kept for column-level use, too slow here.)
+    # fixed-width row per doc. (A projection-only votes fold over the
+    # shingle array is interpreted HOF eval — too slow here.)
     exploded = docs.select(
         F.col(id_col).alias("doc"),
         F.explode(word_shingles(F.col(text_col))).alias("__s"),
+    ).select(
+        "doc",
+        F.conv(F.substring(F.md5(F.col("__s").cast("binary")), 1, 8), 16, 10)
+        .cast("long")
+        .alias("__s"),
     )
-    if backend == "xxhash64":
-        h = F.xxhash64(F.col("__s"))
-        vote = [
-            F.when(F.shiftright(h, i).bitwiseAND(1) == 1, 1).otherwise(-1)
-            for i in range(bits)
-        ]
-    elif backend == "md5digit":
-        exploded = exploded.select(
-            "doc",
-            F.conv(
-                F.substring(F.md5(F.col("__s").cast("binary")), 1, 8), 16, 10
-            )
-            .cast("long")
-            .alias("__s"),
-        )
-        h = F.col("__s")
-        vote = [
-            F.when(F.shiftright(h, i).bitwiseAND(1) == 1, 1).otherwise(-1)
-            for i in range(bits)
-        ]
-    else:
-        raise ValueError(f"unknown simhash backend: {backend}")
+    h = F.col("__s")
+    vote = [
+        F.when(F.shiftright(h, i).bitwiseAND(1) == 1, 1).otherwise(-1)
+        for i in range(bits)
+    ]
     votes = exploded.groupBy("doc").agg(
         *[F.sum(vote[i]).alias(f"__v{i}") for i in range(bits)]
     )

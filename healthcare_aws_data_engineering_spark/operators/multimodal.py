@@ -2,7 +2,7 @@
 
 EXTENSION beyond the reference (training-data pipeline surface): media
 travel as opaque ``binary`` columns with a typed metadata struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched
+feature-extract / frame-sample run as Arrow-batched
 ``mapInPandas`` stages.
 
 The codec step has TWO legs:
@@ -172,43 +172,6 @@ def media_features(
             yield pd.DataFrame(cols)[[f.name for f in out_schema.fields]]
 
     return media.mapInPandas(extract, schema=out_schema)
-
-
-def resize_images(
-    media: DataFrame, width: int, height: int, deterministic_fake: bool = True
-) -> DataFrame:
-    """Stub resize: content re-derived at the target size, meta updated.
-    Non-image rows pass through unchanged. (With deterministic_fake=False
-    the DECODE leg is real — media_codecs — but the resample itself
-    remains the md5 fake: real interpolation is a codec library's job.)"""
-    import pandas as pd
-
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def resize_row(kind, content, meta):
-                if kind != "image":
-                    return content, meta
-                vals = _decode_bytes(content, 8, deterministic_fake)  # "pixels"
-                out = hashlib.md5(
-                    bytes(bytearray(int(v * 255) for v in vals))
-                    + f"#resize:{width}x{height}".encode()
-                ).digest()
-                meta = dict(meta or {})
-                meta["width"], meta["height"] = width, height
-                return out, meta
-
-            # zip over column Series, not iterrows — no per-row Series
-            # construction inside the Arrow batch loop
-            res = [
-                resize_row(k, c, m)
-                for k, c, m in zip(pdf["kind"], pdf["content"], pdf["meta"])
-            ]
-            pdf = pdf.copy()
-            pdf["content"] = [r[0] for r in res]
-            pdf["meta"] = [r[1] for r in res]
-            yield pdf
-
-    return media.mapInPandas(do, schema=MEDIA_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(

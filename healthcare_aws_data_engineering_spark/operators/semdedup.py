@@ -301,8 +301,9 @@ def knn_graph(
         F.col("__n2").alias("nb"),
     )
     # dot is exact long addition; the sqrt/divide sees the identical
-    # integer operands in any engine (same recipe as similarity.cosine_q,
-    # with the norm sums hoisted out of the pair fan-out).
+    # integer operands in any engine (same recipe as
+    # similarity.embedding_near_dup's integer cosine, with the norm sums
+    # hoisted out of the pair fan-out).
     # NOTE (r15): the Arrow dot (see semantic_dedup) was MEASURED SLOWER
     # here — the k-NN candidate fan-out is large, and shipping both
     # 64-long arrays per pair across the Arrow boundary cost more than

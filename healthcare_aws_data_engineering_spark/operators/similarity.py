@@ -57,27 +57,6 @@ def cosine(a: Column, b: Column, exact: bool = False) -> Column:
     return dot(a, b, exact) / (norm(a, exact) * norm(b, exact))
 
 
-def cosine_q(qa: Column, qb: Column) -> Column:
-    """Cosine of two PRE-QUANTIZED micro-unit long vectors — the cheap
-    engine-reproducible exact path: the three inner products are EXACT
-    long sums (unit vectors: |q_i| ≤ 1e6 → a 64-dim dot ≤ 6.4e13, inside
-    both long and double-exact range), and the final sqrt/divide are
-    correctly-rounded IEEE ops — bit-identical in Spark and DuckDB with
-    no decimal accumulator at all (~the decimal fold's cost per ELEMENT
-    buys the whole pair here)."""
-
-    def isum(x: Column, y: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q),
-            F.lit(0).cast("long"),
-            lambda s, v: s + v,
-        )
-
-    return isum(qa, qb).cast("double") / (
-        F.sqrt(isum(qa, qa).cast("double")) * F.sqrt(isum(qb, qb).cast("double"))
-    )
-
-
 def dot_q_arrow():
     """Vectorized exact integer dot for PRE-QUANTIZED long vectors — one
     Arrow batch per partition instead of an interpreted per-pair HOF
@@ -210,43 +189,6 @@ def hard_negatives(
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def hyperplane_signature(vec: Column, planes: int = 16) -> Column:
-    """Sign-bit signature against ``planes`` pseudo-random hyperplanes.
-    Plane p's component for dimension i is derived from xxhash64(p, i) —
-    deterministic, stateless, identical on every executor."""
-    dims = F.sequence(F.lit(0), F.size(vec) - 1)
-
-    def plane_component(p: int, i: Column) -> Column:
-        h = F.xxhash64(F.lit(p), i.cast("long"))
-        return (F.pmod(h, F.lit(2000001)).cast("double") - 1000000.0) / 1000000.0
-
-    # NB: unary closures only — a two-parameter lambda is F.transform's
-    # (element, index) form and would silently rebind p to the array index.
-    def _components(p: int):
-        return lambda i: plane_component(p, i)
-
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.transform(dims, _components(p)),
-                    lambda x, r: x.cast("double") * r,
-                ),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-            > 0,
-            F.shiftleft(F.lit(1).cast("long"), p),
-        ).otherwise(F.lit(0).cast("long"))
-        for p in range(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
 
 
 def rademacher_planes(

@@ -80,35 +80,6 @@ def distinct_sketch(
     return agg.select(*keep, est.alias("est_distinct"))
 
 
-def sketch_sql(table: str, group_col: str, value_col: str, k: int = SKETCH_K) -> str:
-    """DuckDB twin: the same staged halves, k mins, fixed-order sum."""
-    # every literal is CAST to DOUBLE: a bare `4294967296.0` is a DECIMAL
-    # literal in DuckDB, which would switch the division to decimal
-    # arithmetic and break bit-parity with Spark's double math.
-    mins = ",\n    ".join(
-        f"MIN(CAST((__h1 + {i} * __h2) % {_TWO32} AS DOUBLE) "
-        f"/ CAST({_TWO32} AS DOUBLE)) AS __m{i}"
-        for i in range(k)
-    )
-    total = " + ".join(f"__m{i}" for i in range(k))
-    return f"""
-WITH h AS (
-  SELECT {group_col},
-    CAST(('0x' || substr(md5(CAST({value_col} AS VARCHAR)), 1, 8)) AS BIGINT) AS __h1,
-    CAST(('0x' || substr(md5(CAST({value_col} AS VARCHAR)), 9, 8)) AS BIGINT) AS __h2
-  FROM {table}
-),
-s AS (
-  SELECT {group_col},
-    {mins}
-  FROM h GROUP BY {group_col}
-)
-SELECT {group_col},
-  (CAST({k} AS DOUBLE) / ({total})) - CAST(1 AS DOUBLE) AS est_distinct
-FROM s
-"""
-
-
 # ------------------------------------------------------ histogram quantiles --
 # The scale path dist_summary's docstring promises for UNBOUNDED group
 # counts: exact per-group sort-quantiles need a per-group sort, while a

@@ -2,19 +2,14 @@
 
 A groupBy/join on a key where one value holds a large fraction of all rows
 (a "hot key") sends that whole key to ONE reducer — the classic long-tail
-straggler at 100 TB. Two standard remedies, both result-identical to their
-naive forms:
+straggler at 100 TB.
 
-- :func:`salted_agg` — two-stage aggregation: shuffle once on
-  (key, salt) spreading the hot key over N reducers, combine partials,
-  then a second (tiny) shuffle on key merges the N partials. Works for
-  any algebraic aggregate (sum/count/min/max + anything with a merge
-  expression).
-- :func:`salted_broadcast_join` — replicate the small side N times with an
-  explicit salt column so a skewed equi-join spreads the hot key's rows.
-  (With AQE's skew-join handling this is rarely needed for SortMergeJoin;
-  it remains the tool for deliberate key-spreading when AQE can't help,
-  e.g. aggregation-after-join pipelines.)
+- :func:`salted_agg` — two-stage aggregation, result-identical to the
+  naive form: shuffle once on (key, salt) spreading the hot key over N
+  reducers, combine partials, then a second (tiny) shuffle on key merges
+  the N partials. Works for any algebraic aggregate (sum/count/min/max +
+  anything with a merge expression).
+- :func:`skew_audit` — the pre-shuffle hot-key report.
 
 Note AQE (``spark.sql.adaptive.skewJoin``) already splits skewed JOIN
 partitions at runtime; salting is the explicit, planner-independent form,
@@ -61,27 +56,6 @@ def salted_agg(
     return partial.groupBy(*keys).agg(
         *[merge.alias(name) for name, (_, merge) in aggs.items()]
     )
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``big`` is skewed on ``key``: salt the big side,
-    replicate the (broadcast) small side once per salt value, join on
-    (key, salt). Result-identical to ``big.join(small, key, how)``."""
-    big_s = big.withColumn(
-        _SALT,
-        F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)),
-    )
-    small_r = small.withColumn(
-        _SALT, F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    ).withColumn(_SALT, F.col(_SALT).cast("bigint"))
-    out = big_s.join(F.broadcast(small_r), [key, _SALT], how)
-    return out.drop(_SALT)
 
 
 def skew_audit(df: DataFrame, key_col: str, top_k: int = 5) -> DataFrame:

@@ -110,47 +110,11 @@ def token_count_sql(col: str = "text") -> str:
     )
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token estimate: word-boundary pieces plus length/4
-    continuation pieces for long words — a cheap deterministic proxy for a
-    BPE tokenizer's token count (useful for corpus budgeting)."""
-    ws = tokens(text)
-    per_word = F.transform(
-        ws, lambda w: F.greatest(F.lit(1), F.ceil(F.length(w) / 4).cast("int"))
-    )
-    return F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
-        F.aggregate(per_word, F.lit(0), lambda acc, x: acc + x)
-    )
-
-
 def stopword_hits(text: Column, words: list[str]) -> Column:
     """Occurrences of any profile word (ASCII-word-bounded on both
     engines — see :func:`ascii_word_bounded` — case-insensitive)."""
     pattern = ascii_word_bounded("|".join(words))
     return F.regexp_count(F.lower(text), F.lit(pattern))
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Per-language stopword-hit rate, normalized by token count."""
-    tc = token_count(text)
-    return {
-        lang: stopword_hits(text, words) / F.greatest(tc, F.lit(1))
-        for lang, words in LANG_PROFILES.items()
-    }
-
-
-def lang_id(text: Column) -> Column:
-    """argmax language (deterministic alphabetic tiebreak); 'und' when no
-    profile scores at all."""
-    scores = lang_scores(text)
-    pairs = F.array(
-        *[
-            F.struct(s.alias("score"), F.lit(lang).alias("lang"))
-            for lang, s in sorted(scores.items())
-        ]
-    )
-    best = F.array_max(F.filter(pairs, lambda p: p["score"] > 0))
-    return F.coalesce(best["lang"], F.lit("und"))
 
 
 def punct_ratio(text: Column) -> Column:
@@ -242,7 +206,7 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     .explain: no Exchange).
 
     Values are identical to composing the standalone helpers above
-    (token_count/lang_id/quality_score/...), but the shared subtrees —
+    (token_count/stopword_hits/quality_score/...), but the shared subtrees —
     trim, lower, whitespace split, per-language stopword regex counts —
     are STAGED as real columns and computed once per row. The composed
     form re-derives split() ~8× and runs ~10 regex passes per row,
@@ -289,7 +253,8 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     tc = F.col("__tc")
     punct = F.col("__np") / F.greatest(F.length(t), F.lit(1))
     mwl = F.col("__wlen") / F.greatest(F.size("__ws"), F.lit(1))
-    # same argmax construction as lang_id (alphabetic-struct array_max)
+    # argmax language: array_max over (score, lang) structs, so a score
+    # tie breaks on the language name
     pairs = F.array(
         *[
             F.struct(
@@ -394,11 +359,6 @@ def _bigrams_of(ws: Column) -> Column:
     return F.filter(paired, lambda g: g.isNotNull())
 
 
-def word_bigrams(text: Column) -> Column:
-    """Non-distinct word 2-grams (empty array when fewer than 2 words)."""
-    return _bigrams_of(tokens(text))
-
-
 def repetition_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -476,18 +436,6 @@ def redact_pii(text: Column) -> Column:
     for pat, tag in PII_PATTERNS:
         out = F.regexp_replace(out, pat, tag)
     return out
-
-
-def pii_counts(text: Column) -> Column:
-    """struct<emails,ips,ssns,phones> occurrence counts (audit column —
-    run BEFORE redaction)."""
-    names = ["emails", "ips", "ssns", "phones"]
-    return F.struct(
-        *[
-            F.regexp_count(text, F.lit(pat)).alias(n)
-            for n, (pat, _) in zip(names, PII_PATTERNS)
-        ]
-    )
 
 
 # --------------------------------------------------- fused attribute pass --

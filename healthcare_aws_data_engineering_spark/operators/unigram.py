@@ -333,128 +333,3 @@ def unigram_encode(
         return texts.map(enc_doc)
 
     return docs.withColumn(out_col, _encode(F.col(text_col)))
-
-
-# --------------------------------------------------------------------------
-# subword regularization (Kudo '18 §3): sampled segmentations
-# --------------------------------------------------------------------------
-def _tempered_alphas(
-    word: str, logp: dict[str, float], alpha: float, max_len: int
-) -> list[float] | None:
-    """Forward pass of FFBS under temperature ``alpha``: alphas[j] =
-    log Σ_segmentations-of-prefix-j (∏ p_piece)^alpha. None when the
-    word has no segmentation (callers fall back to Viterbi's unk
-    handling)."""
-    NEG = float("-inf")
-
-    def lse(acc: float, x: float) -> float:
-        if acc == NEG:
-            return x
-        if x == NEG:
-            return acc
-        hi, lo = (acc, x) if acc >= x else (x, acc)
-        return hi + math.log1p(math.exp(lo - hi))
-
-    n = len(word)
-    alphas = [NEG] * (n + 1)
-    alphas[0] = 0.0
-    for j in range(1, n + 1):
-        for i in range(max(0, j - max_len), j):
-            lp = logp.get(word[i:j])
-            if lp is not None and alphas[i] != NEG:
-                alphas[j] = lse(alphas[j], alphas[i] + alpha * lp)
-    return None if alphas[n] == NEG else alphas
-
-
-def _coin(seed: int, key: str) -> float:
-    """Deterministic uniform in [0,1): md5 of the salted key — the same
-    replayable-coin recipe as split_assign/stratified_sample, so a
-    sampled encode is reproducible on any engine and any run."""
-    import hashlib
-
-    h = hashlib.md5(f"unig#{seed}#{key}".encode()).hexdigest()[:13]
-    return int(h, 16) / 16**13
-
-
-def sample_encode_word(
-    word: str,
-    logp: dict[str, float],
-    alpha: float = 0.2,
-    seed: int = 0,
-    occ: str = "",
-) -> list[str]:
-    """ONE segmentation sampled with P(seg) ∝ (∏ p_piece)^alpha —
-    forward-filtering backward-sampling over the piece lattice, exact
-    (pinned against brute-force enumeration in tests). ``occ``
-    distinguishes occurrences (same word, different draw). Words with
-    unseen characters fall back to :func:`viterbi_encode_word` (which
-    is total); alpha→∞ recovers Viterbi."""
-    max_len = max((len(p) for p in logp), default=1)
-    alphas = _tempered_alphas(word, logp, alpha, max_len)
-    if alphas is None:
-        return viterbi_encode_word(word, logp)
-    out: list[str] = []
-    j = len(word)
-    while j > 0:
-        u = _coin(seed, f"{occ}|{word}|{j}")
-        # candidates (i, piece) with mass exp(alphas[i] + a·lp − alphas[j])
-        cum = 0.0
-        chosen = None
-        for i in range(max(0, j - max_len), j):
-            lp = logp.get(word[i:j])
-            if lp is None or alphas[i] == float("-inf"):
-                continue
-            cum += math.exp(alphas[i] + alpha * lp - alphas[j])
-            chosen = (i, word[i:j])
-            if u < cum:
-                break
-        i, piece = chosen  # cum sums to 1.0 up to float error
-        out.append(piece)
-        j = i
-    out.reverse()
-    return out
-
-
-def unigram_sample_encode(
-    docs: DataFrame,
-    logp: dict[str, float],
-    alpha: float = 0.2,
-    seed: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "unigram_tokens",
-) -> DataFrame:
-    """Subword-regularization encode: every word OCCURRENCE gets an
-    independent sampled segmentation (coin keyed on (seed, doc id,
-    occurrence index) — deterministic and replayable, no RNG state).
-    One epoch's training data re-tokenizes differently per ``seed``,
-    which is the entire point of the technique; ``seed`` is the epoch
-    knob. No per-batch word cache here BY DESIGN — a cache would give
-    every occurrence of a word the same draw, collapsing the
-    regularization back to a fixed tokenization."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    table = dict(logp)
-
-    @pandas_udf("array<string>")
-    def _encode(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        def enc_doc(did, t):
-            if t is None:
-                return []
-            out: list[str] = []
-            for wi, w in enumerate(t.lower().split()):
-                out.extend(
-                    sample_encode_word(
-                        w, table, alpha, seed, occ=f"{did}|{wi}"
-                    )
-                )
-            return out
-
-        return pd.Series(
-            [enc_doc(d, t) for d, t in zip(ids, texts)]
-        )
-
-    return docs.withColumn(
-        out_col, _encode(F.col(id_col).cast("string"), F.col(text_col))
-    )

@@ -267,14 +267,13 @@ def mixture_draw(
     ``exact=True``: the partial epoch keeps EXACTLY ``target % n`` docs
     per source — the ``target % n`` SMALLEST draw keys, so the kept set
     is a prefix of the same hash order the approximate path thresholds
-    (one draw is always a prefix of the other, test-pinned). Shape is
-    the boundary-bucket two-phase (the :func:`quality_keep_topfrac`
-    recipe applied to the key space, which needs no skew guard because
-    md5 keys are uniform by construction — a bucket is ~n/B rows unlike
-    a quality mass): bucket the 48-bit keys into ``n_key_buckets``
-    ranges, count per (source, bucket) map-side, find each source's
-    boundary bucket on the tiny bucket table, keep sub-boundary buckets
-    wholesale and rank-decide ONLY the boundary bucket's ~n/B rows
+    (one draw is always a prefix of the other, test-pinned). Shape is a
+    boundary-bucket two-phase over the key space, which needs no skew
+    guard because md5 keys are uniform by construction — a bucket is
+    ~n/B rows unlike a quality mass: bucket the 48-bit keys into
+    ``n_key_buckets`` ranges, count per (source, bucket) map-side, find
+    each source's boundary bucket on the tiny bucket table, keep sub-boundary
+    buckets wholesale and rank-decide ONLY the boundary bucket's ~n/B rows
     inside (source, bucket) windows. Costs one slim-row shuffle of the
     partial-epoch leg (keys + ids, never text) plus slim doc_id/source
     projection scans for the doc legs. No source is ever sorted whole

@@ -270,267 +270,6 @@ def bigram_lm_score(
     )
 
 
-TRIGRAM_LM_THRESHOLD = -6.0  # mean interpolated trigram logprob floor
-#: fixed interpolation weights (λ3, λ2, λ1) — exact decimal literals so
-#: the python twin and any SQL replay multiply the identical doubles
-TRIGRAM_LAMBDAS = (0.6, 0.3, 0.1)
-
-
-def trigram_lm_score(
-    docs: DataFrame,
-    threshold: float = TRIGRAM_LM_THRESHOLD,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 1,
-) -> DataFrame:
-    """Leave-one-out interpolated trigram LM quality score (r14 verdict
-    stretch #8) — the order-2 leg completing the CCNet-direction family
-    (:func:`lm_score` order-0, :func:`bigram_lm_score` order-1): per
-    document, the mean of
-
-        ln( λ3·P3(w_i|w_{i-2} w_{i-1}) + λ2·P2(w_i|w_{i-1}) + λ1·P1(w_i) )
-
-    over trigram positions, with each order Laplace-smoothed on the
-    corpus's count tables MINUS THE DOCUMENT'S OWN CONTRIBUTION
-    (leave-one-out),
-
-        P3 = (c'(w₁w₂w₃) + k) / (c'(w₁w₂) + k·V')
-        P2 = (c'(w₂w₃) + k) / (c'(w₂) + k·V')
-        P1 = (c'(w₃) + k) / (N' + k·V')
-
-    where every c' subtracts the doc's own occurrences, V' drops words
-    unique to the doc, and N' its token count (k =
-    ``BIGRAM_SMOOTH_K``, λ = ``TRIGRAM_LAMBDAS``).
-
-    **Why leave-one-out is load-bearing at order 2** (measured, r15):
-    CCNet scores candidates under a model trained on a REFERENCE corpus
-    (Wikipedia). A self-scored corpus model includes each doc's own
-    counts — and at order 2 that self-contribution dominates, because a
-    novel trigram arrives WITH its own novel context: c(w₁w₂w₃) =
-    c(w₁w₂) = 1 makes the salad's own transitions look deterministic
-    (plain interpolation measured a 0.96 salad margin vs the bigram
-    leg's 1.33 on the same corpus; Witten-Bell made it WORSE, 0.27 —
-    the once-seen-context λ trusts the doc's own evidence). The
-    order-1 leg survives self-scoring only because its contexts are
-    corpus-common words whose counts drown one doc's contribution.
-    Removing the doc's own counts is the jackknife equivalent of the
-    train/score split — salad trigrams then price at the true novelty
-    floor (measured margin 1.32, and the bigram-BLIND splice class —
-    corpus-common bigrams, novel trigrams — separates by >1 where the
-    order-1 leg sees nothing; pinned in tests).
-
-    Simple fixed-λ interpolation (KenLM's interpolated modified-KN is
-    the production refinement): the higher order dominates when the
-    REST of the corpus has seen the context and backs off smoothly
-    when it has not, so rare-but-natural text pays ln(λ2·P2 + …), not
-    the bare floor. Documents with fewer than three tokens have no
-    trigram and no row.
-
-    Cross-engine determinism: P3/P2/P1 are double divisions of exact
-    integers, the interpolation is three double mults + two adds in
-    fixed literal order, one ln, one DECIMAL(18,6) snap; per-doc sums
-    are exact decimal·integer products added in decimal (pinned
-    against a python decimal replica in tests/test_curation_ops.py).
-
-    Scale shape: n-gram positions built IN-ROW (zip_with over shifted
-    slices — no token self-join) and aggregated to per-(doc, gram)
-    rows FIRST, so every join and the scoring math run once per
-    DISTINCT gram per doc (weight = its occurrence count) and the
-    leave-one-out own-counts are the same aggregate — global tables
-    are one further bounded-key rollup of the per-doc ones (one scan,
-    two agg levels, the classic two-phase count). ``min_count`` prunes
-    the TRIGRAM table (the first to outgrow broadcast at web scale —
-    its tail absorbed as the P3 k-floor while P2/P1 still price the
-    position); trigram/bigram tables join UNHINTED (AQE decides — the
-    r14 precedent), unigram tables stay hinted (Heaps-bounded).
-    Per-doc reduction is one map-side-combining agg; nothing
-    corpus-sized shuffles except the per-doc gram keys themselves."""
-    from pyspark.sql import Window as _W, functions as F2
-
-    ws = F2.split(F2.trim(F2.col(text_col)), r"\s+")
-    n_ws = F2.size(ws)
-    tri_struct = F2.filter(
-        F2.zip_with(
-            F2.zip_with(
-                ws,
-                F2.slice(ws, 2, F2.greatest(n_ws - 1, F2.lit(0))),
-                lambda a, b: F2.struct(a.alias("w1"), b.alias("w2")),
-            ),
-            F2.slice(ws, 3, F2.greatest(n_ws - 2, F2.lit(0))),
-            lambda p, c: F2.when(
-                p["w1"].isNotNull() & p["w2"].isNotNull() & c.isNotNull(),
-                F2.struct(
-                    p["w1"].alias("w1"), p["w2"].alias("w2"), c.alias("w3")
-                ),
-            ),
-        ),
-        lambda g: g.isNotNull(),
-    )
-    pair = F2.filter(
-        F2.zip_with(
-            ws,
-            F2.slice(ws, 2, F2.greatest(n_ws - 1, F2.lit(0))),
-            lambda a, b: F2.when(
-                a.isNotNull() & b.isNotNull(), F2.concat(a, F2.lit(" "), b)
-            ),
-        ),
-        lambda g: g.isNotNull(),
-    )
-    # per-(doc, gram) occurrence tables — the scoring grain AND the
-    # leave-one-out own-counts in one aggregate
-    ou = (
-        docs.select(F2.col(id_col).alias("doc_id"), F2.explode(ws).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F2.count(F2.lit(1)).alias("ou"))
-    )
-    ob = (
-        docs.select(
-            F2.col(id_col).alias("doc_id"), F2.explode(pair).alias("bg")
-        )
-        .groupBy("doc_id", "bg")
-        .agg(F2.count(F2.lit(1)).alias("ob"))
-    )
-    ot = (
-        docs.select(
-            F2.col(id_col).alias("doc_id"), F2.explode(tri_struct).alias("t")
-        )
-        .select(
-            "doc_id",
-            F2.concat_ws(" ", "t.w1", "t.w2", "t.w3").alias("tg"),
-            F2.concat_ws(" ", "t.w1", "t.w2").alias("bg12"),
-            F2.concat_ws(" ", "t.w2", "t.w3").alias("bg23"),
-            F2.col("t.w2").alias("w2"),
-            F2.col("t.w3").alias("w3"),
-        )
-        .groupBy("doc_id", "tg", "bg12", "bg23", "w2", "w3")
-        .agg(F2.count(F2.lit(1)).alias("ot"))
-    )
-    # global tables: one further bounded-key rollup of the per-doc ones
-    w_all = _W.partitionBy().rowsBetween(
-        _W.unboundedPreceding, _W.unboundedFollowing
-    )
-    uni = (
-        ou.groupBy("w")
-        .agg(F2.sum("ou").alias("cu"))
-        .withColumn("v", F2.count(F2.lit(1)).over(w_all))
-        .withColumn("n", F2.sum("cu").over(w_all))
-    )
-    big = ob.groupBy("bg").agg(F2.sum("ob").alias("cb"))
-    tri = ot.groupBy("tg").agg(F2.sum("ot").alias("ct"))
-    if min_count > 1:
-        tri = tri.filter(F2.col("ct") >= min_count)
-    # per-doc leave-one-out scalars: V' drops words unique to the doc,
-    # N' its token count (bounded per-doc reduction of the ou table)
-    doc_adj = (
-        ou.join(F2.broadcast(uni), "w")
-        .groupBy("doc_id")
-        .agg(
-            (
-                F2.max("v")
-                - F2.sum(
-                    F2.when(F2.col("cu") == F2.col("ou"), 1).otherwise(0)
-                )
-            ).alias("vp"),
-            (F2.max("n") - F2.sum("ou")).alias("np"),
-        )
-    )
-    k = BIGRAM_SMOOTH_K
-    l3, l2, l1 = TRIGRAM_LAMBDAS
-    scored = (
-        ot
-        # LEFT tri join: absent only under min_count pruning (the
-        # position then pays the bare k-floor on the P3 term); the
-        # remaining global joins are INNER — every gram of a scored doc
-        # is in the global rollup by construction. tri/big join
-        # UNHINTED (web-scale tables — AQE decides); uni/per-doc-own
-        # joins hinted where Heaps-bounded.
-        .join(tri, "tg", "left")
-        .join(
-            big.withColumnRenamed("bg", "bg12").withColumnRenamed(
-                "cb", "cb12"
-            ),
-            "bg12",
-        )
-        .join(
-            big.withColumnRenamed("bg", "bg23").withColumnRenamed(
-                "cb", "cb23"
-            ),
-            "bg23",
-        )
-        .join(
-            F2.broadcast(
-                uni.select(F2.col("w").alias("w2"), F2.col("cu").alias("cu2"))
-            ),
-            "w2",
-        )
-        .join(
-            F2.broadcast(
-                uni.select(F2.col("w").alias("w3"), F2.col("cu").alias("cu3"))
-            ),
-            "w3",
-        )
-        # own-count joins (leave-one-out): per-(doc, gram) keys
-        .join(
-            ob.select(
-                "doc_id", F2.col("bg").alias("bg12"), F2.col("ob").alias("ob12")
-            ),
-            ["doc_id", "bg12"],
-        )
-        .join(
-            ob.select(
-                "doc_id", F2.col("bg").alias("bg23"), F2.col("ob").alias("ob23")
-            ),
-            ["doc_id", "bg23"],
-        )
-        .join(
-            ou.select(
-                "doc_id", F2.col("w").alias("w2"), F2.col("ou").alias("ou2")
-            ),
-            ["doc_id", "w2"],
-        )
-        .join(
-            ou.select(
-                "doc_id", F2.col("w").alias("w3"), F2.col("ou").alias("ou3")
-            ),
-            ["doc_id", "w3"],
-        )
-        .join(doc_adj, "doc_id")
-    )
-    kv = F2.lit(k) * F2.col("vp")
-    p3 = (
-        F2.greatest(
-            F2.coalesce(F2.col("ct"), F2.lit(0)) - F2.col("ot"), F2.lit(0)
-        )
-        + F2.lit(k)
-    ) / (F2.col("cb12") - F2.col("ob12") + kv).cast("double")
-    p2 = (F2.col("cb23") - F2.col("ob23") + F2.lit(k)) / (
-        F2.col("cu2") - F2.col("ou2") + kv
-    ).cast("double")
-    p1 = (F2.col("cu3") - F2.col("ou3") + F2.lit(k)) / (
-        F2.col("np") + kv
-    ).cast("double")
-    lpd = F2.log(
-        F2.lit(l3) * p3 + F2.lit(l2) * p2 + F2.lit(l1) * p1
-    ).cast("decimal(18,6)")
-    per = (
-        scored.select("doc_id", "ot", lpd.alias("lpd"))
-        .groupBy("doc_id")
-        .agg(
-            F2.sum(F2.col("lpd") * F2.col("ot")).alias("s"),
-            F2.sum("ot").alias("n_trigrams"),
-        )
-    )
-    mean = F2.col("s").cast("double") / F2.col("n_trigrams")
-    return per.select(
-        "doc_id",
-        "n_trigrams",
-        F2.round(mean, 6).cast("decimal(18,6)").cast("double").alias(
-            "mean_trigram_logprob"
-        ),
-        (mean < threshold).alias("trigram_lm_flag"),
-    )
-
-
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_score(load_table(spark, sf_dir, "documents"))
 

@@ -106,7 +106,7 @@ def extract_encounters(entries: DataFrame, deterministic_dedup: bool = False) ->
     """Encounter extraction (reference :95-117)."""
     flat = entries.select("resource.*")
     fs = flat.schema
-    from ..functions.fhir_extract import field_type, json_path_first, _string_of
+    from ..functions.fhir_extract import json_path_first, _string_of
 
     def arr_path(path: str, *jpaths: str) -> Column:
         s = _string_of(fs, path)

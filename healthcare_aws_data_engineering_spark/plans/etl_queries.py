@@ -41,7 +41,7 @@ from ..plans.etl import (
     extract_patients,
 )
 from ..sources.fhir import explode_entries
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table
 
 # Explicit bundle schema (union of the Patient and Observation resource
 # shapes below, as spark.read.json would infer across resource types).
@@ -156,8 +156,8 @@ def synth_bundles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Bundle per user: the user's Patient resource + all their
     Observation entries, built as JSON text and parsed with the frozen
     schema (P1's input shape)."""
-    events = spread(load_table(spark, sf_dir, "events"))
-    customer = spread(load_table(spark, sf_dir, "customer"))
+    events = load_table(spark, sf_dir, "events")
+    customer = load_table(spark, sf_dir, "customer")
     obs = events.select(
         F.col("user_id").alias("k"), _observation_entry_json().alias("entry")
     )

@@ -374,9 +374,9 @@ def pack_sequences(
     ``len/budget + 1`` chunks), and the (stream, chunk) aggregation all
     reuse that partitioning. Streams are independent, so at 100 TB this
     parallelizes per source shard; a single giant stream would serialize
-    in THIS form's window sort — :func:`pack_sequences_sharded` is the
-    implemented hatch for that shape (two-phase per-stream prefix sum,
-    test-pinned identical).
+    in the window sort. The fix for that shape is a two-phase per-stream
+    prefix sum over id-range buckets (measured in SCALING.md; no query
+    or data size here needs it).
     """
     from ..operators.text import token_count
 
@@ -397,141 +397,6 @@ def pack_sequences(
         F.explode(
             F.sequence(
                 F.expr(f"start_off div {budget}"),
-                F.expr(f"(end_off - 1) div {budget}"),
-            )
-        ).alias("chunk_id"),
-    )
-    return exploded.groupBy("source", "chunk_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("first_doc"),
-        F.max("doc_id").alias("last_doc"),
-        F.least(
-            F.lit(budget).cast("long"),
-            F.first("stream_total") - F.col("chunk_id") * budget,
-        ).alias("n_tokens"),
-    )
-
-
-PACK_ID_BUCKETS = 256           # per-stream id-range buckets (floor)
-PACK_GUARD_MIN_BUCKET = 1_000_000  # a bucket under this sorts fine on 1 task
-PACK_GUARD_FRACTION = 16        # loud failure when one bucket > stream/16
-
-
-def pack_sequences_sharded(
-    docs: DataFrame,
-    budget: int = PACK_BUDGET,
-    stream_col: str = "source",
-    order_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = PACK_ID_BUCKETS,
-    max_bucket_rows: int | None = None,
-) -> DataFrame:
-    """:func:`pack_sequences` for the mega-stream shape — the running
-    offset is a per-stream two-phase prefix sum instead of one
-    window-sort task per stream (the ``two_phase_cum_tokens`` recipe,
-    re-keyed): bucket each doc by its position in the stream's id RANGE
-    (``(doc_id − min_id) DIV ceil(range/B)`` — monotone in doc_id by
-    construction, derived per stream from one cheap min/max aggregate),
-    prefix the ≤B-row-per-stream bucket table with a window partitioned
-    by STREAM (never unpartitioned, never corpus-sized), and finish each
-    doc inside its (stream, bucket) partition (~1/B of the stream).
-
-    Exactness is test-pinned identical to :func:`pack_sequences` —
-    including sparse and clustered id distributions. Clustering is the
-    honest caveat: ids piled into one id-range bucket re-create the
-    single-task sort, so the bucket table carries the same IN-PLAN
-    raise_error guard as the token-budget operator (fires when a bucket
-    exceeds ``max(PACK_GUARD_MIN_BUCKET, stream/PACK_GUARD_FRACTION)``
-    rows; remedies: raise ``n_buckets``, recurse, or re-key the order
-    column to something spread, e.g. a hash-prefixed id)."""
-    from ..operators.text import token_count
-
-    t = docs.select(
-        F.col(stream_col).alias("source"),
-        F.col(order_col).alias("doc_id"),
-        token_count(F.col(text_col)).cast("long").alias("n_tok"),
-    ).filter(F.col("n_tok") > 0)
-    bounds = t.groupBy("source").agg(
-        F.min("doc_id").alias("__lo"), F.max("doc_id").alias("__hi")
-    )
-    width = F.greatest(
-        F.lit(1).cast("long"),
-        F.expr(f"CAST((__hi - __lo + {n_buckets}) DIV {n_buckets} AS BIGINT)"),
-    )
-    staged = t.join(F.broadcast(bounds), "source").select(
-        "source",
-        "doc_id",
-        "n_tok",
-        F.floor((F.col("doc_id") - F.col("__lo")) / width).cast("int").alias("__b"),
-    )
-    per_bucket = staged.groupBy("source", "__b").agg(
-        F.sum("n_tok").alias("__bt"), F.count(F.lit(1)).alias("__bn")
-    )
-    w_all = W.partitionBy("source").orderBy("__b")
-    w_full = w_all.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    threshold = (
-        F.lit(max_bucket_rows).cast("long")
-        if max_bucket_rows is not None
-        else F.greatest(
-            F.lit(PACK_GUARD_MIN_BUCKET).cast("long"),
-            F.ceil(
-                F.sum("__bn").over(w_full) / F.lit(PACK_GUARD_FRACTION)
-            ).cast("long"),
-        )
-    )
-    guard = (
-        F.when(
-            F.col("__bn") > threshold,
-            F.raise_error(
-                F.concat(
-                    F.lit("pack_sequences_sharded: id-range bucket "),
-                    F.col("__b").cast("string"),
-                    F.lit(" of stream "),
-                    F.col("source").cast("string"),
-                    F.lit(" holds "),
-                    F.col("__bn").cast("string"),
-                    F.lit(
-                        " rows (> guard) — clustered order-column ids;"
-                        " raise n_buckets, recurse, or re-key the order"
-                        " column"
-                    ),
-                )
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    prefixed = per_bucket.select(
-        "source",
-        "__b",
-        (
-            F.coalesce(
-                F.sum("__bt").over(w_all.rowsBetween(W.unboundedPreceding, -1)),
-                F.lit(0),
-            )
-            + guard
-        ).alias("__prefix"),
-        F.sum("__bt").over(w_full).alias("stream_total"),
-    )
-    w_in = (
-        W.partitionBy("source", "__b")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    laid = staged.join(F.broadcast(prefixed), ["source", "__b"]).select(
-        "source",
-        "doc_id",
-        "n_tok",
-        "stream_total",
-        (F.col("__prefix") + F.sum("n_tok").over(w_in)).alias("end_off"),
-    )
-    exploded = laid.select(
-        "source",
-        "doc_id",
-        "stream_total",
-        F.explode(
-            F.sequence(
-                F.expr(f"(end_off - n_tok) div {budget}"),
                 F.expr(f"(end_off - 1) div {budget}"),
             )
         ).alias("chunk_id"),
@@ -902,8 +767,9 @@ def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _distinct_sketch_sql() -> str:
-    # Same staged double-hash recipe as operators.sketch.sketch_sql, plus
-    # the exact_distinct column the driver query includes.
+    # DuckDB twin of operators.sketch.distinct_sketch: the same staged
+    # double-hash halves, k mins and fixed-order sum, plus the
+    # exact_distinct column the driver query includes.
     from ..operators.sketch import SKETCH_K
 
     two32 = 4294967296

@@ -698,52 +698,15 @@ FROM subs
 
 def q_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F18–F21: per-patient 12-month linear forecast with widening CI over
-    the purchase series — closed-form fit from exact decimal sums, then the
-    monthly future grid via explode(sequence(...)). One hash aggregate +
-    a 12× fan-out; no window, no UDF."""
+    the purchase series (:func:`.wellness.forecast`)."""
+    from .wellness import forecast
+
     ev = _events(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    x = F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).cast("double")
-    y = F.col("value")
-    agg = ev.groupBy(F.col("user_id").alias("patient_id")).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(x).alias("sx"),
-        dsum(y).alias("sy"),
-        dsum(x * y).alias("sxy"),
-        dsum(x * x).alias("sxx"),
-        dsum(y * y).alias("syy"),
-        dsum(F.abs(y)).alias("sabs"),
-        F.max(F.col("ts").cast("date")).alias("last_date"),
-    )
-    n, sx, sy, sxy, sxx, syy = (F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx", "syy"))
-    denom = n * sxx - sx * sx
-    m = (n * sxy - sx * sy) / denom
-    b = (sy - m * sx) / n
-    sigma2 = (
-        syy / n + (m * m) * (sxx / n) + b * b
-        - 2 * m * (sxy / n) - 2 * b * (sy / n) + 2 * m * b * (sx / n)
-    )
-    fitted = agg.filter((n >= 3) & (denom != 0)).select(
-        "patient_id",
-        m.alias("m"),
-        b.alias("b"),
-        F.sqrt(F.greatest(F.lit(1e-12), sigma2)).alias("sigma"),
-        F.greatest(F.lit(1.0), F.col("sabs") / n).alias("baseline"),
-        "last_date",
-    )
-    grid = fitted.select(
-        "*", F.explode(F.sequence(F.lit(1), F.lit(12))).alias("k")
-    )
-    future = F.add_months(F.trunc(F.col("last_date"), "month"), F.col("k"))
-    xf = F.datediff(future, F.lit("1970-01-01").cast("date")).cast("double")
-    yhat = F.col("m") * xf + F.col("b")
-    ci = F.col("sigma") + (F.col("k").cast("double") / F.lit(12.0)) * 0.15 * F.col("baseline")
-    return grid.select(
-        "patient_id",
-        F.col("k").alias("month_ahead"),
-        future.alias("future_month"),
-        yhat.alias("yhat"),
-        (yhat - ci).alias("lower"),
-        (yhat + ci).alias("upper"),
+    return forecast(
+        ev.select(
+            F.col("user_id").alias("patient_id"), F.col("ts").alias("date"), "value"
+        ),
+        "value",
     )
 
 

@@ -135,12 +135,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-dedup group table: normalized-content hash → keeper + count
     (dup_count=1 groups included so the check is substantial on a corpus
     with no exact dups)."""
-    docs = _docs(spark, sf_dir)
-    h = F.md5(T.normalize_text(F.col("text")).cast("binary"))
-    return docs.groupBy(h.alias("content_hash")).agg(
-        F.min("doc_id").alias("keep_id"),
-        F.count(F.lit(1)).alias("dup_count"),
-    )
+    return D.exact_dedup(_docs(spark, sf_dir))
 
 
 _DEDUP_EXACT_SQL = """
@@ -434,15 +429,12 @@ FROM sp GROUP BY 1, 2
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, md5digit backend (32-bit votes from md5 hex
-    digits, 4 bands of 8) — the full votes→pack→band→bucket-join→Hamming
-    pipeline, oracle-checked leg for leg in DuckDB. The cheaper xxhash64
-    64-bit production backend shares all plumbing and is pytest-covered."""
+    """SimHash near-dup pairs (32-bit votes from md5 hex digits, 4 bands
+    of 8) — the full votes→pack→band→bucket-join→Hamming pipeline,
+    oracle-checked leg for leg in DuckDB."""
     # NOT spread (r16): matched-window A/B vs the r15 tree measured the
     # spread form slower in suite context (3.2s vs 2.2s median).
-    return D.simhash_pairs(
-        _docs(spark, sf_dir), bands=4, max_hamming=3, backend="md5digit"
-    )
+    return D.simhash_pairs(_docs(spark, sf_dir), bands=4, max_hamming=3)
 
 
 def _simhash_sql(bits: int = 32, bands: int = 4, max_hamming: int = 3,
@@ -841,8 +833,8 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Threshold 0.35 because the synthetic embeddings are near-orthogonal
     random vectors (max pairwise cosine ≈ 0.51 at sf0.01) — a production
     0.9+ threshold would make the check vacuously empty. Literal
-    md5-derived planes + quantized-integer cosine (cosine_q: exact long
-    sums, IEEE sqrt/divide — no decimal fold) → full DuckDB oracle."""
+    md5-derived planes + quantized-integer cosine (exact long sums,
+    IEEE sqrt/divide — no decimal fold) → full DuckDB oracle."""
     return S.embedding_near_dup(
         _embs(spark, sf_dir), threshold=0.35, bands=8,
         plane_matrix=_PLANES16,
@@ -875,7 +867,7 @@ WITH {_sig_bands_sql(_PLANES16, bands=8)},
     FROM qpairs, unnest(generate_series(1, 64)) AS t(i)
   ),
   qsums AS (
-    -- twin of cosine_q: exact long sums of micro-unit products, then
+    -- integer cosine: exact long sums of micro-unit products, then
     -- correctly-rounded IEEE sqrt/divide — no decimal accumulator
     SELECT query_id, neighbor_id,
            CAST(SUM(ab) AS BIGINT) AS dq,
@@ -969,10 +961,10 @@ def q_quality_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the keep decision compares that raw double. Scale shape: ONE shuffle
     by source + a per-source sort (the honest price of the full
     pct-annotated manifest this oracle-facing form emits). When a
-    mega-source outgrows one task, :func:`quality_keep_topfrac` is the
-    implemented skew hatch: the same keep set (test-pinned, integer rank
-    math, every bucket grid) via a boundary-bucket two-phase — no
-    per-source full sort, 6.5× faster on the 50%-hot probe corpus."""
+    mega-source outgrows one task, a boundary-bucket two-phase selects
+    the same keep set with no per-source full sort (6.5× faster on the
+    50%-hot probe corpus, measured in SCALING.md; no query or data size
+    here needs it)."""
     from pyspark.sql import Window as _W
 
     stats = _doc_stats(spark, sf_dir, ["doc_id", "source", "quality"])
@@ -1174,150 +1166,6 @@ r AS (
 )
 SELECT doc_id, source, quality, rk FROM r WHERE rk <= {DOMAIN_CAP}
 """
-
-
-def quality_keep_topfrac(
-    stats: DataFrame,
-    keep_num: int = 1,
-    keep_den: int = 5,
-    n_buckets: int = 256,
-    max_bucket_rows: int | None = None,
-) -> DataFrame:
-    """The approx-quantile-free skew hatch q_quality_calibrated's
-    docstring promises, implemented EXACTLY: per-source "drop the
-    bottom keep_num/keep_den" selecting the identical keep set as
-    ``percent_rank >= keep_num/keep_den`` — WITHOUT ever sorting a
-    whole source on one task.
-
-    Why not the :func:`domain_cap_topk` salted top-k: that prunes only
-    when k < n/salts — a CONSTANT cap. A FRACTIONAL k (≈0.8·n here)
-    defeats any salt count (stage 1 filters nothing, stage 2 still
-    sorts the source), measured on the 50%-hot probe corpus. The shape
-    that works is the boundary-bucket two-phase (the
-    :func:`two_phase_cum_tokens` recipe per source):
-
-    1. one map-side-combined count per (source, quality-bucket) —
-       ``floor(quality·B)``, monotone in the rank order since equal
-       qualities share a bucket and rank ties break inside one bucket;
-    2. on that ≤B-row-per-source table (windows partitioned by SOURCE,
-       never unpartitioned), find each source's BOUNDARY bucket — where
-       the drop count d = ceil((n−1)·num/den) falls (singletons: d = n,
-       matching Spark's pct = 0.0-at-n = 1 drop);
-    3. buckets below the boundary drop wholesale, buckets above keep
-       wholesale, and ONLY the boundary bucket's rows (~n/B, guarded)
-       are rank-decided — via a row_number over (source, bucket)
-       partitions, all bounded.
-
-    A quality distribution massed on one value concentrates the
-    boundary bucket; the bucket table carries the same in-plan
-    raise_error guard as the token-budget operator (threshold
-    ``max_bucket_rows`` or max(1M, n/16)). Output: KEPT rows only
-    (``doc_id, source, quality``)."""
-    from pyspark.sql import Window as _W
-
-    # r8 guard (r7 advice): keep_num == 0 means "drop nothing", but the
-    # two-phase below would compute d = 0, find NO boundary bucket, and
-    # the inner join on the empty boundary table would drop EVERY row —
-    # the exact opposite of percent_rank >= 0. Refuse the degenerate
-    # domain instead of silently inverting it.
-    if keep_num < 1 or keep_den < 1:
-        raise ValueError(
-            f"quality_keep_topfrac requires keep_num >= 1 and keep_den >= 1 "
-            f"(got {keep_num}/{keep_den}); keep_num == 0 (keep everything) "
-            f"is the identity — just don't call the filter"
-        )
-
-    staged = stats.withColumn(
-        "__b",
-        F.least(
-            F.greatest(F.floor(F.col("quality") * n_buckets), F.lit(0)),
-            F.lit(n_buckets - 1),
-        ).cast("int"),
-    )
-    per_bucket = staged.groupBy("source", "__b").agg(
-        F.count(F.lit(1)).alias("__bn")
-    )
-    w_src = _W.partitionBy("source").orderBy("__b")
-    w_full = w_src.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
-    n_src = F.sum("__bn").over(w_full)
-    # drop count d = ceil((n-1)*num/den); singleton source → d = 1
-    d_src = F.when(F.col("__nsrc") == 1, F.lit(1).cast("long")).otherwise(
-        F.expr(
-            f"CAST(((__nsrc - 1) * {keep_num} + {keep_den} - 1) "
-            f"DIV {keep_den} AS BIGINT)"
-        )
-    )
-    threshold = (
-        F.lit(max_bucket_rows).cast("long")
-        if max_bucket_rows is not None
-        else F.greatest(
-            F.lit(GUARD_MIN_BUCKET_ROWS).cast("long"),
-            F.ceil(n_src / F.lit(GUARD_BUCKET_FRACTION)).cast("long"),
-        )
-    )
-    guard = (
-        F.when(
-            F.col("__bn") > threshold,
-            F.raise_error(
-                F.concat(
-                    F.lit("quality_keep_topfrac: quality bucket "),
-                    F.col("__b").cast("string"),
-                    F.lit(" of source "),
-                    F.col("source").cast("string"),
-                    F.lit(" holds "),
-                    F.col("__bn").cast("string"),
-                    F.lit(
-                        " rows (> guard) — degenerate quality"
-                        " distribution; raise n_buckets or tiebreak the"
-                        " dominant quality value"
-                    ),
-                )
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    boundary = (
-        per_bucket.withColumn("__nsrc", n_src)
-        .select(
-            "source",
-            "__b",
-            "__bn",
-            "__nsrc",
-            (
-                F.coalesce(
-                    F.sum("__bn").over(
-                        w_src.rowsBetween(_W.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                )
-                + guard
-            ).alias("__below"),
-        )
-        .withColumn("__d", d_src)
-        # the boundary bucket: drop count lands strictly inside it
-        .filter(
-            (F.col("__below") < F.col("__d"))
-            & (F.col("__d") <= F.col("__below") + F.col("__bn"))
-        )
-        .select(
-            "source",
-            F.col("__b").alias("__bstar"),
-            (F.col("__d") - F.col("__below")).alias("__local_drop"),
-        )
-    )
-    w_in = _W.partitionBy("source", "__b").orderBy(
-        F.col("quality").asc(), F.col("doc_id").asc()
-    )
-    return (
-        staged.join(F.broadcast(boundary), "source")
-        .filter(F.col("__b") >= F.col("__bstar"))  # below-boundary drops early
-        .withColumn("__r", F.row_number().over(w_in))
-        .filter(
-            (F.col("__b") > F.col("__bstar")) | (F.col("__r") > F.col("__local_drop"))
-        )
-        .select("doc_id", "source", "quality")
-    )
 
 
 # ---------------------------------------------------- token_budget_fill --

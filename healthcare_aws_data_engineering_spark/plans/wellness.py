@@ -25,6 +25,7 @@ from ..functions.scoring import (
     overall_label,
     wellness,
 )
+from .sqlsum import dsum
 
 ANALYTES = list(PENALTY_REFS)
 
@@ -179,34 +180,33 @@ def trend_arrow(labs: DataFrame, disease: str) -> DataFrame:
     )
 
 
-def forecast(
-    labs: DataFrame,
-    value_col: str,
-    horizon_months: int = 12,
-) -> DataFrame:
+def forecast(labs: DataFrame, value_col: str) -> DataFrame:
     """12-month linear forecast with widening CI (mrp_website.py:664-686):
 
     - degree-1 fit ``y = m·x + b`` on x = date ordinal (day resolution;
       the origin shift vs pandas' ``toordinal`` cancels out of ``m·x+b``);
     - ``sigma`` = population std of fit residuals;
     - ``ci_k = sigma + (k/12)·0.15·max(1, mean(|y|))`` for month k;
-    - future grid = ``horizon_months`` months starting at the first day of
-      the month after each patient's last observation.
+    - future grid = 12 months starting at the first day of the month
+      after each patient's last observation.
 
-    Physical shape: ONE hash aggregate (closed-form sums) + a 12-row
-    explode per patient — no window, no iteration, no driver math. Patients
-    with <3 points are dropped (the app requires ≥3, :668-669)."""
+    The sums are exact decimal sums (:func:`.sqlsum.dsum`), so the fit
+    does not depend on the order rows reach the aggregate and the DuckDB
+    oracle replays it bit for bit. Physical shape: ONE hash aggregate
+    (closed-form sums) + a 12-row explode per patient — no window, no
+    iteration, no driver math. Null points are skipped and patients with
+    <3 points are dropped (the app requires ≥3, :668-669)."""
     pts = labs.filter(F.col(value_col).isNotNull())
     x = F.datediff(F.col("date").cast("date"), F.lit("1970-01-01").cast("date")).cast("double")
     y = F.col(value_col).cast("double")
     agg = pts.groupBy("patient_id").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-        F.sum(F.abs(y)).alias("sabs"),
+        dsum(x).alias("sx"),
+        dsum(y).alias("sy"),
+        dsum(x * y).alias("sxy"),
+        dsum(x * x).alias("sxx"),
+        dsum(y * y).alias("syy"),
+        dsum(F.abs(y)).alias("sabs"),
         F.max(F.col("date").cast("date")).alias("last_date"),
     )
     n, sx, sy, sxy, sxx, syy = (F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx", "syy"))
@@ -216,12 +216,8 @@ def forecast(
     # sigma² = mean of squared residuals, expanded to the closed form over
     # the same sums (equals np.std(y - (m x + b)) population semantics).
     sigma2 = (
-        syy / n
-        + (m * m) * (sxx / n)
-        + b * b
-        - 2 * m * (sxy / n)
-        - 2 * b * (sy / n)
-        + 2 * m * b * (sx / n)
+        syy / n + (m * m) * (sxx / n) + b * b
+        - 2 * m * (sxy / n) - 2 * b * (sy / n) + 2 * m * b * (sx / n)
     )
     fitted = agg.filter((n >= 3) & (denom != 0)).select(
         "patient_id",
@@ -229,18 +225,19 @@ def forecast(
         b.alias("b"),
         F.sqrt(F.greatest(F.lit(1e-12), sigma2)).alias("sigma"),
         F.greatest(F.lit(1.0), F.col("sabs") / n).alias("baseline"),
-        F.col("last_date"),
+        "last_date",
     )
-    k = F.explode(F.sequence(F.lit(1), F.lit(horizon_months))).alias("k")
-    grid = fitted.select("*", k)
-    future_date = F.add_months(F.trunc(F.col("last_date"), "month"), F.col("k"))
-    xf = F.datediff(future_date, F.lit("1970-01-01").cast("date")).cast("double")
+    grid = fitted.select(
+        "*", F.explode(F.sequence(F.lit(1), F.lit(12))).alias("k")
+    )
+    future = F.add_months(F.trunc(F.col("last_date"), "month"), F.col("k"))
+    xf = F.datediff(future, F.lit("1970-01-01").cast("date")).cast("double")
     yhat = F.col("m") * xf + F.col("b")
-    ci = F.col("sigma") + (F.col("k") / F.lit(float(horizon_months))) * 0.15 * F.col("baseline")
+    ci = F.col("sigma") + (F.col("k").cast("double") / F.lit(12.0)) * 0.15 * F.col("baseline")
     return grid.select(
         "patient_id",
         F.col("k").alias("month_ahead"),
-        future_date.alias("future_month"),
+        future.alias("future_month"),
         yhat.alias("yhat"),
         (yhat - ci).alias("lower"),
         (yhat + ci).alias("upper"),

@@ -1,1 +1,1 @@
-from .tables import load_table, load_tables, observation_view_from_events  # noqa: F401
+from .tables import load_table, observation_view_from_events  # noqa: F401

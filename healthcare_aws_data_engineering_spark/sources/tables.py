@@ -10,19 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def _timestamp_ns_columns(path: str) -> list[str]:
     """Column names stored as parquet TIMESTAMP(NANOS) — a metadata-only
@@ -120,18 +107,6 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES, register: bool = False
-) -> dict[str, DataFrame]:
-    out = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        if register:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 #: Required columns of a user-supplied observation parquet (the library's

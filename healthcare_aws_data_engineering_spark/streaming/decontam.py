@@ -1,143 +1,21 @@
-"""Streaming decontamination against a batch-built eval-set bloom index
-— the ONLINE half of benchmark decontamination: "does this incoming
-document overlap an eval benchmark?" scored as documents arrive instead
-of in a nightly batch.
+"""Streaming upkeep of the decontamination shingle ledger — the
+at-ingest half of benchmark decontamination.
 
 Extension beyond the reference (its ingest surface is batch Glue jobs;
-flagged per SURVEY §7.2 step 7), completing the streaming story the
-same way ``dhash_near_dup_stream`` did for images (r12 verdict stretch
-#8). Spark-first shape:
-
-- The INDEX is the eval set's bloom bitset, built ONCE batch-side from
-  the static eval corpus (``operators.decontam.bloom_bitset_bytes`` —
-  distributed word-fold, ≤ m/64 fixed-width rows to the driver) and
-  carried into every micro-batch as ONE BINARY LITERAL — the bitset is
-  a natural stream-static broadcast: fixed ~1.2 MB per million eval
-  shingles, shipped once per task, never per row.
-- The STREAM side stays IN-ROW as long as possible: shingles are an
-  array column (never exploded corpus-wide), the bloom probe is a
-  higher-order ``F.filter`` over it — a pure projection — so only the
-  pruned candidate fraction is exploded into the exact-verification
-  stream-static join (kills bloom false positives; the probe has no
-  false negatives).
-- The only stateful step is the per-document overlap aggregate, keyed
-  on (doc_id, event time) under the watermark horizon — state is
-  bounded by in-flight documents, not the stream's history.
-
-The same function accepts a BATCH frame for ``stream_docs`` (parity
-testing: stream == batch == ``bloom_decontaminate`` on the shared
-columns is the correctness claim, pinned in tests/test_streaming.py).
+flagged per SURVEY §7.2 step 7). :func:`shingle_ledger_ingest` drains
+new document parquet files with ``Trigger.AvailableNow`` and appends
+their fixed-width ``(doc_id, shingle_hash)`` rows
+(``operators.decontam.shingle_ledger``) to the ledger that
+``operators.decontam.ledger_decontaminate`` screens a benchmark
+against, so a benchmark arriving later needs one ledger scan and no
+corpus text re-read.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.decontam import (
-    BLOOM_FPP,
-    CONTAM_THRESHOLD,
-    _bloom_geometry,
-    _might_contain,
-    bloom_bitset_bytes,
-    shingle_ledger,
-)
-from ..operators.dedup import word_shingles
-
-
-def decontaminate_stream(
-    stream_docs: DataFrame,
-    eval_docs: DataFrame,
-    threshold: float = CONTAM_THRESHOLD,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
-    fpp: float = BLOOM_FPP,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per incoming document: ``(doc_id, ts, n_shingles, n_overlap,
-    overlap_ratio, contaminated)`` — the exact
-    :func:`..operators.decontam.bloom_decontaminate` verdict columns
-    (same shingling, same rounding grid, same threshold comparison),
-    computed per micro-batch against the static eval set.
-
-    ``eval_docs`` is the STATIC eval corpus (``id_col``/``text_col``);
-    its distinct shingles are read twice at index-build time (count +
-    bitset fold) and then once per micro-batch by the verification
-    join — at 100 TB the eval side is a benchmark suite, bounded by
-    construction (same argument as the batch path)."""
-    eval_shingles = (
-        eval_docs.select(
-            F.explode(word_shingles(F.col(text_col), n)).alias("shingle")
-        )
-        .distinct()
-        # persisted for the two EAGER index-build reads below, released
-        # before the streaming query starts (the per-micro-batch
-        # verification join recomputes the bounded eval slice lazily —
-        # the same trade bloom_decontaminate documents)
-        .persist()
-    )
-    # bounded driver scalar + bitset bytes (see bloom_decontaminate for
-    # why the collect here adds no new driver liability)
-    n_eval = eval_shingles.count()
-    m, k = _bloom_geometry(n_eval, fpp)
-    bitset = bloom_bitset_bytes(eval_shingles, m, k)
-    eval_shingles.unpersist()
-    ev = eval_shingles.select(
-        F.col("shingle").alias("__ev_shingle"), F.lit(1).alias("hit")
-    )
-
-    staged = (
-        stream_docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(ts_col).alias(ts_col),
-            word_shingles(F.col(text_col), n).alias("__shingles"),
-        )
-        # parity with the batch path: a doc with zero shingles never
-        # survives the batch explode either
-        .filter(F.size("__shingles") > 0)
-        .select(
-            "doc_id",
-            ts_col,
-            F.size("__shingles").cast("long").alias("n_shingles"),
-            # in-row bloom probe: candidates only leave the row
-            F.filter(
-                F.col("__shingles"),
-                lambda s: _might_contain(s, F.lit(bitset), m, k),
-            ).alias("__cands"),
-        )
-    )
-    # explode_outer keeps candidate-free docs (verdict: 0 overlap)
-    exploded = staged.select(
-        "doc_id",
-        ts_col,
-        "n_shingles",
-        F.explode_outer("__cands").alias("shingle"),
-    )
-    # stream-static LEFT join: exact verification of the pruned
-    # candidates only (UNHINTED — AQE broadcasts the eval strings when
-    # they really are small; the bloom probe exists so this join never
-    # sees the full corpus)
-    verified = exploded.join(
-        ev, F.col("shingle") == F.col("__ev_shingle"), "left"
-    )
-    if stream_docs.isStreaming:
-        verified = verified.withWatermark(ts_col, watermark)
-    per_doc = verified.groupBy("doc_id", ts_col, "n_shingles").agg(
-        F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("n_overlap")
-    )
-    ratio = F.col("n_overlap") / F.col("n_shingles")
-    return per_doc.select(
-        "doc_id",
-        ts_col,
-        "n_shingles",
-        "n_overlap",
-        F.round(ratio, 6)
-        .cast("decimal(18,6)")
-        .cast("double")
-        .alias("overlap_ratio"),
-        (ratio >= threshold).alias("contaminated"),
-    )
+from ..operators.decontam import shingle_ledger
 
 
 def _write_ledger_batch(

@@ -1,26 +1,14 @@
-"""Streaming near-duplicate detection against a batch-built vector
-index — the ONLINE half of corpus dedup/decontamination: "is this
-incoming document a near-dup of anything already in the corpus?"
+"""Streaming image near-duplicate detection against a batch-built
+perceptual-hash index — the online half of media dedup: "is this
+incoming image a near-dup of anything already in the corpus?"
 
 Extension beyond the reference (its streaming surface is batch Glue
-jobs; flagged per SURVEY §7.2 step 7). Spark-first shape:
-
-- The INDEX is built batch-side from the static corpus — derived LSH
-  geometry (``similarity.width_for``/``bands_for``), size-capped
-  buckets, quantized vectors + norms staged once. At 100 TB this is a
-  table you materialize, not driver state.
-- The STREAM side is a pure projection (signature per incoming doc)
-  followed by a **stream-static equi-join** on (band, band_key) —
-  stateless in Structured Streaming, so no state store grows with the
-  stream; each micro-batch probes only its bucket partitions.
-- The only stateful step is the final per-(stream doc, index doc)
-  dedup across the multi-band matches, bounded by the watermark
-  horizon (``dropDuplicatesWithinWatermark`` — same unbounded-state
-  argument as ``windows.deduped_stream``).
-
-The same function accepts a BATCH frame for ``stream`` (parity
-testing: stream == batch is the correctness claim, like every other
-operator in ``streaming/``).
+jobs; flagged per SURVEY §7.2 step 7). The index side is banded
+batch-side, the stream side is a pure projection followed by a
+stateless stream-static equi-join, and the only state is the
+watermark-bounded dedup of multi-band hits (see
+:func:`dhash_near_dup_stream`). The same function accepts a BATCH frame
+(parity testing: stream == batch is the correctness claim).
 """
 
 from __future__ import annotations
@@ -28,105 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.dedup import _bucket_cap
-from ..operators.similarity import (
-    _non_null,
-    _resolve_index,
-    band_keys_from_chunks,
-    quantize_vec,
-    sig_chunks_q,
-)
-
-
-def near_dup_stream(
-    stream: DataFrame,
-    index_corpus: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ts_col: str = "ts",
-    bands: int | None = None,
-    plane_matrix: list[list[int]] | None = None,
-    target_bucket: int = 200,
-    max_bucket: int = 200,
-    target_recall: float = 0.8,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Matches ``(doc_id, ts, index_id, cosine)``: stream docs whose
-    cosine against some index doc ≥ ``threshold`` (exact integer-grid
-    cosine verify, LSH candidates only — same recall semantics as
-    :func:`similarity.embedding_near_dup` with the same derived
-    geometry, measured in SCALING.md)."""
-    index_corpus = _non_null(index_corpus, vec_col)
-    stream = _non_null(stream, vec_col)
-    plane_matrix, width, bands = _resolve_index(
-        index_corpus, vec_col, plane_matrix, bands,
-        target_bucket, threshold, target_recall,
-    )
-
-    def staged(df: DataFrame, prefix: str, extra: list[str]) -> DataFrame:
-        return (
-            df.select(
-                F.col(id_col).alias(f"{prefix}_id"),
-                *extra,
-                quantize_vec(F.col(vec_col)).alias(f"{prefix}_q"),
-            )
-            .select(
-                f"{prefix}_id",
-                *extra,
-                f"{prefix}_q",
-                F.aggregate(
-                    F.transform(F.col(f"{prefix}_q"), lambda x: x * x),
-                    F.lit(0).cast("long"),
-                    lambda s, x: s + x,
-                ).alias(f"{prefix}_n2"),
-                sig_chunks_q(
-                    F.col(f"{prefix}_q"), plane_matrix, width
-                ).alias("__sigc"),
-            )
-            .select(
-                f"{prefix}_id",
-                *extra,
-                f"{prefix}_q",
-                f"{prefix}_n2",
-                F.posexplode(
-                    band_keys_from_chunks(F.col("__sigc"), width, bands)
-                ).alias("band", "band_key"),
-            )
-        )
-
-    # min_bucket=1: the >=2 lower bound is a SELF-join optimization and
-    # would silently drop index docs that are bucket-singletons in every
-    # band — an exact clone of a unique corpus doc arriving on the
-    # stream must still be flagged. Only the upper cap (mega-bucket
-    # guard) applies to a probe-against-index join.
-    idx = _bucket_cap(
-        staged(index_corpus, "index", []), "band_key", max_bucket,
-        min_bucket=1,
-    ).select("band", "band_key", "index_id", "index_q", "index_n2")
-    probe = staged(stream, "doc", [ts_col])
-
-    dot = F.aggregate(
-        F.zip_with(F.col("doc_q"), F.col("index_q"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
-    )
-    cos = dot.cast("double") / (
-        F.sqrt(F.col("doc_n2").cast("double"))
-        * F.sqrt(F.col("index_n2").cast("double"))
-    )
-    matches = (
-        probe.join(idx, ["band", "band_key"])
-        .filter(F.col("doc_id") != F.col("index_id"))
-        .select("doc_id", ts_col, "index_id", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-    if stream.isStreaming:
-        # multi-band hits for the same pair collapse via watermark-bounded
-        # state; plain dropDuplicates would grow state forever
-        return matches.withWatermark(
-            ts_col, watermark
-        ).dropDuplicatesWithinWatermark(["doc_id", "index_id"])
-    return matches.dropDuplicates(["doc_id", "index_id"])
 
 
 def dhash_near_dup_stream(
@@ -139,12 +28,10 @@ def dhash_near_dup_stream(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming IMAGE near-dup against a batch-built perceptual index
-    (r11) — the image-modality twin of :func:`near_dup_stream`: "is
-    this incoming image a near-dup of anything already in the corpus?"
+    (r11).
 
     Matches ``(media_id, ts, index_id, hamming)``: stream images whose
-    dHash is within ``max_hamming`` bits of some index image. Same
-    Spark-first shape as the vector leg:
+    dHash is within ``max_hamming`` bits of some index image:
 
     - INDEX: a (media_id, dhash) frame (build batch-side with
       :func:`..operators.multimodal.media_dhash`) — banded with the

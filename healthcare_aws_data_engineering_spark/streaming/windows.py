@@ -3,8 +3,8 @@
 EXTENSION, not reference parity (the reference is batch-only — SURVEY
 §2.9 flags any streaming op beyond availableNow ingest as an extension).
 Demonstrates the Structured Streaming surface a large-scale pipeline
-needs: event-time tumbling windows, late-data handling via watermark, and
-stateful stream dedup.
+needs: event-time tumbling and session windows, late-data handling via
+watermark, and a watermarked stream-stream join.
 
 All functions take a streaming OR batch DataFrame with the events schema
 (``ts timestamp, user_id long, event_type string, value double``) — the
@@ -116,17 +116,6 @@ def correlated_events_join(
     )
     return a.join(b, cond).select(
         "user_id", "first_id", "second_id", "first_ts", "second_ts"
-    )
-
-
-def deduped_stream(
-    events: DataFrame, id_col: str = "event_id", watermark: str = "2 hours"
-) -> DataFrame:
-    """Exactly-once-per-id stream: dropDuplicatesWithinWatermark keeps
-    state only for ids inside the watermark horizon (unbounded-state-safe
-    vs plain dropDuplicates on a stream)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        [id_col]
     )
 
 

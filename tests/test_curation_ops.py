@@ -329,10 +329,7 @@ def test_repetition_stats_bounds_random(spark):
 
 # ------------------------------------------------------------ redact_pii --
 def test_redact_pii_patterns(spark):
-    from healthcare_aws_data_engineering_spark.operators.text import (
-        pii_counts,
-        redact_pii,
-    )
+    from healthcare_aws_data_engineering_spark.operators.text import redact_pii
     from pyspark.sql import functions as F
 
     rows = [
@@ -343,17 +340,13 @@ def test_redact_pii_patterns(spark):
     df = _docs(spark, rows).select(
         "doc_id",
         redact_pii(F.col("text")).alias("red"),
-        pii_counts(F.col("text")).alias("c"),
     )
     out = {r.doc_id: r for r in df.collect()}
     assert "[EMAIL]" in out[1].red and "[PHONE]" in out[1].red
     assert "john.doe" not in out[1].red and "555-1234" not in out[1].red
-    assert out[1].c.emails == 1 and out[1].c.phones == 1
     assert "[IP]" in out[2].red and "[SSN]" in out[2].red
-    assert out[2].c.ips == 1 and out[2].c.ssns == 1
     # conservative: plain numbers and ISO dates survive
     assert out[3].red == rows[2][1]
-    assert out[3].c == (0, 0, 0, 0)
 
 
 # --------------------------------------------------------------- lm_score --
@@ -881,155 +874,3 @@ def test_bigram_lm_short_docs_have_no_row_and_runs_deterministic(spark):
     b = sorted(map(tuple, cq.bigram_lm_score(docs).collect()))
     assert a == b
     assert 22 not in {t[0] for t in a}
-
-
-# ----------------------- leave-one-out interpolated trigram LM (r15) --
-def _tg_python_twin(rows, min_count=1):
-    """Exact python replica of trigram_lm_score's leave-one-out math
-    (global tables minus the doc's own counts, V'/N' adjustments, same
-    double-division/interpolation operand order, decimal snaps, and
-    decimal·occurrence sums)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def snap(x):
-        return Decimal(repr(x)).quantize(
-            Decimal("0.000001"), rounding=ROUND_HALF_UP
-        )
-
-    uni: dict[str, int] = {}
-    big: dict[tuple[str, str], int] = {}
-    tri: dict[tuple[str, str, str], int] = {}
-    for _, text in rows:
-        ws = text.split()
-        for w in ws:
-            uni[w] = uni.get(w, 0) + 1
-        for a, b in zip(ws, ws[1:]):
-            big[(a, b)] = big.get((a, b), 0) + 1
-        for a, b, c in zip(ws, ws[1:], ws[2:]):
-            tri[(a, b, c)] = tri.get((a, b, c), 0) + 1
-    v = len(uni)
-    n = sum(uni.values())
-    l3, l2, l1 = cq.TRIGRAM_LAMBDAS
-    out = {}
-    for did, text in rows:
-        ws = text.split()
-        if len(ws) < 3:
-            continue
-        ou: dict[str, int] = {}
-        ob: dict[tuple[str, str], int] = {}
-        ot: dict[tuple[str, str, str], int] = {}
-        for w in ws:
-            ou[w] = ou.get(w, 0) + 1
-        for a, b in zip(ws, ws[1:]):
-            ob[(a, b)] = ob.get((a, b), 0) + 1
-        for a, b, c in zip(ws, ws[1:], ws[2:]):
-            ot[(a, b, c)] = ot.get((a, b, c), 0) + 1
-        vp = v - sum(1 for w, c in ou.items() if uni[w] == c)
-        np_ = n - len(ws)
-        s = Decimal(0)
-        cnt = 0
-        for a, b, c in zip(ws, ws[1:], ws[2:]):
-            ct = tri[(a, b, c)]
-            if ct < min_count:
-                ct = 0
-            ct = max(ct - ot[(a, b, c)], 0)
-            p3 = (ct + 1) / (big[(a, b)] - ob[(a, b)] + vp)
-            p2 = (big[(b, c)] - ob[(b, c)] + 1) / (uni[b] - ou[b] + vp)
-            p1 = (uni[c] - ou[c] + 1) / (np_ + vp)
-            s += snap(math.log(l3 * p3 + l2 * p2 + l1 * p1))
-            cnt += 1
-        mean = float(s) / cnt
-        out[did] = (cnt, float(snap(mean)))
-    return out
-
-
-def test_trigram_lm_matches_python_twin(spark):
-    docs = spark.createDataFrame(_BG_DOCS, "doc_id long, text string")
-    for mc in (1, 3):
-        got = {
-            r.doc_id: (r.n_trigrams, r.mean_trigram_logprob)
-            for r in cq.trigram_lm_score(docs, min_count=mc).collect()
-        }
-        want = _tg_python_twin(_BG_DOCS, min_count=mc)
-        assert set(got) == set(want)
-        for did, (cnt, m) in want.items():
-            assert got[did][0] == cnt
-            assert got[did][1] == pytest.approx(m, abs=2e-6), (mc, did)
-
-
-def test_trigram_lm_separates_salad_and_flags_it(spark):
-    """On the bigram fixture the leave-one-out trigram score separates
-    the word salad (doc 21) from the natural band at least as widely as
-    the bigram leg (plain self-scored interpolation measured a 28%
-    NARROWER margin here — the docstring's reason LOO is the default),
-    and a threshold between the bands flags exactly the salad."""
-    docs = spark.createDataFrame(_BG_DOCS, "doc_id long, text string")
-    tg = {
-        r.doc_id: r.mean_trigram_logprob
-        for r in cq.trigram_lm_score(docs).collect()
-    }
-    bg = {
-        r.doc_id: r.mean_bigram_logprob
-        for r in cq.bigram_lm_score(docs).collect()
-    }
-    tg_margin = min(tg[d] for d in range(1, 21)) - tg[21]
-    bg_margin = min(bg[d] for d in range(1, 21)) - bg[21]
-    assert tg_margin > 0 and bg_margin > 0
-    # strictly wider than the order-1 leg on the same corpus (LOO is
-    # what buys this: plain self-scored interpolation measured 0.96
-    # vs the bigram's 1.33 here; LOO reads 1.38)
-    assert tg_margin > bg_margin, (tg_margin, bg_margin)
-    mid = (tg[21] + min(tg[d] for d in range(1, 21))) / 2
-    flags = {
-        r.doc_id: r.trigram_lm_flag
-        for r in cq.trigram_lm_score(docs, threshold=mid).collect()
-    }
-    assert flags[21] and not any(flags[d] for d in range(1, 21))
-
-
-def test_trigram_lm_catches_bigram_blind_splice(spark):
-    """THE order-2 pin, continuing the family's blindness ladder (the
-    bigram leg was pinned on salad the unigram leg cannot see): a
-    SPLICE doc whose every bigram is corpus-common but whose trigram is
-    novel — 'cat loves rug' stitched from 'cat loves mat' and 'dog
-    loves rug'. The bigram score must place it INSIDE the natural band
-    (it sees nothing wrong); the trigram score must separate it from
-    the band by a strict margin."""
-    pairs = [("cat", "mat"), ("dog", "rug"), ("bird", "porch"), ("goat", "barn")]
-    rows = [
-        (5 * i + rep + 1, f"{x} loves {y}")
-        for i, (x, y) in enumerate(pairs)
-        for rep in range(5)
-    ]
-    rows.append((21, "cat loves rug"))  # spliced from docs 1-5 and 6-10
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    tg = {
-        r.doc_id: r.mean_trigram_logprob
-        for r in cq.trigram_lm_score(docs).collect()
-    }
-    bg = {
-        r.doc_id: r.mean_bigram_logprob
-        for r in cq.bigram_lm_score(docs).collect()
-    }
-    nat = range(1, 21)
-    # order-1 blind: the splice scores INSIDE/ABOVE the natural band
-    # (its every bigram is corpus-common; measured +0.12 above the min)
-    assert bg[21] >= min(bg[d] for d in nat), (
-        bg[21],
-        min(bg[d] for d in nat),
-    )
-    # order-2 sees it: strict separation below the whole natural band
-    # (measured margin 0.878 via the python twin)
-    tg_margin = min(tg[d] for d in nat) - tg[21]
-    assert tg_margin > 0.5, (tg[21], min(tg[d] for d in nat))
-
-
-def test_trigram_lm_short_docs_and_determinism(spark):
-    rows = _BG_DOCS + [(23, "the cat")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, cq.trigram_lm_score(docs).collect()))
-    b = sorted(map(tuple, cq.trigram_lm_score(docs).collect()))
-    assert a == b
-    ids = {t[0] for t in a}
-    # <3 tokens -> no trigram, no row (22 has one token, 23 has two)
-    assert 22 not in ids and 23 not in ids and 21 in ids

@@ -239,18 +239,6 @@ def test_media_features_real_leg(docs):
         assert r.features[1] == pytest.approx(payload[0] / 255.0, rel=1e-6)
 
 
-def test_resize_updates_meta_only_for_images(spark, media):
-    out = {r.media_id: r for r in M.resize_images(media, 8, 8).collect()}
-    orig = {r.media_id: r for r in media.collect()}
-    for mid, r in out.items():
-        if r.kind == "image":
-            assert r.meta.width == 8 and r.meta.height == 8
-            assert r.content != orig[mid].content
-        else:
-            assert r.meta == orig[mid].meta
-            assert r.content == orig[mid].content
-
-
 def test_sample_frames_fanout(spark, media):
     frames = M.sample_frames(media, every_ms=100, max_frames=5).collect()
     vids = {r.media_id for r in media.filter("kind = 'video'").collect()}

@@ -247,64 +247,6 @@ def test_pack_sequences_single_shuffle(spark):
     assert _n_exchanges(plan) == 1, plan
 
 
-def test_pack_sequences_sharded_matches_exact(spark):
-    """The mega-stream hatch must emit the IDENTICAL chunk manifest as
-    the single-window form — on the real corpus AND on sparse /
-    irregular id distributions (id-range buckets are population-uneven
-    there; exactness must not depend on even buckets)."""
-    from healthcare_aws_data_engineering_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF, "documents")
-    a = sorted(map(tuple, pq.pack_sequences(docs).collect()))
-    b = sorted(map(tuple, pq.pack_sequences_sharded(docs).collect()))
-    assert a == b and len(a) > 0
-
-    import random
-
-    rng = random.Random(5)
-    rows, used = [], set()
-    for _ in range(300):
-        # sparse + clustered ids: runs of adjacent ids, then huge gaps
-        base = rng.choice([rng.randint(0, 50), rng.randint(10**9, 10**9 + 50)])
-        doc_id = base * 1000 + rng.randint(0, 999)
-        if doc_id in used:
-            continue
-        used.add(doc_id)
-        rows.append(
-            ("s" + str(rng.randint(0, 2)), doc_id,
-             " ".join("w" for _ in range(rng.randint(1, 30))))
-        )
-    fixture = spark.createDataFrame(
-        rows, "source string, doc_id long, text string"
-    )
-    a = sorted(map(tuple, pq.pack_sequences(fixture, budget=17).collect()))
-    b = sorted(
-        map(
-            tuple,
-            pq.pack_sequences_sharded(
-                fixture, budget=17, n_buckets=8
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) > 0
-
-
-def test_pack_sequences_sharded_guards_clustered_ids(spark):
-    """All ids piled into one id-range bucket must raise in-plan, not
-    silently serialize — and the same data passes once the guard admits
-    the bucket."""
-    import pytest
-
-    rows = [("s", i, "w w w") for i in range(120)] + [("s", 10**12, "w")]
-    docs = spark.createDataFrame(rows, "source string, doc_id long, text string")
-    bad = pq.pack_sequences_sharded(docs, n_buckets=4, max_bucket_rows=50)
-    with pytest.raises(Exception, match="pack_sequences_sharded: id-range bucket"):
-        bad.collect()
-    ok = pq.pack_sequences_sharded(docs, n_buckets=4, max_bucket_rows=500)
-    want = sorted(map(tuple, pq.pack_sequences(docs).collect()))
-    assert sorted(map(tuple, ok.collect())) == want
-
-
 # ------------------------------------------------------------- asof_join --
 def test_asof_join_semantics(spark):
     from healthcare_aws_data_engineering_spark.operators.asof import as_of_join

@@ -568,30 +568,6 @@ def test_ledger_decontaminate_broadcasts_eval_and_shuffles_once(spark):
     assert _n_exchanges(plan) <= 2, plan
 
 
-def test_trigram_lm_score_no_corpus_window_and_broadcast_uni(spark):
-    """r15 LOO trigram score: V/N must ride the VOCAB aggregate's
-    unpartitioned window (vocabulary-sized funnel — exactly one Window
-    node in the plan), never a window over the corpus-sized gram
-    stream; the Heaps-bounded unigram tables broadcast; and no join in
-    the tree may degrade to a cartesian / broadcast nested loop."""
-    from healthcare_aws_data_engineering_spark.plans import (
-        curation_queries as cq,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta eta") for i in range(30)],
-        "doc_id long, text string",
-    )
-    plan = plan_string(cq.trigram_lm_score(docs))
-    # one Window node in the op tree: the v/n funnel over the bounded
-    # vocab agg (formatted mode names it once in the tree and once in
-    # the per-node detail section)
-    assert 1 <= plan.count("Window") <= 2, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-
-
 def test_ivfpq_serve_from_persisted_index_same_shape(spark, tmp_path):
     """r15 incremental-index serve: reading the index from PARQUET (the
     accrued-artifact path) must keep the inline plan's serving shape —

@@ -5,6 +5,7 @@ already, fixed in 54c2e17). Pure-python checks — no SparkSession."""
 
 from __future__ import annotations
 
+import ast
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -242,3 +243,104 @@ def test_no_oracle_carries_bare_long_float_literals():
     pat = re.compile(r"(?<![\w.])\d+\.\d{15,}(?![\deE])")
     bad = {k: pat.findall(sql)[:3] for k, sql in oracle.items() if pat.search(sql)}
     assert not bad, f"bare long float literals (need e0 suffix): {bad}"
+
+
+# ------------------------------------------------ package functions with no caller --
+PKG = "healthcare_aws_data_engineering_spark"
+# Where a package function may be called from. Tests are not callers.
+_CALLER_ROOTS = ("examples", "tools", "bench.py", "perfbench", "__spark_entry__.py")
+
+# Top-level package functions that no package code, example, tool or
+# benchmark references, each with why it stays: a SURVEY/COVERAGE id, or
+# the test it is the reference implementation for.
+_UNCALLED_KEPT = {
+    "operators/bpe.py::vocab_from_merges": "reference for test_bpe::test_bpe_lossless_property",
+    "operators/media_codecs.py::encode_bmp": "reference for test_multimodal::test_jvm_encoder_matches_python_encoders_byte_for_byte",
+    "operators/media_codecs.py::encode_ppm": "reference for test_multimodal::test_jvm_encoder_matches_python_encoders_byte_for_byte",
+    "operators/media_codecs.py::encode_wav": "reference for test_multimodal::test_jvm_encoder_matches_python_encoders_byte_for_byte",
+    "operators/similarity.py::cosine": "reference for test_training_data_ops::test_embedding_near_dup",
+    "operators/similarity.py::hyperplane_signature_q": "reference for test_lsh_width::test_band_keys_match_packed_signature_slicing",
+    "operators/similarity.py::sig_chunks_q_expr": "reference for test_lsh_width::test_sig_chunks_arrow_matches_expression_twin",
+    "operators/staging.py::release": "reference for test_staging_lifecycle::test_staged_persist_replaces_previous_generation",
+    "operators/unigram.py::corpus_loglik": "reference for test_unigram::test_em_is_monotone_on_corpus_loglik",
+    "plans/adhoc.py::observations_in_range": "COVERAGE P7 (AWS_Athena_queries.sql)",
+    "plans/adhoc.py::register_curated_tables": "COVERAGE S3 (AWS_Athena_queries.sql)",
+    "plans/adhoc.py::threshold_count": "COVERAGE P6 (AWS_Athena_queries.sql)",
+    "plans/adhoc.py::threshold_values": "COVERAGE P6 (AWS_Athena_queries.sql)",
+    "plans/report_sql.py::cvd_report_sql": "SURVEY §3.2 (Athena SQL twin of the CVD report)",
+    "plans/report_sql.py::prediabetes_report_sql": "SURVEY §3.2 (Athena SQL twin of the prediabetes report)",
+    "plans/wellness.py::monthly_wellness": "COVERAGE A5 (mrp_website.py:787-798)",
+    "plans/wellness.py::top_penalty_drivers": "COVERAGE O4 (mrp_website.py:495)",
+    "plans/wellness.py::trend_arrow": "mrp_website.py:534-541 trend arrows",
+    "sources/fhir.py::read_bundle_string": "COVERAGE S5",
+    "sources/labs.py::read_labs_csv": "COVERAGE S4",
+    "streaming/stateful.py::stateful_latest_labs": "SURVEY §2.9",
+    "streaming/windows.py::correlated_events_join": "SURVEY §2.9",
+    "streaming/windows.py::run_available_now_to_memory": "SURVEY §2.9 (the sink the stream == batch tests drain into)",
+    "streaming/windows.py::session_window_stats": "SURVEY §2.9",
+    "streaming/windows.py::windowed_event_counts": "SURVEY §2.9",
+}
+
+
+def _sources(*roots: str) -> list[tuple[str, str]]:
+    out = []
+    for root in roots:
+        p = REPO / root
+        for f in sorted(p.rglob("*.py")) if p.is_dir() else [p]:
+            out.append((f.relative_to(REPO).as_posix(), f.read_text()))
+    return out
+
+
+def _uncalled(package: list[tuple[str, str]], callers: list[tuple[str, str]]) -> list[str]:
+    """``<path under the package>::<name>`` of every top-level function
+    defined in ``package`` that no Name or Attribute node in ``package``
+    or ``callers`` references. Only AST nodes count, so a docstring or
+    comment naming a function is not a use, and neither is an import or a
+    function's reference to itself."""
+    defs, refs = [], set()
+    for in_package, path, src in [
+        *((True, p, s) for p, s in package),
+        *((False, p, s) for p, s in callers),
+    ]:
+        for top in ast.parse(src).body:
+            own = None
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                own = top.name
+                if in_package:
+                    defs.append(f"{path.removeprefix(PKG + '/')}::{own}")
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                else:
+                    continue
+                if name != own:
+                    refs.add(name)
+    return sorted(d for d in defs if d.split("::")[1] not in refs)
+
+
+def test_every_package_function_has_a_caller_or_a_reason():
+    """A package function that only tests run is either deleted or kept
+    on purpose: the reason goes in ``_UNCALLED_KEPT``."""
+    uncalled = _uncalled(_sources(PKG), _sources(*_CALLER_ROOTS))
+    unlisted = [d for d in uncalled if d not in _UNCALLED_KEPT]
+    assert not unlisted, (
+        f"package functions no query, example, tool or benchmark calls "
+        f"(delete them, or list them with a reason): {unlisted}"
+    )
+    stale = sorted(set(_UNCALLED_KEPT) - set(uncalled))
+    assert not stale, f"_UNCALLED_KEPT entries that are gone or now called: {stale}"
+
+
+def test_caller_scan_flags_an_uncalled_function():
+    """The scan above must flag a function that only a docstring names,
+    and must count a call from a caller root."""
+    package = [
+        (f"{PKG}/mod.py", "def used():\n    return used()\n\ndef unused():\n    pass\n"),
+    ]
+    callers = [("tools/t.py", '"""calls unused()"""\nfrom x import used\nused()\n')]
+    assert _uncalled(package, callers) == ["mod.py::unused"]
+    assert _uncalled(package, [("tools/t.py", "import m\nm.unused()\n")]) == [
+        "mod.py::used"
+    ]

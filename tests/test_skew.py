@@ -5,10 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row, functions as F
 
-from healthcare_aws_data_engineering_spark.operators.skew import (
-    salted_agg,
-    salted_broadcast_join,
-)
+from healthcare_aws_data_engineering_spark.operators.skew import salted_agg
 
 
 def _skewed(spark, hot_rows=5000, cold_keys=20):
@@ -54,26 +51,3 @@ def test_salted_agg_spreads_hot_key(spark):
         salted.groupBy("k", "__salt").count().filter("k = 'hot'").count()
     )
     assert n_partials > 8  # hot key spread over most of the 16 salt buckets
-
-
-def test_salted_broadcast_join_matches_naive(spark):
-    big = _skewed(spark)
-    small = spark.createDataFrame(
-        [Row(k="hot", tag="H")] + [Row(k=f"c{j}", tag=f"T{j}") for j in range(10)]
-    )
-    got = (
-        salted_broadcast_join(big, small, "k", salt_buckets=8)
-        .groupBy("k", "tag")
-        .count()
-        .collect()
-    )
-    exp = big.join(small, "k").groupBy("k", "tag").count().collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, exp))
-
-
-def test_salted_broadcast_join_left(spark):
-    big = _skewed(spark, hot_rows=100, cold_keys=3)
-    small = spark.createDataFrame([Row(k="hot", tag="H")])
-    out = salted_broadcast_join(big, small, "k", salt_buckets=4, how="left")
-    assert out.count() == big.count()  # left join keeps unmatched rows
-    assert out.filter("tag IS NULL").count() == 3

@@ -323,134 +323,6 @@ def test_stream_stream_join_equals_batch(spark, tmp_path):
     assert len(got) >= len(expected) * 0.8
 
 
-def test_near_dup_stream_equals_batch_and_finds_clones(spark, tmp_path):
-    """Stream-static LSH near-dup: an availableNow stream of incoming
-    vectors probed against a batch-built index must (a) equal the batch
-    run of the same function and (b) flag exact clones of index docs at
-    cosine 1.0."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from healthcare_aws_data_engineering_spark.streaming.neardup import (
-        near_dup_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    index = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .limit(40)
-    )
-    ts0 = datetime.datetime(2025, 6, 1)
-    incoming = (
-        index.limit(6)
-        .select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
-        .withColumn("ts", F.lit(ts0).cast("timestamp"))
-    )
-    src_dir = str(tmp_path / "incoming")
-    incoming.write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .parquet(src_dir)
-    )
-    out = near_dup_stream(stream, index, threshold=0.99)
-    run_available_now_to_memory(out, "near_dup_hits", str(tmp_path / "ckpt"))
-    got = {
-        (r.doc_id, r.index_id): r.cosine
-        for r in spark.sql("SELECT * FROM near_dup_hits").collect()
-    }
-
-    expected = {
-        (r.doc_id, r.index_id): r.cosine
-        for r in near_dup_stream(
-            spark.read.parquet(src_dir), index, threshold=0.99
-        ).collect()
-    }
-    assert got == expected
-    # every clone is flagged against its source doc at cosine ~1.0
-    for vid in [r.vec_id for r in index.limit(6).collect()]:
-        assert (vid + 50_000, vid) in got
-        assert got[(vid + 50_000, vid)] == pytest.approx(1.0, abs=1e-9)
-
-
-def test_near_dup_stream_flags_clones_of_singleton_index_docs(spark):
-    """Regression pin for the r5 advisor finding: _bucket_cap's >=2
-    lower bound is a self-join optimization; applied to the INDEX side
-    of the stream-static probe it silently made every bucket-singleton
-    index doc unmatchable — an exact clone of a unique corpus doc
-    arriving on the stream was never flagged. Wide geometry (16 planes,
-    1 band -> 65k buckets for 40 docs) forces near-all index docs to be
-    singletons; every clone must still be flagged, and the stream hits
-    must equal embedding_near_dup over the union of index+incoming
-    restricted to (incoming x index) pairs (identical pinned geometry)."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from healthcare_aws_data_engineering_spark.operators.similarity import (
-        embedding_near_dup,
-        rademacher_planes,
-    )
-    from healthcare_aws_data_engineering_spark.streaming.neardup import (
-        near_dup_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    index = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .limit(40)
-    )
-    pm = rademacher_planes(16, 64)
-    ts0 = datetime.datetime(2025, 6, 1)
-    incoming = (
-        index.select((F.col("vec_id") + 50_000).alias("vec_id"), "embedding")
-        .withColumn("ts", F.lit(ts0).cast("timestamp"))
-    )
-
-    # singletons really are the regime under this geometry
-    from healthcare_aws_data_engineering_spark.operators.dedup import _bucket_cap
-    from healthcare_aws_data_engineering_spark.operators.similarity import (
-        band_keys_from_chunks,
-        quantize_vec,
-        sig_chunks_q,
-    )
-
-    banded = index.select(
-        F.col("vec_id"),
-        F.posexplode(
-            band_keys_from_chunks(
-                sig_chunks_q(quantize_vec(F.col("embedding")), pm, 16), 16, 1
-            )
-        ).alias("band", "band_key"),
-    )
-    survivors = _bucket_cap(banded, "band_key", 200).count()
-    assert survivors < 10, "fixture lost its singleton-heavy regime"
-
-    got = {
-        (r.doc_id, r.index_id): r.cosine
-        for r in near_dup_stream(
-            incoming, index, threshold=0.99, plane_matrix=pm, bands=1
-        ).collect()
-    }
-    # every clone of every index doc — singleton-bucket or not — is hit
-    for vid in [r.vec_id for r in index.collect()]:
-        assert (vid + 50_000, vid) in got, vid
-        assert got[(vid + 50_000, vid)] == pytest.approx(1.0, abs=1e-9)
-
-    union = index.unionByName(incoming.drop("ts"))
-    cross = {
-        (r.doc_b, r.doc_a): r.cosine
-        for r in embedding_near_dup(
-            union, threshold=0.99, plane_matrix=pm, bands=1
-        ).collect()
-        if r.doc_b >= 50_000 and r.doc_a < 50_000
-    }
-    assert got == cross
-
-
 def test_windowed_counts_drops_late_rows(spark, tmp_path):
     """The bounded-state trade the windows.py docstring claims, pinned:
     once a window is finalized (watermark passed its end), a late row for
@@ -655,97 +527,3 @@ def test_dhash_near_dup_stream_equals_batch_and_flags_perturbed(
         key = (r.media_id + 1_000_000_000, r.media_id)
         assert key in got, key
         assert got[key] <= 2, (key, got[key])
-
-
-def test_decontaminate_stream_equals_batch_and_bloom(spark, tmp_path):
-    """Streaming decontamination (r12 verdict stretch #8): the bloom
-    bitset is a stream-static binary literal, the probe is in-row, and
-    only pruned candidates hit the exact-verification join. Three-way
-    pin: (a) every row the availableNow stream emits equals the batch
-    run of the same function (append mode may withhold docs newer than
-    the watermark horizon); (b) the batch run is row-identical to
-    bloom_decontaminate on the shared verdict columns for the same
-    eval/train bucket split; (c) train-side clones of eval docs are
-    flagged contaminated at overlap 1.0."""
-    from pyspark.sql import functions as F
-
-    from healthcare_aws_data_engineering_spark.operators.decontam import (
-        EVAL_PCT,
-        bloom_decontaminate,
-        eval_bucket,
-    )
-    from healthcare_aws_data_engineering_spark.streaming.decontam import (
-        decontaminate_stream,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .limit(120)
-    )
-    base = docs.withColumn("bucket", eval_bucket(F.col("doc_id")))
-    eval_texts = [
-        r.text
-        for r in base.filter(F.col("bucket") < EVAL_PCT).limit(3).collect()
-    ]
-    clones = spark.createDataFrame(
-        [(900_000 + i, t) for i, t in enumerate(eval_texts)],
-        ["doc_id", "text"],
-    )
-    universe = docs.union(clones).withColumn(
-        "bucket", eval_bucket(F.col("doc_id"))
-    )
-    eval_docs = universe.filter(F.col("bucket") < EVAL_PCT).select(
-        "doc_id", "text"
-    )
-    train = universe.filter(F.col("bucket") >= EVAL_PCT).select(
-        "doc_id", "text"
-    )
-    clone_train_ids = {
-        r.doc_id
-        for r in train.filter(F.col("doc_id") >= 900_000).collect()
-    }
-    assert clone_train_ids, "no clone landed in a train bucket"
-
-    # event times spread one minute apart (~2 hours total) so a
-    # 1-minute watermark finalizes all but the newest docs
-    src_dir = str(tmp_path / "train_docs")
-    train.withColumn(
-        "ts",
-        F.timestamp_seconds(
-            F.lit(1_748_736_000) + (F.col("doc_id") % 1000) * 60
-        ),
-    ).write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .parquet(src_dir)
-    )
-    out = decontaminate_stream(stream, eval_docs, watermark="1 minute")
-    run_available_now_to_memory(out, "decontam_hits", str(tmp_path / "ckpt"))
-    got = {
-        r.doc_id: (r.n_shingles, r.n_overlap, r.overlap_ratio, r.contaminated)
-        for r in spark.sql("SELECT * FROM decontam_hits").collect()
-    }
-
-    batch = {
-        r.doc_id: (r.n_shingles, r.n_overlap, r.overlap_ratio, r.contaminated)
-        for r in decontaminate_stream(
-            spark.read.parquet(src_dir), eval_docs, watermark="1 minute"
-        ).collect()
-    }
-    assert got, "stream emitted nothing"
-    for k, v in got.items():
-        assert batch[k] == v, (k, v, batch[k])
-    # append mode withholds only docs inside the watermark horizon
-    assert len(got) >= len(batch) - 15
-
-    bloom = {
-        r.doc_id: (r.n_shingles, r.n_overlap, r.overlap_ratio, r.contaminated)
-        for r in bloom_decontaminate(universe.select("doc_id", "text")).collect()
-    }
-    assert batch == bloom
-    for cid in clone_train_ids:
-        n_sh, n_ov, ratio, contaminated = batch[cid]
-        assert contaminated and ratio == 1.0 and n_ov == n_sh, batch[cid]

@@ -50,15 +50,16 @@ def _py_jaccard(a: str, b: str) -> float:
 # ------------------------------------------------------------------ exact --
 def test_exact_dedup_groups(spark):
     out = D.exact_dedup(_docs(spark, CORPUS)).collect()
-    assert len(out) == 1
-    (g,) = out
-    assert g.keep_id == 2 and g.dup_count == 2 and g.doc_ids == [2, 3]
+    assert len(out) == len(CORPUS) - 1  # one row per distinct content
+    (g,) = [r for r in out if r.dup_count >= 2]
+    assert g.keep_id == 2 and g.dup_count == 2
+    assert sorted(r.keep_id for r in out if r.dup_count == 1) == [0, 1, 4, 5, 6]
 
 
 def test_exact_dedup_normalization(spark):
     rows = [(0, "Hello,  World!"), (1, "hello world"), (2, "other")]
     out = D.exact_dedup(_docs(spark, rows)).collect()
-    assert len(out) == 1 and out[0].doc_ids == [0, 1]
+    assert sorted((r.keep_id, r.dup_count) for r in out) == [(0, 2), (2, 1)]
 
 
 # --------------------------------------------------------------- shingles --
@@ -79,19 +80,57 @@ def test_word_shingles_short_text(spark):
 
 
 # ---------------------------------------------------------------- minhash --
+def _py_bucket_pairs(keys: dict, max_bucket: int) -> set:
+    """All id pairs a < b that share a (band, key) bucket of 2..max_bucket
+    members — the bucket self-join of ``dedup._bucket_cap`` callers."""
+    buckets: dict = {}
+    for doc, ks in keys.items():
+        for band, k in enumerate(ks):
+            buckets.setdefault((band, k), []).append(doc)
+    return {
+        (a, b)
+        for members in buckets.values()
+        if 2 <= len(members) <= max_bucket
+        for a in members
+        for b in members
+        if a < b
+    }
+
+
 def test_minhash_signature_is_min_of_shingle_hashes(spark):
-    """The md5-backend signature must equal the plain-Python min over
-    md5(shingle + '#perm') hex digests."""
-    df = _docs(spark, CORPUS).select(
-        "doc_id", D.minhash_signature(F.col("text"), 4, "md5").alias("sig")
-    )
-    for r in df.collect():
-        sh = _py_shingles(CORPUS[r.doc_id][1])
-        expected = [
+    """minhash_lsh_pairs(backend="md5") replayed in plain Python: each
+    signature entry is the min over md5(shingle + '#perm') hex digests,
+    each band key is md5 of its rows joined by '|', and the pairs are
+    the capped bucket self-join — at the registry's 6 perms, 3 bands."""
+    import random
+
+    rnd = random.Random(3)
+    words = "alpha beta gamma".split()
+    # small-vocabulary docs share many shingles, so many bands collide
+    rows = CORPUS + [
+        (100 + i, " ".join(rnd.choice(words) for _ in range(8))) for i in range(30)
+    ]
+    num_perm, bands, r = 6, 3, 2
+    keys = {}
+    for doc, text in rows:
+        sh = _py_shingles(text)
+        sig = [
             min(hashlib.md5((s + f"#{p}").encode()).hexdigest() for s in sh)
-            for p in range(4)
+            for p in range(num_perm)
         ]
-        assert list(r.sig) == expected, r.doc_id
+        keys[doc] = [
+            hashlib.md5("|".join(sig[b * r : (b + 1) * r]).encode()).hexdigest()
+            for b in range(bands)
+        ]
+    got = {
+        (row.doc_a, row.doc_b)
+        for row in D.minhash_lsh_pairs(
+            _docs(spark, rows), num_perm=num_perm, bands=bands,
+            backend="md5", max_bucket=50,
+        ).collect()
+    }
+    assert got == _py_bucket_pairs(keys, 50)
+    assert (2, 3) in got and len(got) > 20
 
 
 @pytest.mark.parametrize("backend", ["xxhash64", "md5"])
@@ -141,15 +180,37 @@ def test_ngram_jaccard_matches_python(spark):
 
 # ---------------------------------------------------------------- simhash --
 def test_simhash_exact_dup_zero_hamming(spark):
-    sig = {
-        r.doc_id: r.sim
-        for r in _docs(spark, CORPUS)
-        .select("doc_id", D.simhash_signature(F.col("text")).alias("sim"))
-        .collect()
+    """simhash_pairs replayed in plain Python: 32 bit votes from the first
+    8 hex digits of md5(shingle), sign-packed, banded 4 × 8 bits, capped
+    bucket self-join, Hamming-verified."""
+    bands, width, max_hamming = 4, 8, 10
+    sig = {}
+    for doc, text in CORPUS:
+        votes = [0] * 32
+        for s in _py_shingles(text):
+            h = int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+            for i in range(32):
+                votes[i] += 1 if (h >> i) & 1 else -1
+        sig[doc] = sum(1 << i for i in range(32) if votes[i] > 0)
+    keys = {
+        d: [(v >> (b * width)) & ((1 << width) - 1) for b in range(bands)]
+        for d, v in sig.items()
     }
-    assert sig[2] == sig[3]
+    ham = lambda a, b: bin(sig[a] ^ sig[b]).count("1")  # noqa: E731
+    want = {
+        (a, b): ham(a, b)
+        for a, b in _py_bucket_pairs(keys, 50)
+        if ham(a, b) <= max_hamming
+    }
+    got = {
+        (r.doc_a, r.doc_b): r.hamming
+        for r in D.simhash_pairs(
+            _docs(spark, CORPUS), bands=bands, max_hamming=max_hamming
+        ).collect()
+    }
+    assert got == want
+    assert got[(2, 3)] == 0
     # near-dups land close, unrelated docs far
-    ham = lambda a, b: bin((sig[a] ^ sig[b]) & (2**64 - 1)).count("1")  # noqa: E731
     assert ham(0, 6) < ham(0, 5)
 
 
@@ -233,10 +294,13 @@ def test_hyperplane_signature_distinct_planes(spark):
     """Regression for the index-binding trap: different vectors must not
     collapse to degenerate all-equal signatures."""
     embs = spark.createDataFrame(_vec_rows())
+    planes = S.rademacher_planes(16, 16)
     sigs = [
         r.s
         for r in embs.select(
-            S.hyperplane_signature(F.col("embedding"), 16).alias("s")
+            S.hyperplane_signature_q(
+                S.quantize_vec(F.col("embedding")), planes
+            ).alias("s")
         ).collect()
     ]
     assert len(set(sigs)) > 10  # 41 random vectors → many distinct signatures
@@ -1291,120 +1355,6 @@ def test_composites_read_materialized_cluster_table(spark, tmp_path):
         assert "clusters.parquet" in plan
     finally:
         spark.conf.unset(tq.CLUSTERS_PATH_CONF)
-
-
-def test_quality_keep_topfrac_matches_percent_rank(spark):
-    """The implemented skew hatch for quality_calibrated: identical keep
-    set to percent_rank >= 0.2 at coarse/default/fine bucket grids —
-    coarse grids pile many rows into the boundary bucket, so exactness
-    must not depend on bucket granularity."""
-    from healthcare_aws_data_engineering_spark.operators import text as TT
-    from healthcare_aws_data_engineering_spark.plans.training_data_queries import (
-        _docs as _load_docs,
-        q_quality_calibrated,
-        quality_keep_topfrac,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    exact = {
-        r.doc_id for r in q_quality_calibrated(spark, sf).collect() if r.keep
-    }
-    stats = TT.text_stats(_load_docs(spark, sf)).select(
-        "doc_id", "source", "quality"
-    )
-    for nb in (4, 256, 1024):
-        got = {
-            r.doc_id
-            for r in quality_keep_topfrac(stats, n_buckets=nb).collect()
-        }
-        assert got == exact, nb
-    # minority-keep fraction exercises a different boundary position
-    w_exact = {
-        r.doc_id
-        for r in q_quality_calibrated(spark, sf).collect()
-        if r.pct_in_source >= 0.8
-    }
-    got = {
-        r.doc_id
-        for r in quality_keep_topfrac(stats, keep_num=4, keep_den=5).collect()
-    }
-    assert got == w_exact
-
-
-def test_quality_keep_topfrac_integer_rank_edges(spark):
-    """Percent-rank boundary fixture: source sizes 1 (singleton —
-    DROPPED, Spark's pct=0.0 convention), 2, 5, 6 (exact (n-1)/5
-    integer boundary), 11 — the salted form must agree with the
-    percent_rank window on every one."""
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as F
-
-    from healthcare_aws_data_engineering_spark.plans.training_data_queries import (
-        QUALITY_KEEP_PCT,
-        quality_keep_topfrac,
-    )
-
-    rows = []
-    did = 0
-    for src, n in [("s1", 1), ("s2", 2), ("s5", 5), ("s6", 6), ("s11", 11)]:
-        for j in range(n):
-            rows.append(Row(doc_id=did, source=src, quality=(j % 7) / 7.0))
-            did += 1
-    # dense-tie source: every doc the SAME quality, so the keep boundary
-    # falls INSIDE a tie run and only the doc_id tiebreak decides — the
-    # shape that exposed the (quality DESC, doc_id ASC) reversal bug
-    for j in range(10):
-        rows.append(Row(doc_id=did, source="tied", quality=0.5))
-        did += 1
-    # and a source tying only AT the boundary
-    for j, q in enumerate([0.1, 0.3, 0.3, 0.3, 0.9]):
-        rows.append(Row(doc_id=did, source="edge", quality=q))
-        did += 1
-    stats = spark.createDataFrame(rows)
-    w = _W.partitionBy("source").orderBy(
-        F.col("quality").asc(), F.col("doc_id").asc()
-    )
-    exact = {
-        r.doc_id
-        for r in stats.withColumn("p", F.percent_rank().over(w))
-        .filter(F.col("p") >= QUALITY_KEEP_PCT)
-        .collect()
-    }
-    got = {r.doc_id for r in quality_keep_topfrac(stats, n_buckets=4).collect()}
-    assert got == exact
-    assert not any(r.doc_id in got for r in rows if r.source == "s1")
-
-
-def test_quality_keep_topfrac_degenerate_quality_fails_loudly(spark):
-    """A source massed on ONE quality value concentrates the boundary
-    bucket — the in-plan guard must raise rather than silently sort the
-    whole source on one task; the same data passes when the guard
-    admits it (and still matches percent_rank exactly)."""
-    import pytest as _pytest
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as F
-
-    from healthcare_aws_data_engineering_spark.plans.training_data_queries import (
-        QUALITY_KEEP_PCT,
-        quality_keep_topfrac,
-    )
-
-    rows = [Row(doc_id=i, source="mono", quality=0.75) for i in range(300)]
-    stats = spark.createDataFrame(rows)
-    bad = quality_keep_topfrac(stats, max_bucket_rows=100)
-    with _pytest.raises(Exception, match="quality_keep_topfrac: quality bucket"):
-        bad.collect()
-    w = _W.partitionBy("source").orderBy(
-        F.col("quality").asc(), F.col("doc_id").asc()
-    )
-    exact = {
-        r.doc_id
-        for r in stats.withColumn("p", F.percent_rank().over(w))
-        .filter(F.col("p") >= QUALITY_KEEP_PCT)
-        .collect()
-    }
-    ok = quality_keep_topfrac(stats, max_bucket_rows=300)
-    assert {r.doc_id for r in ok.collect()} == exact
 
 
 def test_domain_cap_topk_matches_exact_window(spark):

@@ -220,80 +220,3 @@ def test_unigram_train_is_deterministic(spark):
     a = U.unigram_train(docs, vocab_size=10, min_count=1, seed_size=60)
     b = U.unigram_train(docs, vocab_size=10, min_count=1, seed_size=60)
     assert a == b
-
-
-# --------------------------------------------------------------------------
-# subword regularization (sampled segmentations)
-# --------------------------------------------------------------------------
-def _seg_distribution(word, logp, alpha):
-    """Theoretical tempered distribution over segmentations."""
-    max_len = max(len(p) for p in logp)
-    segs = list(_segmentations(word, set(logp), max_len))
-    ws = [math.exp(alpha * sum(logp[p] for p in s)) for s in segs]
-    z = sum(ws)
-    return {tuple(s): w / z for s, w in zip(segs, ws)}
-
-
-@pytest.mark.parametrize("alpha", [0.5, 1.0])
-def test_ffbs_sampling_matches_theoretical_distribution(alpha):
-    """The FFBS draw is EXACT: over many deterministic coins, empirical
-    segmentation frequencies converge to P(seg) ∝ (∏p)^alpha — pinned
-    against brute-force enumeration (independent algorithm)."""
-    word, n_draws = "abab", 4000
-    theory = _seg_distribution(word, TABLE, alpha)
-    counts: dict[tuple, int] = {}
-    for i in range(n_draws):
-        s = tuple(U.sample_encode_word(word, TABLE, alpha, seed=0, occ=str(i)))
-        counts[s] = counts.get(s, 0) + 1
-    assert set(counts) <= set(theory)
-    for seg, p in theory.items():
-        emp = counts.get(seg, 0) / n_draws
-        assert abs(emp - p) < 0.03, (seg, emp, p)
-
-
-def test_sampling_large_alpha_recovers_viterbi():
-    for word in ("abab", "aba", "bac"):
-        vit = U.viterbi_encode_word(word, TABLE)
-        for i in range(20):
-            assert (
-                U.sample_encode_word(word, TABLE, alpha=50.0, occ=str(i))
-                == vit
-            )
-
-
-def test_sampling_is_total_and_lossless():
-    # unseen char: falls back to Viterbi's single-char unk handling
-    assert "".join(U.sample_encode_word("abzba", TABLE, occ="x")) == "abzba"
-    for i in range(10):
-        assert "".join(
-            U.sample_encode_word("ababab", TABLE, occ=str(i))
-        ) == "ababab"
-
-
-def test_spark_sample_encode_matches_python_and_is_reproducible(spark):
-    docs = _docs(spark)
-    logp = U.unigram_train(
-        docs, vocab_size=12, min_count=1, max_piece_len=4, seed_size=60
-    )
-    a = {
-        r.doc_id: r.unigram_tokens
-        for r in U.unigram_sample_encode(docs, logp, alpha=0.3, seed=1).collect()
-    }
-    b = {
-        r.doc_id: r.unigram_tokens
-        for r in U.unigram_sample_encode(docs, logp, alpha=0.3, seed=1).collect()
-    }
-    assert a == b  # replayable draw
-    for did, text in [(r.doc_id, r.text) for r in docs.collect()]:
-        want = []
-        for wi, w in enumerate(text.lower().split()):
-            want.extend(
-                U.sample_encode_word(w, logp, 0.3, 1, occ=f"{did}|{wi}")
-            )
-        assert a[did] == want
-    # a different seed re-draws at least one occurrence somewhere
-    c = {
-        r.doc_id: r.unigram_tokens
-        for r in U.unigram_sample_encode(docs, logp, alpha=0.3, seed=2).collect()
-    }
-    assert c != a
