@@ -17,9 +17,12 @@ Scale notes (100 TB shape)
   hash-partitioned on the same key) plus ONE hash aggregation — no
   all-pairs work, nothing driver-side except a 2-value convergence
   aggregate per round.
-- ``localCheckpoint(eager=True)`` truncates lineage every round;
-  without it the plan doubles per iteration and the optimizer chokes
-  long before the data does.
+- A lazily marked ``localCheckpoint(eager=False)`` truncates lineage
+  every round (the edge list and the initial labels are staged once,
+  eagerly); without it the plan doubles per iteration and the optimizer
+  chokes long before the data does. Lazy is not job-free: adaptive
+  execution runs the round's shuffle map stages when the checkpoint is
+  marked (see the loop).
 - Convergence detection is O(1) driver data: labels only ever decrease,
   so ``(sum(lbl), count)`` is strictly decreasing until fixpoint —
   equality of consecutive rounds IS convergence (no expensive
@@ -149,59 +152,54 @@ def pagerank(
     "influence score" depth for corpus-graph weighting, not a numeric
     fixpoint claim.
 
-    Scale shape per iteration (r16 fusion — one job, was two): one
-    deg_edges⋈ranks shuffle join on ``src`` (deg_edges is
-    degree-annotated, pre-partitioned on ``src`` and materialized ONCE —
-    the big side never re-shuffles and never re-joins out_deg), one hash
-    agg on ``dst``, and the O(1) dangling aggregate collected by the
-    SAME action that materializes the round's lazily-marked
-    ``localCheckpoint`` — the dangling mass then enters the next
-    round's update as a driver LITERAL instead of a per-round broadcast
-    exchange (identical BIGINT value: the sum of longs is exact either
-    way). The final round is left lazy: its lineage is one join over
-    checkpointed inputs, so the caller's action pays it directly and no
-    trailing checkpoint/collect jobs run. ``ranks`` materialization per
-    round is still required — each round's DataFrame would otherwise
-    re-execute the full prior-round subtree per reference (3^iter
-    blowup, the r3 finding).
+    Shape: Pregel-style message passing over a per-vertex state table
+    ``(id, st = (nbrs, deg))`` built ONCE from the vertices left-joined
+    to the edges grouped by ``src`` — ``nbrs`` lists every out-neighbour
+    (duplicates kept), ``deg`` counts every out-edge, including edges to
+    non-vertices; edges from non-vertices never reach the table. Each
+    round is ONE shuffle: every vertex emits its own state row plus one
+    ``rank DIV deg`` message per out-neighbour, and one ``groupBy(id)``
+    sums the messages (map-side partial sum) and carries the state
+    forward; a group with no state row is a non-vertex, whose mass is
+    lost. A round therefore shuffles |V| state rows plus at most |E|
+    messages, and the aggregate is sort-based because the state holds
+    an array. A hub's neighbour list travels as one row per round; a
+    k-NN graph caps it at k.
+
+    Each non-final round is staged with a lazily marked
+    ``localCheckpoint`` (without it every round would re-execute the
+    full prior-round subtree per reference — the 3^iter blowup) and its
+    dangling mass (rank summed over ``deg = 0``) is collected once and
+    enters the next round as a driver LITERAL, so PageRank is an
+    iterative operator: its rounds fire jobs while it is built. The
+    final round is left lazy; the caller's action pays it directly.
 
     Output: one row per vertex, ``(id, rank_u12)`` — BIGINT grid units
     summing to ≈ PR_GRID (floor losses are deterministic).
     """
-    out_deg = edges.groupBy(src_col).agg(F.count(F.lit(1)).alias("__deg"))
-    # Degree-annotated edges, staged once for all iterations. localCheckpoint
-    # (not persist) also truncates lineage into the caller's edge-build plan.
-    deg_edges = (
-        edges.join(out_deg, src_col)
-        .select(
-            F.col(src_col).alias("src"),
-            F.col(dst_col).alias("dst"),
-            "__deg",
-        )
-        .repartition("src")
-        .localCheckpoint(eager=True)
+    adj = edges.groupBy(F.col(src_col).alias("id")).agg(
+        F.collect_list(dst_col).alias("nbrs"),
+        F.count(F.lit(1)).alias("deg"),
     )
-    # Static vertex list with a dangling flag: the per-round dangling mass
-    # is then a filter+sum over ranks instead of a per-round anti-join.
-    # Lazily marked; the fused count/dangling aggregate below materializes
-    # it and yields the graph cardinality + initial dangling mass in the
-    # same job (was: vertices.count() + eager checkpoint = two jobs).
-    verts = (
+    # Lazily marked, so the count/dangling collect below is the action
+    # that materializes it. The checkpoint also truncates lineage into the
+    # caller's edge-build plan, which therefore runs exactly once, here.
+    state = (
         vertices.select(F.col(id_col).alias("id"))
-        .join(
-            out_deg.select(
-                F.col(src_col).alias("id"), F.lit(1).alias("__has_out")
-            ),
+        .join(adj, "id", "left")
+        .select(
             "id",
-            "left",
+            F.struct(
+                F.coalesce("nbrs", F.array().cast("array<long>")).alias("nbrs"),
+                F.coalesce("deg", F.lit(0).cast("long")).alias("deg"),
+            ).alias("st"),
         )
-        .select("id", F.coalesce("__has_out", F.lit(0)).alias("__has_out"))
         .localCheckpoint(eager=False)
     )
-    vrow = verts.agg(
+    vrow = state.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
-            F.sum(F.when(F.col("__has_out") == 0, 1)), F.lit(0)
+            F.sum(F.when(F.col("st.deg") == 0, 1)), F.lit(0)
         ).alias("n_dang"),
     ).collect()[0]
     n = vrow["n"]  # bounded driver scalar: graph cardinality
@@ -210,38 +208,36 @@ def pagerank(
     # round-0 dangling mass: every node starts at ``init`` exactly, so
     # the filtered sum is init · |dangling| — the identical BIGINT.
     dang = init * vrow["n_dang"]
-    ranks = verts.select(
-        "id", "__has_out", F.lit(init).cast("long").alias("rank")
-    )
+    ranks = state.withColumn("rank", F.lit(init).cast("long"))
     for it in range(n_iter):
-        contrib = (
-            deg_edges.join(
-                ranks.select(F.col("id").alias("src"), "rank"), "src"
-            )
-            .select(
-                F.col("dst").alias("id"),
-                F.expr("CAST(rank DIV __deg AS BIGINT)").alias("__c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("__c").alias("__in"))
+        sent = ranks.select(
+            F.explode("st.nbrs").alias("id"),
+            F.expr("CAST(rank DIV st.deg AS BIGINT)").alias("__c"),
         )
         # Python // == Spark DIV on non-negative longs, so the literal
-        # carries the exact same grid value the broadcast column did.
-        ranks = verts.join(contrib, "id", "left").select(
-            "id",
-            "__has_out",
-            (
-                F.lit(base).cast("long")
-                + F.expr(
-                    f"CAST(({PR_DAMP_PCT} * (COALESCE(__in, 0)"
-                    f" + {dang // n}L)) DIV 100 AS BIGINT)"
-                )
-            ).alias("rank"),
+        # carries the exact grid value an in-plan dangling sum would.
+        ranks = (
+            ranks.select("id", "st", F.lit(0).cast("long").alias("__c"))
+            .unionByName(sent, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(F.max("st").alias("st"), F.sum("__c").alias("__in"))
+            .filter(F.col("st").isNotNull())
+            .select(
+                "id",
+                "st",
+                (
+                    F.lit(base).cast("long")
+                    + F.expr(
+                        f"CAST(({PR_DAMP_PCT} * (__in + {dang // n}L))"
+                        " DIV 100 AS BIGINT)"
+                    )
+                ).alias("rank"),
+            )
         )
         if it < n_iter - 1:
             ranks = ranks.localCheckpoint(eager=False)
             dang = (
-                ranks.filter(F.col("__has_out") == 0)
+                ranks.filter(F.col("st.deg") == 0)
                 .agg(F.coalesce(F.sum("rank"), F.lit(0)).alias("__dang"))
                 .collect()[0]["__dang"]
             )

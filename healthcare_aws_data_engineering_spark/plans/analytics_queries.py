@@ -1008,8 +1008,9 @@ FROM scored
 # Corpus-influence scores: PageRank over the approximate k-NN graph
 # (integer-grid power iteration — see operators/graph.py::pagerank for
 # the exactness and scale arguments). The edge list is the index-build
-# artifact, persisted once; the oracle replays knn + 3 unrolled
-# iterations with the identical BIGINT arithmetic.
+# artifact, built per call and read once by pagerank's adjacency stage;
+# the oracle replays knn + 3 unrolled iterations with the identical
+# BIGINT arithmetic.
 PR_ITER = 3
 
 
@@ -1017,26 +1018,17 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
 
     embs = load_table(spark, sf_dir, "embeddings")
-    # The k-NN edge build runs INSIDE the query, every invocation (r16,
-    # r15 verdict #2): the old module-level edge cache keyed on sf_dir
-    # let timed bench runs serve PageRank without paying the index
-    # build the oracle replays — the gaming class the brief bans. The
-    # edge list is staged per call with localCheckpoint (eager: the
-    # chain is referenced by out-degree AND the degree join inside
-    # pagerank) — block cleanup rides the ContextCleaner when the
-    # DataFrame is dropped, so repeated calls cannot accumulate cache
-    # generations the way per-call persist() did.
-    edges = (
-        knn_graph(
-            embs,
-            k=KNN_K,
-            plane_matrix=_PLANES16,
-            bands=KNN_BANDS,
-            max_bucket=KNN_MAX_BUCKET,
-        )
-        .select(F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
+    # The k-NN edge build runs INSIDE the query, every invocation: a
+    # cached edge list would let timed runs serve PageRank without paying
+    # the index build the oracle replays. It is not staged either:
+    # pagerank's adjacency aggregate reads the edge list exactly once.
+    edges = knn_graph(
+        embs,
+        k=KNN_K,
+        plane_matrix=_PLANES16,
+        bands=KNN_BANDS,
+        max_bucket=KNN_MAX_BUCKET,
+    ).select(F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst"))
     return pagerank(embs, edges, n_iter=PR_ITER)
 
 

@@ -235,6 +235,26 @@ def test_observation_value_x_ladder(spark, entries):
     assert meta["effective_datetime"] == "2023-02-03T09:10:00-05:00"
 
 
+def test_read_bundle_string_feeds_observation_extraction(spark):
+    # The single-document upload path: one in-memory bundle string, not
+    # a file, through the same explode → extract chain as the batch ETL.
+    doc = bundle(
+        [PATIENT, _obs("obs-upload", valueQuantity={"value": 99.5, "unit": "mg/dL"})]
+    )
+    rows = extract_observations(
+        explode_entries(read_bundle_string(spark, doc))
+    ).collect()
+    assert len(rows) == 1
+    r = rows[0].asDict()
+    assert r["observation_id"] == "obs-upload"
+    assert r["patient_id"] == "pat-1"
+    assert r["encounter_id"] == "enc-1"
+    assert r["code"] == "2093-3"
+    assert r["value_quantity"] == 99.5
+    assert r["value_unit"] == "mg/dL"
+    assert r["effective_datetime"] == "2023-02-03T09:10:00-05:00"
+
+
 def test_full_etl_roundtrip(spark, tmp_path):
     raw = tmp_path / "raw"
     raw.mkdir()

@@ -110,36 +110,81 @@ def test_dup_clusters_keeper_and_size(spark):
     assert not rows[31].is_keeper and rows[31].cluster_id == 30
 
 
-def test_pagerank_python_twin(spark):
-    from pyspark.sql import Row
-
+def _pagerank_twin(vertex_ids, edge_list, n_iter=3):
+    """Python twin of the ``pagerank_sql`` oracle's integer arithmetic:
+    ``deg`` counts every out-edge (duplicates and edges to non-vertices
+    included), edges from non-vertices carry no rank, mass sent to a
+    non-vertex is lost, and a vertex with no out-edge is dangling."""
     from healthcare_aws_data_engineering_spark.operators.graph import (
         PR_DAMP_PCT,
         PR_GRID,
-        pagerank,
     )
 
-    vertices = spark.createDataFrame([Row(vec_id=i) for i in range(4)])
-    edge_list = [(0, 1), (1, 2), (2, 0), (0, 2)]  # node 3 dangling
-    edges = spark.createDataFrame([Row(src=s, dst=d) for s, d in edge_list])
-    got = {
-        r["vec_id"]: r["rank_u12"]
-        for r in pagerank(vertices, edges, n_iter=3).collect()
-    }
-    n = 4
+    n = len(vertex_ids)
     base = ((100 - PR_DAMP_PCT) * PR_GRID // n) // 100
-    deg = {0: 2, 1: 1, 2: 1}
-    ranks = {i: PR_GRID // n for i in range(n)}
-    for _ in range(3):
+    deg: dict[int, int] = {}
+    for s, _ in edge_list:
+        deg[s] = deg.get(s, 0) + 1
+    ranks = {i: PR_GRID // n for i in vertex_ids}
+    for _ in range(n_iter):
         contrib: dict[int, int] = {}
         for s, d in edge_list:
-            contrib[d] = contrib.get(d, 0) + ranks[s] // deg[s]
+            if s in ranks:
+                contrib[d] = contrib.get(d, 0) + ranks[s] // deg[s]
         dang = sum(r for i, r in ranks.items() if i not in deg)
         ranks = {
             i: base + (PR_DAMP_PCT * (contrib.get(i, 0) + dang // n)) // 100
-            for i in range(n)
+            for i in vertex_ids
         }
-    assert got == ranks
+    return ranks
+
+
+def _pagerank_rows(spark, vertex_ids, edge_list):
+    from pyspark.sql import Row
+
+    from healthcare_aws_data_engineering_spark.operators.graph import pagerank
+
+    vertices = spark.createDataFrame([Row(vec_id=i) for i in vertex_ids])
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    return {
+        r["vec_id"]: r["rank_u12"]
+        for r in pagerank(vertices, edges, n_iter=3).collect()
+    }
+
+
+def test_pagerank_python_twin(spark):
+    edge_list = [(0, 1), (1, 2), (2, 0), (0, 2)]  # node 3 dangling
+    got = _pagerank_rows(spark, range(4), edge_list)
+    assert got == _pagerank_twin(range(4), edge_list)
+
+
+def test_pagerank_edge_semantics_match_twin_and_oracle(spark):
+    import duckdb
+
+    from healthcare_aws_data_engineering_spark.operators.graph import (
+        pagerank_sql,
+    )
+
+    vertex_ids = list(range(6))
+    edge_list = [
+        (0, 1), (0, 1),  # duplicate edge: two messages, deg 3
+        (0, 2),
+        (1, 2),
+        (2, 0),
+        (2, 9),          # to a non-vertex: counts in deg, mass lost
+        (8, 3),          # from a non-vertex: ignored
+        (3, 5),
+        (5, 1),
+    ]  # vertex 4 is isolated (dangling)
+    got = _pagerank_rows(spark, vertex_ids, edge_list)
+    want = _pagerank_twin(vertex_ids, edge_list)
+    assert got == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE v AS SELECT range AS vec_id FROM range(6)")
+    con.execute("CREATE TABLE e (src BIGINT, dst BIGINT)")
+    con.executemany("INSERT INTO e VALUES (?, ?)", edge_list)
+    sql = "WITH " + pagerank_sql("SELECT vec_id FROM v", "SELECT src, dst FROM e")
+    assert dict(con.execute(sql).fetchall()) == want
 
 
 def test_pagerank_mass_conserved(spark):
@@ -150,9 +195,16 @@ def test_pagerank_mass_conserved(spark):
         q_graph_pagerank,
     )
 
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = scheduler.nextJobId()
     rows = q_graph_pagerank(spark, "/root/testdata/sf0.001").collect()
+    jobs = scheduler.nextJobId() - job0
     total = sum(r["rank_u12"] for r in rows)
     # floor losses only: mass never grows, and per-step loss is bounded
     assert total <= PR_GRID
     assert total >= int(PR_GRID * 0.85)
     assert all(r["rank_u12"] > 0 for r in rows)
+    # Job-count pin over build + collect: the k-NN edge build, one
+    # adjacency stage, then 3 jobs per staged round. 24 once the session
+    # has run the row, 25 on a fresh session.
+    assert jobs <= 25, f"graph_pagerank fired {jobs} jobs"
