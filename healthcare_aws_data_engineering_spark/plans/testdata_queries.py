@@ -957,49 +957,24 @@ ORACLE.update(WAREHOUSE_ORACLE)
 # --------------------------------------------------------------------------
 # The driver checks only the FIRST 50 registry entries per round. Order
 # the registry so the 50-entry checked prefix covers the queries that
-# most need a fresh verdict. r15 rotation (executing the prefix r14
-# staged — r14 verdict ask #1): the checked prefix is r14's staged
-# _CHECK_NEXT (the 50 r12-latest rows, three rounds stale after r15)
-# with ONE exchange: `between_filter` and `isin_filter` were RETIRED
-# this round (the capacity policy's retire clause, first exercise —
-# r14 verdict ask #2; operator coverage survives, see the retirement
-# note above the keyed-dedup query), and their two freed slots seat the
-# two day-one promotions `ledger_decontaminate` and `bigram_lm_score`
-# (new rows MUST be in the checked prefix — they have no verdict yet).
-# Registry stays at exactly 150 = the 3x50 rotation capacity.
-# _CHECK_NEXT stages the r16 prefix: the 50 r13-latest rows (three
-# rounds stale after r16) — a full prefix with no free slots, so any
-# query NEW in r16 must displace staged tail rows INTO r17's prefix
-# (never dropped silently; the staleness-audit test in
-# tests/test_registry_consistency.py recomputes the required set from
+# most need a fresh verdict. r17 rotation, staged from
+# bench_last.json::last_verified_round after r16 (50 rows each at r13,
+# r14 and r16, none at r15):
+# - _CHECK_FIRST is r16's staged _CHECK_NEXT, the 50 r13-latest rows,
+#   the stalest in the registry.
+# - _CHECK_NEXT is the 50 r14-latest rows. They are also >=2 rounds
+#   stale, but the prefix is full: they are the overflow that
+#   tools/stage_rotation.py stages at the head of _CHECK_NEXT.
+# - The 50 r16 rows the driver just verified fall to the unpinned middle.
+# No free slots: a query NEW in r17 must displace staged rows into the
+# r18 prefix, never drop them silently (the staleness-audit test in
+# tests/test_registry_consistency.py recomputes the required split from
 # bench_last.json and fails if staging misses a row).
 # (Row counts are asserted by
 # tests/test_registry_consistency.py::test_gate_ordering_lists_are_valid,
 # which pins len(_CHECK_FIRST) == 50 — the r7 advice count-drift class.)
 _CHECK_FIRST = [
-    # r14's staged _CHECK_NEXT (the 50 r12 rows) minus the two retired
-    # rows, plus the two r15 day-one promotions
-    "ann_pq_topk", "attribution", "bigram_lm_score", "cluster_split",
-    "cohort_retention", "corpus_curation", "cube_summary",
-    "curriculum_stages", "daily_latest", "debounce_events",
-    "dedup_exact", "dedup_weighted", "doc_fingerprint", "domain_cap",
-    "drift_monitor", "dsir_select", "dup_clusters", "etl_encounters",
-    "etl_obs_choice", "etl_observations", "etl_patients", "eval_draw",
-    "event_paths", "excess_suppliers", "filtered_count",
-    "first_last_delta", "frequency_count", "fuzzy_match",
-    "int8_quantize", "k_anonymity", "keyed_dedup", "latest_per_key",
-    "ledger_decontaminate", "linear_trend", "min_cost_supplier",
-    "mixture_draw", "order_count_distribution", "part_value_share",
-    "pricing_summary", "quality_calibrated", "rank_windows",
-    "revenue_by_nation", "rfm_segments", "scd2_history",
-    "semantic_dedup", "span_dedup", "span_scrub", "text_stats",
-    "top3_per_group", "zipf_slope",
-]
-# Staged r16 prefix: every r13-latest row (50 — three rounds stale
-# after r16). No free slots: r16 additions must displace tail rows into
-# the r17 prefix explicitly (the staleness-audit test enforces
-# coverage).
-_CHECK_NEXT = [
+    # r16's staged _CHECK_NEXT: every r13-latest row
     "ann_cosine_topk", "ann_ivf_topk", "ann_ivfpq_topk", "ann_lsh_topk",
     "bm25_search", "bracket_revenue", "decontaminate",
     "dedup_minhash_lsh", "dist_summary", "doc_attributes", "doc_chunks",
@@ -1015,6 +990,24 @@ _CHECK_NEXT = [
     "rrf_fusion", "salted_agg", "shipping_priority", "skew_audit",
     "source_terms", "supplier_part_counts", "training_order",
     "wellness_monthly", "zscore_outliers",
+]
+# Staged r18 prefix head: every r14-latest row, the over-cap overflow of
+# the rows >=2 rounds stale after r16.
+_CHECK_NEXT = [
+    "ann_multiprobe_topk", "asof_join", "basket_pairs", "bloom_decontam",
+    "bpe_pair_counts", "dataset_card", "dedup_simhash",
+    "disease_confidence", "distinct_sketch", "dup_ngrams", "forecast",
+    "funnel", "gap_fill", "hard_negatives", "heavy_hitters",
+    "height_weight_bmi", "hist_quantiles", "incremental_dedup",
+    "late_suppliers", "length_buckets", "media_dup_clusters",
+    "media_entropy", "media_near_dup", "media_stats", "mixture_draw_exact",
+    "ngram_jaccard", "pack_sequences", "ppjoin_pairs", "profile_columns",
+    "quality_classifier", "range_join", "repeated_spans",
+    "repetition_filter", "rolling_avg", "semi_anti_join", "sessionize",
+    "set_ops", "severity_topk", "shard_manifest", "shingle_novelty",
+    "small_qty_revenue", "source_overlap", "split_assign",
+    "stratified_sample", "time_rollup", "token_budget_fill", "top_supplier",
+    "unpivot_wide", "vocab_topk", "word_bigrams",
 ]
 _CHECK_LAST: list[str] = []
 

@@ -21,6 +21,7 @@ from healthcare_aws_data_engineering_spark.operators.decontam import (
 from healthcare_aws_data_engineering_spark.operators.retrieval import bm25_topk
 from healthcare_aws_data_engineering_spark.operators.text import repetition_stats
 from healthcare_aws_data_engineering_spark.plans import curation_queries as cq
+from healthcare_aws_data_engineering_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -177,8 +178,13 @@ def test_repetition_stats_handmade(spark):
 
 
 def test_repetition_stats_projection_only(spark):
-    plan = _plan(cq.q_repetition_filter(spark, SF))
+    """The operator adds no Exchange over the documents scan. Its query
+    spreads that single-split scan on purpose, so the query's only
+    exchange is spread()'s round-robin one."""
+    plan = _plan(repetition_stats(load_table(spark, SF, "documents")))
     assert _n_exchanges(plan) == 0, plan
+    query = _plan(cq.q_repetition_filter(spark, SF))
+    assert _n_exchanges(query) == query.count("RoundRobinPartitioning") <= 1, query
 
 
 # ------------------------------------------------- incremental_dedup --

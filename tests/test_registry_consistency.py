@@ -85,6 +85,12 @@ def test_staged_rotation_covers_stale_rows():
       never been driver-verified (they go 3-stale / stay unverified if
       skipped), and _CHECK_NEXT must hold every row exactly 1 round
       stale (3-stale by the round after next).
+      Over cap (more such must-first rows than _CHECK_FIRST slots, as
+      after a driver round that verified nothing): _CHECK_FIRST holds
+      only must-first rows, none of them fresher than a must-first row
+      left out (never-verified rows count as the stalest), and the
+      overflow is exactly the head of _CHECK_NEXT — the split
+      tools/stage_rotation.py prints.
     - post-driver (the driver just wrote this staging's verdicts; the
       next rotation is the NEXT round's first job): the staged lists
       must still jointly cover everything ≥2 rounds stale — red the
@@ -131,11 +137,42 @@ def test_staged_rotation_covers_stale_rows():
         need_first = {
             q for q in queries if q in never or lv[q] <= max_round - 2
         }
-        miss_first = sorted(need_first - set(first))
-        assert not miss_first, (
-            f"rows >=2 rounds stale (or never verified) missing from "
-            f"_CHECK_FIRST: {miss_first}"
-        )
+        if len(need_first) <= len(first):
+            miss_first = sorted(need_first - set(first))
+            assert not miss_first, (
+                f"rows >=2 rounds stale (or never verified) missing from "
+                f"_CHECK_FIRST: {miss_first}"
+            )
+        else:
+            from healthcare_aws_data_engineering_spark.plans.testdata_queries import (
+                _CHECK_NEXT,
+            )
+
+            not_due = sorted(set(first) - need_first)
+            assert not not_due, (
+                f"over cap, yet _CHECK_FIRST seats rows not >=2 rounds "
+                f"stale: {not_due}"
+            )
+
+            def verified(q):  # never-verified sorts as the stalest
+                return -1 if q in never else lv[q]
+
+            overflow = need_first - set(first)
+            fresher = sorted(
+                q
+                for q in first
+                if verified(q) > min(verified(o) for o in overflow)
+            )
+            assert not fresher, (
+                f"_CHECK_FIRST rows fresher than a must-first row left "
+                f"out of it: {fresher}"
+            )
+            head = set(_CHECK_NEXT[: len(overflow)])
+            assert head == overflow, (
+                f"over-cap overflow is not the head of _CHECK_NEXT: "
+                f"missing {sorted(overflow - head)}, "
+                f"in its place {sorted(head - overflow)}"
+            )
         need_next = {
             q for q in queries if lv.get(q) == max_round - 1
         } - set(first)

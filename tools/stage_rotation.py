@@ -6,7 +6,9 @@ Reads `bench_last.json::last_verified_round` and the live registry,
 then prints:
 
 - the rows that MUST be in `_CHECK_FIRST` (never driver-verified, or
-  going 3-rounds-stale if skipped), with free-slot count;
+  going 3-rounds-stale if skipped), with free-slot count; when they
+  outnumber the 50 slots, the split: the 50 stalest (never-verified
+  first) for `_CHECK_FIRST`, the overflow for the head of `_CHECK_NEXT`;
 - the rows to stage in `_CHECK_NEXT` (going 3-stale the round after);
 - a capacity warning when the registry exceeds 3 x 50 (at 150 = 3x50
   the rotation is exactly at capacity: every registry ADDITION pushes
@@ -67,18 +69,24 @@ def main() -> int:
         for q in QUERIES
         if lv.get(q) is not None and lv[q] <= max_round - 2
     ]
-    must_first = never + stale
+    # Stalest first: never-verified rows, then by verdict round.
+    must_first = never + sorted(stale, key=lambda q: (lv[q], q))
     show(
         f"_CHECK_FIRST must contain (never-verified + <= r{max_round - 2})",
         must_first,
     )
     free = CAP - len(must_first)
-    print(
-        f"    -> {free} free slot(s) for queries NEW/CHANGED this round"
-        if free >= 0
-        else f"    -> OVER CAP by {-free}: stage the overflow at the HEAD "
-        "of _CHECK_NEXT (the r12-precedent late-addition pattern)"
-    )
+    if free >= 0:
+        print(f"    -> {free} free slot(s) for queries NEW/CHANGED this round")
+    else:
+        # The split the staleness-audit test enforces: the prefix takes
+        # the CAP stalest, the rest heads _CHECK_NEXT.
+        print(
+            f"    -> OVER CAP by {-free}: stage the overflow at the HEAD "
+            "of _CHECK_NEXT (the r12-precedent late-addition pattern)"
+        )
+        show("_CHECK_FIRST (the stalest, never-verified first)", must_first[:CAP])
+        show("HEAD of _CHECK_NEXT (the overflow)", must_first[CAP:])
     show(f"_CHECK_NEXT should stage (r{max_round - 1})", by_round.get(max_round - 1, []))
     return 0
 
