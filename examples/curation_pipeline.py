@@ -68,7 +68,7 @@ def curate(spark, sf_dir: str):
 
     # 2. soft dedup: weight = 1/|near-dup cluster|
     pairs = D.minhash_lsh_pairs(
-        docs, num_perm=6, bands=3, backend="md5", max_bucket=50
+        docs, num_perm=6, bands=3, backend="md5"
     )
     verified = (
         D.ngram_jaccard(docs, pairs)

@@ -57,13 +57,11 @@ def main() -> int:
     pieces = U.unigram_train(docs, vocab_size=VOCAB_SIZE, min_count=2)
 
     # ---- encode (same Arrow UDF shape for both) ----
-    enc = U.unigram_encode(
-        B.bpe_encode(docs, merges, out_col="bpe"), pieces, out_col="uni"
-    )
+    enc = U.unigram_encode(B.bpe_encode(docs, merges), pieces)
     stats = enc.select(
         F.count(F.lit(1)).alias("docs"),
-        F.sum(F.size("bpe")).alias("bpe_tokens"),
-        F.sum(F.size("uni")).alias("uni_tokens"),
+        F.sum(F.size("bpe_tokens")).alias("bpe_tokens"),
+        F.sum(F.size("unigram_tokens")).alias("uni_tokens"),
         F.sum(
             F.size(F.split(F.trim(F.lower("text")), r"\s+"))
         ).alias("words"),

@@ -52,7 +52,7 @@ def field_type(schema: DataType, path: str) -> DataType | None:
     return cur
 
 
-def opt_col(schema: DataType, path: str, dtype: str = "string") -> Column:
+def opt_col(schema: DataType, path: str) -> Column:
     """``F.col(path)`` if the path exists in the schema, else typed NULL.
 
     Direct access keeps nested-schema pruning intact; a NULL literal costs
@@ -60,7 +60,7 @@ def opt_col(schema: DataType, path: str, dtype: str = "string") -> Column:
     the inferred schema already describes (or provably lacks).
     """
     if field_type(schema, path) is None:
-        return F.lit(None).cast(dtype)
+        return F.lit(None).cast("string")
     return F.col(path)
 
 
@@ -195,7 +195,7 @@ def choice_double(schema: DataType, path: str) -> Column:
     return F.col(path).try_cast("double")
 
 
-def value_x_string(schema: DataType, resource_path: str = "resource") -> Column:
+def value_x_string(schema: DataType) -> Column:
     """Collapse the FHIR value[x] polymorphism to one string column,
     reference ladder order preserved exactly (:165-176):
 
@@ -203,17 +203,17 @@ def value_x_string(schema: DataType, resource_path: str = "resource") -> Column:
     valueInteger, valueBoolean, valueDateTime, valueTime,
     valuePeriod.start, valueRange.low.value, valueSampledData.data.
     """
-    rt = field_type(schema, resource_path)
+    rt = field_type(schema, "resource")
     if rt is None:
         return F.lit(None).cast("string")
 
     def leg(rel: str) -> Column:
-        return opt_col(schema, f"{resource_path}.{rel}").cast("string")
+        return opt_col(schema, f"resource.{rel}").cast("string")
 
     return F.coalesce(
         leg("valueString"),
-        cc_attr(schema, f"{resource_path}.valueCodeableConcept", "display"),
-        cc_text(schema, f"{resource_path}.valueCodeableConcept"),
+        cc_attr(schema, "resource.valueCodeableConcept", "display"),
+        cc_text(schema, "resource.valueCodeableConcept"),
         leg("valueInteger"),
         leg("valueBoolean"),
         leg("valueDateTime"),
@@ -224,7 +224,7 @@ def value_x_string(schema: DataType, resource_path: str = "resource") -> Column:
     )
 
 
-def guarded_array_join(col: Column, sep: str = "|") -> Column:
+def guarded_array_join(col: Column) -> Column:
     """NULL-propagating array_join (reference :86-90): NULL array → NULL,
     not empty string."""
-    return F.when(col.isNotNull(), F.array_join(col, sep))
+    return F.when(col.isNotNull(), F.array_join(col, "|"))

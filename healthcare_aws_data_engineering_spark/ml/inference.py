@@ -300,9 +300,7 @@ def _z_cluster(
     return z.withColumn("cluster", kmeans_cluster_expr(znames, parity))
 
 
-def preprocess(
-    features: DataFrame, id_col: str = "patient_id", parity: bool = True
-) -> DataFrame:
+def preprocess(features: DataFrame, parity: bool = True) -> DataFrame:
     """features (19 raw columns, nulls allowed) → 14 PCA components +
     cluster id. Two projection stages (scaled → z+cluster), all JVM column
     math; the z / distance folds parse from the same SQL text the DuckDB
@@ -312,15 +310,10 @@ def preprocess(
     sums — the production path when no cross-engine hash must match
     (~2× cheaper per-row math; ~1e-5 z drift from the grid, pinned by
     test)."""
-    return _z_cluster(features, id_col, {}, parity)
+    return _z_cluster(features, "patient_id", {}, parity)
 
 
-def predict_diseases(
-    features: DataFrame,
-    id_col: str = "patient_id",
-    threshold: float = THRESHOLD,
-    parity: bool = True,
-) -> DataFrame:
+def predict_diseases(features: DataFrame, parity: bool = True) -> DataFrame:
     """Full M1→M6 chain as ONE linear flow (no self-join): imputed model
     inputs ride along through the z/cluster stages, then the fused
     3-booster UDF scores once.
@@ -339,19 +332,19 @@ def predict_diseases(
     imput = imputed_columns()
     carried = {n: imput[n] for n in mf if n != "cluster"}
     scored_in = (
-        _z_cluster(features, id_col, carried, parity)
-        .select(id_col, "cluster", *[F.col(n) for n in carried])
+        _z_cluster(features, "patient_id", carried, parity)
+        .select("patient_id", "cluster", *[F.col(n) for n in carried])
         .repartition(
-            features.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+            features.sparkSession.sparkContext.defaultParallelism, F.col("patient_id")
         )
     )
     out = scored_in.withColumn("__p", xgb_probabilities_all(mf))
-    cols = [F.col(id_col), F.col("cluster")]
+    cols = [F.col("patient_id"), F.col("cluster")]
     for d in DISEASES:
         p = F.col("__p")[d]
         cols += [
             p.alias(f"prob_{d}"),
-            (p >= threshold).cast("int").alias(f"flag_{d}"),
+            (p >= THRESHOLD).cast("int").alias(f"flag_{d}"),
             risk_prob_band(p).alias(f"risk_{d}"),
         ]
     return out.select(*cols)

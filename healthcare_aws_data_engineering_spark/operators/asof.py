@@ -42,10 +42,9 @@ def as_of_join(
     ts: str,
     payload_cols: list[str],
     right_id: str,
-    prefix: str = "asof_",
 ) -> DataFrame:
     """Backward as-of join. Returns every ``left`` row plus
-    ``{prefix}{c}`` for each payload column and ``{prefix}ts`` (the
+    ``asof_{c}`` for each payload column and ``asof_ts`` (the
     matched right timestamp), NULL where no prior right row exists.
     """
     # NULL-key right rows can never be matched by an equality-semantics
@@ -96,7 +95,7 @@ def as_of_join(
     carried = l_tagged.unionByName(r_tagged).select(
         *lcols,
         F.col("__side"),
-        matched["__mts"].alias(f"{prefix}ts"),
-        *[matched[c].alias(f"{prefix}{c}") for c in payload_cols],
+        matched["__mts"].alias("asof_ts"),
+        *[matched[c].alias(f"asof_{c}") for c in payload_cols],
     )
     return carried.filter(F.col("__side") == 1).drop("__side")

@@ -35,13 +35,11 @@ from pyspark.sql import DataFrame, functions as F
 END = "</w>"
 
 
-def word_counts(
-    docs: DataFrame, text_col: str = "text", min_count: int = 1
-) -> DataFrame:
+def word_counts(docs: DataFrame, min_count: int = 1) -> DataFrame:
     """``word, n`` frequency table — the one corpus-scale pass (bounded
     keys, map-side combine). Lower-cased whitespace words; empty strings
     dropped."""
-    w = F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias(
+    w = F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
         "word"
     )
     out = (
@@ -106,7 +104,6 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 50,
-    text_col: str = "text",
     min_count: int = 2,
     max_vocab: int = 1_000_000,
 ) -> list[tuple[str, str]]:
@@ -126,7 +123,7 @@ def bpe_train(
     contract — not an approximation footnote. Pass ``max_vocab=None``
     to collect the full ``>= min_count`` vocabulary (gate-scale only).
     """
-    wc = word_counts(docs, text_col, min_count)
+    wc = word_counts(docs, min_count)
     if max_vocab is not None:
         # TakeOrderedAndProject: top-V by (count desc, word asc), never
         # a full vocabulary sort or an unbounded collect
@@ -135,13 +132,8 @@ def bpe_train(
     return learn_merges({r["word"]: r["n"] for r in rows}, n_merges)
 
 
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    """Append ``out_col``: the document's BPE token sequence
+def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """Append ``bpe_tokens``: the document's BPE token sequence
     (array<string>). Arrow-batched pandas UDF with a per-batch word
     cache — one merge walk per DISTINCT word per batch, the rest are
     dict hits."""
@@ -168,7 +160,7 @@ def bpe_encode(
 
         return texts.map(enc_doc)
 
-    return docs.withColumn(out_col, _encode(F.col(text_col)))
+    return docs.withColumn("bpe_tokens", _encode(F.col("text")))
 
 
 def vocab_from_merges(merges: list[tuple[str, str]]) -> list[str]:

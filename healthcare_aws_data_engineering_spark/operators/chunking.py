@@ -31,8 +31,6 @@ def chunk_documents(
     docs: DataFrame,
     window: int = CHUNK_WINDOW,
     stride: int = CHUNK_STRIDE,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     emit_text: bool = False,
 ) -> DataFrame:
     """``doc_id, chunk_idx, start_tok, chunk_tokens, chunk_fp`` per
@@ -46,13 +44,13 @@ def chunk_documents(
     # slice is re-joined with ' ' so adjacent chunks re-concatenate to the
     # original text byte-exactly. A \s+ split would normalize tabs/double
     # spaces and make chunk_fp/chunk_text lossy.
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     # starts 0, stride, 2·stride, ... strictly below n (n >= 1 always:
     # split('') is ['']).
     starts = F.sequence(F.lit(0), n - 1, F.lit(stride))
     chunked = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         n.cast("long").alias("__n"),
         F.posexplode(
             F.transform(
@@ -74,29 +72,23 @@ def chunk_documents(
     return chunked.select(*cols)
 
 
-def chunk_sql(
-    table: str = "documents",
-    window: int = CHUNK_WINDOW,
-    stride: int = CHUNK_STRIDE,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB twin: ``range(0, n, stride)`` enumerates the same starts;
+def chunk_sql() -> str:
+    """DuckDB twin: ``range(0, n, CHUNK_STRIDE)`` enumerates the same starts;
     ``list_slice`` is 1-based inclusive like Spark's ``slice``."""
     return f"""
 WITH t AS (
-  SELECT {id_col} AS doc_id, string_split({text_col}, ' ') AS l FROM {table}
+  SELECT doc_id, string_split(text, ' ') AS l FROM documents
 ),
 c AS (
   SELECT doc_id, len(l) AS n, l,
-         unnest(range(0, greatest(len(l), 1), {stride})) AS start_tok
+         unnest(range(0, greatest(len(l), 1), {CHUNK_STRIDE})) AS start_tok
   FROM t
 )
 SELECT doc_id,
-       CAST(start_tok // {stride} AS INT) AS chunk_idx,
+       CAST(start_tok // {CHUNK_STRIDE} AS INT) AS chunk_idx,
        CAST(start_tok AS BIGINT) AS start_tok,
-       CAST(LEAST({window}, n - start_tok) AS BIGINT) AS chunk_tokens,
-       md5(array_to_string(list_slice(l, start_tok + 1, start_tok + {window}), ' '))
+       CAST(LEAST({CHUNK_WINDOW}, n - start_tok) AS BIGINT) AS chunk_tokens,
+       md5(array_to_string(list_slice(l, start_tok + 1, start_tok + {CHUNK_WINDOW}), ' '))
          AS chunk_fp
 FROM c
 """

@@ -50,9 +50,6 @@ def decontaminate(
     docs: DataFrame,
     eval_pct: int = EVAL_PCT,
     threshold: float = CONTAM_THRESHOLD,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Flag training documents whose shingle overlap with the eval split
     meets ``threshold``.
@@ -61,9 +58,9 @@ def decontaminate(
     overlap_ratio`` (DOUBLE on the DECIMAL(18,6) grid), ``contaminated`` (boolean).
     """
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        word_shingles(F.col(text_col), n).alias("shingles"),
-        eval_bucket(F.col(id_col)).alias("bucket"),
+        F.col("doc_id"),
+        word_shingles(F.col("text"), 3).alias("shingles"),
+        eval_bucket(F.col("doc_id")).alias("bucket"),
     )
     eval_shingles = (
         base.filter(F.col("bucket") < eval_pct)
@@ -224,15 +221,7 @@ def _might_contain(shingle: Column, bitset: Column, m: int, k: int) -> Column:
     return cond
 
 
-def bloom_decontaminate(
-    docs: DataFrame,
-    eval_pct: int = EVAL_PCT,
-    threshold: float = CONTAM_THRESHOLD,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fpp: float = BLOOM_FPP,
-) -> DataFrame:
+def bloom_decontaminate(docs: DataFrame) -> DataFrame:
     """Bloom-pruned decontamination — RESULT-IDENTICAL to
     :func:`decontaminate` (same oracle): the bitset probe has no false
     negatives, and its false positives are removed by an exact join over
@@ -248,11 +237,11 @@ def bloom_decontaminate(
     are small (Dolma's bloom dedup is the production precedent).
     """
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        word_shingles(F.col(text_col), n).alias("shingles"),
-        eval_bucket(F.col(id_col)).alias("bucket"),
+        F.col("doc_id"),
+        word_shingles(F.col("text"), 3).alias("shingles"),
+        eval_bucket(F.col("doc_id")).alias("bucket"),
     )
-    eval_docs = base.filter(F.col("bucket") < eval_pct)
+    eval_docs = base.filter(F.col("bucket") < EVAL_PCT)
     # Bitset sizing from a SHUFFLE-FREE upper bound (r15): per-doc
     # arrays are already distinct, so sum(size(shingles)) over the eval
     # slice bounds the distinct-shingle count from above (duplicates
@@ -266,7 +255,7 @@ def bloom_decontaminate(
             F.coalesce(F.sum(F.size("shingles")), F.lit(0)).alias("n")
         ).collect()[0]["n"]
     )
-    m, k = _bloom_geometry(n_eval, fpp)
+    m, k = _bloom_geometry(n_eval, BLOOM_FPP)
     # Materialize the bitset NOW (m/8 bytes via ≤ m/64 fixed-width agg
     # rows — the exact bytes a broadcast would ship from the driver
     # anyway, so collecting them first adds no new driver liability).
@@ -285,7 +274,7 @@ def bloom_decontaminate(
         .withColumn("hit", F.lit(1))
     )
 
-    train = base.filter(F.col("bucket") >= eval_pct).select(
+    train = base.filter(F.col("bucket") >= EVAL_PCT).select(
         "doc_id", F.explode("shingles").alias("shingle")
     )
     # ONE binary literal in the plan (see module header for why neither
@@ -325,15 +314,11 @@ def bloom_decontaminate(
         "n_shingles",
         "n_overlap",
         F.round(ratio, 6).cast("decimal(18,6)").cast("double").alias("overlap_ratio"),
-        (ratio >= threshold).alias("contaminated"),
+        (ratio >= CONTAM_THRESHOLD).alias("contaminated"),
     )
 
 
-def decontaminate_sql(
-    table: str,
-    eval_pct: int = EVAL_PCT,
-    threshold: float = CONTAM_THRESHOLD,
-) -> str:
+def decontaminate_sql(table: str) -> str:
     """DuckDB oracle twin of :func:`decontaminate` (3-word shingles; same
     salted-md5 split, same LEFT-join/aggregate shape)."""
     return rf"""
@@ -350,12 +335,12 @@ WITH
                 ELSE array_to_string(ws, ' ') END AS shingle
     FROM w, unnest(generate_series(1, greatest(1, len(ws)-2))) AS t(i)
   ),
-  ev AS (SELECT DISTINCT shingle, 1 AS hit FROM sh WHERE bucket < {eval_pct}),
-  tr AS (SELECT doc_id, shingle FROM sh WHERE bucket >= {eval_pct})
+  ev AS (SELECT DISTINCT shingle, 1 AS hit FROM sh WHERE bucket < {EVAL_PCT}),
+  tr AS (SELECT doc_id, shingle FROM sh WHERE bucket >= {EVAL_PCT})
 SELECT doc_id, n_shingles, n_overlap,
        CAST(CAST(round(n_overlap / CAST(n_shingles AS DOUBLE), 6) AS DECIMAL(18,6))
             AS DOUBLE) AS overlap_ratio,
-       n_overlap / CAST(n_shingles AS DOUBLE) >= {threshold} AS contaminated
+       n_overlap / CAST(n_shingles AS DOUBLE) >= {CONTAM_THRESHOLD} AS contaminated
 FROM (
   SELECT tr.doc_id, COUNT(*) AS n_shingles,
          CAST(COALESCE(SUM(ev.hit), 0) AS BIGINT) AS n_overlap
@@ -387,28 +372,20 @@ FROM (
 # fixture.
 
 
-def shingle_ledger(
-    docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def shingle_ledger(docs: DataFrame) -> DataFrame:
     """The per-snapshot ingest artifact: ``doc_id, shingle_hash`` — one
     row per DISTINCT word n-gram shingle per document (xxhash64-keyed).
     Pure projection + explode; no shuffle — write it partitioned by the
     same shard key as the documents and it appends per snapshot."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("__s"),
+        F.col("doc_id"),
+        F.explode(word_shingles(F.col("text"), 3)).alias("__s"),
     ).select("doc_id", F.xxhash64(F.col("__s")).alias("shingle_hash"))
 
 
 def ledger_decontaminate(
     ledger: DataFrame,
     eval_docs: DataFrame,
-    threshold: float = CONTAM_THRESHOLD,
-    n: int = 3,
-    text_col: str = "text",
     prune_fpp: float | None = None,
 ) -> DataFrame:
     """Screen an ingested corpus — represented ONLY by its persisted
@@ -428,7 +405,7 @@ def ledger_decontaminate(
     impossible, result pinned identical."""
     ev_hashes = (
         eval_docs.select(
-            F.explode(word_shingles(F.col(text_col), n)).alias("__s")
+            F.explode(word_shingles(F.col("text"), 3)).alias("__s")
         )
         .select(F.xxhash64(F.col("__s")).alias("shingle_hash"))
         .distinct()
@@ -463,18 +440,11 @@ def ledger_decontaminate(
         "n_shingles",
         "n_overlap",
         F.round(ratio, 6).cast("decimal(18,6)").cast("double").alias("overlap_ratio"),
-        (ratio >= threshold).alias("contaminated"),
+        (ratio >= CONTAM_THRESHOLD).alias("contaminated"),
     )
 
 
-def decontaminate_external(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    threshold: float = CONTAM_THRESHOLD,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate_external(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Batch text-side twin of :func:`ledger_decontaminate`: the
     :func:`decontaminate` computation with an EXPLICIT eval corpus
     instead of the deterministic in-table split — the re-scan the
@@ -482,12 +452,12 @@ def decontaminate_external(
     path is pinned against (and the right call when no ledger was
     persisted)."""
     train = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
+        F.col("doc_id"),
+        F.explode(word_shingles(F.col("text"), 3)).alias("shingle"),
     )
     ev = (
         eval_docs.select(
-            F.explode(word_shingles(F.col(text_col), n)).alias("shingle")
+            F.explode(word_shingles(F.col("text"), 3)).alias("shingle")
         )
         .distinct()
         .withColumn("hit", F.lit(1))
@@ -506,5 +476,5 @@ def decontaminate_external(
         "n_shingles",
         "n_overlap",
         F.round(ratio, 6).cast("decimal(18,6)").cast("double").alias("overlap_ratio"),
-        (ratio >= threshold).alias("contaminated"),
+        (ratio >= CONTAM_THRESHOLD).alias("contaminated"),
     )

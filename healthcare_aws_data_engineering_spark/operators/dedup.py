@@ -20,7 +20,7 @@ Scale design notes (the point of these operators):
   B rows of small fixed-width values; (b) the verification join, which
   touches only candidate pairs.
 - Bucket skew (a degenerate band bucket with millions of docs) is the real
-  100 TB hazard: ``max_bucket`` caps pair fan-out per bucket; AQE skew-join
+  100 TB hazard: :data:`MAX_BUCKET` caps pair fan-out per bucket; AQE skew-join
   handles the joins.
 - Every hash is reproducible in DuckDB where a registry row is
   oracle-checked: MinHash has an ``md5`` backend next to the cheaper
@@ -35,9 +35,7 @@ from .text import normalize_text
 
 
 # ----------------------------------------------------------------- exact --
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups: md5 of the normalized text → min id kept.
     Output: ``content_hash, keep_id, dup_count``, one row per distinct
     normalized content (``dup_count`` 1 for unique docs; filter
@@ -45,9 +43,9 @@ def exact_dedup(
     aggregate: map-side partial aggregation keeps the shuffle to one
     fixed-width row per distinct hash per task, and no group ever
     materializes its member list."""
-    h = F.md5(normalize_text(F.col(text_col)).cast("binary"))
+    h = F.md5(normalize_text(F.col("text")).cast("binary"))
     return docs.groupBy(h.alias("content_hash")).agg(
-        F.min(id_col).alias("keep_id"),
+        F.min("doc_id").alias("keep_id"),
         F.count(F.lit(1)).alias("dup_count"),
     )
 
@@ -81,22 +79,21 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(ws), inner), 1)
 
 
-def _bucket_cap(
-    banded: DataFrame, key_col: str, max_bucket: int, min_bucket: int = 2
-) -> DataFrame:
-    """Keep rows whose (band, key) bucket has min_bucket..max_bucket
-    members, via a window count over the bucket shuffle (single subtree —
-    see callers). The default ``min_bucket=2`` is a SELF-join
-    optimization (a singleton bucket cannot produce a within-corpus
-    pair); probe-against-index callers
-    (``streaming.neardup.dhash_near_dup_stream``) must pass
-    ``min_bucket=1`` — there a stream doc legitimately matches an index
-    doc that is alone in its bucket."""
+MAX_BUCKET = 50  # LSH bucket members kept for the pair self-join
+
+
+def _bucket_cap(banded: DataFrame, key_col: str, max_bucket: int) -> DataFrame:
+    """Keep rows whose (band, key) bucket has 2..max_bucket members, via
+    a window count over the bucket shuffle (single subtree — see
+    callers). The floor of 2 is a SELF-join optimization (a singleton
+    bucket cannot produce a within-corpus pair); a probe-against-index
+    join must not use it — there a probe doc legitimately matches an
+    index doc that is alone in its bucket."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy("band", key_col)
     return banded.withColumn("__n", F.count(F.lit(1)).over(w)).filter(
-        (F.col("__n") >= min_bucket) & (F.col("__n") <= max_bucket)
+        (F.col("__n") >= 2) & (F.col("__n") <= max_bucket)
     )
 
 
@@ -113,12 +110,9 @@ def _shingle_hash(shingle: Column, perm: int, backend: str) -> Column:
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_perm: int = 8,
     bands: int = 4,
     backend: str = "xxhash64",
-    max_bucket: int = 50,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
 
@@ -138,8 +132,8 @@ def minhash_lsh_pairs(
     # whole shingle array per permutation in interpreted HOF eval — ~10x
     # slower as the pipeline backbone.
     shingled = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(F.col(text_col))).alias("__s"),
+        F.col("doc_id").alias("doc"),
+        F.explode(word_shingles(F.col("text"))).alias("__s"),
     )
     sig_tbl = shingled.groupBy("doc").agg(
         *[
@@ -177,7 +171,7 @@ def minhash_lsh_pairs(
     # then the identical subtree, so the signature pipeline is computed
     # once and its exchange is reused (a groupBy-sizes + join shape
     # compiled to THREE independent recomputations of the signatures).
-    capped = _bucket_cap(banded, "band_hash", max_bucket).select(
+    capped = _bucket_cap(banded, "band_hash", MAX_BUCKET).select(
         "band", "band_hash", "doc"
     )
     pairs = (
@@ -198,17 +192,15 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bands: int = 4,
-    max_hamming: int = 6,
-    max_bucket: int = 50,
-) -> DataFrame:
+SIMHASH_BANDS = 4         # 8-bit bands of the 32-bit signature
+SIMHASH_MAX_HAMMING = 3   # = bands - 1: the pigeonhole recall bound
+
+
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup candidates whose 32-bit SimHashes agree on at least one
-    of ``bands`` equal-width bands (guarantees recall for Hamming ≤
-    bands-1 by pigeonhole), verified with an exact Hamming threshold.
+    of :data:`SIMHASH_BANDS` equal-width bands (guarantees recall for
+    Hamming ≤ bands-1 by pigeonhole), verified with the exact Hamming
+    threshold :data:`SIMHASH_MAX_HAMMING`.
 
     Per-shingle bit votes come from the first 8 hex digits of
     md5(shingle) parsed as a 32-bit integer (Spark ``conv(_,16,10)``,
@@ -219,14 +211,14 @@ def simhash_pairs(
     per shingle, ~25% slower.)
     """
     bits = 32
-    width = bits // bands
+    width = bits // SIMHASH_BANDS
     # Explode + partial-agg bit votes: each shingle is hashed ONCE and
     # the per-bit ±1 sums combine map-side; the shuffle carries one
     # fixed-width row per doc. (A projection-only votes fold over the
     # shingle array is interpreted HOF eval — too slow here.)
     exploded = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(F.col(text_col))).alias("__s"),
+        F.col("doc_id").alias("doc"),
+        F.explode(word_shingles(F.col("text"))).alias("__s"),
     ).select(
         "doc",
         F.conv(F.substring(F.md5(F.col("__s").cast("binary")), 1, 8), 16, 10)
@@ -257,14 +249,14 @@ def simhash_pairs(
                 *[
                     F.shiftrightunsigned(F.col("sim"), b * width)
                     .bitwiseAND((1 << width) - 1)
-                    for b in range(bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("band", "band_key"),
     )
     # Bucket self-equi-join (see minhash_lsh_pairs for why not nested
     # array lambdas and why the cap is a window, not a groupBy branch).
-    capped = _bucket_cap(banded, "band_key", max_bucket).select(
+    capped = _bucket_cap(banded, "band_key", MAX_BUCKET).select(
         "band", "band_key", "doc", "sim"
     )
     pairs = (
@@ -281,17 +273,11 @@ def simhash_pairs(
             hamming64(F.col("a.sim"), F.col("b.sim")).alias("hamming"),
         )
     )
-    return pairs.filter(F.col("hamming") <= max_hamming).distinct()
+    return pairs.filter(F.col("hamming") <= SIMHASH_MAX_HAMMING).distinct()
 
 
 # ---------------------------------------------------------------- jaccard --
-def ngram_jaccard(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def ngram_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact word-n-gram Jaccard for given candidate (doc_a, doc_b) pairs —
     the verification stage after LSH. Joins the raw TEXT to the pairs
     (two broadcast-able hash joins at candidate scale) and shingles only
@@ -308,10 +294,10 @@ def ngram_jaccard(
     Shingle arrays are staged as real columns so intersect/union read
     attributes, not re-evaluated subtrees."""
     a = docs.select(
-        F.col(id_col).alias("doc_a"), F.col(text_col).alias("__ta")
+        F.col("doc_id").alias("doc_a"), F.col("text").alias("__ta")
     )
     b = docs.select(
-        F.col(id_col).alias("doc_b"), F.col(text_col).alias("__tb")
+        F.col("doc_id").alias("doc_b"), F.col("text").alias("__tb")
     )
     staged = (
         pairs.join(a, "doc_a")
@@ -319,8 +305,8 @@ def ngram_jaccard(
         .select(
             "doc_a",
             "doc_b",
-            word_shingles(F.col("__ta"), n).alias("sh_a"),
-            word_shingles(F.col("__tb"), n).alias("sh_b"),
+            word_shingles(F.col("__ta"), 3).alias("sh_a"),
+            word_shingles(F.col("__tb"), 3).alias("sh_b"),
         )
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

@@ -23,12 +23,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+FUZZY_MAX_DIST = 1  # what the single-deletion neighborhood recalls exactly
 
-def _variants(df: DataFrame, key_col: str, id_col: str, role: str) -> DataFrame:
-    """Explode each key into itself plus every single-character-deletion
+
+def _variants(df: DataFrame, role: str) -> DataFrame:
+    """Explode each ``key`` into itself plus every single-character-deletion
     variant (the FastSS dist-1 neighborhood), tagged with role-prefixed
     columns for the blocking equi-join."""
-    key = F.col(key_col)
+    key = F.col("key")
     variants = F.array_union(
         F.array(key),
         F.transform(
@@ -40,29 +42,23 @@ def _variants(df: DataFrame, key_col: str, id_col: str, role: str) -> DataFrame:
         ),
     )
     return df.select(
-        F.col(id_col).alias(f"{role}_id"),
+        F.col("id").alias(f"{role}_id"),
         key.alias(f"{role}_key"),
         F.explode(variants).alias("__v"),
     )
 
 
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str = "key",
-    id_col: str = "id",
-    max_dist: int = 1,
-) -> DataFrame:
-    """Candidate matches with Levenshtein ≤ ``max_dist`` (exact recall
-    for dist ≤ 1 via deletion-neighborhood blocking; raise the
-    neighborhood depth for larger distances).
+def fuzzy_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Candidate matches with Levenshtein ≤ :data:`FUZZY_MAX_DIST` (exact
+    recall for dist ≤ 1 via deletion-neighborhood blocking; a larger
+    distance needs a deeper neighborhood).
 
     Output: ``(left_id, left_key, right_id, right_key, dist)`` distinct
     pairs. Both engines implement Levenshtein identically (integer DP),
     so the verify is engine-exact.
     """
-    lv = _variants(left, key_col, id_col, "left")
-    rv = _variants(right, key_col, id_col, "right")
+    lv = _variants(left, "left")
+    rv = _variants(right, "right")
     cands = (
         lv.join(rv, "__v")
         .select("left_id", "left_key", "right_id", "right_key")
@@ -71,12 +67,10 @@ def fuzzy_join(
     dist = F.levenshtein(F.col("left_key"), F.col("right_key"))
     return cands.select(
         "left_id", "left_key", "right_id", "right_key", dist.alias("dist")
-    ).filter(F.col("dist") <= max_dist)
+    ).filter(F.col("dist") <= FUZZY_MAX_DIST)
 
 
-def fuzzy_join_sql(
-    left_sql: str, right_sql: str, max_dist: int = 1
-) -> str:
+def fuzzy_join_sql(left_sql: str, right_sql: str) -> str:
     """DuckDB twin: same variants, same blocking, same verify. Caller's
     subqueries must yield ``(id, key)`` columns."""
 
@@ -100,17 +94,11 @@ cands AS (
 SELECT left_id, left_key, right_id, right_key,
        CAST(levenshtein(left_key, right_key) AS INTEGER) AS dist
 FROM cands
-WHERE levenshtein(left_key, right_key) <= {max_dist}
+WHERE levenshtein(left_key, right_key) <= {FUZZY_MAX_DIST}
 """
 
 
-def debounce(
-    events: DataFrame,
-    gap_ms: int,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def debounce(events: DataFrame, gap_ms: int, key_cols: list[str]) -> DataFrame:
     """Keep only the FIRST event of every burst: a burst extends while
     consecutive same-key events are ≤ ``gap_ms`` apart (transitive —
     a long retry storm collapses to one row even if it outlasts the
@@ -118,8 +106,8 @@ def debounce(
 
     Same shape as sessionize: lag → gap flag → running burst number →
     min-id per burst. One key shuffle, reused by every window."""
-    ms = F.expr(f"unix_millis({ts_col})")
-    w = W.partitionBy(*key_cols).orderBy(ms.asc(), F.col(id_col).asc())
+    ms = F.expr("unix_millis(ts)")
+    w = W.partitionBy(*key_cols).orderBy(ms.asc(), F.col("event_id").asc())
     flagged = events.withColumn("__ms", ms).withColumn(
         "__new",
         F.when(
@@ -135,7 +123,7 @@ def debounce(
         ),
     )
     keep = W.partitionBy(*key_cols, "__burst").orderBy(
-        F.col("__ms").asc(), F.col(id_col).asc()
+        F.col("__ms").asc(), F.col("event_id").asc()
     )
     return (
         burst.withColumn("__rn", F.row_number().over(keep))

@@ -130,14 +130,7 @@ PR_GRID = 1_000_000_000_000  # 1e12: rank mass rides an integer grid
 PR_DAMP_PCT = 85
 
 
-def pagerank(
-    vertices: DataFrame,
-    edges: DataFrame,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def pagerank(vertices: DataFrame, edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """Fixed-iteration PageRank on an EXACT integer grid: total mass
     :data:`PR_GRID` is split uniformly, each iteration moves
     ``rank DIV out_degree`` along every edge (integer floor — the
@@ -177,15 +170,15 @@ def pagerank(
     Output: one row per vertex, ``(id, rank_u12)`` — BIGINT grid units
     summing to ≈ PR_GRID (floor losses are deterministic).
     """
-    adj = edges.groupBy(F.col(src_col).alias("id")).agg(
-        F.collect_list(dst_col).alias("nbrs"),
+    adj = edges.groupBy(F.col("src").alias("id")).agg(
+        F.collect_list("dst").alias("nbrs"),
         F.count(F.lit(1)).alias("deg"),
     )
     # Lazily marked, so the count/dangling collect below is the action
     # that materializes it. The checkpoint also truncates lineage into the
     # caller's edge-build plan, which therefore runs exactly once, here.
     state = (
-        vertices.select(F.col(id_col).alias("id"))
+        vertices.select(F.col("vec_id").alias("id"))
         .join(adj, "id", "left")
         .select(
             "id",
@@ -241,15 +234,10 @@ def pagerank(
                 .agg(F.coalesce(F.sum("rank"), F.lit(0)).alias("__dang"))
                 .collect()[0]["__dang"]
             )
-    return ranks.select(F.col("id").alias(id_col), F.col("rank").alias("rank_u12"))
+    return ranks.select(F.col("id").alias("vec_id"), F.col("rank").alias("rank_u12"))
 
 
-def pagerank_sql(
-    vertices_sql: str,
-    edges_sql: str,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-) -> str:
+def pagerank_sql(vertices_sql: str, edges_sql: str, n_iter: int = 3) -> str:
     """DuckDB twin of :func:`pagerank`: the fixed iterations unroll into
     a CTE chain performing the identical integer arithmetic. The caller
     embeds this after its own WITH-chain (vertices/edges CTEs)."""
@@ -257,7 +245,7 @@ def pagerank_sql(
         f"""pr_n AS (SELECT COUNT(*) AS n FROM ({vertices_sql})),
 pr_deg AS (SELECT src, COUNT(*) AS deg FROM ({edges_sql}) GROUP BY src),
 pr_r0 AS (
-  SELECT {id_col} AS id,
+  SELECT vec_id AS id,
          CAST({PR_GRID} // (SELECT n FROM pr_n) AS BIGINT) AS rank
   FROM ({vertices_sql})
 )"""
@@ -285,5 +273,5 @@ pr_r{i + 1} AS (
 )"""
         )
     return ",\n".join(frags) + f"""
-SELECT id AS {id_col}, rank AS rank_u12 FROM pr_r{n_iter}
+SELECT id AS vec_id, rank AS rank_u12 FROM pr_r{n_iter}
 """

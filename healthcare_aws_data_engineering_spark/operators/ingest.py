@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from .text import fingerprint, token_count, token_count_sql, tokens, tokens_sql
+from .text import token_count, token_count_sql, tokens, tokens_sql
 
 INCR_SALT = "incr#"
 BATCH_PCT = 20        # doc_id bucket < BATCH_PCT → the "new batch"
@@ -63,24 +63,14 @@ def wordset_fingerprint(text: Column) -> Column:
     return F.md5(F.concat_ws(" ", ws).cast("binary"))
 
 
-def incremental_dedup(
-    docs: DataFrame,
-    batch_pct: int = BATCH_PCT,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    key: str = "wordset",
-) -> DataFrame:
+def incremental_dedup(docs: DataFrame, batch_pct: int = BATCH_PCT) -> DataFrame:
     """Admission manifest for the new batch: ``doc_id, fingerprint,
-    verdict`` (``accept`` | ``dup_corpus`` | ``dup_batch``).
-
-    ``key``: ``"wordset"`` (permutation-invariant canonical key —
-    :func:`wordset_fingerprint`) or ``"exact"`` (normalized-text md5,
-    :func:`~..operators.text.fingerprint`)."""
-    fp = {"wordset": wordset_fingerprint, "exact": fingerprint}[key]
+    verdict`` (``accept`` | ``dup_corpus`` | ``dup_batch``), keyed on the
+    permutation-invariant :func:`wordset_fingerprint`."""
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        fp(F.col(text_col)).alias("fingerprint"),
-        _salted_bucket(F.col(id_col), INCR_SALT, 100).alias("bucket"),
+        F.col("doc_id"),
+        wordset_fingerprint(F.col("text")).alias("fingerprint"),
+        _salted_bucket(F.col("doc_id"), INCR_SALT, 100).alias("bucket"),
     )
     corpus_fp = (
         base.filter(F.col("bucket") >= batch_pct)
@@ -104,25 +94,12 @@ def incremental_dedup(
     )
 
 
-def incremental_dedup_sql(
-    table: str, batch_pct: int = BATCH_PCT, key: str = "wordset"
-) -> str:
+def incremental_dedup_sql(table: str) -> str:
     """DuckDB oracle twin (same fingerprint recipe, same salted split,
     same precedence)."""
-    fp_sql = {
-        "wordset": (
-            "md5(array_to_string(list_sort(list_distinct("
-            f"{tokens_sql('text')})), ' '))"
-        ),
-        "exact": (
-            # explicit Java-equivalent classes + two-arg trim: RE2's \s
-            # omits \x0B and DuckDB's one-arg trim strips unicode
-            # whitespace (see operators/text.py engine-seam notes)
-            "md5(trim(regexp_replace(regexp_replace(lower(text), "
-            "'[^\\w \\t\\n\\x0B\\f\\r]', '', 'g'), "
-            "'[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'), ' '))"
-        ),
-    }[key]
+    fp_sql = (
+        f"md5(array_to_string(list_sort(list_distinct({tokens_sql('text')})), ' '))"
+    )
     return f"""
 WITH
   base AS (
@@ -133,12 +110,12 @@ WITH
     FROM {table}
   ),
   corpus AS (
-    SELECT DISTINCT fingerprint, 1 AS in_corpus FROM base WHERE bucket >= {batch_pct}
+    SELECT DISTINCT fingerprint, 1 AS in_corpus FROM base WHERE bucket >= {BATCH_PCT}
   ),
   batch AS (
     SELECT doc_id, fingerprint,
            MIN(doc_id) OVER (PARTITION BY fingerprint) AS first_id
-    FROM base WHERE bucket < {batch_pct}
+    FROM base WHERE bucket < {BATCH_PCT}
   )
 SELECT b.doc_id, b.fingerprint,
        CASE WHEN c.in_corpus IS NOT NULL THEN 'dup_corpus'
@@ -148,29 +125,22 @@ FROM batch b LEFT JOIN corpus c USING (fingerprint)
 """
 
 
-def with_shard(
-    docs: DataFrame, n_shards: int = N_SHARDS, id_col: str = "doc_id"
-) -> DataFrame:
+def with_shard(docs: DataFrame) -> DataFrame:
     """Append the deterministic ``shard`` column (use as the
     ``repartition``/``partitionBy`` key for the physical export)."""
     return docs.withColumn(
-        "shard", _salted_bucket(F.col(id_col), SHARD_SALT, n_shards)
+        "shard", _salted_bucket(F.col("doc_id"), SHARD_SALT, N_SHARDS)
     )
 
 
-def shard_manifest(
-    docs: DataFrame,
-    n_shards: int = N_SHARDS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def shard_manifest(docs: DataFrame) -> DataFrame:
     """Per-shard audit manifest: ``shard, n_docs, min_doc, max_doc,
     total_tokens, total_chars``."""
-    staged = with_shard(docs, n_shards, id_col).select(
+    staged = with_shard(docs).select(
         "shard",
-        F.col(id_col).alias("doc_id"),
-        token_count(F.col(text_col)).cast("long").alias("n_tok"),
-        F.length(F.col(text_col)).cast("long").alias("n_chr"),
+        F.col("doc_id"),
+        token_count(F.col("text")).cast("long").alias("n_tok"),
+        F.length(F.col("text")).cast("long").alias("n_chr"),
     )
     return staged.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -181,11 +151,11 @@ def shard_manifest(
     )
 
 
-def shard_manifest_sql(table: str, n_shards: int = N_SHARDS) -> str:
+def shard_manifest_sql(table: str) -> str:
     """DuckDB oracle twin of :func:`shard_manifest`."""
     return rf"""
 SELECT CAST(('0x' || substr(md5('{SHARD_SALT}' || CAST(doc_id AS VARCHAR)), 1, 8))
-            AS BIGINT) % {n_shards} AS shard,
+            AS BIGINT) % {N_SHARDS} AS shard,
        COUNT(*) AS n_docs,
        MIN(doc_id) AS min_doc,
        MAX(doc_id) AS max_doc,

@@ -54,51 +54,43 @@ def height_weight(
     obs: DataFrame,
     height_names: Sequence[str] = HEIGHT_NAMES,
     weight_names: Sequence[str] = WEIGHT_NAMES,
-    patient_col: str = "patient_id",
-    code_col: str = "code_display",
-    value_col: str = "value_quantity",
-    order_col: str = "effective_datetime",
-    tiebreak: str = "observation_id",
-    with_bmi: bool = True,
 ) -> DataFrame:
     """Latest height and weight per patient (reference
     ``get_height_weight``, test.py:265-293: filter ``code_display`` by the
     HEIGHT_NAMES/WEIGHT_NAMES sets at :133-141, sort by
     ``effective_datetime`` desc, take the first row — undated rows sort
     LAST, mirrored here by the leading ``isNotNull`` struct field; ties
-    stabilized on ``tiebreak``).
+    stabilized on ``observation_id``).
 
     The reference fetches one patient at a time in pandas; this is the
     distributed form — ONE hash aggregate over all patients (conditional
     ``max_by`` legs share the shuffle; no window sort, map-side partials).
 
-    ``with_bmi`` (extension — the reference displays height/weight only,
+    ``bmi`` (extension — the reference displays height/weight only,
     test.py:454-464): ``weight_kg / (height_cm/100)²`` when both present."""
-    is_h = F.col(code_col).isin(list(height_names))
-    is_w = F.col(code_col).isin(list(weight_names))
+    is_h = F.col("code_display").isin(list(height_names))
+    is_w = F.col("code_display").isin(list(weight_names))
     order = [
-        F.col(order_col).isNotNull().cast("int"),
-        F.col(order_col),
-        F.col(tiebreak),
+        F.col("effective_datetime").isNotNull().cast("int"),
+        F.col("effective_datetime"),
+        F.col("observation_id"),
     ]
-    out = (
+    hm = F.col("height_cm") / 100.0
+    return (
         obs.filter(is_h | is_w)
-        .groupBy(F.col(patient_col))
+        .groupBy(F.col("patient_id"))
         .agg(
-            latest_leg(is_h, F.col(value_col), order).alias("height_cm"),
-            latest_leg(is_w, F.col(value_col), order).alias("weight_kg"),
+            latest_leg(is_h, F.col("value_quantity"), order).alias("height_cm"),
+            latest_leg(is_w, F.col("value_quantity"), order).alias("weight_kg"),
         )
-    )
-    if with_bmi:
-        hm = F.col("height_cm") / 100.0
-        out = out.withColumn(
+        .withColumn(
             "bmi",
             F.when(
                 (F.col("height_cm") > 0) & F.col("weight_kg").isNotNull(),
                 F.col("weight_kg") / (hm * hm),
             ),
         )
-    return out
+    )
 
 
 def first_last_delta(

@@ -135,25 +135,23 @@ def _decode_bytes(content: bytes, n: int, deterministic_fake: bool) -> list[floa
 def media_features(
     media: DataFrame,
     dim: int = 16,
-    keep_content: bool = False,
     deterministic_fake: bool = True,
 ) -> DataFrame:
     """media → fixed-width feature vector per row (the decode+embed stage).
 
     mapInPandas: one Arrow batch in, one out; the binary column is dropped
-    from the OUTPUT schema by default so only (ids, meta, features) flow
+    from the OUTPUT schema so only (ids, meta, features) flow
     downstream."""
     import pandas as pd
 
-    fields = [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("meta", MEDIA_META),
-        StructField("features", ArrayType(FloatType())),
-    ]
-    if keep_content:
-        fields.insert(2, StructField("content", BinaryType()))
-    out_schema = StructType(fields)
+    out_schema = StructType(
+        [
+            StructField("media_id", LongType()),
+            StructField("kind", StringType()),
+            StructField("meta", MEDIA_META),
+            StructField("features", ArrayType(FloatType())),
+        ]
+    )
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -161,15 +159,14 @@ def media_features(
                 _decode_bytes(c, dim, deterministic_fake)
                 for c in pdf["content"]
             ]
-            cols = {
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "meta": pdf["meta"],
-                "features": feats,
-            }
-            if keep_content:
-                cols["content"] = pdf["content"]
-            yield pd.DataFrame(cols)[[f.name for f in out_schema.fields]]
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "kind": pdf["kind"],
+                    "meta": pdf["meta"],
+                    "features": feats,
+                }
+            )
 
     return media.mapInPandas(extract, schema=out_schema)
 
@@ -188,7 +185,6 @@ def sample_frames(
     media: DataFrame,
     every_ms: int = 1000,
     max_frames: int = 32,
-    deterministic_fake: bool = True,
 ) -> DataFrame:
     """Video → one row per sampled frame (1→N fan-out inside mapInPandas;
     frames for a batch are produced incrementally, never one whole video's
@@ -210,14 +206,6 @@ def sample_frames(
                     ids.append(media_id)
                     idxs.append(i)
                     mss.append(i * every_ms)
-                    if not deterministic_fake:
-                        # no uncompressed VIDEO container in
-                        # media_codecs (images/audio only) — real frame
-                        # extraction needs an external codec library
-                        raise ValueError(
-                            "real frame sampling requires a video codec; "
-                            "media_codecs covers PPM/BMP/WAV only"
-                        )
                     # md5 + ASCII salt (not raw-byte salts): the DuckDB
                     # oracle rebuilds this as md5(text || '#frame:' || i)
                     frames.append(

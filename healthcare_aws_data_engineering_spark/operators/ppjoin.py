@@ -273,20 +273,18 @@ def _grouped_prefix_join(
     return cross.unionByName(intra)
 
 
-def brute_force_sql(
-    t100: int = PPJ_T100, shingle_w: int = PPJ_SHINGLE_W
-) -> str:
+def brute_force_sql() -> str:
     """Independent all-pairs oracle: equality with the prefix-filtered
     output IS the exactness guarantee."""
-    parts = " || ' ' || ".join(f"w[i+{j}]" for j in range(shingle_w))
+    parts = " || ' ' || ".join(f"w[i+{j}]" for j in range(PPJ_SHINGLE_W))
     return f"""
 WITH toks AS (
   SELECT DISTINCT id, tok FROM (
     SELECT doc_id AS id,
-           unnest(list_transform(range(1, len(w) - {shingle_w - 2}),
+           unnest(list_transform(range(1, len(w) - {PPJ_SHINGLE_W - 2}),
                   i -> {parts})) AS tok
     FROM (SELECT doc_id, {tokens_sql('text')} AS w FROM documents)
-    WHERE len(w) >= {shingle_w}
+    WHERE len(w) >= {PPJ_SHINGLE_W}
   )
 ),
 sizes AS (
@@ -303,5 +301,5 @@ SELECT i.a_id, i.b_id, i.shared,
 FROM inter i
 JOIN sizes sa ON i.a_id = sa.id
 JOIN sizes sb ON i.b_id = sb.id
-WHERE i.shared * 100 >= (sa.sz + sb.sz - i.shared) * {t100}
+WHERE i.shared * 100 >= (sa.sz + sb.sz - i.shared) * {PPJ_T100}
 """

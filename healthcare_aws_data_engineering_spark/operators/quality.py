@@ -94,9 +94,7 @@ def quality_score(ws: Column) -> tuple[Column, Column]:
     return n.cast("long"), logit
 
 
-def classify_quality(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def classify_quality(docs: DataFrame) -> DataFrame:
     """Per-document quality logits + binary keep label.
 
     Output: ``(doc_id, n_bigrams, logit_e6, label)`` — ``label=1`` when
@@ -104,8 +102,8 @@ def classify_quality(
     zero shuffle (plan-tested).
     """
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokens_staged(F.col(text_col)).alias("__ws"),
+        F.col("doc_id"),
+        tokens_staged(F.col("text")).alias("__ws"),
     )
     n, logit = quality_score(F.col("__ws"))
     return staged.select(
@@ -116,13 +114,13 @@ def classify_quality(
     )
 
 
-def classifier_sql(table: str = "documents") -> str:
+def classifier_sql() -> str:
     """DuckDB twin of :func:`classify_quality` (same md5 weight grid)."""
     return f"""
 WITH toks AS (
   SELECT doc_id,
          list_slice({tokens_sql('text')}, 1, {CLS_MAX_TOKENS}) AS ws
-  FROM {table}
+  FROM documents
 ),
 feats AS (
   SELECT doc_id, len(ws) - 1 AS n,
@@ -153,9 +151,7 @@ FROM scored
 INT8_LEVELS = 255
 
 
-def int8_audit(
-    corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def int8_audit(corpus: DataFrame) -> DataFrame:
     """Per-vector int8 scalar-quantization audit: quantize each vector to
     255 levels over its own [min, max] range and report the exact
     reconstruction error — the go/no-go table for shipping an int8 index.
@@ -170,8 +166,8 @@ def int8_audit(
     """
     from .similarity import quantize_vec
 
-    q = quantize_vec(F.col(vec_col))
-    staged = corpus.select(F.col(id_col).alias("vec_id"), q.alias("__q"))
+    q = quantize_vec(F.col("embedding"))
+    staged = corpus.select(F.col("vec_id"), q.alias("__q"))
     mn = F.array_min(F.col("__q"))
     mx = F.array_max(F.col("__q"))
     span = (mx - mn).alias("__span")
@@ -204,7 +200,7 @@ def int8_audit(
     )
 
 
-def int8_audit_sql(table: str = "embeddings") -> str:
+def int8_audit_sql() -> str:
     """DuckDB twin of :func:`int8_audit` (same grids, same rounding)."""
     return f"""
 WITH qe AS (
@@ -212,7 +208,7 @@ WITH qe AS (
     embedding,
     x -> CAST(CAST(CAST(x AS DOUBLE) AS DECIMAL(18,6)) * 1000000 AS BIGINT)
   ) AS q
-  FROM {table}
+  FROM embeddings
 ),
 rng AS (
   SELECT vec_id, q, list_min(q) AS mn, list_max(q) - list_min(q) AS span

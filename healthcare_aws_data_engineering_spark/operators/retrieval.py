@@ -34,17 +34,10 @@ from .text import token_count, tokens
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+RRF_C = 60  # reciprocal-rank-fusion smoothing constant
 
 
-def bm25_topk(
-    docs: DataFrame,
-    terms: list[str],
-    k: int = 25,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, terms: list[str], k: int = 25) -> DataFrame:
     """Top-k documents for a bag-of-words query under Okapi BM25.
 
     Returns ``doc_id, n_terms_hit, score`` (DOUBLE on the DECIMAL(18,6)
@@ -52,9 +45,9 @@ def bm25_topk(
     order score DESC then doc_id).
     """
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(F.col(text_col)).alias("ws"),
-        token_count(F.col(text_col)).cast("long").alias("dl"),
+        F.col("doc_id"),
+        tokens(F.col("text")).alias("ws"),
+        token_count(F.col("text")).cast("long").alias("dl"),
     )
     # Corpus scalars: one row, broadcast. (Computed over ALL docs — dl of
     # non-matching docs participates in avgdl, as BM25 requires.)
@@ -91,8 +84,11 @@ def bm25_topk(
         .withColumn(
             "leg",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
+            * (F.col("tf") * (BM25_K1 + 1))
+            / (
+                F.col("tf")
+                + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+            ),
         )
     )
     per_doc = scored.groupBy("doc_id").agg(
@@ -109,13 +105,7 @@ def bm25_topk(
     return per_doc.orderBy(F.desc("score"), "doc_id").limit(k)
 
 
-def bm25_sql(
-    table: str,
-    terms: list[str],
-    k: int = 25,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> str:
+def bm25_sql(table: str, terms: list[str], k: int = 25) -> str:
     """DuckDB oracle twin of :func:`bm25_topk` (same math, same rounding,
     same unique total order)."""
     quoted = ", ".join(f"'{t}'" for t in terms)
@@ -140,8 +130,8 @@ WITH
   scored AS (
     SELECT tf.doc_id,
            ln((stats.n_docs - df_t.df + 0.5) / (df_t.df + 0.5) + 1.0)
-             * (tf.tf * ({k1} + 1))
-             / (tf.tf + {k1} * (1 - {b} + {b} * tf.dl / stats.avgdl)) AS leg
+             * (tf.tf * ({BM25_K1} + 1))
+             / (tf.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * tf.dl / stats.avgdl)) AS leg
     FROM tf JOIN df_t USING (term) CROSS JOIN stats
   )
 SELECT doc_id, n_terms_hit, score FROM (
@@ -155,17 +145,12 @@ SELECT doc_id, n_terms_hit, score FROM (
 """
 
 
-def rrf_fuse(
-    keyword: DataFrame,
-    semantic: DataFrame,
-    k: int = 25,
-    c: int = 60,
-) -> DataFrame:
+def rrf_fuse(keyword: DataFrame, semantic: DataFrame, k: int = 25) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09) of a keyword leg
     and a semantic leg — the standard hybrid-retrieval combiner behind
     Elasticsearch/OpenSearch "hybrid search" and most RAG stacks:
 
-        rrf(d) = Σ_legs 1 / (c + rank_leg(d))      (absent leg → 0)
+        rrf(d) = Σ_legs 1 / (RRF_C + rank_leg(d))      (absent leg → 0)
 
     Inputs are the two legs' rankings (``doc_id, rank`` with rank 1-based
     and already truncated to the leg's retrieval depth). Output:
@@ -188,7 +173,7 @@ def rrf_fuse(
     sem = semantic.select(F.col("doc_id"), F.col("rank").alias("sem_rank"))
     fused = kw.join(sem, "doc_id", "full_outer")
     term = lambda col: F.coalesce(  # noqa: E731
-        F.lit(1.0).cast("double") / (F.lit(float(c)) + F.col(col)),
+        F.lit(1.0).cast("double") / (F.lit(float(RRF_C)) + F.col(col)),
         F.lit(0.0),
     )
     scored = fused.select(

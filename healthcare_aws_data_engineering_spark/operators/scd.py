@@ -21,14 +21,15 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 # engine-specific NULL rendering near the driver's value hash).
 SCD_OPEN_MS = 253_370_764_800_000
 
+# k of the k-anonymity audit: 10 keeps the violation set non-empty from
+# sf0.001 up (min group size at sf0.01 is 5) — a vacuously-empty privacy
+# audit checks nothing.
+K_ANON = 10
 
-def scd2_history(
-    versions: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "effective_ms",
-) -> DataFrame:
+
+def scd2_history(versions: DataFrame, key_cols: list[str]) -> DataFrame:
     """Build the SCD2 validity table from a stream of versioned rows:
-    each key's versions are ordered by ``ts_col`` and every version is
+    each key's versions are ordered by ``effective_ms`` and every version is
     valid from its own timestamp until the next version's (the latest
     version closes at :data:`SCD_OPEN_MS`).
 
@@ -37,9 +38,9 @@ def scd2_history(
     the full remaining column set deterministically upstream: callers
     must ensure (key, ts) is unique (true for snapshot+updates merges).
     """
-    w = W.partitionBy(*key_cols).orderBy(F.col(ts_col).asc())
+    w = W.partitionBy(*key_cols).orderBy(F.col("effective_ms").asc())
     return (
-        versions.withColumn("valid_from", F.col(ts_col).cast("long"))
+        versions.withColumn("valid_from", F.col("effective_ms").cast("long"))
         .withColumn(
             "valid_to",
             F.coalesce(
@@ -52,15 +53,13 @@ def scd2_history(
             .otherwise(F.lit(0))
             .cast("int"),
         )
-        .drop(ts_col)
+        .drop("effective_ms")
     )
 
 
-def k_anonymity(
-    df: DataFrame, qi_cols: list[str], k: int = 5
-) -> DataFrame:
+def k_anonymity(df: DataFrame, qi_cols: list[str]) -> DataFrame:
     """Quasi-identifier groups violating k-anonymity: every combination
-    of ``qi_cols`` values shared by FEWER than ``k`` rows, with its
+    of ``qi_cols`` values shared by FEWER than :data:`K_ANON` rows, with its
     count — the rows a privacy-safe extract must suppress or generalize.
 
     One hash agg (map-side combine) + a filter; at 100 TB the QI
@@ -68,5 +67,5 @@ def k_anonymity(
     return (
         df.groupBy(*qi_cols)
         .agg(F.count(F.lit(1)).alias("group_n"))
-        .filter(F.col("group_n") < k)
+        .filter(F.col("group_n") < K_ANON)
     )

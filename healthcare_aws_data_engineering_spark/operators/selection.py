@@ -48,46 +48,36 @@ def _bucket(feat: Column, buckets: int) -> Column:
     return (h % F.lit(buckets)).alias("b")
 
 
-def _features(
-    docs: DataFrame, id_col: str, text_col: str, extra_cols: list[str]
-) -> DataFrame:
-    """One row per feature OCCURRENCE (bag semantics): the document's
-    whitespace unigrams plus adjacent-pair bigrams, built in-row from
-    the split array (zip of the array with its own shift — no window,
-    no shuffle) and exploded once."""
-    ws = F.split(F.trim(F.col(text_col)), r"\s+")
+def _features(docs: DataFrame) -> DataFrame:
+    """``doc_id, lang, f``: one row per feature OCCURRENCE (bag
+    semantics): the document's whitespace unigrams plus adjacent-pair
+    bigrams, built in-row from the split array (zip of the array with
+    its own shift — no window, no shuffle) and exploded once."""
+    ws = F.split(F.trim(F.col("text")), r"\s+")
     bigrams = F.zip_with(
         F.slice(ws, 1, F.size(ws) - 1),
         F.slice(ws, 2, F.size(ws) - 1),
         lambda a, b: F.concat(a, F.lit(" "), b),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        *[F.col(c) for c in extra_cols],
+        F.col("doc_id"),
+        F.col("lang"),
         F.explode(F.concat(ws, bigrams)).alias("f"),
     )
 
 
-def dsir_select(
-    docs: DataFrame,
-    target_value: str = DSIR_TARGET_LANG,
-    target_col: str = "lang",
-    buckets: int = DSIR_BUCKETS,
-    k: int = DSIR_K,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Select the ``k`` documents OUTSIDE the target slice whose hashed
+def dsir_select(docs: DataFrame) -> DataFrame:
+    """Select the :data:`DSIR_K` documents OUTSIDE the target slice whose hashed
     n-gram profile best matches the target distribution, by Gumbel
     top-k over add-1-smoothed log importance weights.
 
     Returns (doc_id, n_feats, log_weight, dsir_score) — score-ranked,
     doubles snapped to the DECIMAL(18,6) grid for the driver hash.
     """
-    feats = _features(docs, id_col, text_col, [target_col]).select(
-        "doc_id", target_col, _bucket(F.col("f"), buckets)
+    feats = _features(docs).select(
+        "doc_id", "lang", _bucket(F.col("f"), DSIR_BUCKETS)
     )
-    is_target = F.col(target_col) == target_value
+    is_target = F.col("lang") == DSIR_TARGET_LANG
 
     # both LMs in ONE pass over the feature stream: raw count + a
     # conditional target count per bucket (single scan, single shuffle
@@ -112,8 +102,8 @@ def dsir_select(
     lr = stats.select(
         "b",
         (
-            _snap_ln((F.col("tc") + 1) / (tn + buckets).cast("double"))
-            - _snap_ln((F.col("rc") + 1) / (rn + buckets).cast("double"))
+            _snap_ln((F.col("tc") + 1) / (tn + DSIR_BUCKETS).cast("double"))
+            - _snap_ln((F.col("rc") + 1) / (rn + DSIR_BUCKETS).cast("double"))
         ).alias("lrd"),
     )
 
@@ -153,57 +143,51 @@ def dsir_select(
             score.alias("_score"),
         )
         .orderBy(F.col("_score").desc(), "doc_id")
-        .limit(k)
+        .limit(DSIR_K)
         .drop("_score")
     )
 
 
-def dsir_sql(
-    table: str = "documents",
-    target_value: str = DSIR_TARGET_LANG,
-    target_col: str = "lang",
-    buckets: int = DSIR_BUCKETS,
-    k: int = DSIR_K,
-) -> str:
+def dsir_sql() -> str:
     """DuckDB oracle twin of :func:`dsir_select`, built from the same
     constants so the two engines can never drift."""
     return f"""
 WITH
-  w AS (SELECT doc_id, {target_col},
+  w AS (SELECT doc_id, lang,
                string_split_regex(trim(text, ' '), '[ \\t\\n\\x0B\\f\\r]+') AS ws
-        FROM {table}),
+        FROM documents),
   uni AS (
-    SELECT doc_id, {target_col}, ws[i] AS f
+    SELECT doc_id, lang, ws[i] AS f
     FROM w, unnest(generate_series(1, len(ws))) AS t(i)
   ),
   big AS (
-    SELECT doc_id, {target_col}, ws[i] || ' ' || ws[i+1] AS f
+    SELECT doc_id, lang, ws[i] || ' ' || ws[i+1] AS f
     FROM w, unnest(generate_series(1, len(ws) - 1)) AS t(i)
   ),
   feats AS (
-    SELECT doc_id, {target_col},
-           CAST(('0x' || substr(md5(f), 1, 8)) AS BIGINT) % {buckets} AS b
+    SELECT doc_id, lang,
+           CAST(('0x' || substr(md5(f), 1, 8)) AS BIGINT) % {DSIR_BUCKETS} AS b
     FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)
   ),
   rc AS (SELECT b, COUNT(*) AS rc FROM feats GROUP BY b),
   tc AS (SELECT b, COUNT(*) AS tc FROM feats
-         WHERE {target_col} = '{target_value}' GROUP BY b),
+         WHERE lang = '{DSIR_TARGET_LANG}' GROUP BY b),
   rtot AS (SELECT SUM(rc) AS rn FROM rc),
   ttot AS (SELECT SUM(tc) AS tn FROM tc),
   lr AS (
     SELECT rc.b,
       CAST(ln((COALESCE(tc.tc, 0) + 1)
-              / CAST((SELECT tn FROM ttot) + {buckets} AS DOUBLE))
+              / CAST((SELECT tn FROM ttot) + {DSIR_BUCKETS} AS DOUBLE))
            AS DECIMAL(18,6))
       - CAST(ln((rc.rc + 1)
-                / CAST((SELECT rn FROM rtot) + {buckets} AS DOUBLE))
+                / CAST((SELECT rn FROM rtot) + {DSIR_BUCKETS} AS DOUBLE))
              AS DECIMAL(18,6)) AS lrd
     FROM rc LEFT JOIN tc USING (b)
   ),
   per AS (
     SELECT f.doc_id, SUM(lr.lrd) AS s, COUNT(*) AS n_feats
     FROM feats f JOIN lr USING (b)
-    WHERE f.{target_col} <> '{target_value}'
+    WHERE f.lang <> '{DSIR_TARGET_LANG}'
     GROUP BY f.doc_id
   ),
   scored AS (
@@ -219,5 +203,5 @@ SELECT doc_id, n_feats,
        CAST(CAST(round(score, 6) AS DECIMAL(18,6)) AS DOUBLE) AS dsir_score
 FROM scored
 ORDER BY score DESC, doc_id
-LIMIT {k}
+LIMIT {DSIR_K}
 """

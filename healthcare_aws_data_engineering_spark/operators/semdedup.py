@@ -47,8 +47,6 @@ def semantic_dedup(
     corpus: DataFrame,
     centroids: list[list[float]] | int | None = None,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cluster: int = 256,
     target_cluster: int = 200,
     assign: str = "auto",
@@ -106,14 +104,15 @@ def semantic_dedup(
     distance) rather than plan literals — same math, different transport;
     the bounded-literal form is what the probe and oracle exercise.
     """
-    corpus = _non_null(corpus, vec_col)
+    corpus = _non_null(corpus, "embedding")
     centroids = _coarse_centroids(
-        corpus, centroids, target_cluster, id_col, vec_col
+        corpus, centroids, target_cluster
     )
     assign = resolve_assign(assign, len(centroids))
     staged = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        quantize_vec(F.col(vec_col)).alias("__q"),
+        # aliased: the persisted assignment keeps attribute ids of its own
+        F.col("vec_id").alias("vec_id"),
+        quantize_vec(F.col("embedding")).alias("__q"),
     )
     # Persisted: the assignment is the INDEX-BUILD step (SemDeDup runs it
     # once, then pairs/report/repair all read it). Three plan subtrees
@@ -190,14 +189,10 @@ def semantic_dedup(
 def knn_graph(
     corpus: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     plane_matrix: list[list[int]] | None = None,
     bands: int | None = None,
     max_bucket: int = 200,
     target_bucket: int | None = None,
-    design_cos: float = 0.9,
-    target_recall: float = 0.8,
 ) -> DataFrame:
     """Approximate k-NN graph: for every corpus vector, its top-``k``
     cosine neighbors among vectors sharing ≥1 LSH signature band.
@@ -218,16 +213,16 @@ def knn_graph(
     when a gate-scale constant meets a 100× corpus (the r3 SCALING probe
     measured exactly that failure for pinned width 4). When ``bands`` is
     also None, the band count scales with that width via
-    :func:`similarity.bands_for` (``design_cos``/``target_recall``) —
+    :func:`similarity.bands_for` (design cosine 0.9, target recall 0.8) —
     holding the per-pair recall floor the width growth would otherwise
     erode (``tools/recall_probe.py`` measures both effects). Driver
     queries pin the matrix + bands because their DuckDB oracles bake
     them into SQL.
     """
-    corpus = _non_null(corpus, vec_col)
+    corpus = _non_null(corpus, "embedding")
     plane_matrix, width, bands = _resolve_index(
-        corpus, vec_col, plane_matrix, bands,
-        target_bucket or max_bucket, design_cos, target_recall,
+        corpus, "embedding", plane_matrix, bands,
+        target_bucket or max_bucket, 0.9, 0.8,
     )
     # Persisted for the same index-build reason as semantic_dedup: the
     # staging (quantize + signature HOFs) is referenced by the banding
@@ -237,8 +232,8 @@ def knn_graph(
     # fan-out side; r3 measurement: 7.3s → 2.6s at sf0.1).
     staged = (
         corpus.select(
-            F.col(id_col).alias("vec_id"),
-            quantize_vec(F.col(vec_col)).alias("__q"),
+            F.col("vec_id"),
+            quantize_vec(F.col("embedding")).alias("__q"),
         )
         .select(
             "vec_id",
@@ -291,7 +286,7 @@ def knn_graph(
         .dropDuplicates(["vec_id", "neighbor_id"])
     )
     qa = staged.select(
-        F.col("vec_id").alias("vec_id"),
+        F.col("vec_id"),
         F.col("__q").alias("qa"),
         F.col("__n2").alias("na"),
     )

@@ -41,26 +41,22 @@ def severity_rank(status: Column) -> Column:
     return expr.otherwise(F.lit(3))
 
 
-def severity_topk(
-    labs: DataFrame,
-    ranges: dict[str, tuple[float, float]],
-    k: int = 6,
-    patient_col: str = "patient_id",
-    analyte_col: str = "analyte",
-    value_col: str = "value",
-) -> DataFrame:
-    """Top-k most severe labs per patient.
+SEVERITY_TOP_K = 3  # labs shown per patient
+
+
+def severity_topk(labs: DataFrame, ranges: dict[str, tuple[float, float]]) -> DataFrame:
+    """The :data:`SEVERITY_TOP_K` most severe labs per patient.
 
     ``ranges``: analyte → (low, high) reference interval; analytes absent
     from the map band as Unknown (rank 3) and never surface — only
     severity < 2 rows (High/Low/Borderline) are kept, per test.py:541."""
     status = None
     for analyte, (lo, hi) in ranges.items():
-        banded = range_status_with_margins(F.col(value_col), lo, hi)
+        banded = range_status_with_margins(F.col("value"), lo, hi)
         status = (
-            F.when(F.col(analyte_col) == analyte, banded)
+            F.when(F.col("analyte") == analyte, banded)
             if status is None
-            else status.when(F.col(analyte_col) == analyte, banded)
+            else status.when(F.col("analyte") == analyte, banded)
         )
     status = status.otherwise(F.lit("Unknown")) if status is not None else F.lit("Unknown")
 
@@ -70,10 +66,10 @@ def severity_topk(
     # test.py:541: abnormal AND borderline together (severity < 2);
     # In range / Unknown rows are never selected
     kept = df.filter(F.col("severity") < 2)
-    order = W.partitionBy(patient_col).orderBy(
-        F.col("severity").asc(), F.col(analyte_col).asc()
+    order = W.partitionBy("patient_id").orderBy(
+        F.col("severity").asc(), F.col("analyte").asc()
     )
     return (
         kept.withColumn("rank", F.row_number().over(order))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= SEVERITY_TOP_K)
     )

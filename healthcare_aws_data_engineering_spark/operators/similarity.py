@@ -93,8 +93,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector (excluding self).
@@ -102,22 +100,22 @@ def cosine_topk(
     queries is expected to be small → broadcast; corpus streams through one
     pass computing Q cosines per row; per-query top-k via window over the
     (rank-filtered) candidates. Deterministic tiebreak on neighbor id."""
-    corpus = _non_null(corpus, vec_col)
-    queries = _non_null(queries, vec_col)
+    corpus = _non_null(corpus, "embedding")
+    queries = _non_null(queries, "embedding")
     # per-vector squared norms staged BEFORE the pair fan-out (r15):
     # cosine(q, c) re-folded both self-dots per PAIR — for the exact
     # decimal path that tripled the interpreted fold work; hoisted, each
     # vector's norm is computed once and the pair pays only the dot.
     # Bit-identical: the fold expression per vector is unchanged.
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _pairwise_sum(F.col(vec_col), F.col(vec_col), exact).alias("__n2q"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        _pairwise_sum(F.col("embedding"), F.col("embedding"), exact).alias("__n2q"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _pairwise_sum(F.col(vec_col), F.col(vec_col), exact).alias("__n2c"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        _pairwise_sum(F.col("embedding"), F.col("embedding"), exact).alias("__n2c"),
     )
     scored = c.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col("query_id")
@@ -135,18 +133,10 @@ def cosine_topk(
     )
 
 
-def hard_negatives(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    exact: bool = False,
-) -> DataFrame:
+def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 8) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor
     (query) vector, the ``k`` most cosine-similar corpus vectors whose
-    ``label_col`` DIFFERS from the anchor's — the near-miss negatives
+    ``label`` DIFFERS from the anchor's — the near-miss negatives
     that make embedding models learn (in-batch negatives are mostly
     easy; mining the hardest cross-label neighbors is the standard
     curriculum, e.g. dense-retrieval trainers like DPR/ANCE).
@@ -156,27 +146,28 @@ def hard_negatives(
     streams through one pass, the label-mismatch predicate drops
     same-class candidates (and self) BEFORE the per-anchor top-k window,
     so the k survivors are guaranteed genuine negatives rather than a
-    post-filtered shorter list.
+    post-filtered shorter list. Dot products accumulate on the exact
+    decimal grid, so the ranking is engine-independent.
     """
-    corpus = _non_null(corpus, vec_col)
-    queries = _non_null(queries, vec_col)
+    corpus = _non_null(corpus, "embedding")
+    queries = _non_null(queries, "embedding")
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col(label_col).alias("anchor_label"),
-        _pairwise_sum(F.col(vec_col), F.col(vec_col), exact).alias("__n2q"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.col("label").alias("anchor_label"),
+        _pairwise_sum(F.col("embedding"), F.col("embedding"), True).alias("__n2q"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(label_col).alias("neg_label"),
-        _pairwise_sum(F.col(vec_col), F.col(vec_col), exact).alias("__n2c"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.col("label").alias("neg_label"),
+        _pairwise_sum(F.col("embedding"), F.col("embedding"), True).alias("__n2c"),
     )
     scored = c.crossJoin(F.broadcast(q)).filter(
         F.col("neg_label") != F.col("anchor_label")
     )
     # hoisted-norm cosine (see cosine_topk) — bit-identical, 1/3 the folds
-    sim = _pairwise_sum(F.col("q_vec"), F.col("c_vec"), exact) / (
+    sim = _pairwise_sum(F.col("q_vec"), F.col("c_vec"), True) / (
         F.sqrt("__n2q") * F.sqrt("__n2c")
     )
     w = W.partitionBy("query_id").orderBy(
@@ -191,9 +182,7 @@ def hard_negatives(
     )
 
 
-def rademacher_planes(
-    planes: int, dim: int, salt: str = "hyperplane"
-) -> list[list[int]]:
+def rademacher_planes(planes: int, dim: int) -> list[list[int]]:
     """±1 hyperplane components derived from md5 (Python-side, so the SAME
     constants can be embedded as literals in both the Spark plan and a SQL
     oracle string). Rademacher (±1) components are a standard sign-random-
@@ -204,7 +193,7 @@ def rademacher_planes(
     return [
         [
             1
-            if hashlib.md5(f"{salt}:{p}:{i}".encode()).hexdigest()[0] >= "8"
+            if hashlib.md5(f"hyperplane:{p}:{i}".encode()).hexdigest()[0] >= "8"
             else -1
             for i in range(dim)
         ]
@@ -367,7 +356,6 @@ def derive_index(
     target_bucket: int = 200,
     design_cos: float = 0.9,
     target_recall: float = 0.8,
-    salt: str = "hyperplane",
     hamming1: bool = False,
 ) -> tuple[list[list[int]], int, int]:
     """Fully-derived LSH index geometry ``(plane_matrix, width, bands)``:
@@ -383,7 +371,7 @@ def derive_index(
     dim = len(head[0]) if head and head[0] is not None else 1
     width = width_for(n_rows, target_bucket)
     bands = bands_for(width, design_cos, target_recall, hamming1=hamming1)
-    return rademacher_planes(bands * width, dim, salt), width, bands
+    return rademacher_planes(bands * width, dim), width, bands
 
 
 def _resolve_index(
@@ -445,7 +433,6 @@ def derive_planes(
     vec_col: str = "embedding",
     bands: int = 4,
     target_bucket: int = 200,
-    salt: str = "hyperplane",
 ) -> list[list[int]]:
     """Size an LSH plane matrix to the corpus: ``bands ×``
     :func:`width_for` Rademacher planes of the corpus' dimensionality.
@@ -460,7 +447,7 @@ def derive_planes(
     head = corpus.select(vec_col).first()
     dim = len(head[0]) if head and head[0] is not None else 1
     return rademacher_planes(
-        bands * width_for(n_rows, target_bucket), dim, salt
+        bands * width_for(n_rows, target_bucket), dim
     )
 
 
@@ -972,32 +959,21 @@ def _centroid_cell_two_level(
     return F.element_at(F.element_at(ids_lit, coarse + 1), pos).cast("int")
 
 
-def sample_centroids(
-    corpus: DataFrame,
-    n: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
+def sample_centroids(corpus: DataFrame, n: int) -> list[list[float]]:
     """Deterministic hash-stratified centroid sample: the ``n`` corpus
     vectors ranked first by md5 of their id string. Unbiased by id order
     (unlike first-n-by-id), reproducible on any engine with md5(), and the
     collect is bounded at ``n`` rows."""
     rows = (
-        _non_null(corpus, vec_col).select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string").cast("binary")), F.col(id_col))
+        _non_null(corpus, "embedding").select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string").cast("binary")), F.col("vec_id"))
         .limit(n)
         .collect()
     )
     return [[float(x) for x in r[1]] for r in rows]
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    n: int,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-) -> list[list[float]]:
+def kmeans_centroids(corpus: DataFrame, n: int) -> list[list[float]]:
     """Trained coarse quantizer: seed-fixed ``pyspark.ml.clustering.KMeans``
     centers. Centers are the only driver-side state (n × dim floats).
     Prefer over :func:`sample_centroids` when corpus geometry is
@@ -1009,19 +985,19 @@ def kmeans_centroids(
     seed and Lloyd's steps fold per partition, so a multi-partition fit
     gives centers that depend on the input layout (and so on the core
     count). One sorted partition makes them a function of the corpus
-    and ``seed`` alone. It runs on one core: fit a sample of a large
+    and the fixed seed (42) alone. It runs on one core: fit a sample of a large
     corpus."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     feats = (
-        _non_null(corpus, vec_col)
-        .select(F.col(vec_col).cast("array<double>").alias("__v"))
+        _non_null(corpus, "embedding")
+        .select(F.col("embedding").cast("array<double>").alias("__v"))
         .coalesce(1)
         .sortWithinPartitions("__v")
         .select(array_to_vector(F.col("__v")).alias("features"))
     )
-    model = KMeans(k=n, seed=seed, maxIter=max_iter).fit(feats)
+    model = KMeans(k=n, seed=42, maxIter=20).fit(feats)
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
@@ -1029,8 +1005,6 @@ def _coarse_centroids(
     corpus: DataFrame,
     centroids: list[list[float]] | int | None,
     target_cell: int,
-    id_col: str,
-    vec_col: str,
 ) -> list[list[float]]:
     """The coarse quantizer of an IVF or SemDeDup index. ``None`` derives
     the cell count from the corpus at index-build time (:func:`cells_for`,
@@ -1040,7 +1014,7 @@ def _coarse_centroids(
     clustered corpus — is used as given."""
     if centroids is None or isinstance(centroids, int):
         n = cells_for(corpus.count(), target_cell) if centroids is None else centroids
-        return sample_centroids(corpus, n, id_col, vec_col)
+        return sample_centroids(corpus, n)
     return [[float(x) for x in c] for c in centroids]
 
 
@@ -1048,8 +1022,6 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int | None = None,
     n_probe: int = 4,
     centroids: list[list[float]] | None = None,
@@ -1094,17 +1066,17 @@ def ivf_topk(
     broadcast TABLE instead of plan literals — same note as
     ``semantic_dedup``); the probe join is an equi-join on cell id;
     rerank cost is |candidates| dot products."""
-    corpus = _non_null(corpus, vec_col)
-    queries = _non_null(queries, vec_col)
+    corpus = _non_null(corpus, "embedding")
+    queries = _non_null(queries, "embedding")
     cents = _coarse_centroids(
         corpus, n_centroids if centroids is None else centroids,
-        target_cell, id_col, vec_col,
+        target_cell,
     )
     # exact mode: distances run on the staged quantized vector (__q)
     c_pre = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("neighbor_vec"),
-        (quantize_vec(F.col(vec_col)) if exact else F.col(vec_col)).alias("__v"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("neighbor_vec"),
+        (quantize_vec(F.col("embedding")) if exact else F.col("embedding")).alias("__v"),
     )
     assign = resolve_assign(assign, len(cents))
     cell_of = (
@@ -1132,9 +1104,9 @@ def ivf_topk(
     )
     q_probe = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("query_vec"),
-            (quantize_vec(F.col(vec_col)) if exact else F.col(vec_col)).alias(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+            (quantize_vec(F.col("embedding")) if exact else F.col("embedding")).alias(
                 "__v"
             ),
         )
@@ -1170,22 +1142,17 @@ def ivf_topk(
 def embedding_near_dup(
     corpus: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bands: int | None = None,
-    max_bucket: int = 200,
     plane_matrix: list[list[int]] | None = None,
-    target_bucket: int | None = None,
-    target_recall: float = 0.8,
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ threshold), LSH-bucketed: pair
-    fan-out happens only inside signature buckets (size-capped).
+    fan-out happens only inside signature buckets (capped at 200).
 
     ``plane_matrix``: engine-reproducible literal planes, for the DuckDB
     oracle (see :func:`lsh_topk`, needs explicit ``bands``); ``None``
     (production default) derives the index geometry from the corpus at
     build time — band width from corpus size (:func:`width_for`, bucket
-    population ≈ ``target_bucket``, default ``max_bucket``) and, when
+    population ≈ the 200-row cap) and, when
     ``bands`` is also None, band count from the dedup threshold itself
     (:func:`bands_for` with ``design_cos=threshold`` — the operator's
     own contract similarity is the recall design point), so BOTH the
@@ -1195,14 +1162,14 @@ def embedding_near_dup(
     banding, capping, and the bucket self-join — band keys and the exact
     integer cosine both read it (r2 carried the raw vector and re-derived
     exactness via a per-pair decimal fold, ~1.5× the cost)."""
-    corpus = _non_null(corpus, vec_col)
+    corpus = _non_null(corpus, "embedding")
     plane_matrix, width, bands = _resolve_index(
-        corpus, vec_col, plane_matrix, bands,
-        target_bucket or max_bucket, threshold, target_recall,
+        corpus, "embedding", plane_matrix, bands,
+        200, threshold, 0.8,
     )
     staged = corpus.select(
-        F.col(id_col).alias("doc"),
-        quantize_vec(F.col(vec_col)).alias("__q"),
+        F.col("vec_id").alias("doc"),
+        quantize_vec(F.col("embedding")).alias("__q"),
     ).select(
         "doc",
         F.col("__q").alias("vec"),
@@ -1232,7 +1199,7 @@ def embedding_near_dup(
     # array lambdas and why the cap is a window, not a groupBy branch).
     from .dedup import _bucket_cap
 
-    capped = _bucket_cap(banded, "band_key", max_bucket).select(
+    capped = _bucket_cap(banded, "band_key", 200).select(
         "band", "band_key", "doc", "vec", "__n2"
     )
     pairs = (
@@ -1284,19 +1251,13 @@ PQ_M = 8          # subspaces
 PQ_CODES = 16     # codes per subspace
 
 
-def pq_codebooks(
-    corpus: DataFrame,
-    m: int = PQ_M,
-    n_codes: int = PQ_CODES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[int]]]:
+def pq_codebooks(corpus: DataFrame, n_codes: int = PQ_CODES) -> list[list[list[int]]]:
     """[m][n_codes][sub_dim] QUANTIZED codebooks: the md5-stratified
     sample vectors sliced per subspace (deterministic, engine-replayable;
     a trained per-subspace KMeans drops in for clustered corpora the same
     way kmeans_centroids does for IVF)."""
     return pq_codebooks_from_sample(
-        sample_centroids(corpus, n_codes, id_col, vec_col), m
+        sample_centroids(corpus, n_codes), PQ_M
     )
 
 
@@ -1329,20 +1290,15 @@ def _pq_subdists(qvec: Column, book: list[list[int]], s: int, d: int) -> Column:
     )
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
     """``vec_id, codes`` (array<int>, one code per subspace — argmin
     sub-distance, smallest code on ties). Pure projection against the
     literal codebooks: no shuffle, no vector retained."""
     m = len(codebooks)
     d = len(codebooks[0][0])
-    staged = _non_null(corpus, vec_col).select(
-        F.col(id_col).alias("vec_id"),
-        quantize_vec(F.col(vec_col)).alias("__q"),
+    staged = _non_null(corpus, "embedding").select(
+        F.col("vec_id").alias("vec_id"),
+        quantize_vec(F.col("embedding")).alias("__q"),
     )
     # ONE vectorized Arrow stage for all m subspace argmins (r15): the
     # per-row expression form ran m × codes × sub_dim interpreted HOF
@@ -1380,8 +1336,6 @@ def pq_topk(
     queries: DataFrame,
     k: int = 10,
     codebooks: list[list[list[int]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k: ``query_id, neighbor_id, adist, rank`` (adist = exact
     long Σ of looked-up squared sub-distances; unique order adist ASC,
@@ -1391,13 +1345,13 @@ def pq_topk(
     projection and BROADCAST; the corpus side is only (vec_id, codes) —
     the scan that would be 100 TB of floats is a few TB of codes."""
     if codebooks is None:
-        codebooks = pq_codebooks(corpus, id_col=id_col, vec_col=vec_col)
+        codebooks = pq_codebooks(corpus)
     m = len(codebooks)
     d = len(codebooks[0][0])
-    enc = pq_encode(corpus, codebooks, id_col, vec_col)
-    qstaged = _non_null(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        quantize_vec(F.col(vec_col)).alias("__q"),
+    enc = pq_encode(corpus, codebooks)
+    qstaged = _non_null(queries, "embedding").select(
+        F.col("vec_id").alias("query_id"),
+        quantize_vec(F.col("embedding")).alias("__q"),
     )
     qtab = qstaged.select(
         "query_id",
@@ -1434,10 +1388,7 @@ def pq_topk(
 def residual_codebooks(
     corpus: DataFrame,
     cents: list[list[float]],
-    m: int = PQ_M,
     n_codes: int = PQ_CODES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[int]]]:
     """Shared RESIDUAL codebooks (the IVFADC form of Jégou et al. 2011):
     the md5-stratified sample vectors, each reduced to (vector − its
@@ -1453,7 +1404,7 @@ def residual_codebooks(
     :func:`pq_codebooks` — absolute books price ADC in a mismatched
     space silently (r13 advice; ``ivfpq_topk`` flags the obvious
     mismatch heuristically)."""
-    sample = sample_centroids(corpus, n_codes, id_col, vec_col)
+    sample = sample_centroids(corpus, n_codes)
     qcents = [[quantize_py(x) for x in c] for c in cents]
     res = []
     for v in sample:
@@ -1462,18 +1413,16 @@ def residual_codebooks(
         cell = dists.index(min(dists))
         res.append([a - b for a, b in zip(qv, qcents[cell])])
     dim = len(res[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d = dim // m
-    return [[v[s * d : (s + 1) * d] for v in res] for s in range(m)]
+    if dim % PQ_M:
+        raise ValueError(f"dim {dim} not divisible by m={PQ_M}")
+    d = dim // PQ_M
+    return [[v[s * d : (s + 1) * d] for v in res] for s in range(PQ_M)]
 
 
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int | None = None,
     n_probe: int = 4,
     centroids: list[list[float]] | None = None,
@@ -1525,17 +1474,17 @@ def ivfpq_topk(
     equi-join on cell id; the only wide exchange is the final
     per-query top-k window over ≈ n_probe·target_cell candidate rows.
     """
-    corpus = _non_null(corpus, vec_col)
-    queries = _non_null(queries, vec_col)
+    corpus = _non_null(corpus, "embedding")
+    queries = _non_null(queries, "embedding")
     cents = _coarse_centroids(
         corpus, n_centroids if centroids is None else centroids,
-        target_cell, id_col, vec_col,
+        target_cell,
     )
     if codebooks is None:
         codebooks = (
-            residual_codebooks(corpus, cents, id_col=id_col, vec_col=vec_col)
+            residual_codebooks(corpus, cents)
             if residual
-            else pq_codebooks(corpus, id_col=id_col, vec_col=vec_col)
+            else pq_codebooks(corpus)
         )
     elif residual:
         # r13 advice: caller-supplied books with residual=True must be
@@ -1566,8 +1515,6 @@ def ivfpq_topk(
         corpus,
         cents,
         codebooks,
-        id_col=id_col,
-        vec_col=vec_col,
         residual=residual,
         assign=assign,
     )
@@ -1578,8 +1525,6 @@ def ivfpq_topk(
         codebooks,
         k=k,
         n_probe=n_probe,
-        id_col=id_col,
-        vec_col=vec_col,
         residual=residual,
     )
 
@@ -1613,8 +1558,6 @@ def ivfpq_index_rows(
     corpus: DataFrame,
     cents: list[list[float]],
     codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     residual: bool = False,
     assign: str = "auto",
 ) -> DataFrame:
@@ -1635,8 +1578,8 @@ def ivfpq_index_rows(
         _centroid_cell_two_level if assign == "two_level" else _centroid_cell
     )
     staged = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantize_vec(F.col(vec_col)).alias("__q"),
+        F.col("vec_id").alias("neighbor_id"),
+        quantize_vec(F.col("embedding")).alias("__q"),
     ).select(
         "neighbor_id",
         "__q",
@@ -1660,8 +1603,6 @@ def ivfpq_serve(
     codebooks: list[list[list[int]]],
     k: int = 10,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     residual: bool = False,
 ) -> DataFrame:
     """The IVF-PQ SERVE side factored out of :func:`ivfpq_topk` (r15):
@@ -1675,8 +1616,8 @@ def ivfpq_serve(
     d = len(codebooks[0][0])
     _carrier = _residual_carrier(cents, residual)
     qstaged = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize_vec(F.col(vec_col)).alias("__q"),
+        F.col("vec_id").alias("query_id"),
+        quantize_vec(F.col("embedding")).alias("__q"),
     )
     qdists = _cell_dists(F.col("__q"), cents, exact=True)
     indexed = F.zip_with(

@@ -51,14 +51,14 @@ def distinct_sketch(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    k: int = SKETCH_K,
-    include_exact: bool = False,
+    include_exact: bool = True,
 ) -> DataFrame:
     """Per-group estimated distinct count of ``value_col`` (the k
     min-hash sketch internals folded away). Returns ``group_col,
-    est_distinct`` (double), plus ``exact_distinct`` when
-    ``include_exact`` (for error-bound checks — at real scale you run
-    the sketch INSTEAD of the exact distinct, that being the point)."""
+    est_distinct`` (double), plus ``exact_distinct`` unless
+    ``include_exact=False`` (the driver query reports both; at real
+    scale you run the sketch INSTEAD of the exact distinct, that being
+    the point)."""
     h1, h2 = digest_halves(F.col(value_col).cast("string"))
     staged_cols = [F.col(group_col), h1.alias("__h1"), h2.alias("__h2")]
     if include_exact:
@@ -66,16 +66,16 @@ def distinct_sketch(
     staged = df.select(*staged_cols)
     u = [
         ((F.col("__h1") + i * F.col("__h2")) % _TWO32) / F.lit(float(_TWO32))
-        for i in range(k)
+        for i in range(SKETCH_K)
     ]
-    aggs = [F.min(u[i]).alias(f"__m{i}") for i in range(k)]
+    aggs = [F.min(u[i]).alias(f"__m{i}") for i in range(SKETCH_K)]
     if include_exact:
         aggs = [F.count_distinct(F.col(value_col)).alias("exact_distinct")] + aggs
     agg = staged.groupBy(group_col).agg(*aggs)
     total = None
-    for i in range(k):
+    for i in range(SKETCH_K):
         total = F.col(f"__m{i}") if total is None else total + F.col(f"__m{i}")
-    est = (F.lit(float(k)) / total) - 1.0
+    est = (F.lit(float(SKETCH_K)) / total) - 1.0
     keep = [group_col] + (["exact_distinct"] if include_exact else [])
     return agg.select(*keep, est.alias("est_distinct"))
 
@@ -89,6 +89,7 @@ def distinct_sketch(
 # cumulative count first reaches ceil(q·n) — deterministic integer math,
 # so it replays exactly in any engine (no interpolation, no float sums).
 HIST_BINS = 64
+HIST_QS = (50, 90, 99)  # percentiles reported as p50, p90, p99
 
 
 def hist_quantiles(
@@ -97,16 +98,15 @@ def hist_quantiles(
     value_col: str,
     lo: float,
     hi: float,
-    qs: tuple[int, ...] = (50, 90, 99),
-    bins: int = HIST_BINS,
 ) -> DataFrame:
     """Per-group approximate quantiles from a fixed [lo, hi) equi-width
-    histogram. Returns ``group_col, n_rows, p<q>...`` (bin upper edges,
+    histogram. Returns ``group_col, n_rows, p<q>`` for each
+    :data:`HIST_QS` percentile (bin upper edges,
     error ≤ one bin width). Values outside [lo, hi) clamp to the edge
     bins (same rule both engines)."""
-    w = (hi - lo) / bins
+    w = (hi - lo) / HIST_BINS
     bin_col = F.least(
-        F.lit(bins - 1),
+        F.lit(HIST_BINS - 1),
         F.greatest(
             F.lit(0),
             F.floor((F.col(value_col).cast("double") - lo) / w).cast("int"),
@@ -126,7 +126,7 @@ def hist_quantiles(
         ),
     ).withColumn("n", F.sum("c").over(W.partitionBy(group_col)))
     aggs = [F.first("n").alias("n_rows")]
-    for q in qs:
+    for q in HIST_QS:
         # smallest bin whose cumulative count reaches ceil(q·n/100):
         # min() over bins satisfying the threshold — integer math only.
         target = (F.col("n") * q + 99) / 100  # ceil via integer arithmetic
@@ -142,7 +142,7 @@ def hist_quantiles(
         (F.lit(float(lo)) + (F.col(f"__b{q}") + 1) * F.lit(float(w))).alias(
             f"p{q}"
         )
-        for q in qs
+        for q in HIST_QS
     ]
     return out.select(group_col, "n_rows", *edges)
 
@@ -222,19 +222,13 @@ def cms_heavy_hitters(
     )
 
 
-def cms_sql(
-    source_sql: str,
-    value_col: str,
-    top_k: int = 40,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> str:
+def cms_sql(source_sql: str, value_col: str, top_k: int = 40) -> str:
     """DuckDB twin of :func:`cms_heavy_hitters`. ``source_sql`` is a
     one-column-producing relation (aliased ``src``) supplying
     ``{value_col}``."""
     cell_rows = " UNION ALL ".join(
-        f"SELECT {r} AS r, CAST((__h1 + {r} * __h2) % {width} AS INT) AS cell, v FROM h"
-        for r in range(depth)
+        f"SELECT {r} AS r, CAST((__h1 + {r} * __h2) % {CMS_WIDTH} AS INT) AS cell, v FROM h"
+        for r in range(CMS_DEPTH)
     )
     return f"""
 WITH src AS ({source_sql}),
@@ -267,21 +261,19 @@ def hist_quantiles_sql(
     value_col: str,
     lo: float,
     hi: float,
-    qs: tuple[int, ...] = (50, 90, 99),
-    bins: int = HIST_BINS,
 ) -> str:
     """DuckDB twin of :func:`hist_quantiles` (same clamp, same ceil rule,
     same upper-edge estimate)."""
-    w = (hi - lo) / bins
+    w = (hi - lo) / HIST_BINS
     bcols = ",\n  ".join(
         f"CAST({float(lo)!r} AS DOUBLE) + (MIN(CASE WHEN cum >= (n * {q} + 99) // 100 "
         f"THEN bin END) + 1) * CAST({float(w)!r} AS DOUBLE) AS p{q}"
-        for q in qs
+        for q in HIST_QS
     )
     return f"""
 WITH b AS (
   SELECT {group_col},
-         LEAST({bins - 1}, GREATEST(0,
+         LEAST({HIST_BINS - 1}, GREATEST(0,
            CAST(FLOOR((CAST({value_col} AS DOUBLE) - {float(lo)!r}) / {float(w)!r}) AS INT)
          )) AS bin
   FROM {table}

@@ -106,7 +106,7 @@ def skew_audit(df: DataFrame, key_col: str, top_k: int = 5) -> DataFrame:
     )
 
 
-def skew_audit_sql(table: str, key_col: str, top_k: int = 5) -> str:
+def skew_audit_sql(table: str, key_col: str) -> str:
     """DuckDB oracle twin of :func:`skew_audit` (same constants)."""
     return f"""
 WITH counts AS (
@@ -121,5 +121,5 @@ SELECT key, cnt, t.n_rows, t.n_keys,
   CAST(ceil(CAST(cnt AS DOUBLE) * t.n_keys / CAST(t.n_rows AS DOUBLE)) AS INT) AS salt_rec
 FROM counts, tot t
 ORDER BY cnt DESC, key ASC
-LIMIT {top_k}
+LIMIT 5
 """

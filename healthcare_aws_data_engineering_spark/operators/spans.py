@@ -35,19 +35,13 @@ from .staging import staged_persist
 SPAN_TOKENS = 8
 
 
-def span_dedup(
-    docs: DataFrame,
-    span_tokens: int = SPAN_TOKENS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    emit_text: bool = False,
-) -> DataFrame:
+def span_dedup(docs: DataFrame, emit_text: bool = False) -> DataFrame:
     """Per-document result of corpus-wide span dedup: ``doc_id, n_spans,
     n_kept, dedup_len, dedup_fp`` (+ ``dedup_text`` when ``emit_text``).
     ``dedup_fp`` = md5 of the reassembled text ('' when every span of
     the doc was a repeat), so value-level correctness is checkable
     without shipping rebuilt corpora."""
-    k = span_tokens
+    k = SPAN_TOKENS
     # Deliberately split on a single space, NOT the shared \s+ tokenizer
     # (operators/text.py): spans are re-joined with ' ' to REBUILD the
     # deduplicated text, so the segmentation must round-trip the original
@@ -57,8 +51,8 @@ def span_dedup(
     # lambda re-evaluates the split per span — the O(words²) trap the
     # word_shingles docstring names.
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("__tk"),
+        F.col("doc_id"),
+        F.split(F.col("text"), " ").alias("__tk"),
     )
     n_spans = F.ceil(F.size(F.col("__tk")) / F.lit(k)).cast("int")
     spans = F.transform(
@@ -108,18 +102,13 @@ def span_dedup(
     return out.select(*cols)
 
 
-def span_dedup_sql(
-    table: str = "documents",
-    span_tokens: int = SPAN_TOKENS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def span_dedup_sql() -> str:
     """DuckDB twin: same blocks, same (doc_id, span_idx) keep-first
     order, same single-space reassembly."""
-    k = span_tokens
+    k = SPAN_TOKENS
     return f"""
 WITH t AS (
-  SELECT {id_col} AS doc_id, string_split({text_col}, ' ') AS l FROM {table}
+  SELECT doc_id, string_split(text, ' ') AS l FROM documents
 ),
 tok AS (
   SELECT doc_id, unnest(l) AS w, generate_subscripts(l, 1) AS i FROM t
@@ -163,8 +152,6 @@ def repeated_spans(
     docs: DataFrame,
     window: int = REP_SPAN_L,
     min_count: int = REP_MIN_COUNT,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Maximal repeated token spans — the streaming-hash rendition of
     Lee et al.'s suffix-array substring dedup at word granularity:
@@ -193,7 +180,8 @@ def repeated_spans(
     from .text import tokens
 
     staged = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__ws")
+        # aliased: the persisted window table keeps attribute ids of its own
+        F.col("doc_id").alias("doc_id"), tokens(F.col("text")).alias("__ws")
     ).filter(F.size("__ws") >= window)
     # Persisted: the window table feeds both the corpus-wide count and
     # the mark join — without it the tokenize+hash explode re-runs per
@@ -238,30 +226,26 @@ def repeated_spans(
     )
 
 
-def repeated_spans_sql(
-    table: str = "documents",
-    window: int = REP_SPAN_L,
-    min_count: int = REP_MIN_COUNT,
-) -> str:
+def repeated_spans_sql() -> str:
     """DuckDB oracle twin of :func:`repeated_spans` (same shared-tokenizer
     class, same island break rule)."""
     from .text import tokens_sql
 
     return f"""
 WITH t AS (
-  SELECT doc_id, {tokens_sql('text')} AS ws FROM {table}
+  SELECT doc_id, {tokens_sql('text')} AS ws FROM documents
 ),
 wins AS (
   SELECT doc_id, i - 1 AS pos,
-         md5(array_to_string(ws[i:i + {window - 1}], ' ')) AS h
-  FROM t, unnest(generate_series(1, len(ws) - {window - 1})) AS u(i)
-  WHERE len(ws) >= {window}
+         md5(array_to_string(ws[i:i + {REP_SPAN_L - 1}], ' ')) AS h
+  FROM t, unnest(generate_series(1, len(ws) - {REP_SPAN_L - 1})) AS u(i)
+  WHERE len(ws) >= {REP_SPAN_L}
 ),
-rep AS (SELECT h FROM wins GROUP BY h HAVING COUNT(*) >= {min_count}),
+rep AS (SELECT h FROM wins GROUP BY h HAVING COUNT(*) >= {REP_MIN_COUNT}),
 marked AS (SELECT w.doc_id, w.pos FROM wins w JOIN rep USING (h)),
 isl AS (
   SELECT doc_id, pos,
-    CASE WHEN pos > COALESCE(MAX(pos + {window}) OVER (
+    CASE WHEN pos > COALESCE(MAX(pos + {REP_SPAN_L}) OVER (
            PARTITION BY doc_id ORDER BY pos
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
          THEN 1 ELSE 0 END AS brk
@@ -275,8 +259,8 @@ g AS (
 )
 SELECT doc_id, span_idx,
        CAST(MIN(pos) AS BIGINT) AS start_tok,
-       CAST(MAX(pos) + {window} AS BIGINT) AS end_tok,
-       CAST(MAX(pos) + {window} - MIN(pos) AS BIGINT) AS span_tokens
+       CAST(MAX(pos) + {REP_SPAN_L} AS BIGINT) AS end_tok,
+       CAST(MAX(pos) + {REP_SPAN_L} - MIN(pos) AS BIGINT) AS span_tokens
 FROM g GROUP BY doc_id, span_idx
 """
 
@@ -292,8 +276,6 @@ def scrub_repeated(
     docs: DataFrame,
     window: int = REP_SPAN_L,
     min_count: int = REP_MIN_COUNT,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Keep-first span scrubbing: every length-``window`` token window
     occurring ≥ ``min_count`` times corpus-wide keeps its FIRST
@@ -316,7 +298,8 @@ def scrub_repeated(
     from .text import tokens
 
     staged = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__ws")
+        # aliased: the persisted window table keeps attribute ids of its own
+        F.col("doc_id").alias("doc_id"), tokens(F.col("text")).alias("__ws")
     )
     # Persisted: three subtrees read the window table (count, first-pos,
     # mark join) — see repeated_spans. Slim fixed-width rows.
@@ -381,9 +364,9 @@ def scrub_repeated(
     from .text import token_count
 
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(F.col(text_col)).alias("__ws"),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
+        F.col("doc_id"),
+        tokens(F.col("text")).alias("__ws"),
+        token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
     # 0-based token index i survives when no island covers it; __ws is
     # staged, the HOFs index it in-row (the SCALING.md staging lesson)
@@ -412,11 +395,7 @@ def scrub_repeated(
     )
 
 
-def scrub_repeated_sql(
-    table: str = "documents",
-    window: int = REP_SPAN_L,
-    min_count: int = REP_MIN_COUNT,
-) -> str:
+def scrub_repeated_sql() -> str:
     """DuckDB oracle twin of :func:`scrub_repeated` (same canonical
     first-occurrence rule, same island merge, same kept-text md5)."""
     from .text import token_count_sql, tokens_sql
@@ -425,17 +404,17 @@ def scrub_repeated_sql(
 WITH t AS (
   SELECT doc_id, {tokens_sql('text')} AS ws,
          {token_count_sql('text')} AS n_tokens
-  FROM {table}
+  FROM documents
 ),
 wins AS (
   SELECT doc_id, i - 1 AS pos,
-         md5(array_to_string(ws[i:i + {window - 1}], ' ')) AS h
-  FROM t, unnest(generate_series(1, len(ws) - {window - 1})) AS u(i)
-  WHERE len(ws) >= {window}
+         md5(array_to_string(ws[i:i + {REP_SPAN_L - 1}], ' ')) AS h
+  FROM t, unnest(generate_series(1, len(ws) - {REP_SPAN_L - 1})) AS u(i)
+  WHERE len(ws) >= {REP_SPAN_L}
 ),
 rep AS (
   SELECT h, MIN(doc_id) AS d0 FROM wins GROUP BY h
-  HAVING COUNT(*) >= {min_count}
+  HAVING COUNT(*) >= {REP_MIN_COUNT}
 ),
 firstpos AS (
   SELECT w.h, MIN(w.pos) AS p0
@@ -453,7 +432,7 @@ marked AS (
 ),
 isl AS (
   SELECT doc_id, pos,
-    CASE WHEN pos > COALESCE(MAX(pos + {window}) OVER (
+    CASE WHEN pos > COALESCE(MAX(pos + {REP_SPAN_L}) OVER (
            PARTITION BY doc_id ORDER BY pos
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
          THEN 1 ELSE 0 END AS brk
@@ -466,7 +445,7 @@ g AS (
   FROM isl
 ),
 spans AS (
-  SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + {window} AS e
+  SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + {REP_SPAN_L} AS e
   FROM g GROUP BY doc_id, island
 ),
 cutpos AS (

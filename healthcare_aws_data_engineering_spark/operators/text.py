@@ -130,7 +130,7 @@ def mean_word_length(text: Column) -> Column:
     return total / F.greatest(F.size(ws), F.lit(1))
 
 
-def quality_score(text: Column, stop_lang: str = "en") -> Column:
+def quality_score(text: Column) -> Column:
     """Heuristic quality score in [0,1] from length, punctuation ratio,
     stopword rate, and mean word length — the standard cheap pre-filter
     before expensive dedup/model scoring in a training-data pipeline.
@@ -138,7 +138,7 @@ def quality_score(text: Column, stop_lang: str = "en") -> Column:
     Deterministic double math (same expression both engines)."""
     length_ok = F.least(F.length(text) / F.lit(200.0), F.lit(1.0))
     stop_rate = F.least(
-        stopword_hits(text, LANG_PROFILES[stop_lang])
+        stopword_hits(text, LANG_PROFILES["en"])
         / F.greatest(token_count(text), F.lit(1))
         * 4.0,
         F.lit(1.0),
@@ -168,40 +168,35 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalize_text(text).cast("binary"))
 
 
-def rolling_fingerprint(
-    text: Column, window: int = 16, pre_normalized: bool = False
-) -> Column:
+def rolling_fingerprint(norm: Column) -> Column:
     """Winnowing-style robust fingerprint: the minimum hash over the
-    document's character ``window``-grams of the normalized text — stable
-    under small edits anywhere except the minimal window itself.
+    16-character grams of ``norm``, an already normalized text
+    column — stable under small edits anywhere except the minimal window
+    itself.
 
     PERF: the lambda body references the source string PER ELEMENT, so
-    ``text`` should be a plain column when possible — pass the normalized
-    string as a materialized column + ``pre_normalized=True`` (see
-    :func:`with_normalized`); inlining ``normalize_text`` here would rerun
-    its regexes once per gram (O(len²) regex work per document)."""
-    norm = text if pre_normalized else normalize_text(text)
+    ``norm`` must be a materialized column (see :func:`with_normalized`);
+    inlining ``normalize_text`` here would rerun its regexes once per
+    gram (O(len²) regex work per document)."""
     n = F.length(norm)
     starts = F.sequence(
-        F.lit(1), F.greatest(F.lit(1), n - F.lit(window - 1))
+        F.lit(1), F.greatest(F.lit(1), n - F.lit(16 - 1))
     )
     return F.array_min(
         F.transform(
-            starts, lambda i: F.md5(F.substring(norm, i, window).cast("binary"))
+            starts, lambda i: F.md5(F.substring(norm, i, 16).cast("binary"))
         )
     )
 
 
-def with_normalized(
-    docs: DataFrame, text_col: str = "text", out_col: str = "norm_text"
-) -> DataFrame:
+def with_normalized(docs: DataFrame) -> DataFrame:
     """Stage ``normalize_text`` as a real column so downstream per-element
     HOFs reference a cheap attribute. Catalyst's CollapseProject keeps the
     stage (it won't inline non-cheap expressions used more than once)."""
-    return docs.withColumn(out_col, normalize_text(F.col(text_col)))
+    return docs.withColumn("norm_text", normalize_text(F.col("text")))
 
 
-def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def text_stats(docs: DataFrame) -> DataFrame:
     """One-pass per-document stats table (projection only — verify with
     .explain: no Exchange).
 
@@ -215,8 +210,8 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     output costs ~3 regex passes + 1 split (r5: 1.74 s → measured below
     at sf0.1 on a single-split scan, where expression CPU is the whole
     query)."""
-    t = F.col(text_col)
-    keep = [c for c in docs.columns if c != text_col]
+    t = F.col("text")
+    keep = [c for c in docs.columns if c != "text"]
     staged = (
         docs.select(
             *docs.columns,
@@ -361,8 +356,6 @@ def _bigrams_of(ws: Column) -> Column:
 
 def repetition_stats(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_word_max: float = TOP_WORD_FRAC_MAX,
     top_bigram_max: float = TOP_BIGRAM_FRAC_MAX,
     distinct_min: float = DISTINCT_RATIO_MIN,
@@ -378,9 +371,9 @@ def repetition_stats(
     # Stage the arrays as real columns: HOF lambdas below reference them
     # per element, and an inlined split() would rerun once per element —
     # the same O(len²) trap word_shingles documents.
-    t = F.col(text_col)
+    t = F.col("text")
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         tokens(t).alias("ws"),
         token_count(t).cast("long").alias("__n"),
     ).withColumn("grams", _bigrams_of(F.col("ws")))
@@ -441,7 +434,7 @@ def redact_pii(text: Column) -> Column:
 # --------------------------------------------------- fused attribute pass --
 
 
-def doc_attributes(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_attributes(docs: DataFrame) -> DataFrame:
     """ONE corpus scan producing the full per-document attribute manifest
     — the Dolma-taggers shape: every quality/language/repetition signal a
     curation pipeline filters on, materialized together so a 100 TB
@@ -454,8 +447,8 @@ def doc_attributes(docs: DataFrame, text_col: str = "text") -> DataFrame:
     remain the single-signal entry points; this pass exists because six
     separate 100 TB scans is the wrong plan when you want all six
     families."""
-    t = F.col(text_col)
-    keep = [c for c in docs.columns if c != text_col]
+    t = F.col("text")
+    keep = [c for c in docs.columns if c != "text"]
     staged = (
         docs.select(
             *docs.columns,

@@ -191,12 +191,10 @@ def prune_to_size(
     freqs: dict[str, int],
     logp: dict[str, float],
     vocab_size: int,
-    keep_frac: float = 0.75,
-    em_iters: int = 1,
 ) -> dict[str, float]:
     """Shrink the piece table to ``vocab_size``: per round, keep the
-    top ``keep_frac`` of multi-char pieces (ties broken
-    lexicographically), re-fit with ``em_iters`` EM passes, repeat.
+    top 75% of multi-char pieces (ties broken lexicographically),
+    re-fit with one EM pass, repeat.
     Single-char pieces are never pruned (lossless-encode guarantee).
 
     Keepers are ranked by frequency-weighted expected piece count (one
@@ -222,13 +220,13 @@ def prune_to_size(
         # so capping at len(multi)-1 keeps >= budget AND guarantees the
         # round strictly shrinks — no fixpoint short of vocab_size
         n_keep = min(
-            max(int(len(multi) * keep_frac), budget, 0),
+            max(int(len(multi) * 0.75), budget, 0),
             len(multi) - 1,
         )
         kept = sorted(
             multi, key=lambda p: (-acc.get(p, 0.0), p)
         )[:n_keep]
-        logp = em_fit(freqs, sorted(chars) + sorted(kept), em_iters)
+        logp = em_fit(freqs, sorted(chars) + sorted(kept), 1)
 
 
 def viterbi_encode_word(word: str, logp: dict[str, float]) -> list[str]:
@@ -272,40 +270,31 @@ def viterbi_encode_word(word: str, logp: dict[str, float]) -> list[str]:
 def unigram_train(
     docs: DataFrame,
     vocab_size: int = 200,
-    text_col: str = "text",
     min_count: int = 2,
-    max_vocab: int = 1_000_000,
     max_piece_len: int = 8,
     seed_size: int = 20_000,
-    em_iters: int = 2,
 ) -> dict[str, float]:
     """Train a unigram-LM piece table from a corpus: distributed word
     count (the ONE corpus-scale pass, shared with :func:`bpe.bpe_train`
-    — same bounded top-``max_vocab`` head contract, same
-    TakeOrdered-not-full-sort collect) → driver-side seed → EM → prune
+    — same bounded top-1,000,000-word head contract, same
+    TakeOrdered-not-full-sort collect) → driver-side seed → 2 EM passes → prune
     to ``vocab_size`` (:func:`prune_to_size`). Returns piece →
     log-probability."""
-    wc = word_counts(docs, text_col, min_count)
-    if max_vocab is not None:
-        wc = wc.orderBy(F.col("n").desc(), F.col("word").asc()).limit(max_vocab)
+    wc = word_counts(docs, min_count)
+    wc = wc.orderBy(F.col("n").desc(), F.col("word").asc()).limit(1_000_000)
     freqs = {r["word"]: r["n"] for r in wc.collect()}
     pieces = seed_pieces(freqs, max_piece_len, seed_size)
     if not pieces:
         raise ValueError(
             "empty piece inventory — no word in the corpus meets "
-            f"min_count={min_count}; lower min_count or check text_col"
+            f"min_count={min_count}; lower min_count or check the text column"
         )
-    logp = em_fit(freqs, pieces, em_iters)
+    logp = em_fit(freqs, pieces, 2)
     return prune_to_size(freqs, logp, vocab_size)
 
 
-def unigram_encode(
-    docs: DataFrame,
-    logp: dict[str, float],
-    text_col: str = "text",
-    out_col: str = "unigram_tokens",
-) -> DataFrame:
-    """Append ``out_col``: the document's Viterbi-best piece sequence
+def unigram_encode(docs: DataFrame, logp: dict[str, float]) -> DataFrame:
+    """Append ``unigram_tokens``: the document's Viterbi-best piece sequence
     (array<string>). Arrow-batched pandas UDF, broadcast piece table,
     per-batch word cache — one lattice walk per DISTINCT word per
     batch, mirroring :func:`bpe.bpe_encode`."""
@@ -332,4 +321,4 @@ def unigram_encode(
 
         return texts.map(enc_doc)
 
-    return docs.withColumn(out_col, _encode(F.col(text_col)))
+    return docs.withColumn("unigram_tokens", _encode(F.col("text")))

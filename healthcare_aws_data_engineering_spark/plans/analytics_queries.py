@@ -764,9 +764,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("c_mktsegment"), F.lit("_V2")).alias("c_mktsegment"),
         F.lit(SCD_T1_MS).cast("long").alias("effective_ms"),
     )
-    return scd2_history(
-        snap.unionByName(updated), ["c_custkey"], "effective_ms"
-    )
+    return scd2_history(snap.unionByName(updated), ["c_custkey"])
 
 
 def _scd2_sql() -> str:
@@ -800,19 +798,17 @@ FROM hist
 
 
 # ------------------------------------------------------------- k_anonymity --
-# k=10 keeps the violation set non-empty from sf0.001 up (min group
-# size at sf0.01 is 5) — a vacuously-empty privacy audit checks nothing.
-K_ANON = 10
-
-
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.scd import k_anonymity
 
     cust = load_table(spark, sf_dir, "customer")
-    return k_anonymity(cust, ["c_nationkey", "c_mktsegment"], k=K_ANON)
+    return k_anonymity(cust, ["c_nationkey", "c_mktsegment"])
 
 
-_K_ANON_SQL = f"""
+def _k_anon_sql() -> str:
+    from ..operators.scd import K_ANON
+
+    return f"""
 SELECT c_nationkey, c_mktsegment, CAST(COUNT(*) AS BIGINT) AS group_n
 FROM customer
 GROUP BY c_nationkey, c_mktsegment
@@ -1055,7 +1051,6 @@ def _pagerank_oracle() -> str:
 # customer names get one md5-positioned character deleted, then the
 # deletion-neighborhood fuzzy join recovers candidate matches with an
 # exact Levenshtein verify. See operators/fuzzy.py for the scale story.
-FUZZY_MAX_DIST = 1
 
 
 def _dirty_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1088,7 +1083,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("id"), F.col("c_name").alias("key")
     )
     return fuzzy_join(
-        clean, _dirty_customers(spark, sf_dir), max_dist=FUZZY_MAX_DIST
+        clean, _dirty_customers(spark, sf_dir)
     )
 
 
@@ -1107,7 +1102,7 @@ FROM customer
 WHERE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 1) IN ('0','1','2','3','4')
 """
     clean = "SELECT c_custkey AS id, c_name AS key FROM customer"
-    return fuzzy_join_sql(clean, dirty, max_dist=FUZZY_MAX_DIST)
+    return fuzzy_join_sql(clean, dirty)
 
 
 # --------------------------------------------------------- debounce_events --
@@ -1195,7 +1190,7 @@ ANALYTICS_ORACLE: dict[str, str] = {
     "eval_draw": _EVAL_DRAW_SQL,
     "drift_monitor": _DRIFT_SQL,
     "scd2_history": _scd2_sql(),
-    "k_anonymity": _K_ANON_SQL,
+    "k_anonymity": _k_anon_sql(),
     "shipping_priority": _shipping_sql(),
     "cohort_retention": _COHORT_SQL,
     "rfm_segments": _rfm_sql(),

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.chunking import CHUNK_STRIDE, CHUNK_WINDOW, chunk_documents, chunk_sql
 from ..operators.sketch import cms_heavy_hitters, cms_sql
 from ..operators.spans import (
-    SPAN_TOKENS,
     repeated_spans,
     repeated_spans_sql,
     scrub_repeated,
@@ -40,7 +39,7 @@ from ..sources.tables import load_table, spread
 
 
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return span_dedup(load_table(spark, sf_dir, "documents"), SPAN_TOKENS)
+    return span_dedup(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------- repeated_spans --
@@ -245,12 +244,14 @@ def materialize_factors(docs: DataFrame, factors: DataFrame) -> DataFrame:
     )
 
 
+MIX_KEY_BUCKETS = 4096  # 48-bit key ranges of the exact partial-epoch draw
+
+
 def mixture_draw(
     docs: DataFrame,
     epoch_docs: int,
     n_tokens_col: str | None = None,
     exact: bool = False,
-    n_key_buckets: int = 4096,
     factors: DataFrame | None = None,
 ) -> DataFrame:
     """Library form (used by examples/curation_pipeline.py): draw an
@@ -271,7 +272,7 @@ def mixture_draw(
     boundary-bucket two-phase over the key space, which needs no skew
     guard because md5 keys are uniform by construction — a bucket is
     ~n/B rows unlike a quality mass: bucket the 48-bit keys into
-    ``n_key_buckets`` ranges, count per (source, bucket) map-side, find
+    :data:`MIX_KEY_BUCKETS` ranges, count per (source, bucket) map-side, find
     each source's boundary bucket on the tiny bucket table, keep sub-boundary
     buckets wholesale and rank-decide ONLY the boundary bucket's ~n/B rows
     inside (source, bucket) windows. Costs one slim-row shuffle of the
@@ -302,7 +303,7 @@ def mixture_draw(
         10,
     ).cast("long")
     if exact:
-        return _mixture_draw_exact(docs, factors, key, n_key_buckets)
+        return _mixture_draw_exact(docs, factors, key)
     return (
         docs.join(F.broadcast(factors), "source")
         .select(
@@ -336,9 +337,7 @@ def mixture_draw(
     )
 
 
-def _mixture_draw_exact(
-    docs: DataFrame, factors: DataFrame, key, n_key_buckets: int
-) -> DataFrame:
+def _mixture_draw_exact(docs: DataFrame, factors: DataFrame, key) -> DataFrame:
     """The exact-count partial-epoch draw (see :func:`mixture_draw`
     docstring). ``factors`` carries (source, __n, __full, __thr, __r);
     ``key`` is the 48-bit draw-key Column referencing an ``epoch``
@@ -368,7 +367,7 @@ def _mixture_draw_exact(
     )
     # partial epoch: exactly one candidate row per doc (epoch = __full);
     # keep the __r smallest keys per source via boundary buckets.
-    width = (2**48) // n_key_buckets
+    width = (2**48) // MIX_KEY_BUCKETS
     partial = (
         keyed.filter(F.col("__r") > 0)
         .select(
@@ -686,10 +685,9 @@ DUPN_TOP_K = 50
 def duplicated_ngrams(
     docs: DataFrame,
     n: int = DUPN_N,
-    min_docs: int = DUPN_MIN_DOCS,
     k: int = DUPN_TOP_K,
 ) -> DataFrame:
-    """Word ``n``-grams appearing in ≥ ``min_docs`` distinct documents:
+    """Word ``n``-grams appearing in ≥ :data:`DUPN_MIN_DOCS` distinct documents:
     ``gram, n_docs, occurrences``, top-``k`` under the unique total order
     (n_docs DESC, occurrences DESC, gram)."""
     grams = (
@@ -714,7 +712,7 @@ def duplicated_ngrams(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("c").alias("occurrences"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= DUPN_MIN_DOCS)
         .orderBy(
             F.col("n_docs").desc(),
             F.col("occurrences").desc(),

@@ -27,7 +27,7 @@ from ..operators.ingest import (
     shard_manifest,
     shard_manifest_sql,
 )
-from ..operators.retrieval import bm25_sql, bm25_topk
+from ..operators.retrieval import RRF_C, bm25_sql, bm25_topk
 from ..operators.selection import dsir_select, dsir_sql
 from ..operators.text import repetition_stats
 from ..sources.tables import load_table, spread
@@ -91,12 +91,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 LM_THRESHOLD = -3.42  # mean token logprob below this → 'surprising' doc
 
 
-def lm_score(
-    docs: DataFrame,
-    threshold: float = LM_THRESHOLD,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def lm_score(docs: DataFrame) -> DataFrame:
     """Unigram LM quality score (the CCNet-style statistical filter,
     reduced to its order-0 core): per document, the mean token
     log-probability under the corpus's own unigram distribution; docs far
@@ -115,8 +110,8 @@ def lm_score(
     from pyspark.sql import functions as F2
 
     toks = docs.select(
-        F2.col(id_col).alias("doc_id"),
-        F2.explode(F2.split(F2.trim(F2.col(text_col)), r"\s+")).alias("w"),
+        F2.col("doc_id"),
+        F2.explode(F2.split(F2.trim(F2.col("text")), r"\s+")).alias("w"),
     )
     vocab = toks.groupBy("w").agg(F2.count(F2.lit(1)).alias("c"))
     # r9: the corpus total via an UNPARTITIONED window over the vocab
@@ -147,7 +142,7 @@ def lm_score(
         "n_tokens",
         # decimal-grid snap, DOUBLE out (driver-hash-safe cell kind)
         F2.round(mean, 6).cast("decimal(18,6)").cast("double").alias("mean_logprob"),
-        (mean < threshold).alias("lm_flag"),
+        (mean < LM_THRESHOLD).alias("lm_flag"),
     )
 
 
@@ -158,9 +153,6 @@ BIGRAM_SMOOTH_K = 1  # Laplace add-k (integer: keeps every logprob a ln of a rat
 def bigram_lm_score(
     docs: DataFrame,
     threshold: float = BIGRAM_LM_THRESHOLD,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 1,
 ) -> DataFrame:
     """Bigram LM quality score — the order-1 step past :func:`lm_score`
     toward CCNet's KenLM filter: per document, the mean conditional
@@ -183,20 +175,16 @@ def bigram_lm_score(
     and unigram count tables are bounded-key hash aggs (vocabulary-
     scale, Heaps' law) broadcast back; the per-doc mean is one
     map-side-combining agg by doc_id. Nothing corpus-sized shuffles.
-    At web scale the bigram table outgrows comfortable broadcast before
-    the unigram one does — ``min_count`` is that floor (r14 advice):
-    bigrams seen fewer than ``min_count`` times are dropped from the
-    logprob table and priced by the unseen-transition coalesce floor
-    instead, so the Laplace term absorbs the pruned tail as unseen
-    mass. The lp join is deliberately UNHINTED — AQE broadcasts it
-    while it is small and demotes to a shuffle join when it is not
-    (the ``dedup_weighted`` precedent); the unigram table stays hinted
-    (vocabulary-bounded by Heaps' law). The default ``min_count=1``
-    (no pruning) is what the tests and the driver oracle pin.
+    The bigram table is not pruned: every seen bigram keeps its
+    logprob, which is what the tests and the driver oracle pin. The lp
+    join is deliberately UNHINTED — AQE broadcasts it while it is small
+    and demotes to a shuffle join when it is not (the
+    ``dedup_weighted`` precedent); the unigram table stays hinted
+    (vocabulary-bounded by Heaps' law).
     """
     from pyspark.sql import Window as _W, functions as F2
 
-    ws = F2.split(F2.trim(F2.col(text_col)), r"\s+")
+    ws = F2.split(F2.trim(F2.col("text")), r"\s+")
     pair = F2.filter(
         F2.zip_with(
             ws,
@@ -208,10 +196,10 @@ def bigram_lm_score(
         lambda g: g.isNotNull(),
     )
     toks = docs.select(
-        F2.col(id_col).alias("doc_id"), F2.explode(ws).alias("w")
+        F2.col("doc_id"), F2.explode(ws).alias("w")
     )
     bigs = docs.select(
-        F2.col(id_col).alias("doc_id"), F2.explode(pair).alias("bg")
+        F2.col("doc_id"), F2.explode(pair).alias("bg")
     )
     uni = toks.groupBy("w").agg(F2.count(F2.lit(1)).alias("cu"))
     # V via the lm_score r9 pattern: one unpartitioned window over the
@@ -221,8 +209,6 @@ def bigram_lm_score(
     )
     uni = uni.withColumn("v", F2.count(F2.lit(1)).over(w_all))
     big = bigs.groupBy("bg").agg(F2.count(F2.lit(1)).alias("cb"))
-    if min_count > 1:
-        big = big.filter(F2.col("cb") >= min_count)
     k = BIGRAM_SMOOTH_K
     # logprob table keyed by bigram: join unigram stats of the LEFT word
     lp = (
@@ -365,7 +351,6 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RRF_DEPTH, fusion keeps the top RRF_K.
 RRF_DEPTH = 50
 RRF_K = 25
-RRF_C = 60
 RRF_QUERY_VEC = 0
 _EMB_DIM = 64
 
@@ -391,7 +376,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=RRF_DEPTH,
         exact=True,
     ).select(F2.col("neighbor_id").alias("doc_id"), "rank")
-    return rrf_fuse(kw, sem, k=RRF_K, c=RRF_C)
+    return rrf_fuse(kw, sem, k=RRF_K)
 
 
 def _rrf_fusion_sql() -> str:
@@ -638,5 +623,5 @@ CURATION_ORACLE: dict[str, str] = {
     "bigram_lm_score": _BIGRAM_LM_SCORE_SQL,
     "pii_redact": _pii_redact_sql(),
     "rrf_fusion": _rrf_fusion_sql(),
-    "dsir_select": dsir_sql("documents"),
+    "dsir_select": dsir_sql(),
 }

@@ -183,7 +183,7 @@ def extract_observations(entries: DataFrame, deterministic_dedup: bool = False) 
                 "value_quantity"
             ),
             opt_col(s, "resource.valueQuantity.unit").alias("value_unit"),
-            value_x_string(s, "resource").alias("value_string"),
+            value_x_string(s).alias("value_string"),
             opt_col(s, "resource.effectiveDateTime").alias(
                 "effective_datetime"
             ),

@@ -464,25 +464,30 @@ def _choice_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.select(resource.alias("resource"))
 
 
-_CHOICE_WRITTEN: set[str] = set()
+# absolute sf_dir → its choice fixture in this process
+_CHOICE_WRITTEN: dict[str, str] = {}
 
 
 def q_etl_obs_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2+F4 driver leg: choice-struct entries → parquet (the Glue-written
     curated shape) → parquet scan → ``extract_observations``. The fixture
     is deterministic in the events table, so it is written once per
-    process (bench's warm-up + timed runs share it); a fresh process
-    always rewrites. The fixture path is keyed on the absolute ``sf_dir``,
-    so two data directories with the same base name never share it."""
-    import hashlib
+    process and data directory (bench's warm-up + timed runs share it).
+    It goes into a temporary directory that this process owns and removes
+    at exit, so concurrent processes never overwrite each other's."""
+    import atexit
     import os
+    import shutil
+    import tempfile
 
-    key = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    path = f"/tmp/hsp_fixtures/glue_choice_obs_{key}.parquet"
-    if path not in _CHOICE_WRITTEN:
-        _choice_entries(spark, sf_dir).write.mode("overwrite").parquet(path)
-        _CHOICE_WRITTEN.add(path)
-    entries = spark.read.parquet(path)
+    key = os.path.abspath(sf_dir)
+    if key not in _CHOICE_WRITTEN:
+        tmp = tempfile.mkdtemp(prefix="hsp_fixtures_")
+        atexit.register(shutil.rmtree, tmp, True)
+        path = os.path.join(tmp, "glue_choice_obs.parquet")
+        _choice_entries(spark, sf_dir).write.parquet(path)
+        _CHOICE_WRITTEN[key] = path
+    entries = spark.read.parquet(_CHOICE_WRITTEN[key])
     return extract_observations(entries, deterministic_dedup=True)
 
 

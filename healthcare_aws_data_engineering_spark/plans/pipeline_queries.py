@@ -45,31 +45,22 @@ STRATA_DEFAULT = 10
 
 
 # ------------------------------------------------------------ sessionize --
-def sessionize(
-    events: DataFrame,
-    gap_ms: int = SESSION_GAP_MS,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization: a new session starts when a user's
-    inter-event gap exceeds ``gap_ms``. Classic lag→flag→cumsum window
+    inter-event gap exceeds :data:`SESSION_GAP_MS`. Classic lag→flag→cumsum window
     composition; boundaries are a function of the (ts multiset) only, so
-    the deterministic ``id_col`` tie-break never changes the result, only
+    the deterministic ``event_id`` tie-break never changes the result, only
     stabilizes it.
 
     Returns one row per session: ``user_id, session_seq, start_ms,
     end_ms, n_events, duration_ms`` (epoch-millis longs — timezone-proof
     across engines).
     """
-    base = events.select(
-        F.col(user_col).alias("user_id"), F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("event_id"),
-    )
+    base = events.select(F.col("user_id"), F.col("ts"), F.col("event_id"))
     wseq = W.partitionBy("user_id").orderBy("ts", "event_id")
     ms = F.unix_millis(F.col("ts"))
     new_session = F.when(
-        F.lag(ms).over(wseq).isNull() | (ms - F.lag(ms).over(wseq) > gap_ms), 1
+        F.lag(ms).over(wseq).isNull() | (ms - F.lag(ms).over(wseq) > SESSION_GAP_MS), 1
     ).otherwise(0)
     flagged = base.withColumn("__new", new_session)
     # explicit ROWS frame: the default RANGE frame treats duplicate
@@ -117,9 +108,7 @@ FROM s GROUP BY user_id, session_seq
 
 
 # ---------------------------------------------------------- dist_summary --
-def dist_summary(
-    events: DataFrame, group_col: str = "event_type", value_col: str = "value"
-) -> DataFrame:
+def dist_summary(events: DataFrame) -> DataFrame:
     """Exact per-group distribution summary: count / min / max / discrete
     p50-p90-p99. Quantiles are *discrete* (an actual element of the
     group, at sorted index ``ceil(n·k/100)`` computed in integer math) —
@@ -134,8 +123,8 @@ def dist_summary(
     values): Spark ranks NULLS FIRST and DuckDB NULLS LAST, so keeping
     them would both shift the quantile index onto NULL rows and diverge
     between engines."""
-    val = (F.col(value_col).cast("decimal(18,6)") * 1000000).cast("long")
-    base = events.select(F.col(group_col).alias("grp"), val.alias("val")).filter(
+    val = (F.col("value").cast("decimal(18,6)") * 1000000).cast("long")
+    base = events.select(F.col("event_type").alias("grp"), val.alias("val")).filter(
         val.isNotNull()
     )
     wo = W.partitionBy("grp").orderBy("val")
@@ -182,25 +171,18 @@ FROM r GROUP BY grp
 
 
 # ----------------------------------------------------- stratified_sample --
-def stratified_sample(
-    docs: DataFrame,
-    rates: dict[str, int] | None = None,
-    default_rate: int = STRATA_DEFAULT,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def stratified_sample(docs: DataFrame) -> DataFrame:
     """Deterministic per-stratum sampling: keep a row iff its md5 bucket
     (0..99, keyed on the row id) is below the stratum's percent rate.
     Pure projection+filter — zero shuffles, reproducible across engines
     and runs, and the whole predicate pushes toward the scan. This is
     the scale-safe form of "sample 35% of English docs": no
     ``TABLESAMPLE`` nondeterminism, no driver-side RNG state."""
-    rates = STRATA_RATES if rates is None else rates
     bucket = (
         F.conv(
             F.substring(
                 F.md5(
-                    F.concat(F.lit("strat#"), F.col(id_col).cast("string"))
+                    F.concat(F.lit("strat#"), F.col("doc_id").cast("string"))
                     .cast("binary")
                 ),
                 1, 8,
@@ -208,9 +190,9 @@ def stratified_sample(
             16, 10,
         ).cast("long") % 100
     )
-    rate = F.lit(default_rate)
-    for k, v in sorted(rates.items()):
-        rate = F.when(F.col(stratum_col) == k, v).otherwise(rate)
+    rate = F.lit(STRATA_DEFAULT)
+    for k, v in sorted(STRATA_RATES.items()):
+        rate = F.when(F.col("lang") == k, v).otherwise(rate)
     return docs.withColumn("bucket", bucket).filter(F.col("bucket") < rate)
 
 
@@ -244,15 +226,9 @@ SPLIT_TRAIN_PCT = 80
 SPLIT_VAL_PCT = 10  # test gets the remainder
 
 
-def split_assign(
-    docs: DataFrame,
-    group_col: str = "source",
-    train_pct: int = SPLIT_TRAIN_PCT,
-    val_pct: int = SPLIT_VAL_PCT,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def split_assign(docs: DataFrame) -> DataFrame:
     """Deterministic GROUP-AWARE train/val/test assignment: every row of
-    one ``group_col`` value lands in the same split (hash the group, not
+    one ``source`` value lands in the same split (hash the group, not
     the row), so near-duplicate documents from the same source can never
     straddle the train/test boundary — the standard leakage control for
     training corpora. Pure projection — ZERO shuffles, no RNG state,
@@ -261,17 +237,10 @@ def split_assign(
     The bucket is the first 8 md5 hex digits of the salted group key
     (same shared-hash recipe as ``stratified_sample``) mod 100; splits
     are contiguous bucket ranges."""
-    return with_split(
-        docs.select(F.col(id_col), F.col(group_col)), group_col, train_pct, val_pct
-    )
+    return with_split(docs.select(F.col("doc_id"), F.col("source")))
 
 
-def with_split(
-    df: DataFrame,
-    group_col: str = "source",
-    train_pct: int = SPLIT_TRAIN_PCT,
-    val_pct: int = SPLIT_VAL_PCT,
-) -> DataFrame:
+def with_split(df: DataFrame, group_col: str = "source") -> DataFrame:
     """Append the deterministic ``bucket``/``split`` columns (the
     expression form of :func:`split_assign`, reusable mid-pipeline)."""
     bucket = (
@@ -287,8 +256,8 @@ def with_split(
         ).cast("long") % 100
     )
     split = (
-        F.when(F.col("bucket") < train_pct, "train")
-        .when(F.col("bucket") < train_pct + val_pct, "val")
+        F.when(F.col("bucket") < SPLIT_TRAIN_PCT, "train")
+        .when(F.col("bucket") < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
         .otherwise("test")
     )
     return df.withColumn("bucket", bucket).withColumn("split", split)
@@ -313,23 +282,26 @@ FROM (
 
 
 # ------------------------------------------------------------ vocab_topk --
-def vocab_topk(docs: DataFrame, k: int = 100, text_col: str = "text") -> DataFrame:
-    """Corpus vocabulary: top-k word-3-gram shingles by document
-    frequency (shingles are distinct-per-doc, so COUNT(*) after the
+VOCAB_TOP_K = 100
+
+
+def vocab_topk(docs: DataFrame) -> DataFrame:
+    """Corpus vocabulary: the :data:`VOCAB_TOP_K` word-3-gram shingles by
+    document frequency (shingles are distinct-per-doc, so COUNT(*) after the
     explode IS the doc frequency). The total order (doc_freq DESC,
     shingle ASC) is unique, so LIMIT selects the same set in any engine.
     Plan: explode → partial-count combine → single shuffle on shingle →
     TakeOrdered top-k (no global sort materialization)."""
-    grams = docs.select(F.explode(word_shingles(F.col(text_col))).alias("shingle"))
+    grams = docs.select(F.explode(word_shingles(F.col("text"))).alias("shingle"))
     vocab = grams.groupBy("shingle").agg(F.count(F.lit(1)).alias("doc_freq"))
-    return vocab.orderBy(F.desc("doc_freq"), "shingle").limit(k)
+    return vocab.orderBy(F.desc("doc_freq"), "shingle").limit(VOCAB_TOP_K)
 
 
 def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_topk(load_table(spark, sf_dir, "documents"))
 
 
-_VOCAB_TOPK_SQL = r"""
+_VOCAB_TOPK_SQL = rf"""
 WITH
   w AS (SELECT doc_id, string_split_regex(trim(text, ' '), '[ \t\n\x0B\f\r]+') AS ws FROM documents),
   sh AS (
@@ -342,7 +314,7 @@ SELECT shingle, doc_freq FROM (
   SELECT shingle, COUNT(*) AS doc_freq,
          ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, shingle) AS rk
   FROM sh GROUP BY shingle
-) WHERE rk <= 100
+) WHERE rk <= {VOCAB_TOP_K}
 """
 
 
@@ -350,13 +322,7 @@ SELECT shingle, doc_freq FROM (
 PACK_BUDGET = 512  # tokens per training chunk
 
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int = PACK_BUDGET,
-    stream_col: str = "source",
-    order_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int = PACK_BUDGET) -> DataFrame:
     """Sequence packing, concat-and-chunk form (the standard LLM
     pretraining layout): per stream (``source``), documents are laid
     end-to-end in ``doc_id`` order and the token stream is cut into
@@ -381,9 +347,9 @@ def pack_sequences(
     from ..operators.text import token_count
 
     t = docs.select(
-        F.col(stream_col).alias("source"),
-        F.col(order_col).alias("doc_id"),
-        token_count(F.col(text_col)).cast("long").alias("n_tok"),
+        F.col("source"),
+        F.col("doc_id"),
+        token_count(F.col("text")).cast("long").alias("n_tok"),
     ).filter(F.col("n_tok") > 0)
     w = W.partitionBy("source").orderBy("doc_id")
     ws = W.partitionBy("source")
@@ -492,16 +458,11 @@ FROM base GROUP BY ROLLUP(event_type, month, day)
 FUNNEL_STEPS = ["signup", "view", "purchase"]
 
 
-def funnel(
-    events: DataFrame,
-    steps: list[str] = FUNNEL_STEPS,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel(events: DataFrame) -> DataFrame:
     """Ordered-sequence funnel: for each user, the earliest time each
-    step was reached STRICTLY AFTER the previous step (the classic
-    product-analytics operator; no reference counterpart). Returns
+    :data:`FUNNEL_STEPS` step was reached STRICTLY AFTER the previous
+    step (the classic product-analytics operator; no reference
+    counterpart). Returns
     ``user_id, t1_ms..tN_ms`` (epoch millis, NULL once the chain breaks)
     and ``stage`` (count of steps completed in order).
 
@@ -511,18 +472,18 @@ def funnel(
     per-user sort of unmatched events). Earliest-after-previous uses
     ``min`` aggregates, so duplicate timestamps and out-of-order input
     change nothing."""
-    ms = F.unix_millis(F.col(ts_col))
+    ms = F.unix_millis(F.col("ts"))
     base = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(type_col).alias("etype"),
+        F.col("user_id"),
+        F.col("event_type").alias("etype"),
         ms.alias("ms"),
     )
     cur = (
-        base.filter(F.col("etype") == steps[0])
+        base.filter(F.col("etype") == FUNNEL_STEPS[0])
         .groupBy("user_id")
         .agg(F.min("ms").alias("t1_ms"))
     )
-    for i, step in enumerate(steps[1:], start=2):
+    for i, step in enumerate(FUNNEL_STEPS[1:], start=2):
         prev_t = f"t{i - 1}_ms"
         nxt = (
             base.filter(F.col("etype") == step)
@@ -533,12 +494,12 @@ def funnel(
         )
         cur = cur.join(nxt, "user_id", "left")
     stage = None
-    for i in range(1, len(steps) + 1):
+    for i in range(1, len(FUNNEL_STEPS) + 1):
         leg = F.col(f"t{i}_ms").isNotNull().cast("int")
         stage = leg if stage is None else stage + leg
     return cur.select(
         "user_id",
-        *[F.col(f"t{i}_ms") for i in range(1, len(steps) + 1)],
+        *[F.col(f"t{i}_ms") for i in range(1, len(FUNNEL_STEPS) + 1)],
         stage.alias("stage"),
     )
 
@@ -761,9 +722,7 @@ def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketch import distinct_sketch
 
     ev = load_table(spark, sf_dir, "events")
-    return distinct_sketch(
-        ev, "event_type", "user_id", include_exact=True
-    )
+    return distinct_sketch(ev, "event_type", "user_id")
 
 
 def _distinct_sketch_sql() -> str:

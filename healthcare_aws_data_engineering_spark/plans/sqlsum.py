@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def _dsum(expr: str, scale: int = 6) -> str:
+def _dsum(expr: str) -> str:
     """SQL fragment: order-independent exact sum of a per-row double expr.
 
     Scale 6 because every per-row expression here is a product of ≤3
@@ -29,12 +29,12 @@ def _dsum(expr: str, scale: int = 6) -> str:
     class. A canary test pins the divergence so a DuckDB behavior
     change resurfaces the audit.
     """
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(28,{scale}))) AS DOUBLE)"
+    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(28,6))) AS DOUBLE)"
 
 
-def dsum(col: F.Column, scale: int = 6) -> F.Column:
+def dsum(col: F.Column) -> F.Column:
     """Spark twin of :func:`_dsum`."""
-    return F.sum(col.cast(f"decimal(28,{scale})")).cast("double")
+    return F.sum(col.cast("decimal(28,6)")).cast("double")
 
 
 def floordiv(x: str, y: int) -> str:

@@ -118,7 +118,7 @@ def _dup_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.read.parquet(path)
     docs = _docs_s(spark, sf_dir)
     pairs = D.minhash_lsh_pairs(
-        docs, num_perm=6, bands=3, backend="md5", max_bucket=50
+        docs, num_perm=6, bands=3, backend="md5"
     )
     verified = (
         D.ngram_jaccard(docs, pairs)
@@ -150,7 +150,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs, md5 backend (6 perms, 3 bands of 2) —
     the full shingle→signature→band→bucket-join pipeline, oracle-checked."""
     return D.minhash_lsh_pairs(
-        _docs_s(spark, sf_dir), num_perm=6, bands=3, backend="md5", max_bucket=50
+        _docs_s(spark, sf_dir), num_perm=6, bands=3, backend="md5"
     )
 
 
@@ -163,7 +163,7 @@ SELECT doc_a, doc_b FROM lsh_pairs
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard verification over the LSH candidates."""
     docs = _docs_s(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(docs, num_perm=6, bands=3, backend="md5", max_bucket=50)
+    pairs = D.minhash_lsh_pairs(docs, num_perm=6, bands=3, backend="md5")
     return D.ngram_jaccard(docs, pairs)
 
 
@@ -434,18 +434,17 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked leg for leg in DuckDB."""
     # NOT spread (r16): matched-window A/B vs the r15 tree measured the
     # spread form slower in suite context (3.2s vs 2.2s median).
-    return D.simhash_pairs(_docs(spark, sf_dir), bands=4, max_hamming=3)
+    return D.simhash_pairs(_docs(spark, sf_dir))
 
 
-def _simhash_sql(bits: int = 32, bands: int = 4, max_hamming: int = 3,
-                 max_bucket: int = 50) -> str:
-    width = bits // bands
+def _simhash_sql() -> str:
+    width = 32 // D.SIMHASH_BANDS
     vote_legs = ",\n      ".join(
         f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}"
-        for i in range(bits)
+        for i in range(32)
     )
     pack = " + ".join(
-        f"(CASE WHEN v{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(bits)
+        f"(CASE WHEN v{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(32)
     )
     return f"""
 WITH {_SHINGLES_SQL},
@@ -462,20 +461,20 @@ WITH {_SHINGLES_SQL},
   sig AS (SELECT doc_id, CAST({pack} AS BIGINT) AS sim FROM votes),
   bands AS (
     SELECT doc_id, sim, b.band, (sim >> ({width} * b.band)) & {(1 << width) - 1} AS bkey
-    FROM sig, (SELECT unnest(generate_series(0, {bands - 1})) AS band) b
+    FROM sig, (SELECT unnest(generate_series(0, {D.SIMHASH_BANDS - 1})) AS band) b
   ),
   capped AS (
     SELECT * FROM (
       SELECT band, bkey, doc_id, sim,
              COUNT(*) OVER (PARTITION BY band, bkey) AS bucket_n
       FROM bands
-    ) WHERE bucket_n BETWEEN 2 AND {max_bucket}
+    ) WHERE bucket_n BETWEEN 2 AND {D.MAX_BUCKET}
   )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        bit_count(xor(a.sim, b.sim)) AS hamming
 FROM capped a JOIN capped b
   ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sim, b.sim)) <= {max_hamming}
+WHERE bit_count(xor(a.sim, b.sim)) <= {D.SIMHASH_MAX_HAMMING}
 """
 
 
@@ -523,7 +522,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors per anchor (vec_id < 5), exact cosine for oracle bit-equality."""
     embs = _embs(spark, sf_dir)
     queries = embs.filter(F.col("vec_id") < 5)
-    return S.hard_negatives(embs, queries, k=8, exact=True)
+    return S.hard_negatives(embs, queries, k=8)
 
 
 _HARD_NEG_SQL = """
@@ -1181,12 +1180,13 @@ GUARD_MIN_BUCKET_ROWS = 1_000_000  # any bucket under this sorts fine on 1 task
 GUARD_BUCKET_FRACTION = 16      # above the floor, >n/16 in ONE bucket = degenerate
 
 
-def quality_buckets_for(n_rows: int, target: int = TARGET_BUCKET_ROWS) -> int:
+def quality_buckets_for(n_rows: int) -> int:
     """Bucket count for the two-phase prefix sum so the EXPECTED
-    within-bucket window partition is ≈ ``target`` rows: ``ceil(n /
-    target)``, floored at the gate grid (256) and rounded up to a power
-    of two so bucket grids NEST as corpora grow (a doc's bucket at 2B is
-    a refinement of its bucket at B — replays stay comparable).
+    within-bucket window partition is ≈ :data:`TARGET_BUCKET_ROWS` rows:
+    ``ceil(n / TARGET_BUCKET_ROWS)``, floored at the gate grid (256) and
+    rounded up to a power of two so bucket grids NEST as corpora grow (a
+    doc's bucket at 2B is a refinement of its bucket at B — replays stay
+    comparable).
 
     The prefix-sum twin of :func:`~..operators.similarity.cells_for`
     (r6 verdict #2): a bucket count pinned for the gate corpus re-creates
@@ -1195,7 +1195,7 @@ def quality_buckets_for(n_rows: int, target: int = TARGET_BUCKET_ROWS) -> int:
     DISTRIBUTION is guarded in-plan (see :func:`two_phase_cum_tokens`)."""
     import math
 
-    b = max(MIN_QUALITY_BUCKETS, math.ceil(max(n_rows, 1) / target))
+    b = max(MIN_QUALITY_BUCKETS, math.ceil(max(n_rows, 1) / TARGET_BUCKET_ROWS))
     return 1 << (b - 1).bit_length()
 
 
@@ -1359,9 +1359,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return staged.select(
         "doc_id",
         F.md5(F.col("norm_text").cast("binary")).alias("fingerprint"),
-        T.rolling_fingerprint(
-            F.col("norm_text"), window=16, pre_normalized=True
-        ).alias("rolling_fp"),
+        T.rolling_fingerprint(F.col("norm_text")).alias("rolling_fp"),
     )
 
 
@@ -1400,10 +1398,12 @@ def q_severity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("patient_id"),
         F.col("event_type").alias("analyte"),
     ).agg(F.max_by("value", order).alias("value"))
-    return severity_topk(labs, SEVERITY_RANGES, k=3)
+    return severity_topk(labs, SEVERITY_RANGES)
 
 
 def _severity_sql() -> str:
+    from ..operators.severity import SEVERITY_TOP_K
+
     bands = []
     for analyte, (lo, hi) in SEVERITY_RANGES.items():
         bands.append(
@@ -1439,7 +1439,7 @@ WITH latest AS (
   WHERE severity < 2
 )
 SELECT patient_id, analyte, value, status, severity, rank
-FROM kept WHERE rank <= 3
+FROM kept WHERE rank <= {SEVERITY_TOP_K}
 """
 
 

@@ -60,15 +60,15 @@ def read_labs_csv(
     return out
 
 
-def with_synthetic_dates(labs: DataFrame, start: str = "2024-01-01") -> DataFrame:
+def with_synthetic_dates(labs: DataFrame) -> DataFrame:
     """Monthly synthetic dates per patient (the app's default when no date
     column was uploaded, ``mrp_website.py:282-287``): row k of a patient →
-    start + k months. Deterministic via an all-column sort key."""
+    2024-01-01 + k months. Deterministic via an all-column sort key."""
     others = [c for c in labs.columns if c != "patient_id"]
     w = W.partitionBy("patient_id").orderBy(
         *[F.col(c).asc_nulls_last() for c in others]
     )
     k = F.row_number().over(w) - 1
     return labs.withColumn(
-        "date", F.to_timestamp(F.add_months(F.lit(start).cast("date"), k))
+        "date", F.to_timestamp(F.add_months(F.lit("2024-01-01").cast("date"), k))
     )

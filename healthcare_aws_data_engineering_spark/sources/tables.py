@@ -95,18 +95,31 @@ def spread(df: DataFrame) -> DataFrame:
     Use at heavy per-row-work call sites only — an extra exchange on a
     0.2 s scan+agg query is pure overhead.
 
-    An input already split at least ``defaultParallelism`` ways — a
-    cluster-scale scan, where ``maxPartitionBytes`` produces real
-    splits — is returned unchanged: a round-robin to the core count
-    would SHRINK its parallelism. Reading a scan's partition count
-    plans it and lists its splits but runs no job; pass scans only —
-    on an input whose plan holds a shuffle, adaptive execution runs
-    that stage to count its partitions.
+    An input whose leaf scans already yield at least
+    ``defaultParallelism`` splits — a cluster-scale scan, where
+    ``maxPartitionBytes`` produces real splits — is returned unchanged:
+    a round-robin to the core count would SHRINK its parallelism. The
+    decision reads the splits from the physical plan's leaves
+    (:func:`_scan_splits`), so it runs no job whatever the input holds.
     """
     n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    if _scan_splits(df) >= n:
         return df
     return df.repartition(n)
+
+
+def _scan_splits(df: DataFrame) -> int:
+    """Total input splits of the leaves of ``df``'s physical plan. A file
+    scan lists its splits and a range counts its slices without running
+    a job; ``df.rdd.getNumPartitions()`` would instead run every shuffle
+    stage above the leaves under adaptive execution."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        is_file_scan = leaf.getClass().getSimpleName() == "FileSourceScanExec"
+        total += (leaf.inputRDD() if is_file_scan else leaf.execute()).getNumPartitions()
+    return total
 
 
 #: Required columns of a user-supplied observation parquet (the library's

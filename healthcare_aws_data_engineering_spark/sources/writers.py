@@ -21,13 +21,11 @@ def write_parquet(
     base_path: str,
     subpath: str,
     partitions: Sequence[str] | None = None,
-    mode: str = "append",
-    compression: str = "zstd",
 ) -> str:
-    """zstd by default: ~30% smaller than snappy at comparable read speed —
+    """Append ``df`` as zstd Parquet: ~30% smaller than snappy at comparable read speed —
     at 100 TB the scan is IO-bound, so smaller files ARE faster queries."""
     path = f"{base_path.rstrip('/')}/{subpath}"
-    writer = df.write.mode(mode).option("compression", compression)
+    writer = df.write.mode("append").option("compression", "zstd")
     if partitions:
         writer = writer.partitionBy(*partitions)
     writer.parquet(path)

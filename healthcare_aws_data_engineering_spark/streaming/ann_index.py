@@ -52,10 +52,6 @@ def _write_index_batch(
     index_path: str,
     cents: list[list[float]],
     codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    residual: bool = False,
-    assign: str = "auto",
 ) -> None:
     """Idempotent per-micro-batch index write: the batch's
     ``(neighbor_id, cell, codes)`` rows land in their own
@@ -65,15 +61,7 @@ def _write_index_batch(
     ranks). Readers select the three payload columns and never see the
     partition key."""
     (
-        ivfpq_index_rows(
-            batch,
-            cents,
-            codebooks,
-            id_col=id_col,
-            vec_col=vec_col,
-            residual=residual,
-            assign=assign,
-        )
+        ivfpq_index_rows(batch, cents, codebooks)
         .withColumn("__batch_id", F.lit(batch_id).cast("long"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -89,11 +77,6 @@ def ivfpq_index_ingest(
     checkpoint_path: str,
     cents: list[list[float]],
     codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    residual: bool = False,
-    assign: str = "auto",
-    await_termination: bool = True,
 ):
     """Accrue the IVF-PQ index incrementally: one ``availableNow`` run
     drains vector parquet files the checkpoint has not seen and writes
@@ -113,23 +96,14 @@ def ivfpq_index_ingest(
     query = (
         stream.writeStream.foreachBatch(
             lambda batch, batch_id: _write_index_batch(
-                batch,
-                batch_id,
-                index_path,
-                cents,
-                codebooks,
-                id_col,
-                vec_col,
-                residual,
-                assign,
+                batch, batch_id, index_path, cents, codebooks
             )
         )
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        query.awaitTermination()
+    query.awaitTermination()
     return query
 
 
@@ -141,11 +115,7 @@ def load_index(spark, index_path: str) -> DataFrame:
     )
 
 
-def quantizer_drift(
-    snapshot: DataFrame,
-    cents: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantizer_drift(snapshot: DataFrame, cents: list[list[float]]) -> DataFrame:
     """One-row drift report pricing how well FROZEN centroids fit a
     snapshot: ``(n_vectors, mean_cell_dist, max_cell_dist,
     max_cell_frac)`` — mean/max nearest-centroid squared distance on
@@ -158,8 +128,8 @@ def quantizer_drift(
     to find out. One projection + one bounded agg (|cells| rows); no
     shuffle wider than the cell-count table."""
     n_cells = len(cents)
-    staged = snapshot.where(F.col(vec_col).isNotNull()).select(
-        quantize_vec(F.col(vec_col)).alias("__q")
+    staged = snapshot.where(F.col("embedding").isNotNull()).select(
+        quantize_vec(F.col("embedding")).alias("__q")
     )
     dists = _cell_dists(F.col("__q"), cents, exact=True)
     assigned = staged.select(

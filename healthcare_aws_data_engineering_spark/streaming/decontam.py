@@ -18,14 +18,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..operators.decontam import shingle_ledger
 
 
-def _write_ledger_batch(
-    batch: DataFrame,
-    batch_id: int,
-    ledger_path: str,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
+def _write_ledger_batch(batch: DataFrame, batch_id: int, ledger_path: str) -> None:
     """Idempotent per-micro-batch ledger write (r14 advice): each batch
     lands in its OWN ``__batch_id`` partition with dynamic partition
     overwrite, so a replayed batch (crash between the write and the
@@ -37,7 +30,7 @@ def _write_ledger_batch(
     overwrite, re-running any batch id is a no-op on the final rows
     (pinned in tests/test_decontam_ledger.py)."""
     (
-        shingle_ledger(batch, n, id_col, text_col)
+        shingle_ledger(batch)
         .withColumn("__batch_id", F.lit(batch_id).cast("long"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -51,10 +44,6 @@ def shingle_ledger_ingest(
     raw_path: str,
     ledger_path: str,
     checkpoint_path: str,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    await_termination: bool = True,
 ):
     """Bookmarked ledger maintenance — the at-ingest half of
     cross-snapshot decontamination (:func:`..operators.decontam.
@@ -79,8 +68,7 @@ def shingle_ledger_ingest(
     Per micro-batch work is a pure projection + explode (no shuffle, no
     state): exactly the Glue-bookmark ingest discipline
     (:func:`.incremental.incremental_fhir_ingest`) applied to the
-    decontamination index. Returns the (terminated, unless
-    ``await_termination=False``) streaming query.
+    decontamination index. Returns the terminated streaming query.
     """
     schema = spark.read.parquet(raw_path).schema
     stream = spark.readStream.schema(schema).option(
@@ -88,14 +76,11 @@ def shingle_ledger_ingest(
     ).parquet(raw_path)
     query = (
         stream.writeStream.foreachBatch(
-            lambda batch, batch_id: _write_ledger_batch(
-                batch, batch_id, ledger_path, n, id_col, text_col
-            )
+            lambda batch, batch_id: _write_ledger_batch(batch, batch_id, ledger_path)
         )
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        query.awaitTermination()
+    query.awaitTermination()
     return query

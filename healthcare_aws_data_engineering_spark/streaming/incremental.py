@@ -50,24 +50,20 @@ def incremental_fhir_ingest(
     schema: StructType | None = None,
     multiline: bool = True,
     deterministic_dedup: bool = False,
-    max_files_per_trigger: int | None = None,
-    await_termination: bool = True,
 ):
     """One bookmarked run: drain new raw files → append curated Parquet.
 
-    Returns the (terminated, unless ``await_termination=False``) streaming
-    query. Each invocation with the same ``checkpoint_path`` processes only
-    files the checkpoint has not seen — Glue bookmark parity.
+    Returns the terminated streaming query. Each invocation with the same
+    ``checkpoint_path`` processes only files the checkpoint has not seen —
+    Glue bookmark parity.
     """
     schema = schema or infer_bundle_schema(spark, raw_path, multiline)
-    reader = (
+    stream = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .option("multiLine", "true" if multiline else "false")
+        .json(raw_path)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(raw_path)
 
     query = (
         stream.writeStream.foreachBatch(
@@ -79,6 +75,5 @@ def incremental_fhir_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        query.awaitTermination()
+    query.awaitTermination()
     return query

@@ -15,17 +15,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.dedup import _bucket_cap
-
 
 def dhash_near_dup_stream(
     stream_media: DataFrame,
     index_hashes: DataFrame,
     max_hamming: int = 6,
-    n_bands: int | None = None,
-    max_bucket: int | None = None,
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming IMAGE near-dup against a batch-built perceptual index
     (r11).
@@ -36,16 +30,16 @@ def dhash_near_dup_stream(
     - INDEX: a (media_id, dhash) frame (build batch-side with
       :func:`..operators.multimodal.media_dhash`) — banded with the
       same derived-bands recall contract as ``dhash_near_dup_pairs``
-      (pigeonhole-exact unless ``max_bucket`` drops an over-full
-      bucket; min_bucket=1 — the r5 singleton-index lesson: a unique
-      corpus image's clone must still be flagged).
+      and no bucket cap, so recall is pigeonhole-exact (the r5
+      singleton-index lesson: a unique corpus image's clone must still
+      be flagged).
     - STREAM: (media_id, content, ts) raw containers; the dHash is
       computed INSIDE the micro-batch by the same zero-exchange Arrow
       stage (``media_dhash`` with the event-time column passed
       through), then band-exploded — a pure projection, so the join
       below is a stateless stream-static equi-join.
     - The only stateful step collapses multi-band hits for the same
-      (stream, index) pair under the watermark horizon
+      (stream, index) pair under a 2-hour watermark on ``ts``
       (``dropDuplicatesWithinWatermark`` — the unbounded-state argument
       of every other streaming operator here).
 
@@ -58,7 +52,7 @@ def dhash_near_dup_stream(
         media_dhash,
     )
 
-    n_bands = derive_dhash_bands(max_hamming, n_bands)
+    n_bands = derive_dhash_bands(max_hamming, None)
     idx = explode_dhash_bands(
         index_hashes.select(
             F.col("media_id").alias("index_id"),
@@ -66,12 +60,9 @@ def dhash_near_dup_stream(
         ).withColumnRenamed("index_dhash", "dhash"),
         n_bands,
     ).withColumnRenamed("dhash", "index_dhash")
-    if max_bucket is not None:
-        idx = _bucket_cap(idx, "val", max_bucket, min_bucket=1)
-        idx = idx.drop("__n")
     probe = explode_dhash_bands(
-        media_dhash(stream_media, passthrough=(ts_col,)).select(
-            "media_id", "dhash", ts_col
+        media_dhash(stream_media, passthrough=("ts",)).select(
+            "media_id", "dhash", "ts"
         ),
         n_bands,
     )
@@ -80,7 +71,7 @@ def dhash_near_dup_stream(
         .filter(F.col("media_id") != F.col("index_id"))
         .select(
             "media_id",
-            ts_col,
+            "ts",
             "index_id",
             dhash_hamming(F.col("dhash"), F.col("index_dhash"))
             .cast("int")
@@ -90,6 +81,6 @@ def dhash_near_dup_stream(
     )
     if stream_media.isStreaming:
         return matches.withWatermark(
-            ts_col, watermark
+            "ts", "2 hours"
         ).dropDuplicatesWithinWatermark(["media_id", "index_id"])
     return matches.dropDuplicates(["media_id", "index_id"])

@@ -57,7 +57,7 @@ def test_span_dedup_matches_python_model(spark):
     ]
     got = {
         r["doc_id"]: (r["n_spans"], r["n_kept"], r["dedup_text"])
-        for r in span_dedup(_docs(spark, rows), span_tokens=8, emit_text=True).collect()
+        for r in span_dedup(_docs(spark, rows), emit_text=True).collect()
     }
     assert got == _py_span_dedup(rows, 8)
     # doc 2 lost its first block, doc 3 lost everything
@@ -68,7 +68,7 @@ def test_span_dedup_matches_python_model(spark):
 def test_span_dedup_within_doc_repeat(spark):
     # the SAME block twice inside one document dedups too (span_idx order)
     rows = [(7, "a b c d e f g h a b c d e f g h")]
-    got = span_dedup(_docs(spark, rows), span_tokens=8, emit_text=True).collect()[0]
+    got = span_dedup(_docs(spark, rows), emit_text=True).collect()[0]
     assert (got["n_spans"], got["n_kept"]) == (2, 1)
     assert got["dedup_text"] == "a b c d e f g h"
 
@@ -245,7 +245,7 @@ def test_duplicated_ngrams_matches_python_model(spark):
     )
     got = {
         r["gram"]: (r["n_docs"], r["occurrences"])
-        for r in duplicated_ngrams(docs, n=3, min_docs=2, k=100).collect()
+        for r in duplicated_ngrams(docs, n=3, k=100).collect()
     }
 
     per_doc: list[Counter] = []
@@ -278,7 +278,7 @@ def test_duplicated_ngrams_top_k_order(spark):
         [(i, "p q r s") for i in range(3)] + [(9, "u v w x"), (10, "u v w x")],
         "doc_id long, text string",
     )
-    rows = duplicated_ngrams(docs, n=4, min_docs=2, k=1).collect()
+    rows = duplicated_ngrams(docs, n=4, k=1).collect()
     assert len(rows) == 1 and rows[0]["gram"] == "p q r s"
 
 

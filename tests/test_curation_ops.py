@@ -261,15 +261,15 @@ def test_shard_manifest_totals(spark, tmp_path):
     )
 
     rows = [(i, " ".join(["w"] * (i + 1))) for i in range(20)]
-    m = shard_manifest(_docs(spark, rows), n_shards=4).collect()
+    m = shard_manifest(_docs(spark, rows)).collect()
     assert sum(r.n_docs for r in m) == 20
     assert sum(r.total_tokens for r in m) == sum(i + 1 for i in range(20))
     # shard assignment is deterministic: manifest equals a recompute
-    again = shard_manifest(_docs(spark, rows), n_shards=4).collect()
+    again = shard_manifest(_docs(spark, rows)).collect()
     assert sorted(map(tuple, m)) == sorted(map(tuple, again))
     # physical export: partitionBy(shard) → reader-side partition pruning
     out = str(tmp_path / "sharded")
-    with_shard(_docs(spark, rows), n_shards=4).write.partitionBy(
+    with_shard(_docs(spark, rows)).write.partitionBy(
         "shard"
     ).parquet(out)
     back = spark.read.parquet(out).filter(F.col("shard") == 2)
@@ -385,9 +385,9 @@ def test_lm_score_flags_rare_doc(spark):
     from healthcare_aws_data_engineering_spark.plans.curation_queries import lm_score
 
     # one doc of singleton words vs many docs of a common word: the
-    # singleton doc scores far below and is flagged at a mid threshold.
+    # singleton doc scores far below and is flagged at LM_THRESHOLD.
     rows = [(i, "x x x x") for i in range(9)] + [(9, "q w e r")]
-    out = {r.doc_id: r for r in lm_score(_docs(spark, rows), threshold=-2.0).collect()}
+    out = {r.doc_id: r for r in lm_score(_docs(spark, rows)).collect()}
     assert out[9].lm_flag and not out[0].lm_flag
     assert float(out[9].mean_logprob) < float(out[0].mean_logprob)
 
@@ -407,7 +407,7 @@ def test_rrf_fuse_matches_python_model(spark):
     )
     got = {
         row["doc_id"]: row
-        for row in rrf_fuse(kw, sem, k=10, c=60).collect()
+        for row in rrf_fuse(kw, sem, k=10).collect()
     }
 
     def snap(x: float) -> float:
@@ -440,7 +440,7 @@ def test_rrf_fuse_k_truncates_on_unique_order(spark):
     # ties on score (disjoint legs, same ranks) break by doc_id ASC
     kw = spark.createDataFrame([(5, 1), (3, 2)], "doc_id long, rank int")
     sem = spark.createDataFrame([(4, 1), (2, 2)], "doc_id long, rank int")
-    rows = rrf_fuse(kw, sem, k=3, c=60).orderBy("rank").collect()
+    rows = rrf_fuse(kw, sem, k=3).orderBy("rank").collect()
     assert [r["doc_id"] for r in rows] == [4, 5, 2]
 
 
@@ -502,11 +502,14 @@ _DSIR_ROWS = [
 
 
 def test_dsir_matches_python_model(spark):
-    from healthcare_aws_data_engineering_spark.operators.selection import dsir_select
+    from healthcare_aws_data_engineering_spark.operators.selection import (
+        DSIR_K,
+        dsir_select,
+    )
 
     df = spark.createDataFrame(_DSIR_ROWS, "doc_id long, lang string, text string")
-    got = dsir_select(df, k=3).collect()
-    want = _dsir_model(_DSIR_ROWS, k=3)
+    got = dsir_select(df).collect()
+    want = _dsir_model(_DSIR_ROWS, k=DSIR_K)
     assert [r.doc_id for r in got] == [w[0] for w in want]
     for r, w in zip(got, want):
         assert r.n_feats == w[1]
@@ -521,7 +524,7 @@ def test_dsir_prefers_target_like_docs_and_excludes_target(spark):
     from healthcare_aws_data_engineering_spark.operators.selection import dsir_select
 
     df = spark.createDataFrame(_DSIR_ROWS, "doc_id long, lang string, text string")
-    out = dsir_select(df, k=3).collect()
+    out = dsir_select(df).collect()
     assert out[0].doc_id == 10
     assert out[0].log_weight > out[1].log_weight + 10
     assert {r.doc_id for r in out} == {10, 11, 12}
@@ -572,7 +575,7 @@ def test_dsir_oracle_agrees_on_messy_whitespace(spark):
         [(d, l, t) for d, l, t, _s in _WS_ROWS],
         "doc_id long, lang string, text string",
     )
-    got = dsir_select(df, k=3).collect()
+    got = dsir_select(df).collect()
 
     con = duckdb.connect()
     con.register(
@@ -582,7 +585,7 @@ def test_dsir_oracle_agrees_on_messy_whitespace(spark):
             columns=["doc_id", "lang", "text"],
         ),
     )
-    want = con.sql(dsir_sql("documents", k=3)).fetchall()
+    want = con.sql(dsir_sql()).fetchall()
     assert [r.doc_id for r in got] == [w[0] for w in want]
     for r, w in zip(got, want):
         assert r.n_feats == w[1]

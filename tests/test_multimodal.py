@@ -52,11 +52,6 @@ def test_media_features_shape_and_determinism(spark, media):
     assert metas[0].sample_rate == 16000
 
 
-def test_media_features_keep_content(media):
-    out = M.media_features(media, dim=4, keep_content=True)
-    assert "content" in out.columns
-
-
 def test_decode_real_rejects_unknown_container():
     # the real leg decodes PPM/BMP/WAV; anything needing an external
     # codec library (or garbage) is a ValueError, not a wrong answer

@@ -128,8 +128,10 @@ def test_vocab_topk_doc_frequency_and_ties(spark):
         ],
         "doc_id long, text string",
     )
-    out = pq.vocab_topk(docs, k=2).collect()
-    assert [(r.shingle, r.doc_freq) for r in out] == [("x y z", 2), ("a b c", 1)]
+    out = pq.vocab_topk(docs).collect()
+    assert [(r.shingle, r.doc_freq) for r in out] == [
+        ("x y z", 2), ("a b c", 1), ("short doc", 1)
+    ]
 
 
 def test_vocab_topk_uses_takeordered(spark):
@@ -317,13 +319,6 @@ def test_asof_join_null_keys_never_match(spark):
     assert row.asof_value is None and row.asof_ts is None
 
 
-def test_sessionize_accepts_renamed_columns(spark):
-    rows = [(1, _ts(0), 100), (1, _ts(50), 101)]
-    ev = spark.createDataFrame(rows, "uid long, tstamp timestamp, eid long")
-    out = pq.sessionize(ev, user_col="uid", ts_col="tstamp", id_col="eid").collect()
-    assert len(out) == 2
-
-
 def test_dist_summary_ignores_nulls(spark):
     ev = spark.createDataFrame(
         [("a", None), ("a", 10.0), ("a", 20.0)],
@@ -350,7 +345,7 @@ def test_distinct_sketch_error_bound_and_exact(spark):
     df = spark.createDataFrame(rows, "g string, v string")
     from healthcare_aws_data_engineering_spark.operators.sketch import distinct_sketch
 
-    out = {r.g: r for r in distinct_sketch(df, "g", "v", include_exact=True).collect()}
+    out = {r.g: r for r in distinct_sketch(df, "g", "v").collect()}
     assert set(out) == {"g0", "g1"}
     for r in out.values():
         assert r.exact_distinct == 500
@@ -365,7 +360,7 @@ def test_distinct_sketch_single_shuffle(spark):
     from healthcare_aws_data_engineering_spark.sources.tables import load_table
 
     ev = load_table(spark, SF, "events")
-    plan = _plan(distinct_sketch(ev, "event_type", "user_id"))
+    plan = _plan(distinct_sketch(ev, "event_type", "user_id", include_exact=False))
     assert _n_exchanges(plan) == 1, plan
     assert "Expand" not in plan, plan
 
@@ -376,7 +371,7 @@ def test_distinct_sketch_null_values_ignored(spark):
     df = spark.createDataFrame(
         [("a", None), ("a", "x"), ("a", "y")], "g string, v string"
     )
-    row = distinct_sketch(df, "g", "v", include_exact=True).collect()[0]
+    row = distinct_sketch(df, "g", "v").collect()[0]
     assert row.exact_distinct == 2
     assert row.est_distinct > 0
 

@@ -627,6 +627,68 @@ def test_spread_keeps_an_already_split_input(spark):
     assert round_robins(spark.range(0, 100, numPartitions=1)) == 1
 
 
+def _jobs_fired(spark, fn):
+    """(result of ``fn()``, Spark jobs it fired), by the scheduler's next
+    job id."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    out = fn()
+    return out, sched.nextJobId() - before
+
+
+def test_spread_fires_no_job_on_a_shuffled_input(spark):
+    """spread() decides from the plan's leaf scans: on an input whose
+    plan holds a shuffle it still runs no job (reading the partition
+    count of the shuffled frame itself would run the shuffle stage)."""
+    from pyspark.sql import functions as F
+
+    from healthcare_aws_data_engineering_spark.sources.tables import spread
+
+    shuffled = spark.range(1000).groupBy(F.col("id") % 3).count()
+    _, jobs = _jobs_fired(spark, lambda: spread(shuffled))
+    assert jobs == 0
+
+
+def test_every_spread_call_site_fires_no_job(spark, monkeypatch):
+    """Every spread() call in the package, reached by building the rows
+    that use it, fires no job of its own."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    import healthcare_aws_data_engineering_spark.plans as plans
+    from healthcare_aws_data_engineering_spark.sources import tables
+
+    pkg = Path(plans.__file__).parent
+    sites = {
+        (f.name, node.lineno)
+        for f in pkg.glob("*.py")
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "spread"
+    }
+    seen = {}
+
+    def counted(df):
+        caller = inspect.stack()[1]
+        out, jobs = _jobs_fired(spark, lambda: tables.spread(df))
+        seen[(Path(caller.filename).name, caller.lineno)] = jobs
+        return out
+
+    for f in pkg.glob("*.py"):
+        mod = __import__(f"{plans.__name__}.{f.stem}", fromlist=["_"])
+        if getattr(mod, "spread", None) is tables.spread:
+            monkeypatch.setattr(mod, "spread", counted)
+    rows = [
+        "doc_attributes", "mixture_draw", "heavy_hitters", "word_bigrams",
+        "dup_ngrams", "zipf_slope", "repetition_filter", "dsir_select",
+        "fuzzy_match", "pricing_summary",
+    ]
+    for name in rows:
+        tq.QUERIES[name](spark, SF)
+    assert set(seen) == sites, sorted(sites - set(seen))
+    assert all(jobs == 0 for jobs in seen.values()), seen
+
+
 def test_pricing_summary_sums_do_not_depend_on_layout(spark):
     """pricing_summary sums through dsum (DECIMAL(28,6)), so the spread
     ahead of its aggregate cannot change its result: on values where a

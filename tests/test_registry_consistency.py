@@ -381,3 +381,138 @@ def test_caller_scan_flags_an_uncalled_function():
     assert _uncalled(package, [("tools/t.py", "import m\nm.unused()\n")]) == [
         "mod.py::used"
     ]
+
+
+# ------------------------------------------- defaulted parameters no caller sets --
+# Defaulted parameters of top-level package functions that no package
+# code, example, tool or benchmark passes, each with why it stays: the
+# test that needs another value to reach a code path at test scale, or a
+# deployment or entry-point seam. Every other such parameter is a
+# constant in the function body.
+_UNSET_KEPT = {
+    "__main__.py::main::argv": "entry point; test_streaming::test_cli_batch_and_incremental drives the CLI in-process",
+    "session.py::get_spark::master": "deployment seam (cluster master URL)",
+    "session.py::get_spark::shuffle_partitions": "deployment seam; conftest::spark runs the suite at 4 partitions",
+    "streaming/incremental.py::incremental_fhir_ingest::schema": "deployment seam (the pinned production schema); test_streaming::test_incremental_ingest_bookmark_semantics pins one schema across runs",
+    "operators/bpe.py::bpe_train::max_vocab": "test_bpe::test_bpe_train_vocab_cap caps the vocabulary at 30 and lifts the cap",
+    "operators/chunking.py::chunk_documents::emit_text": "test_tokenizer::test_chunking_space_exact_split_roundtrips_bytes re-joins the emitted chunk text",
+    "operators/decontam.py::decontaminate::eval_pct": "test_curation_ops::test_decontaminate_matches_python_model needs an eval split on a few documents",
+    "operators/decontam.py::decontaminate::threshold": "test_curation_ops::test_decontaminate_matches_python_model flags at 0.3 on short documents",
+    "operators/graph.py::connected_components::max_iter": "test_graph::test_cc_max_iter_truncates_long_chain reaches the non-convergence error",
+    "operators/ingest.py::incremental_dedup::batch_pct": "test_curation_ops::test_incremental_dedup_verdicts puts half of a few documents in the batch",
+    "operators/multimodal.py::media_features::deterministic_fake": "test_multimodal::test_media_features_real_leg runs the real decode leg",
+    "operators/multimodal.py::dhash_near_dup_pairs::n_bands": "test_multimodal::test_dhash_near_dup_rejects_unguaranteed_args reaches the band validation errors",
+    "operators/multimodal.py::dhash_near_dup_pairs::max_bucket": "test_multimodal::test_dhash_near_dup_bucket_cap caps buckets at 5",
+    "operators/semdedup.py::semantic_dedup::target_cluster": "test_training_data_ops::test_auto_assign_selects_two_level_in_semantic_dedup reaches the two-level path on 300 rows",
+    "operators/semdedup.py::semantic_dedup::assign": "test_analytics_ops::test_semantic_dedup_two_level_assign_catches_clones forces two-level assignment",
+    "operators/similarity.py::_centroid_cell_two_level::exact": "test_training_data_ops::test_two_level_assignment_matches_python_model compares on the exact long grid",
+    "operators/similarity.py::ivf_topk::target_cell": "test_training_data_ops::test_auto_assign_selects_two_level_above_the_cell_bound reaches the two-level path on 300 rows",
+    "operators/similarity.py::ivf_topk::assign": "test_training_data_ops::test_two_level_ivf_recall_holds_on_clusters forces two-level assignment",
+    "operators/similarity.py::ivfpq_topk::target_cell": "test_training_data_ops::test_auto_assign_selects_two_level_above_the_cell_bound reaches the two-level path on 300 rows",
+    "operators/similarity.py::ivfpq_topk::assign": "test_training_data_ops::test_two_level_ivf_recall_holds_on_clusters forces two-level assignment",
+    "operators/similarity.py::pq_codebooks::n_codes": "test_training_data_ops::test_pq_matches_python_model trains 8 codes on 41 vectors",
+    "operators/similarity.py::residual_codebooks::n_codes": "test_training_data_ops::test_ivfpq_residual_matches_python_model trains 8 codes on 41 vectors",
+    "operators/sketch.py::distinct_sketch::include_exact": "test_pipeline_ops::test_distinct_sketch_single_shuffle pins the sketch-only plan (one shuffle, no Expand)",
+    "operators/sketch.py::cms_heavy_hitters::depth": "test_corpus_ops::test_cms_collision_overestimates forces collisions with depth 1",
+    "operators/sketch.py::cms_heavy_hitters::width": "test_corpus_ops::test_cms_collision_overestimates forces collisions with width 2",
+    "operators/spans.py::span_dedup::emit_text": "test_corpus_ops::test_span_dedup_matches_python_model checks the reassembled text",
+    "operators/spans.py::repeated_spans::window": "test_corpus_ops::test_repeated_spans_random_corpus_matches_model uses 3-token windows on short documents",
+    "operators/spans.py::repeated_spans::min_count": "test_corpus_ops::test_repeated_spans_random_corpus_matches_model sets it with the window",
+    "operators/spans.py::scrub_repeated::window": "test_corpus_ops::test_span_scrub_matches_python_model uses 3-token windows on short documents",
+    "operators/spans.py::scrub_repeated::min_count": "test_corpus_ops::test_span_scrub_matches_python_model sets it with the window",
+    "operators/text.py::repetition_stats::top_word_max": "test_curation_ops::test_repetition_stats_handmade flags 4-word documents",
+    "operators/text.py::repetition_stats::top_bigram_max": "test_curation_ops::test_repetition_stats_handmade flags 4-word documents",
+    "operators/text.py::repetition_stats::distinct_min": "test_curation_ops::test_repetition_stats_handmade flags 4-word documents",
+    "operators/unigram.py::unigram_train::max_piece_len": "test_unigram::test_unigram_train_encode_roundtrip trains on a tiny corpus",
+    "operators/unigram.py::unigram_train::seed_size": "test_unigram::test_unigram_train_encode_roundtrip trains on a tiny corpus",
+    "plans/corpus_queries.py::duplicated_ngrams::n": "test_corpus_ops::test_duplicated_ngrams_matches_python_model uses 3- and 4-grams on short documents",
+    "plans/corpus_queries.py::duplicated_ngrams::k": "test_corpus_ops::test_duplicated_ngrams_top_k_order reaches the top-k cut with k=1",
+    "plans/curation_queries.py::bigram_lm_score::threshold": "test_curation_ops::test_bigram_lm_flags_word_salad_where_unigram_cannot flags at a threshold derived from the fixture",
+    "plans/pipeline_queries.py::pack_sequences::budget": "test_pipeline_ops::test_pack_sequences_manifest packs 10-token chunks by hand",
+    "plans/training_data_queries.py::domain_cap_topk::salts": "test_training_data_ops::test_domain_cap_topk_matches_exact_window shows the result does not depend on the salt count",
+    "plans/training_data_queries.py::two_phase_cum_tokens::n_buckets": "test_training_data_ops::test_two_phase_cum_tokens_degenerate_quality_fails_loudly sizes the buckets for a small input",
+    "plans/training_data_queries.py::two_phase_cum_tokens::max_bucket_rows": "test_training_data_ops::test_two_phase_cum_tokens_degenerate_quality_fails_loudly reaches the degenerate-bucket error",
+}
+
+
+def _defaulted(package: list[tuple[str, str]]) -> list[tuple[str, str, str, int | None]]:
+    """``(<path under the package>::<function>, function, parameter,
+    position or None if keyword-only)`` of every defaulted parameter of a
+    top-level function in ``package``."""
+    params = []
+    for path, src in package:
+        for top in ast.parse(src).body:
+            if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            args = top.args
+            positional = [*args.posonlyargs, *args.args]
+            key = f"{path.removeprefix(PKG + '/')}::{top.name}"
+            for i, arg in enumerate(positional):
+                if i >= len(positional) - len(args.defaults):
+                    params.append((key, top.name, arg.arg, i))
+            for arg, default in zip(args.kwonlyargs, args.kw_defaults):
+                if default is not None:
+                    params.append((key, top.name, arg.arg, None))
+    return params
+
+
+def _unset(package: list[tuple[str, str]], callers: list[tuple[str, str]]) -> list[str]:
+    """``<path under the package>::<function>::<parameter>`` of every
+    defaulted parameter of a top-level function in ``package`` that no
+    call in ``package`` or ``callers`` passes. A call counts when it names
+    a function of that name (a Name or an Attribute) and passes the
+    parameter by keyword, by position, or through ``*args``/``**kwargs``.
+    Matching on names can only miss an unset parameter, never invent one."""
+    passed = set()
+    for _, src in [*package, *callers]:
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            for kw in node.keywords:
+                passed.add((name, kw.arg or "**"))
+            for i, arg in enumerate(node.args):
+                passed.add((name, "*" if isinstance(arg, ast.Starred) else i))
+    return sorted(
+        f"{key}::{param}"
+        for key, name, param, i in _defaulted(package)
+        if not {(name, param), (name, "**"), (name, "*"), (name, i)} & passed
+    )
+
+
+def test_every_defaulted_parameter_is_set_by_a_caller_or_has_a_reason():
+    """A parameter no query, example, tool or benchmark sets runs one
+    value: it is a constant in the body, or kept on purpose with the
+    reason in ``_UNSET_KEPT``. Functions kept in ``_UNCALLED_KEPT`` are
+    reference API and keep their parameters."""
+    unset = [
+        u
+        for u in _unset(_sources(PKG), _sources(*_CALLER_ROOTS))
+        if u.rsplit("::", 1)[0] not in _UNCALLED_KEPT
+    ]
+    unlisted = [u for u in unset if u not in _UNSET_KEPT]
+    assert not unlisted, (
+        f"defaulted parameters no query, example, tool or benchmark sets "
+        f"(make them constants, or list them with a reason): {unlisted}"
+    )
+    stale = sorted(set(_UNSET_KEPT) - set(unset))
+    assert not stale, f"_UNSET_KEPT entries that are gone or now set: {stale}"
+
+
+def test_parameter_scan_flags_an_unset_parameter():
+    """The scan above must flag a parameter only a test or a docstring
+    sets, and must count a keyword and a positional set from a caller
+    root."""
+    package = [
+        (
+            f"{PKG}/mod.py",
+            "def f(df, a=1, b=2, *, c=3):\n    return df\n\n"
+            "def g(df, d=4):\n    return f(df, c=5)\n",
+        ),
+    ]
+    callers = [("tools/t.py", '"""f(df, a=2)"""\nimport mod\nmod.f(1, 2)\n')]
+    assert _unset(package, callers) == ["mod.py::f::b", "mod.py::g::d"]
+    assert _unset(package, [("tools/t.py", "g(0, d=1)\nf(0, b=1)\n")]) == [
+        "mod.py::f::a"
+    ]

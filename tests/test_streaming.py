@@ -264,7 +264,7 @@ def test_session_window_stream_equals_batch_and_sessionize(spark, tmp_path):
         sessionize,
     )
 
-    sess = sessionize(batch_events, gap_ms=30 * 60 * 1000)
+    sess = sessionize(batch_events)
     lag_counts = sorted(
         (r.user_id, r.n_events) for r in sess.collect()
     )

@@ -126,10 +126,10 @@ def test_minhash_signature_is_min_of_shingle_hashes(spark):
         (row.doc_a, row.doc_b)
         for row in D.minhash_lsh_pairs(
             _docs(spark, rows), num_perm=num_perm, bands=bands,
-            backend="md5", max_bucket=50,
+            backend="md5",
         ).collect()
     }
-    assert got == _py_bucket_pairs(keys, 50)
+    assert got == _py_bucket_pairs(keys, D.MAX_BUCKET)
     assert (2, 3) in got and len(got) > 20
 
 
@@ -182,8 +182,9 @@ def test_ngram_jaccard_matches_python(spark):
 def test_simhash_exact_dup_zero_hamming(spark):
     """simhash_pairs replayed in plain Python: 32 bit votes from the first
     8 hex digits of md5(shingle), sign-packed, banded 4 × 8 bits, capped
-    bucket self-join, Hamming-verified."""
-    bands, width, max_hamming = 4, 8, 10
+    bucket self-join, Hamming-verified at the operator's constants."""
+    bands, max_hamming = D.SIMHASH_BANDS, D.SIMHASH_MAX_HAMMING
+    width = 32 // bands
     sig = {}
     for doc, text in CORPUS:
         votes = [0] * 32
@@ -199,14 +200,12 @@ def test_simhash_exact_dup_zero_hamming(spark):
     ham = lambda a, b: bin(sig[a] ^ sig[b]).count("1")  # noqa: E731
     want = {
         (a, b): ham(a, b)
-        for a, b in _py_bucket_pairs(keys, 50)
+        for a, b in _py_bucket_pairs(keys, D.MAX_BUCKET)
         if ham(a, b) <= max_hamming
     }
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in D.simhash_pairs(
-            _docs(spark, CORPUS), bands=bands, max_hamming=max_hamming
-        ).collect()
+        for r in D.simhash_pairs(_docs(spark, CORPUS)).collect()
     }
     assert got == want
     assert got[(2, 3)] == 0
@@ -217,7 +216,7 @@ def test_simhash_exact_dup_zero_hamming(spark):
 def test_simhash_pairs_finds_dups(spark):
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in D.simhash_pairs(_docs(spark, CORPUS), max_hamming=10).collect()
+        for r in D.simhash_pairs(_docs(spark, CORPUS)).collect()
     }
     assert pairs[(2, 3)] == 0
 
@@ -343,9 +342,9 @@ def test_rolling_fingerprint_shift_invariance(spark):
     df = _docs(spark, [(0, "A " + body), (1, "B " + body)])
     fps = [
         r.f
-        for r in df.select(
-            T.rolling_fingerprint(F.col("text"), 16).alias("f")
-        ).collect()
+        for r in T.with_normalized(df)
+        .select(T.rolling_fingerprint(F.col("norm_text")).alias("f"))
+        .collect()
     ]
     assert fps[0] == fps[1]
 
@@ -379,7 +378,7 @@ def test_severity_topk_keeps_abnormal_and_borderline(spark):
         ]
     )
     out = {}
-    for r in severity_topk(labs, ranges, k=6).collect():
+    for r in severity_topk(labs, ranges).collect():
         out.setdefault(r.patient_id, []).append(r)
     assert [r.analyte for r in out[1]] == ["a", "b"]
     assert out[1][0].status == "High" and out[1][0].severity == 0
@@ -393,6 +392,7 @@ def test_severity_topk_limits_k(spark):
     from pyspark.sql import Row
 
     from healthcare_aws_data_engineering_spark.operators.severity import (
+        SEVERITY_TOP_K,
         severity_topk,
     )
 
@@ -400,9 +400,9 @@ def test_severity_topk_limits_k(spark):
     labs = spark.createDataFrame(
         [Row(patient_id=1, analyte=c, value=99.0) for c in "abcdefgh"]
     )
-    out = severity_topk(labs, ranges, k=6).collect()
-    assert len(out) == 6
-    assert [r.analyte for r in sorted(out, key=lambda r: r.rank)] == list("abcdef")
+    out = severity_topk(labs, ranges).collect()
+    assert len(out) == SEVERITY_TOP_K == 3
+    assert [r.analyte for r in sorted(out, key=lambda r: r.rank)] == list("abc")
 
 
 def test_ivf_topk_recall(spark):
@@ -437,7 +437,7 @@ def test_ivfpq_topk_composition_and_recall(spark):
     rows = _vec_rows()
     embs = spark.createDataFrame(rows)
     q = embs.filter(F.col("vec_id") < 3)
-    books = S.pq_codebooks(embs, m=8, n_codes=8)
+    books = S.pq_codebooks(embs, n_codes=8)
     full = {
         (r.query_id, r.neighbor_id, r.adist, r.rank)
         for r in S.ivfpq_topk(
@@ -473,7 +473,7 @@ def test_ivfpq_residual_matches_python_model(spark):
     embs = spark.createDataFrame(rows)
     q = embs.filter(F.col("vec_id") < 2)
     cents = S.sample_centroids(embs, 8)
-    books = S.residual_codebooks(embs, cents, m=8, n_codes=8)
+    books = S.residual_codebooks(embs, cents, n_codes=8)
     got = {
         (r.query_id, r.neighbor_id): r.adist
         for r in S.ivfpq_topk(
@@ -534,7 +534,7 @@ def test_ivfpq_residual_flags_absolute_codebooks(spark):
     embs = spark.createDataFrame(rows)
     q = embs.filter(F.col("vec_id") < 2)
     cents = S.sample_centroids(embs, 8)
-    absolute = S.pq_codebooks(embs, m=8, n_codes=8)
+    absolute = S.pq_codebooks(embs, n_codes=8)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         S.ivfpq_topk(
@@ -542,7 +542,7 @@ def test_ivfpq_residual_flags_absolute_codebooks(spark):
             centroids=cents, codebooks=absolute, residual=True,
         )
         assert any("ABSOLUTE" in str(x.message) for x in w)
-    matched = S.residual_codebooks(embs, cents, m=8, n_codes=8)
+    matched = S.residual_codebooks(embs, cents, n_codes=8)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         S.ivfpq_topk(
@@ -860,7 +860,7 @@ def test_pq_matches_python_model(spark):
     exact long equality (no tolerance: the math is integer)."""
     rows = _vec_rows()
     embs = spark.createDataFrame(rows)
-    books = S.pq_codebooks(embs, m=8, n_codes=8)
+    books = S.pq_codebooks(embs, n_codes=8)
     q = embs.filter(F.col("vec_id") < 2)
     got = {
         (r.query_id, r.neighbor_id): r.adist
