@@ -123,7 +123,7 @@ def _baselines() -> dict[str, float]:
 def _last_verified_rounds() -> dict[str, int | None]:
     """Per registry query, the latest round N whose CORRECTNESS_r{N}.json
     records a fully green verdict (rows + schema + hash, no err); None if
-    no round has one yet. Bench-only queries (ml_*_fast) are excluded —
+    no round has one yet. Rows outside the registry are excluded —
     they are not oracle-gated by design."""
     import glob
     import re
@@ -160,28 +160,10 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def extra_ml_fast():
-        # Production (parity=False) ML chain: plain-double folds instead
-        # of the cross-engine DECIMAL(18,6) oracle grid. Benched alongside
-        # the oracle path so the determinism tax is visible; NOT in the
-        # driver registry (no oracle can hash-match a non-parity fold).
-        from healthcare_aws_data_engineering_spark.ml import inference as I
-        from healthcare_aws_data_engineering_spark.plans.ml_queries import _features
-
-        return {
-            "ml_preprocess_fast": lambda s, d: I.preprocess(
-                _features(s, d), parity=False
-            ),
-            "ml_risk_scores_fast": lambda s, d: I.predict_diseases(
-                _features(s, d), parity=False
-            ),
-        }
-
     warm_up(spark, next(iter(QUERIES.values())), sf_dir)
 
     timings: dict[str, float] = {}
-    probe_fns = extra_ml_fast()
-    for name, fn in {**QUERIES, **probe_fns}.items():
+    for name, fn in QUERIES.items():
         timings[name] = median_total(time_query(spark, fn, sf_dir))
 
     # Gate-clean capture discipline: under the uniform-inflation
@@ -220,12 +202,10 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": {n: timings[n] for n in QUERIES},
-        # Bench-only probes (r13 verdict ask #6): timed every capture so
-        # the parity-grid determinism tax stays visible, but kept OUT of
-        # "queries" — they carry no baseline row, so their position-
-        # effect swings (±6.5 s in the r12→r13 diff) would pollute every
-        # round-over-round comparison of the gated rows.
-        "probes": {n: timings[n] for n in probe_fns},
+        # Bench-only rows timed outside "queries" (no baseline row, so
+        # they stay out of the gated comparison). None at present: the
+        # ML rows run one implementation, oracle-checked.
+        "probes": {},
         "sf": sf,
         # capture-quality telemetry: per-query rows over the 2x accrued
         # baseline gate, suite ratio vs accrued baseline, and whether

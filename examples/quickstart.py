@@ -10,9 +10,9 @@ production paths end-to-end:
    the reference's Athena report, Athena_queries_for_reports.sql:3-76);
 2. monthly wellness scoring (penalty binning → weighted subscores →
    wellness + trend inputs — mrp_website.py's scoring stack);
-3. ML disease risk scores on the PRODUCTION fast path (impute → scale →
-   PCA → KMeans → 3 fused XGBoost boosters; ``parity=False`` skips the
-   cross-engine decimal grid that only the correctness oracle needs).
+3. ML disease risk scores (impute → scale → PCA → KMeans → 3 fused
+   XGBoost boosters; everything after the impute runs in one numpy pass
+   inside a pandas UDF, the same code the oracle-checked query runs).
 
 **Parquet-path mode** (any other directory, or a single ``.parquet``
 file) — bring your own observations. The input must satisfy the
@@ -76,11 +76,11 @@ def run_testdata_demo(spark: SparkSession, sf_dir: str) -> None:
         "patient_id", "month", "wellness", "label_cardiovascular"
     ).orderBy("patient_id", "month").show(5, truncate=False)
 
-    # 3. ML risk scores, production fast path (no oracle decimal grid).
+    # 3. ML risk scores.
     features = feature_table(
         load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
     )
-    scores = predict_diseases(features, parity=False)
+    scores = predict_diseases(features)
     print("== XGBoost disease risk (first 5 patients) ==")
     scores.select(
         "patient_id", "cluster", "prob_cvd", "risk_cvd", "prob_ckd", "risk_ckd"

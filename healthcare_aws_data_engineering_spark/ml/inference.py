@@ -1,24 +1,43 @@
-"""Fitted-parameter inference as Spark expressions (SURVEY §2.10).
+"""Fitted-parameter inference (SURVEY §2.10).
 
 Stages (reference ``test.py:324-343`` inference chain, artifacts decoded
 by ``tools/extract_ml_params.py``):
 
-- M1 median impute   → ``F.coalesce(col, lit(median_i))`` (stored medians,
-  NOT a refit ``pyspark.ml.feature.Imputer``)
-- M2 standardize     → ``(x - mean_i) / scale_i`` column math
-- M3 PCA 19→14       → 14 dot-product expressions ``Σ c_ji (x_i - m_i)``
-- M4 KMeans assign   → argmin of 4 squared distances (array + array_position)
-- M5 XGB scoring ×3  → Arrow-vectorized pandas UDF; trees loaded
-  per-executor from package params (no joblib/xgboost dependency: the
-  boosters are traversed directly with numpy)
+- M1 median impute   → ``F.coalesce(col, lit(median_i))`` in the JVM
+  (stored medians, NOT a refit ``pyspark.ml.feature.Imputer``)
+- M2 standardize     → ``(x - mean_i) / scale_i``
+- M3 PCA 19→14       → 14 folds ``Σ c_ji (x_i - m_i)``
+- M4 KMeans assign   → first argmin of 4 squared-distance folds
+- M5 XGB scoring ×3  → boosters traversed directly with numpy (no
+  joblib/xgboost dependency); trees loaded per executor from package
+  params
 - M6 threshold/band  → ``F.when`` ladder (``functions.banding.risk_prob_band``,
   test.py:157-163)
 
-Everything before M5 is pure JVM column math inside whole-stage codegen —
-no Python in the hot path; M5 transfers one Arrow batch per partition.
+M1 is JVM column math, so NULL handling is Spark's ``COALESCE``. M2–M5
+run in numpy inside ONE Arrow-batched pandas UDF per query
+(:func:`_pca_kmeans`, then :func:`_score_matrix`): the UDF takes the 19
+imputed features and returns ``cluster`` plus the three probabilities
+(``ml_preprocess`` takes z0..z13 and ``cluster`` from the same helper).
 
-Scale note: per-row affine math scales embarrassingly; the UDF is the only
-Python stage and is O(trees × depth) per row with no shuffle.
+The M3/M4 folds sit on an integer micro-unit grid: each term ``t``
+becomes ``floor(t·1e6 + 0.5)`` as a 64-bit integer, the integers are
+summed exactly, and the fold is ``double(sum) / 1e6``. That is IEEE
+multiply, add, floor and divide (correctly rounded in every engine)
+around an exact integer sum, so numpy, Spark and DuckDB produce the same
+bits in any summation order. :func:`pca_sql_exprs` and
+:func:`kmeans_sql_expr` emit the same operations as SQL text for the
+DuckDB oracle. Range: a fold's micro-unit sum must fit a signed 64-bit
+integer, which bounds |z| at about 8·10^5 for the 14-term distance
+folds; clinical inputs give |z| of order 10.
+
+Scale note: per-row math, no shuffle. The scoring UDF ships 19 input
+columns per row across Arrow (the 14 model inputs before M2–M4 moved
+into it, so 5 more) and 4 back. Per Arrow batch of n rows
+(``spark.sql.execution.arrow.maxRecordsPerBatch``, 10,000 by default)
+numpy holds the n×19 float64 inputs, one n×19 term matrix per fold at a
+time (about 1.5 MB at 10,000 rows), and the booster walk's n×trees index
+matrices; M5 is O(trees × depth) per row.
 """
 
 from __future__ import annotations
@@ -28,154 +47,72 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.banding import risk_prob_band
-from .params import DISEASES, model_features, sklearn_pipeline, xgb_trees
+from .params import DISEASES, feature_names, model_features, sklearn_pipeline, xgb_trees
 
 THRESHOLD = 0.5
 
 
-# ------------------------------------------------------------------ M1+M2 --
-def impute_expr(name: str, median: float) -> Column:
-    return F.coalesce(F.col(name).cast("double"), F.lit(float(median)))
-
-
-def imputed_columns() -> dict[str, Column]:
+# -------------------------------------------------------------------- M1 --
+def _imputed_columns() -> list[Column]:
     p = sklearn_pipeline()
-    return {
-        n: impute_expr(n, m)
-        for n, m in zip(p["feature_names"], p["imputer"]["statistics"])
-    }
-
-
-# -------------------------------------------------------------------- M3 --
-# DECIMAL(18,6): exact sums like the old 28,6, but precision ≤ 18 keeps
-# Spark's Decimal on its compact-long fast path (28 → per-op BigDecimal,
-# measured ~2x slower per-row math). Range: z-score-scale terms ≤ ~10²,
-# vastly inside ±10^12. The chained + widens (18,6)+(18,6)→(19,6)→…→
-# (37,6) ≤ 38 in BOTH engines with no precision loss, so results stay
-# bit-identical without per-add cast-backs.
-_DEC = "DECIMAL(18,6)"
-
-
-def _f(x: float) -> str:
-    """Shortest round-trip float literal, forced onto the DOUBLE parse
-    path in BOTH engines via an exponent suffix. Without it, DuckDB
-    parses a bare 16-digit literal as DECIMAL and its DECIMAL→DOUBLE
-    conversion is not correctly rounded — e.g. bare 0.9700000286102295
-    lands one ulp high (…96), which flipped an XGB split for feature
-    values exactly AT the split (x < cond false where numpy said false…
-    DuckDB's off-by-one-ulp cond said true) — caught at sf0.1 as a
-    35-micro-unit probability jump. `…e0` parses as DOUBLE (correctly
-    rounded strtod) in Spark and DuckDB alike; scientific reprs already
-    carry an exponent and pass through."""
-    s = repr(float(x))
-    return s if ("e" in s or "E" in s) else s + "e0"
-
-
-def _fold_sql(terms: list[str], parity: bool = True) -> str:
-    """Order-independent exact fold of per-row double term strings: each
-    TERM is bit-identical across engines (same scalar expression), but a
-    chained double ADDITION is not (engines may vectorize/reassociate the
-    fold), so terms are cast to DECIMAL and summed exactly. The SAME string
-    is parsed by Spark (F.expr) and DuckDB — textual identity is the parity
-    argument. Building expressions as one parsed string also avoids ~1,600
-    py4j round-trips per query (~3 s of plan-build).
-
-    ``parity=False`` is the PRODUCTION fast path: plain double adds
-    (~2× cheaper per-row math — no per-term decimal conversion). The
-    result differs from the parity fold only by the grid itself — the
-    parity path rounds every term to 1e-6, so a 19-term fold can move by
-    ~1e-5 (pinned by
-    ``test_ml_inference.py::test_fast_path_matches_parity``; cluster ids
-    and downstream XGBoost probabilities are unaffected). Use it when no
-    cross-engine hash must match — i.e. everywhere except the oracle
-    gate."""
-    if not parity:
-        return f"({' + '.join(terms)})"
-    cast_terms = [f"CAST({t} AS {_DEC})" for t in terms]
-    return f"CAST({' + '.join(cast_terms)} AS DOUBLE)"
-
-
-def scaled_sql(name: str, med: float, mu: float, s: float) -> str:
-    return (
-        f"((COALESCE(CAST({name} AS DOUBLE), {_f(med)}) - {_f(mu)}) / {_f(s)})"
-    )
-
-
-def _scaled_sql_map() -> dict[str, str]:
-    p = sklearn_pipeline()
-    return {
-        n: scaled_sql(n, med, mu, s)
-        for n, med, mu, s in zip(
-            p["feature_names"],
-            p["imputer"]["statistics"],
-            p["scaler"]["mean"],
-            p["scaler"]["scale"],
-        )
-    }
-
-
-def pca_sql_exprs(
-    scaled: dict[str, str] | None = None, parity: bool = True
-) -> list[str]:
-    """z_j = Σ_i components[j][i] * (scaled_i - pca_mean_i), j = 0..13, as
-    engine-neutral SQL text (decimal-folded, see :func:`_fold_sql`).
-
-    ``scaled`` maps feature name → SQL snippet; pass staged column names
-    (see :func:`preprocess`) to keep the parsed tree small — inlining the
-    impute+scale expression into every one of the 14x19 terms blows the
-    codegen unit up ~20x (seconds of Janino compile time per query)."""
-    p = sklearn_pipeline()
-    scaled = scaled or _scaled_sql_map()
-    mean = p["pca"]["mean"]
-    names = p["feature_names"]
-    out = []
-    for row in p["pca"]["components"]:
-        terms = [
-            f"{_f(c)} * ({scaled[n]} - {_f(mean[i])})"
-            for i, (n, c) in enumerate(zip(names, row))
-        ]
-        out.append(_fold_sql(terms, parity))
-    return out
-
-
-def pca_columns(
-    scaled: dict[str, str] | None = None, parity: bool = True
-) -> list[Column]:
-    """Spark columns for the PCA projection — F.expr over the same strings
-    the DuckDB oracle runs (``parity=False`` → plain-double production
-    fold, see :func:`_fold_sql`)."""
     return [
-        F.expr(e).alias(f"z{j}")
-        for j, e in enumerate(pca_sql_exprs(scaled, parity))
+        F.coalesce(F.col(n).cast("double"), F.lit(float(m))).alias(n)
+        for n, m in zip(p["feature_names"], p["imputer"]["statistics"])
     ]
 
 
-# -------------------------------------------------------------------- M4 --
-def kmeans_sql_expr(
-    z_names: list[str], engine: str = "duckdb", parity: bool = True
-) -> str:
-    """argmin_j ‖z − center_j‖² as SQL text; ties break to the LOWER center
-    index (first-match position). Distance folds are engine-identical; only
-    the array/position function NAMES differ per dialect."""
-    centers = sklearn_pipeline()["kmeans"]["centers"]
+# ------------------------------------------------------------- M2–M4 numpy --
+def _micro_fold(terms):
+    """Sum of the last axis on the integer micro-unit grid — the numpy
+    twin of :func:`_fold_sql`, operation for operation."""
+    import numpy as np
+
+    micro = np.floor(terms * 1e6 + 5e-1).astype(np.int64)
+    return micro.sum(axis=-1).astype(np.float64) / 1e6
+
+
+def _pca_kmeans(X):
+    """Imputed features (n×19 float64) → (z: n×14 float64, cluster: n
+    int32), the same operations in the same order as the SQL text of
+    :func:`pca_sql_exprs` and :func:`kmeans_sql_expr`: scale, PCA terms,
+    distance terms, then the first minimum (the lowest index wins ties)."""
+    import numpy as np
+
+    p = sklearn_pipeline()
+    scaled = (X - np.asarray(p["scaler"]["mean"])) / np.asarray(p["scaler"]["scale"])
+    centred = scaled - np.asarray(p["pca"]["mean"])
+    comps = np.asarray(p["pca"]["components"])
+    z = np.column_stack([_micro_fold(row * centred) for row in comps])
     dists = []
-    for c in centers:
-        terms = [
-            f"({z} - {_f(cj)}) * ({z} - {_f(cj)})"
-            for z, cj in zip(z_names, c)
-        ]
-        dists.append(f"({_fold_sql(terms, parity)})")
-    if engine == "spark":
-        arr = f"array({', '.join(dists)})"
-        return (
-            f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)"
-        )
-    arr = f"[{', '.join(dists)}]"
-    return f"CAST(list_position({arr}, list_min({arr})) - 1 AS INT)"
+    for c in np.asarray(p["kmeans"]["centers"]):
+        d = z - c
+        dists.append(_micro_fold(d * d))
+    return z, np.argmin(np.column_stack(dists), axis=1).astype(np.int32)
 
 
-def kmeans_cluster_expr(z_cols: list[str], parity: bool = True) -> Column:
-    return F.expr(kmeans_sql_expr(z_cols, engine="spark", parity=parity))
+def _feature_matrix(cols):
+    import numpy as np
+
+    return np.column_stack([c.to_numpy(dtype=np.float64) for c in cols])
+
+
+def _preprocess_udf():
+    """The 19 imputed features → struct<z0..z13, cluster>: M2–M4 in one
+    Arrow pass."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    n_comp = len(sklearn_pipeline()["pca"]["components"])
+    fields = ", ".join(f"z{j} double" for j in range(n_comp))
+
+    @pandas_udf(f"struct<{fields}, cluster int>")
+    def z_cluster(*cols):
+        z, cluster = _pca_kmeans(_feature_matrix(cols))
+        out = pd.DataFrame(z, columns=[f"z{j}" for j in range(n_comp)])
+        out["cluster"] = cluster
+        return out
+
+    return z_cluster
 
 
 # -------------------------------------------------------------------- M5 --
@@ -256,90 +193,57 @@ def _score_matrix(X, disease: str):
     return _sigmoid(margin)
 
 
-def xgb_probabilities_all(feature_cols: list[str]) -> Column:
-    """All three boosters in ONE pandas UDF → struct<cvd,anemia,ckd>.
-    One Arrow batch transfer and one feature-matrix build instead of
-    three — the production scoring path."""
+def _scoring_udf():
+    """The 19 imputed features → struct<cluster, cvd, anemia, ckd>: M2–M5
+    in one Arrow pass. The boosters read the model inputs on float32, as
+    xgboost's DMatrix ingest does."""
+    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    names = feature_names()
+    mf = model_features()
     fields = ", ".join(f"{d} double" for d in DISEASES)
 
-    @pandas_udf(f"struct<{fields}>")
+    @pandas_udf(f"struct<cluster int, {fields}>")
     def score(*cols):
-        import numpy as np
+        X = _feature_matrix(cols)
+        _, cluster = _pca_kmeans(X)
+        M = np.column_stack(
+            [cluster if n == "cluster" else X[:, names.index(n)] for n in mf]
+        ).astype(np.float32)
+        return pd.DataFrame(
+            {"cluster": cluster, **{d: _score_matrix(M, d) for d in DISEASES}}
+        )
 
-        X = np.column_stack([c.to_numpy(dtype=np.float32) for c in cols])
-        return pd.DataFrame({d: _score_matrix(X, d) for d in DISEASES})
-
-    return score(*[F.col(c) for c in feature_cols])
+    return score
 
 
 # ------------------------------------------------------------ composition --
-def _z_cluster(
-    features: DataFrame, id_col: str, carried: dict[str, Column], parity: bool
-) -> DataFrame:
-    """id + ``carried`` columns + 14 PCA components + cluster id.
-
-    Impute+scale is staged as real columns (__s_<name>) first, so each of
-    the 14 z-expressions references a cheap attribute instead of
-    re-inlining the scale expression 19× (CollapseProject keeps non-cheap
-    exprs used more than once staged)."""
-    p = sklearn_pipeline()
-    smap = _scaled_sql_map()
-    staged = features.select(
-        F.col(id_col),
-        *[c.alias(n) for n, c in carried.items()],
-        *[F.expr(smap[n]).alias(f"__s_{n}") for n in p["feature_names"]],
-    )
-    refs = {n: f"__s_{n}" for n in p["feature_names"]}
-    z = staged.select(
-        F.col(id_col), *[F.col(n) for n in carried], *pca_columns(refs, parity)
-    )
-    znames = [f"z{j}" for j in range(len(p["pca"]["components"]))]
-    return z.withColumn("cluster", kmeans_cluster_expr(znames, parity))
+def preprocess(features: DataFrame) -> DataFrame:
+    """features (19 raw columns, nulls allowed) → patient_id, 14 PCA
+    components, cluster id: JVM imputation, then M2–M4 in one pandas UDF."""
+    return features.select(
+        "patient_id", _preprocess_udf()(*_imputed_columns()).alias("__z")
+    ).select("patient_id", "__z.*")
 
 
-def preprocess(features: DataFrame, parity: bool = True) -> DataFrame:
-    """features (19 raw columns, nulls allowed) → 14 PCA components +
-    cluster id. Two projection stages (scaled → z+cluster), all JVM column
-    math; the z / distance folds parse from the same SQL text the DuckDB
-    oracle executes.
-
-    ``parity=False`` swaps the exact DECIMAL(18,6) folds for plain double
-    sums — the production path when no cross-engine hash must match
-    (~2× cheaper per-row math; ~1e-5 z drift from the grid, pinned by
-    test)."""
-    return _z_cluster(features, "patient_id", {}, parity)
-
-
-def predict_diseases(features: DataFrame, parity: bool = True) -> DataFrame:
-    """Full M1→M6 chain as ONE linear flow (no self-join): imputed model
-    inputs ride along through the z/cluster stages, then the fused
-    3-booster UDF scores once.
+def predict_diseases(features: DataFrame) -> DataFrame:
+    """Full M1→M6 chain as ONE linear flow (no self-join): JVM
+    imputation, then M2–M5 in the scoring UDF, then flags and bands.
 
     The scoring input is repartitioned to the session's default
     parallelism: the 1200-tree UDF is orders of magnitude more expensive
     per byte than the shuffle heuristics assume, so AQE would otherwise
     coalesce a small feature table to ONE partition and serialize the
-    scoring.
-
-    ``parity=False``: production fast path — plain-double z/cluster
-    folds instead of the exact DECIMAL(18,6) oracle grid (see
-    :func:`_fold_sql`); the XGBoost stage is identical either way (its
-    features are the raw imputed values plus the cluster id)."""
-    mf = model_features()  # includes 'cluster'
-    imput = imputed_columns()
-    carried = {n: imput[n] for n in mf if n != "cluster"}
-    scored_in = (
-        _z_cluster(features, "patient_id", carried, parity)
-        .select("patient_id", "cluster", *[F.col(n) for n in carried])
-        .repartition(
-            features.sparkSession.sparkContext.defaultParallelism, F.col("patient_id")
-        )
+    scoring."""
+    scored_in = features.select("patient_id", *_imputed_columns()).repartition(
+        features.sparkSession.sparkContext.defaultParallelism, F.col("patient_id")
     )
-    out = scored_in.withColumn("__p", xgb_probabilities_all(mf))
-    cols = [F.col("patient_id"), F.col("cluster")]
+    out = scored_in.select(
+        "patient_id", _scoring_udf()(*feature_names()).alias("__p")
+    )
+    cols = [F.col("patient_id"), F.col("__p.cluster").alias("cluster")]
     for d in DISEASES:
         p = F.col("__p")[d]
         cols += [
@@ -348,6 +252,78 @@ def predict_diseases(features: DataFrame, parity: bool = True) -> DataFrame:
             risk_prob_band(p).alias(f"risk_{d}"),
         ]
     return out.select(*cols)
+
+
+# ------------------------------------------------------ M2–M4 DuckDB oracle --
+def _f(x: float) -> str:
+    """Shortest round-trip float literal, forced onto the DOUBLE parse
+    path in BOTH engines via an exponent suffix. Without it, DuckDB
+    parses a bare 16-digit literal as DECIMAL and its DECIMAL→DOUBLE
+    conversion is not correctly rounded — e.g. bare 0.9700000286102295
+    lands one ulp high (…96), which flipped an XGB split for feature
+    values exactly AT the split (x < cond false where numpy said false…
+    DuckDB's off-by-one-ulp cond said true) — caught at sf0.1 as a
+    35-micro-unit probability jump. `…e0` parses as DOUBLE (correctly
+    rounded strtod) in Spark and DuckDB alike; scientific reprs already
+    carry an exponent and pass through."""
+    s = repr(float(x))
+    return s if ("e" in s or "E" in s) else s + "e0"
+
+
+def _fold_sql(terms: list[str]) -> str:
+    """Integer micro-unit fold of per-row double term strings (module
+    docstring): ``CAST(FLOOR(t * 1e6 + 5e-1) AS BIGINT)`` per term, a
+    BIGINT sum, then ``CAST(sum AS DOUBLE) / 1e6``. Each term is the same
+    IEEE expression in every engine and the sum is exact, so the result
+    does not depend on how an engine orders the additions. The numpy twin
+    is :func:`_micro_fold`."""
+    micro = [f"CAST(FLOOR(({t}) * 1e6 + 5e-1) AS BIGINT)" for t in terms]
+    return f"(CAST({' + '.join(micro)} AS DOUBLE) / 1e6)"
+
+
+def _scaled_sql_map() -> dict[str, str]:
+    p = sklearn_pipeline()
+    return {
+        n: f"((COALESCE(CAST({n} AS DOUBLE), {_f(med)}) - {_f(mu)}) / {_f(s)})"
+        for n, med, mu, s in zip(
+            p["feature_names"],
+            p["imputer"]["statistics"],
+            p["scaler"]["mean"],
+            p["scaler"]["scale"],
+        )
+    }
+
+
+def pca_sql_exprs() -> list[str]:
+    """z_j = Σ_i components[j][i] * (scaled_i - pca_mean_i), j = 0..13, as
+    engine-neutral SQL text over the raw feature columns (imputed and
+    scaled inline), folded by :func:`_fold_sql`."""
+    p = sklearn_pipeline()
+    scaled = _scaled_sql_map()
+    mean = p["pca"]["mean"]
+    out = []
+    for row in p["pca"]["components"]:
+        terms = [
+            f"{_f(c)} * ({scaled[n]} - {_f(mean[i])})"
+            for i, (n, c) in enumerate(zip(p["feature_names"], row))
+        ]
+        out.append(_fold_sql(terms))
+    return out
+
+
+def kmeans_sql_expr(z_names: list[str]) -> str:
+    """argmin_j ‖z − center_j‖² as DuckDB SQL text; ties break to the
+    LOWER center index (first-match position), like ``numpy.argmin``."""
+    centers = sklearn_pipeline()["kmeans"]["centers"]
+    dists = []
+    for c in centers:
+        terms = [
+            f"({z} - {_f(cj)}) * ({z} - {_f(cj)})"
+            for z, cj in zip(z_names, c)
+        ]
+        dists.append(_fold_sql(terms))
+    arr = f"[{', '.join(dists)}]"
+    return f"CAST(list_position({arr}, list_min({arr})) - 1 AS INT)"
 
 
 # ---------------------------------------------------- M5/M6 DuckDB oracle --

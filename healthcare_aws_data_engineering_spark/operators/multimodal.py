@@ -5,29 +5,27 @@ travel as opaque ``binary`` columns with a typed metadata struct; decode /
 feature-extract / frame-sample run as Arrow-batched
 ``mapInPandas`` stages.
 
-The codec step has TWO legs:
+The feature codec (``media_features``) derives stable pseudo-content
+from the bytes themselves (md5-seeded with ASCII salts — md5 is the one
+hash every engine shares, so the DuckDB oracle can replay the fake codec
+end-to-end and the oracle's value-hash check covers these paths too).
 
-- ``deterministic_fake=True`` derives stable pseudo-content from the
-  bytes themselves (md5-seeded with ASCII salts — md5 is the one hash
-  every engine shares, so the DuckDB oracle can replay the fake codec
-  end-to-end and the driver's value-hash check covers these paths too);
-- ``deterministic_fake=False`` (r8, formerly ``NotImplementedError``)
-  REALLY decodes: ``operators/media_codecs.py`` parses the uncompressed
-  containers (binary PPM, 24-bpp BMP, PCM16 WAV) with ``struct`` alone —
-  header parse, BMP row un-padding + vertical flip, payload recovery —
-  and features come from the decoded payload bytes. Compressed formats
-  (JPEG/PNG/MP3) still need an external library and raise ``ValueError``
-  on their magic bytes; swapping in Pillow/ffmpeg remains a one-function
-  replacement in ``media_codecs.decode_media``.
+The REAL decode is ``decode_media_stats``: ``operators/media_codecs.py``
+parses the uncompressed containers (binary PPM, 24-bpp BMP, PCM16 WAV)
+with ``struct`` alone — header parse, BMP row un-padding + vertical
+flip, payload recovery. Compressed formats (JPEG/PNG/MP3) still need an
+external library and raise ``ValueError`` on their magic bytes; swapping
+in Pillow/ffmpeg remains a one-function replacement in
+``media_codecs.decode_media``.
 
 ``encoded_media_from_documents`` builds REAL container bytes from the
 documents table entirely in JVM expressions (header fields as
 little-endian hex, payload as an md5 chain, one ``unhex`` at the end) —
 encode is a projection fused into the scan, no Python in that stage —
 and ``decode_media_stats`` is the Arrow-batched decode that recovers
-and verifies the payload. Everything around the codec — schemas, meta
-propagation, Arrow batch shapes, multi-row fan-out for frame sampling,
-partition sizing — is shared by both legs.
+and verifies the payload. Schemas, meta propagation, Arrow batch shapes,
+multi-row fan-out for frame sampling and partition sizing are shared by
+both codecs.
 
 Scale design:
 - media rows are large (MBs): keep ``spark.sql.files.maxPartitionBytes``
@@ -102,28 +100,12 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def _decode_bytes(content: bytes, n: int, deterministic_fake: bool) -> list[float]:
-    """The per-row codec, two legs (module docstring):
-
-    deterministic_fake=True → n floats in [0,1): feature k is the first
-    48 bits of md5(content + "#feat:k") divided by 2^48 — 48 bits keep
-    the integer exact in a double and the divisor is a power of two, so
-    the value is bit-identical in Python, Spark, and the DuckDB oracle
-    (``('0x' || substr(md5(...), 1, 12))::BIGINT / 2^48``).
-
-    deterministic_fake=False → REAL decode via media_codecs (PPM/BMP/WAV)
-    and n features from the decoded payload: feature 0 is the mean byte
-    value / 255, feature k>0 samples the payload at evenly-spaced
-    offsets / 255 — all in [0, 1]."""
-    if not deterministic_fake:
-        from .media_codecs import decode_media
-
-        payload = decode_media(bytes(content or b"")).payload or b"\x00"
-        length = len(payload)
-        feats = [sum(payload) / length / 255.0]
-        for k in range(1, n):
-            feats.append(payload[((k - 1) * length) // max(n - 1, 1)] / 255.0)
-        return feats
+def _decode_bytes(content: bytes, n: int) -> list[float]:
+    """The per-row feature codec: n floats in [0,1), feature k is the
+    first 48 bits of md5(content + "#feat:k") divided by 2^48 — 48 bits
+    keep the integer exact in a double and the divisor is a power of
+    two, so the value is bit-identical in Python, Spark, and the DuckDB
+    oracle (``('0x' || substr(md5(...), 1, 12))::BIGINT / 2^48``)."""
     seed = content or b""
     return [
         int(hashlib.md5(seed + f"#feat:{k}".encode()).hexdigest()[:12], 16)
@@ -132,11 +114,7 @@ def _decode_bytes(content: bytes, n: int, deterministic_fake: bool) -> list[floa
     ]
 
 
-def media_features(
-    media: DataFrame,
-    dim: int = 16,
-    deterministic_fake: bool = True,
-) -> DataFrame:
+def media_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """media → fixed-width feature vector per row (the decode+embed stage).
 
     mapInPandas: one Arrow batch in, one out; the binary column is dropped
@@ -155,10 +133,7 @@ def media_features(
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [
-                _decode_bytes(c, dim, deterministic_fake)
-                for c in pdf["content"]
-            ]
+            feats = [_decode_bytes(c, dim) for c in pdf["content"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],

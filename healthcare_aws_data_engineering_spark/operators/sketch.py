@@ -47,37 +47,25 @@ def digest_halves(value: Column) -> tuple[Column, Column]:
     return h1, h2
 
 
-def distinct_sketch(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    include_exact: bool = True,
-) -> DataFrame:
+def distinct_sketch(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Per-group estimated distinct count of ``value_col`` (the k
-    min-hash sketch internals folded away). Returns ``group_col,
-    est_distinct`` (double), plus ``exact_distinct`` unless
-    ``include_exact=False`` (the driver query reports both; at real
-    scale you run the sketch INSTEAD of the exact distinct, that being
-    the point)."""
+    min-hash sketch internals folded away): ``group_col, est_distinct``
+    (double). It runs INSTEAD of an exact distinct count, that being the
+    point: one map-side-combined shuffle of k mins per group."""
     h1, h2 = digest_halves(F.col(value_col).cast("string"))
-    staged_cols = [F.col(group_col), h1.alias("__h1"), h2.alias("__h2")]
-    if include_exact:
-        staged_cols.append(F.col(value_col))
-    staged = df.select(*staged_cols)
+    staged = df.select(F.col(group_col), h1.alias("__h1"), h2.alias("__h2"))
     u = [
         ((F.col("__h1") + i * F.col("__h2")) % _TWO32) / F.lit(float(_TWO32))
         for i in range(SKETCH_K)
     ]
-    aggs = [F.min(u[i]).alias(f"__m{i}") for i in range(SKETCH_K)]
-    if include_exact:
-        aggs = [F.count_distinct(F.col(value_col)).alias("exact_distinct")] + aggs
-    agg = staged.groupBy(group_col).agg(*aggs)
+    agg = staged.groupBy(group_col).agg(
+        *[F.min(u[i]).alias(f"__m{i}") for i in range(SKETCH_K)]
+    )
     total = None
     for i in range(SKETCH_K):
         total = F.col(f"__m{i}") if total is None else total + F.col(f"__m{i}")
     est = (F.lit(float(SKETCH_K)) / total) - 1.0
-    keep = [group_col] + (["exact_distinct"] if include_exact else [])
-    return agg.select(*keep, est.alias("est_distinct"))
+    return agg.select(group_col, est.alias("est_distinct"))
 
 
 # ------------------------------------------------------ histogram quantiles --

@@ -1,11 +1,16 @@
 """Driver-facing ML queries (SURVEY §2.10 M1–M7) over the testdata.
 
 - ``ml_features``   — M7 feature table (oracle-checked).
-- ``ml_preprocess`` — M1–M4 impute→scale→PCA→cluster. The oracle SQL is
-  GENERATED from the same extracted parameters with identical expression
-  association order, so per-row doubles match bit-for-bit (no aggregation
-  is involved — only per-row affine math).
-- ``ml_risk_scores``— M5/M6 XGBoost probabilities + flags + bands. The
+- ``ml_preprocess`` — M1–M4 impute→scale→PCA→cluster: JVM imputation,
+  then one pandas UDF (``inference._pca_kmeans``) on the integer
+  micro-unit grid. The oracle SQL is GENERATED from the same extracted
+  parameters with the same operations in the same order
+  (``inference.pca_sql_exprs`` / ``kmeans_sql_expr``), so per-row doubles
+  match bit-for-bit: IEEE multiply, add and floor per term, then exact
+  integer sums (no aggregation is involved — only per-row math).
+- ``ml_risk_scores``— M5/M6 XGBoost probabilities + flags + bands; one
+  pandas UDF computes the cluster (the same ``_pca_kmeans``) and scores
+  the three boosters. The
   oracle is a GENERATED recursive-CTE tree walk over the inlined ~42k-node
   table of all three boosters (``inference.xgb_walk_sql``) — DuckDB
   replays the exact numpy lock-step traversal (float32 feature grid,

@@ -714,11 +714,11 @@ GROUP BY p_partkey
 # -------------------------------------------------------- distinct_sketch --
 def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic cardinality sketch (k=32 md5-permutation min-hash):
-    per event type, the estimated AND exact distinct user count. The
-    estimate itself hash-matches the DuckDB replay — something no
-    HLL-based approx_count_distinct can do across engines (different
-    algorithms/hashes). The sketch's shuffle row is k fixed-width
-    doubles per group vs exact distinct's Expand over every value."""
+    per event type, the estimated distinct user count. The estimate
+    itself hash-matches the DuckDB replay — something no HLL-based
+    approx_count_distinct can do across engines (different
+    algorithms/hashes). The plan is one shuffle of k fixed-width doubles
+    per group, with no exact distinct's Expand over every value."""
     from ..operators.sketch import distinct_sketch
 
     ev = load_table(spark, sf_dir, "events")
@@ -727,8 +727,7 @@ def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _distinct_sketch_sql() -> str:
     # DuckDB twin of operators.sketch.distinct_sketch: the same staged
-    # double-hash halves, k mins and fixed-order sum, plus the
-    # exact_distinct column the driver query includes.
+    # double-hash halves, k mins and fixed-order sum.
     from ..operators.sketch import SKETCH_K
 
     two32 = 4294967296
@@ -740,17 +739,17 @@ def _distinct_sketch_sql() -> str:
     total = " + ".join(f"__m{i}" for i in range(SKETCH_K))
     return f"""
 WITH h AS (
-  SELECT event_type, user_id,
+  SELECT event_type,
     CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) AS __h1,
     CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 9, 8)) AS BIGINT) AS __h2
   FROM events
 ),
 s AS (
-  SELECT event_type, COUNT(DISTINCT user_id) AS exact_distinct,
+  SELECT event_type,
     {mins}
   FROM h GROUP BY event_type
 )
-SELECT event_type, exact_distinct,
+SELECT event_type,
   (CAST({SKETCH_K} AS DOUBLE) / ({total})) - CAST(1 AS DOUBLE) AS est_distinct
 FROM s
 """

@@ -1,9 +1,11 @@
 """Parity tests for the ML inference layer (SURVEY §2.10 M1–M7).
 
 The fitted parameters are fixed JSON (extracted once from the reference
-artifacts); correctness here means the Spark column-math / UDF pipeline
-reproduces an independent numpy/scalar-Python application of those same
-parameters (float tolerance; the decimal fold quantizes at 1e-6).
+artifacts); correctness here means the Spark pipeline (JVM impute, then
+the numpy z/cluster/booster UDF) reproduces an independent plain-float
+numpy / scalar-Python application of those same parameters (float
+tolerance: the folds sit on a 1e-6 grid), and that the numpy helper
+and the oracle's SQL text give the same bits on adversarial rows.
 """
 
 from __future__ import annotations
@@ -92,29 +94,23 @@ def _scalar_xgb(disease: str, x: list[float]) -> float:
 
 @pytest.mark.parametrize("disease", P.DISEASES)
 def test_xgb_udf_matches_scalar_walk(spark, disease):
-    mf = P.model_features()
-    rnd = np.random.RandomState(5)
-    rows = []
-    for i in range(8):
-        vals = {n: float(np.round(rnd.uniform(0, 150), 2)) for n in mf}
-        vals["cluster"] = float(i % 4)
-        vals["sex"] = float(i % 2)
-        if i == 3:  # exercise missing-value routing (default_left)
-            vals["hdl_latest"] = float("nan")
-        rows.append(Row(rid=i, **vals))
-    df = spark.createDataFrame(rows)
-    out = {
-        r.rid: r.p
-        for r in df.select(
-            "rid", I.xgb_probabilities_all(mf)[disease].alias("p")
-        ).collect()
-    }
-    for r in rows:
-        x = [r[n] for n in mf]
-        # the UDF casts inputs to float32 like xgboost's DMatrix ingest
-        x32 = [None if math.isnan(v) else float(np.float32(v)) for v in x]
-        assert out[r.rid] == pytest.approx(_scalar_xgb(disease, x32), abs=1e-6), r.rid
-        assert 0.0 <= out[r.rid] <= 1.0
+    """The scoring UDF (cluster and boosters from the 19 imputed
+    features) against the independent numpy pipeline's cluster plus a
+    row-at-a-time booster walk on the float32 model inputs."""
+    rows = _rows(n=8)
+    out = {r.patient_id: r for r in I.predict_diseases(spark.createDataFrame(rows)).collect()}
+    _, cluster = _numpy_pipeline(rows)
+    med = dict(zip(FEATS, P.sklearn_pipeline()["imputer"]["statistics"]))
+    for i, r in enumerate(rows):
+        x = [
+            float(cluster[i]) if n == "cluster" else (med[n] if r[n] is None else r[n])
+            for n in P.model_features()
+        ]
+        x32 = [float(np.float32(v)) for v in x]
+        assert out[i].cluster == cluster[i], i
+        got = out[i][f"prob_{disease}"]
+        assert got == pytest.approx(_scalar_xgb(disease, x32), abs=1e-6), i
+        assert 0.0 <= got <= 1.0
 
 
 def test_predict_diseases_schema_and_flags(spark):
@@ -161,66 +157,6 @@ def test_feature_table_latest_tiebreak(spark):
     assert set(EVENTS_ML_KEYS) < set(FEATS)
 
 
-def test_fast_path_matches_parity(spark):
-    """parity=False (plain-double folds) vs the DECIMAL(18,6) oracle
-    grid: the parity fold quantizes each of the 19 terms at 1e-6, so z
-    components may differ by up to ~1e-5 (n_terms x half-ulp of the
-    grid); clusters must agree exactly, and probabilities to 1e-9 (the
-    XGBoost features are the raw imputed values — parity only touches
-    z/cluster)."""
-    df = spark.createDataFrame(_rows(n=40))
-    zp = {r.patient_id: r for r in I.preprocess(df, parity=True).collect()}
-    zf = {r.patient_id: r for r in I.preprocess(df, parity=False).collect()}
-    znames = [f"z{j}" for j in range(len(P.sklearn_pipeline()["pca"]["components"]))]
-    for pid, rp in zp.items():
-        rf = zf[pid]
-        assert rp.cluster == rf.cluster
-        for z in znames:
-            assert abs(rp[z] - rf[z]) < 2e-5, (pid, z)
-    sp = {r.patient_id: r for r in I.predict_diseases(df, parity=True).collect()}
-    sf = {r.patient_id: r for r in I.predict_diseases(df, parity=False).collect()}
-    for pid, rp in sp.items():
-        rf = sf[pid]
-        assert rp.cluster == rf.cluster
-        for d in I.DISEASES:
-            assert abs(rp[f"prob_{d}"] - rf[f"prob_{d}"]) < 1e-9, (pid, d)
-            assert rp[f"risk_{d}"] == rf[f"risk_{d}"]
-
-
-def test_fast_path_matches_parity_on_bench_inputs(spark):
-    """r8 (r7 verdict optional #9): the SAME pin as above, but over the
-    exact inputs bench.py's unoracled ``ml_preprocess_fast`` /
-    ``ml_risk_scores_fast`` rows run on — the driver-testdata feature
-    frame at sf0.001 — so the benched fast rows are verified against the
-    oracled parity path on their real inputs, not just synthetic rows.
-    Identity modulo rounding: clusters and risk bands exact,
-    probabilities to 1e-9, z to the parity grid's quantization bound."""
-    from healthcare_aws_data_engineering_spark.plans.ml_queries import _features
-
-    df = _features(spark, "/root/testdata/sf0.001").cache()
-    try:
-        zp = {r.patient_id: r for r in I.preprocess(df, parity=True).collect()}
-        zf = {r.patient_id: r for r in I.preprocess(df, parity=False).collect()}
-        assert zp and set(zp) == set(zf)
-        znames = [
-            f"z{j}" for j in range(len(P.sklearn_pipeline()["pca"]["components"]))
-        ]
-        for pid, rp in zp.items():
-            rf = zf[pid]
-            assert rp.cluster == rf.cluster
-            for z in znames:
-                assert abs(rp[z] - rf[z]) < 2e-5, (pid, z)
-        sp = {r.patient_id: r for r in I.predict_diseases(df, parity=True).collect()}
-        sf = {r.patient_id: r for r in I.predict_diseases(df, parity=False).collect()}
-        for pid, rp in sp.items():
-            rf = sf[pid]
-            for d in I.DISEASES:
-                assert abs(rp[f"prob_{d}"] - rf[f"prob_{d}"]) < 1e-9, (pid, d)
-                assert rp[f"risk_{d}"] == rf[f"risk_{d}"]
-    finally:
-        df.unpersist()
-
-
 def test_float_literal_forces_double_parse_path():
     """DuckDB parses a bare 16-digit literal as DECIMAL, and its
     DECIMAL->DOUBLE conversion is not correctly rounded (bare
@@ -244,3 +180,114 @@ def test_float_literal_forces_double_parse_path():
     # of the same digits mis-rounds
     bare = duckdb.sql(f"SELECT CAST({repr(v)} AS DOUBLE)").fetchone()[0]
     assert repr(bare) != repr(v)
+
+
+# ------------------------------------------- micro-unit grid exactness --
+# An age whose component-0 PCA term lands exactly on a half micro-unit
+# (term × 1e6 == 1064.5 in IEEE double), found by an ulp search around
+# the exact solution of c · ((age − μ) / σ − m) = 1064.5e-6.
+HALF_MICRO_AGE = 42.3928683047665
+
+
+def _adversarial_rows() -> list[dict]:
+    """All-NULL (every feature takes its median), a half-micro-unit term,
+    large |x| (distance terms past 2^53 micro-units, so FLOOR and the
+    BIGINT → DOUBLE cast both work at the edge of double precision), then
+    random rows with NULLs."""
+    nulls = dict.fromkeys(FEATS)
+    big = {n: (1e4 if j % 2 else -1e4) for j, n in enumerate(FEATS)}
+    return [
+        nulls,
+        {**nulls, "age": HALF_MICRO_AGE},
+        big,
+        {n: -v for n, v in big.items()},
+        *({n: r[n] for n in FEATS} for r in _rows(n=12)),
+    ]
+
+
+def _imputed(rows: list[dict]) -> np.ndarray:
+    med = P.sklearn_pipeline()["imputer"]["statistics"]
+    return np.array(
+        [[m if r[n] is None else r[n] for n, m in zip(FEATS, med)] for r in rows]
+    )
+
+
+def _z_sql() -> list[str]:
+    return [f"{e} AS z{j}" for j, e in enumerate(I.pca_sql_exprs())]
+
+
+def _duckdb_pca_kmeans(rows: list[dict]) -> tuple[np.ndarray, list[int]]:
+    """The oracle's SQL text (pca_sql_exprs, kmeans_sql_expr) in DuckDB."""
+    import duckdb
+    import pyarrow as pa
+
+    znames = [f"z{j}" for j in range(len(I.pca_sql_exprs()))]
+    con = duckdb.connect()
+    con.register(
+        "t",
+        pa.table(
+            {
+                "patient_id": list(range(len(rows))),
+                **{n: pa.array([r[n] for r in rows], pa.float64()) for n in FEATS},
+            }
+        ),
+    )
+    out = con.execute(
+        f"WITH z AS (SELECT patient_id, {', '.join(_z_sql())} FROM t) "
+        f"SELECT {', '.join(znames)}, {I.kmeans_sql_expr(znames)} AS cluster "
+        "FROM z ORDER BY patient_id"
+    ).fetchall()
+    return np.array([r[:-1] for r in out]), [r[-1] for r in out]
+
+
+def _bits(a) -> list[int]:
+    return np.asarray(a, dtype=np.float64).view(np.int64).ravel().tolist()
+
+
+def _spark_rows(spark, rows: list[dict]):
+    return spark.createDataFrame(
+        [(i, *(r[n] for n in FEATS)) for i, r in enumerate(rows)],
+        "patient_id long, " + ", ".join(f"{n} double" for n in FEATS),
+    )
+
+
+def test_micro_grid_numpy_matches_duckdb_and_spark_bit_for_bit(spark):
+    """The numpy helper, the oracle's SQL text in DuckDB, the same text in
+    Spark SQL, and the query's UDF path give the same z bits and cluster
+    on adversarial rows."""
+    p = P.sklearn_pipeline()
+    i = FEATS.index("age")
+    term = p["pca"]["components"][0][i] * (
+        (HALF_MICRO_AGE - p["scaler"]["mean"][i]) / p["scaler"]["scale"][i]
+        - p["pca"]["mean"][i]
+    )
+    assert term * 1e6 == 1064.5
+    rows = _adversarial_rows()
+    z, cluster = I._pca_kmeans(_imputed(rows))
+    big = z[2:4, None, :] - np.asarray(p["kmeans"]["centers"])[None, :, :]
+    assert (np.floor(big * big * 1e6 + 0.5).sum(axis=2) > 2**53).all()
+
+    z_duck, cluster_duck = _duckdb_pca_kmeans(rows)
+    assert _bits(z) == _bits(z_duck)
+    assert cluster.tolist() == cluster_duck
+
+    df = _spark_rows(spark, rows)
+    z_spark = df.selectExpr("patient_id", *_z_sql()).orderBy("patient_id").collect()
+    assert _bits(z) == _bits([list(r)[1:] for r in z_spark])
+    pre = I.preprocess(df).orderBy("patient_id").collect()
+    assert _bits(z) == _bits([[r[f"z{j}"] for j in range(z.shape[1])] for r in pre])
+    assert cluster.tolist() == [r.cluster for r in pre]
+
+
+def test_kmeans_tie_goes_to_the_lowest_index_in_both_engines(monkeypatch):
+    """Centres laid out as [c0, c1, c1, c0]: every row is at exactly equal
+    distance from two centres, and both numpy and DuckDB must pick the
+    lower index (0 or 1, never 2 or 3)."""
+    p = P.sklearn_pipeline()
+    c = p["kmeans"]["centers"]
+    tied = {**p, "kmeans": {**p["kmeans"], "centers": [c[0], c[1], c[1], c[0]]}}
+    monkeypatch.setattr(I, "sklearn_pipeline", lambda: tied)
+    rows = _adversarial_rows()
+    _, cluster = I._pca_kmeans(_imputed(rows))
+    assert set(cluster.tolist()) == {0, 1}
+    assert cluster.tolist() == _duckdb_pca_kmeans(rows)[1]

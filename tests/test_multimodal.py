@@ -53,12 +53,12 @@ def test_media_features_shape_and_determinism(spark, media):
 
 
 def test_decode_real_rejects_unknown_container():
-    # the real leg decodes PPM/BMP/WAV; anything needing an external
+    # the real decode reads PPM/BMP/WAV; anything needing an external
     # codec library (or garbage) is a ValueError, not a wrong answer
     with pytest.raises(ValueError, match="unsupported container"):
-        M._decode_bytes(b"\xff\xd8\xff\xe0jpeg", 4, deterministic_fake=False)
+        C.decode_media(b"\xff\xd8\xff\xe0jpeg")
     with pytest.raises(ValueError, match="empty"):
-        M._decode_bytes(b"", 4, deterministic_fake=False)
+        C.decode_media(b"")
 
 
 # ---------------------------------------------------------------------------
@@ -218,20 +218,6 @@ def test_media_channel_stats_real_samples(docs):
             assert r.n_samples is None and r.rms is None
             for col, c in (("mean_r", 0), ("mean_g", 1), ("mean_b", 2)):
                 assert r[col] == sum(payload[c::3]) / (w * h), (did, col)
-
-
-def test_media_features_real_leg(docs):
-    media = M.encoded_media_from_documents(docs)
-    out = {r.media_id: r for r in
-           M.media_features(media, dim=8, deterministic_fake=False).collect()}
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    for did, r in out.items():
-        n = (did % 200 + 50) * 2 if r.meta.format == "wav" \
-            else (did % 13 + 4) * (did % 11 + 4) * 3
-        payload = _payload_chain(texts[did], n)
-        assert len(r.features) == 8
-        assert r.features[0] == pytest.approx(sum(payload) / n / 255.0, rel=1e-6)
-        assert r.features[1] == pytest.approx(payload[0] / 255.0, rel=1e-6)
 
 
 def test_sample_frames_fanout(spark, media):

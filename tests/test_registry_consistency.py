@@ -400,7 +400,6 @@ _UNSET_KEPT = {
     "operators/decontam.py::decontaminate::threshold": "test_curation_ops::test_decontaminate_matches_python_model flags at 0.3 on short documents",
     "operators/graph.py::connected_components::max_iter": "test_graph::test_cc_max_iter_truncates_long_chain reaches the non-convergence error",
     "operators/ingest.py::incremental_dedup::batch_pct": "test_curation_ops::test_incremental_dedup_verdicts puts half of a few documents in the batch",
-    "operators/multimodal.py::media_features::deterministic_fake": "test_multimodal::test_media_features_real_leg runs the real decode leg",
     "operators/multimodal.py::dhash_near_dup_pairs::n_bands": "test_multimodal::test_dhash_near_dup_rejects_unguaranteed_args reaches the band validation errors",
     "operators/multimodal.py::dhash_near_dup_pairs::max_bucket": "test_multimodal::test_dhash_near_dup_bucket_cap caps buckets at 5",
     "operators/semdedup.py::semantic_dedup::target_cluster": "test_training_data_ops::test_auto_assign_selects_two_level_in_semantic_dedup reaches the two-level path on 300 rows",
@@ -412,7 +411,6 @@ _UNSET_KEPT = {
     "operators/similarity.py::ivfpq_topk::assign": "test_training_data_ops::test_two_level_ivf_recall_holds_on_clusters forces two-level assignment",
     "operators/similarity.py::pq_codebooks::n_codes": "test_training_data_ops::test_pq_matches_python_model trains 8 codes on 41 vectors",
     "operators/similarity.py::residual_codebooks::n_codes": "test_training_data_ops::test_ivfpq_residual_matches_python_model trains 8 codes on 41 vectors",
-    "operators/sketch.py::distinct_sketch::include_exact": "test_pipeline_ops::test_distinct_sketch_single_shuffle pins the sketch-only plan (one shuffle, no Expand)",
     "operators/sketch.py::cms_heavy_hitters::depth": "test_corpus_ops::test_cms_collision_overestimates forces collisions with depth 1",
     "operators/sketch.py::cms_heavy_hitters::width": "test_corpus_ops::test_cms_collision_overestimates forces collisions with width 2",
     "operators/spans.py::span_dedup::emit_text": "test_corpus_ops::test_span_dedup_matches_python_model checks the reassembled text",

@@ -68,6 +68,40 @@ def _tiny_events(path: str) -> None:
     )
 
 
+def _tiny_customer(path: str) -> None:
+    n = 9
+    pq.write_table(
+        pa.table(
+            {
+                "c_custkey": pa.array(range(n), pa.int64()),
+                "c_name": [f"c{i}" for i in range(n)],
+                "c_nationkey": pa.array([i % 3 for i in range(n)], pa.int32()),
+                "c_acctbal": [float(i) for i in range(n)],
+                "c_mktsegment": ["A"] * n,
+            }
+        ),
+        f"{path}/customer.parquet",
+    )
+
+
+def _count_build_commands(monkeypatch, build) -> tuple[int, object]:
+    """py4j commands one ``build()`` sends, memory deletes not counted
+    (py4j sends one from a finalizer thread for every Python-side Java
+    object the garbage collector frees), and its result."""
+    sent = [0]
+    send = py4j.java_gateway.GatewayClient.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(MEMORY_DELETE):
+            sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counting)
+    df = build()
+    monkeypatch.undo()
+    return sent[0], df
+
+
 def test_wellness_build_py4j_traffic_is_bounded(spark, tmp_path, monkeypatch):
     """One build of wellness_monthly sends 7,500-8,200 py4j commands with
     call-site capture on and one withColumn call per column, about 2,200
@@ -80,19 +114,36 @@ def test_wellness_build_py4j_traffic_is_bounded(spark, tmp_path, monkeypatch):
     _tiny_events(str(tmp_path))
     build = QUERIES["wellness_monthly"]
     build(spark, str(tmp_path))  # caches the table schema
-    sent = [0]
-    send = py4j.java_gateway.GatewayClient.send_command
-
-    def counting(self, command, *args, **kwargs):
-        if not command.startswith(MEMORY_DELETE):
-            sent[0] += 1
-        return send(self, command, *args, **kwargs)
-
-    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counting)
-    df = build(spark, str(tmp_path))
-    monkeypatch.undo()
-    assert sent[0] < 3500, sent[0]
+    sent, df = _count_build_commands(monkeypatch, lambda: build(spark, str(tmp_path)))
+    assert sent < 3500, sent
     assert df.count() > 0
+
+
+def test_ml_risk_scores_build_py4j_traffic_is_bounded(spark, tmp_path, monkeypatch):
+    """One build of ml_risk_scores sends about 1,270 py4j commands with
+    the z/cluster folds as 15 parsed Spark SQL expressions and 19 staged
+    scale columns, about 1,020 with JVM imputation feeding one numpy UDF;
+    the feature table is most of what remains."""
+    _tiny_events(str(tmp_path))
+    _tiny_customer(str(tmp_path))
+    build = QUERIES["ml_risk_scores"]
+    build(spark, str(tmp_path))  # caches the table schemas
+    sent, df = _count_build_commands(monkeypatch, lambda: build(spark, str(tmp_path)))
+    assert sent < 1150, sent
+    assert df.count() > 0
+
+
+def test_ml_risk_scores_runs_one_python_node(spark, tmp_path):
+    """Impute is JVM column math; scale, PCA, k-means and the three
+    boosters all run in ONE Arrow-batched Python node of the executed
+    plan (AQE's final plan, not the initial one it also prints)."""
+    _tiny_events(str(tmp_path))
+    _tiny_customer(str(tmp_path))
+    df = QUERIES["ml_risk_scores"](spark, str(tmp_path))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().finalPhysicalPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BatchEvalPython" not in plan, plan
 
 
 def test_worker_shim_keeps_zip_directories_driver_untouched(spark):

@@ -29,11 +29,13 @@ import pytest
 
 from healthcare_aws_data_engineering_spark.ml.inference import (
     _score_matrix,
-    xgb_probabilities_all,
+    predict_diseases,
 )
 from healthcare_aws_data_engineering_spark.ml.params import (
     DISEASES,
+    feature_names,
     model_features,
+    sklearn_pipeline,
     xgb_model,
 )
 
@@ -161,21 +163,64 @@ def test_batch_consistency_with_walker():
             ), (d, n)
 
 
-def test_scoring_udf_matches_golden(spark):
-    """The pandas UDF the queries run (``xgb_probabilities_all``) reproduces
-    every golden pin through Spark and Arrow, all three boosters at once."""
-    mf = model_features()
-    vectors = {**FORCED_VECTORS, **RANDOM_VECTORS}
-    golden = {**GOLDEN_FORCED, **GOLDEN_RANDOM}
-    df = spark.createDataFrame(
-        [(case, *x) for case, x in vectors.items()],
-        "case string, " + ", ".join(f"{n} double" for n in mf),
+# Golden pins for the whole scoring UDF: 19 raw features (None → the
+# stored median) → cluster and the three probabilities. Pinned from an
+# independent chain: plain float64 impute → scale → PCA matmul → argmin
+# (``_cluster_raw``, no micro-unit grid; each case's runner-up centre is
+# more than 1 distance unit further, so the grid cannot move the
+# cluster), then the raw-JSON walker on the float32 model vector.
+GOLDEN_PATIENTS = {
+    "all_null": (
+        [None] * 19,
+        0,
+        {"cvd": 0.3722273462529585, "anemia": 0.5382638295139915, "ckd": 0.0008576050484951959},
+    ),
+    "patient_a": (
+        [36.718, 1.0, 5.315, None, 158.896, 1.296, 10.142, 257.399, 1.363, 74.753, 56.576, 8.083, None, None, 9.365, 107.264, None, 15.67, None],
+        1,
+        {"cvd": 0.2668511423005681, "anemia": 0.8913057597336977, "ckd": 0.004042722058292415},
+    ),
+    "patient_b": (
+        [74.496, 1.0, 6.172, 132.355, 247.659, 1.528, 17.803, None, 0.799, 52.074, 53.097, 6.949, 46.841, 50.637, 9.912, None, 5.821, 7.909, None],
+        3,
+        {"cvd": 0.734827395139073, "anemia": 0.98199921732378, "ckd": 0.009463662377818333},
+    ),
+}
+
+
+def _cluster_raw(x: list[float | None]) -> tuple[int, list[float]]:
+    """Plain float64 M1–M4 (no micro-unit grid): (cluster, imputed x)."""
+    p = sklearn_pipeline()
+    X = np.array(
+        [m if v is None else v for v, m in zip(x, p["imputer"]["statistics"])]
     )
-    out = {
-        r.case: r.p
-        for r in df.select("case", xgb_probabilities_all(mf).alias("p")).collect()
-    }
-    assert set(out) == set(golden)
-    for case, want in golden.items():
+    scaled = (X - np.array(p["scaler"]["mean"])) / np.array(p["scaler"]["scale"])
+    z = np.array(p["pca"]["components"]) @ (scaled - np.array(p["pca"]["mean"]))
+    d = ((z[None, :] - np.array(p["kmeans"]["centers"])) ** 2).sum(axis=1)
+    return int(d.argmin()), list(X)
+
+
+def test_scoring_udf_matches_golden(spark):
+    """The query's scoring path (``predict_diseases``: JVM impute, then
+    the pandas UDF running z/cluster and all three boosters) reproduces
+    every golden patient through Spark and Arrow; the independent chain
+    reproduces the pins too."""
+    names = feature_names()
+    mf = model_features()
+    for case, (x, cluster, want) in GOLDEN_PATIENTS.items():
+        got_cluster, imputed = _cluster_raw(x)
+        assert got_cluster == cluster, case
+        vec = [float(cluster) if n == "cluster" else imputed[names.index(n)] for n in mf]
+        vec32 = [float(np.float32(v)) for v in vec]
         for d in DISEASES:
-            assert out[case][d] == pytest.approx(want[d], abs=1e-10), (case, d)
+            assert _prob_raw(d, vec32) == pytest.approx(want[d], abs=1e-12), (case, d)
+    df = spark.createDataFrame(
+        [(case, *x) for case, (x, _, _) in GOLDEN_PATIENTS.items()],
+        "patient_id string, " + ", ".join(f"{n} double" for n in names),
+    )
+    out = {r.patient_id: r for r in predict_diseases(df).collect()}
+    assert set(out) == set(GOLDEN_PATIENTS)
+    for case, (_, cluster, want) in GOLDEN_PATIENTS.items():
+        assert out[case].cluster == cluster, case
+        for d in DISEASES:
+            assert out[case][f"prob_{d}"] == pytest.approx(want[d], abs=1e-10), (case, d)
