@@ -11,16 +11,22 @@ Parity targets in ``mrp_website.py``:
 - ``overall_label_for_disease``:379-411
 - ``confidence_for_disease``   :415-423
 
-All rebuilt as pure Column expressions (whole-stage codegen; zero Python
-UDFs, per SURVEY §2.11): the app's per-row Python becomes a single
-projection over a wide labs DataFrame with one row per (patient, date).
+All rebuilt as Spark SQL expression text (whole-stage codegen; zero
+Python UDFs, per SURVEY §2.11): the app's per-row Python becomes a single
+projection over a wide labs DataFrame with one row per (patient, date),
+which :func:`..plans.wellness.score_rows` applies one ``selectExpr`` per
+staged layer. The inputs are SQL text too: column names or atomic
+expressions (``CAST(LDL AS DOUBLE)``). Sums and AND/OR chains are
+parenthesized into left folds (:func:`.sqltext.fold`), so the double
+sums add in one fixed order, which the oracle SQL mirrors bit for bit.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, functions as F
+from .banding import case_ladder
+from .sqltext import fold, lit
 
 INF = math.inf
 
@@ -66,156 +72,168 @@ WELLNESS_WEIGHTS: dict[str, float] = {
 MAX_PENALTY = 3.0
 
 
-def penalty(analyte: str, value: Column) -> Column:
+def penalty(analyte: str, value: str) -> str:
     """Penalty 0–3 from the ordered bin edges (``penalty_for_value``,
     mrp_website.py:169-181): first edge the value is below wins; NULL → 0."""
     if analyte not in PENALTY_REFS:
-        return F.lit(0)
+        return "0"
     bins, pens = PENALTY_REFS[analyte]
-    expr = F.when(value.isNull(), F.lit(0))
-    for i in range(len(bins) - 2):
-        expr = expr.when(value < bins[i + 1], F.lit(int(pens[i])))
-    return expr.otherwise(F.lit(int(pens[-1])))
+    legs = [(f"{value} IS NULL", "0")]
+    legs += [
+        (f"{value} < {lit(bins[i + 1])}", lit(int(pens[i])))
+        for i in range(len(bins) - 2)
+    ]
+    return case_ladder(legs, otherwise=lit(int(pens[-1])))
 
 
-def disease_penalty_columns(disease: str, cols: dict[str, Column]) -> dict[str, Column]:
-    """Per-analyte penalty columns for a disease; NULL (not 0) when the
+def disease_penalty_columns(disease: str, cols: dict[str, str]) -> dict[str, str]:
+    """Per-analyte penalty expressions for a disease; NULL (not 0) when the
     analyte value is absent — mirrors the ``pens`` dict only containing
     present analytes (mrp_website.py:192-199). ``cols`` maps analyte name →
-    Column; an analyte missing from it is absent."""
+    SQL text; an analyte missing from it is absent."""
     out = {}
     for analyte in DISEASE_WEIGHTS[disease]:
-        v = cols.get(analyte, F.lit(None).cast("double"))
-        out[analyte] = F.when(v.isNotNull(), penalty(analyte, v))
+        v = cols.get(analyte, "CAST(NULL AS DOUBLE)")
+        out[analyte] = case_ladder([(f"{v} IS NOT NULL", penalty(analyte, v))])
     return out
 
 
-def subscore_from_penalties(disease: str, pens: dict[str, Column]) -> Column:
+def subscore_from_penalties(disease: str, pens: dict[str, str]) -> str:
     """Subscore 0–100 (mrp_website.py:184-204):
     ``100 − Σ pᵢwᵢ · 100/3`` over *present* analytes, clamped to [0,100];
     NULL when nothing is present.
 
     ``pens`` are the NULL-when-absent penalty columns of
     :func:`disease_penalty_columns` (``pens[a] IS NULL ⟺ value absent``,
-    so coalesce/isNotNull reproduce the presence gating). Staging them
+    so coalesce/IS NOT NULL reproduce the presence gating). Staging them
     lets a plan that needs penalties, subscore AND label evaluate each
     penalty CASE ladder exactly once (Catalyst CSE does not reach into
-    when/otherwise branches; see the r5 text_stats note in BASELINE.md)."""
+    CASE branches; see the r5 text_stats note in BASELINE.md)."""
     weights = DISEASE_WEIGHTS[disease]
-    weighted = sum(
-        (
-            F.coalesce(pens[a].cast("double") * F.lit(w), F.lit(0.0))
-            for a, w in weights.items()
-        ),
-        F.lit(0.0),
-    )
-    total_w = sum(
-        (
-            F.when(pens[a].isNotNull(), F.lit(w)).otherwise(F.lit(0.0))
-            for a, w in weights.items()
-        ),
-        F.lit(0.0),
-    )
+    zero = lit(0.0)
+    weighted = fold("+", [
+        zero,
+        *(f"coalesce(CAST({pens[a]} AS DOUBLE) * {lit(w)}, {zero})" for a, w in weights.items()),
+    ])
+    total_w = fold("+", [
+        zero,
+        *(case_ladder([(f"{pens[a]} IS NOT NULL", lit(w))], zero) for a, w in weights.items()),
+    ])
     # NOTE: the reference does NOT renormalize by present weight mass here —
     # ``weighted`` is divided by the fixed max penalty only (:201-203); the
     # renormalization happens at the wellness level. total_w>0 only gates
     # the NULL case.
-    sub = F.lit(100.0) - weighted * F.lit(100.0 / MAX_PENALTY)
-    clamped = F.greatest(F.lit(0.0), F.least(F.lit(100.0), sub))
-    return F.when(total_w > 0, clamped)
+    sub = f"{lit(100.0)} - {weighted} * {lit(100.0 / MAX_PENALTY)}"
+    clamped = f"greatest({zero}, least({lit(100.0)}, {sub}))"
+    return case_ladder([(f"{total_w} > 0", clamped)])
 
 
-def wellness(subscores: dict[str, Column]) -> tuple[Column, Column, Column]:
+def wellness(subscores: dict[str, str]) -> tuple[str, str, str]:
     """(wellness, confidence, n_used) — ``wellness_score``
     (mrp_website.py:207-225): weighted mean over present subscores,
     renormalized by the present wellness-weight mass; confidence IS that
     mass; NULL wellness when nothing is present."""
-    num = F.lit(0.0)
-    den = F.lit(0.0)
-    used = F.lit(0)
+    zero = lit(0.0)
+    num, den, used = [], [], []
     for disease, w in WELLNESS_WEIGHTS.items():
         s = subscores[disease]
-        present = s.isNotNull()
-        num = num + F.when(present, s * F.lit(w)).otherwise(F.lit(0.0))
-        den = den + F.when(present, F.lit(w)).otherwise(F.lit(0.0))
-        used = used + present.cast("int")
-    return (F.when(den > 0, num / den), den, used)
+        present = f"{s} IS NOT NULL"
+        num.append(case_ladder([(present, f"{s} * {lit(w)}")], zero))
+        den.append(case_ladder([(present, lit(w))], zero))
+        used.append(f"CAST({present} AS INT)")
+    num_s, den_s = fold("+", [zero, *num]), fold("+", [zero, *den])
+    return (
+        case_ladder([(f"{den_s} > 0", f"{num_s} / {den_s}")]),
+        den_s,
+        fold("+", ["0", *used]),
+    )
 
 
-def detect_patterns(cols: dict[str, Column] | None = None) -> Column:
+def detect_patterns(cols: dict[str, str]) -> str:
     """Array of matched evidence-pattern tags (``detect_patterns``,
-    mrp_website.py:231-248); both-present guards preserved."""
-    c = (lambda name: (cols or {}).get(name, F.col(name)))
-    ldl, hdl = c("LDL"), c("HDL")
-    a1c, glu = c("A1c"), c("GlucoseBlood")
-    egfr, creat = c("eGFR"), c("Creatinine")
-    hgb = c("Hemoglobin")
+    mrp_website.py:231-248); both-present guards preserved. ``cols`` maps
+    each analyte name → SQL text."""
+    ldl, hdl, a1c, glu, egfr, creat, hgb = (
+        cols[a]
+        for a in ("LDL", "HDL", "A1c", "GlucoseBlood", "eGFR", "Creatinine", "Hemoglobin")
+    )
     tags = [
-        F.when(
-            ldl.isNotNull() & hdl.isNotNull()
-            & ((ldl >= 160) | ((ldl >= 130) & (hdl < 40))),
-            F.lit("high_ldl_low_hdl"),
-        ),
-        F.when(
-            a1c.isNotNull() & glu.isNotNull() & (a1c >= 5.7) & (glu >= 100),
-            F.lit("elevated_a1c_glucose"),
-        ),
-        F.when(
-            egfr.isNotNull() & creat.isNotNull()
-            & ((egfr < 60) | (creat >= 1.3)),
-            F.lit("low_egfr_high_creatinine"),
-        ),
-        F.when(hgb.isNotNull() & (hgb < 12.0), F.lit("low_hemoglobin")),
+        case_ladder([(
+            fold("AND", [
+                f"{ldl} IS NOT NULL", f"{hdl} IS NOT NULL",
+                f"({ldl} >= 160 OR ({ldl} >= 130 AND {hdl} < 40))",
+            ]),
+            lit("high_ldl_low_hdl"),
+        )]),
+        case_ladder([(
+            fold("AND", [
+                f"{a1c} IS NOT NULL", f"{glu} IS NOT NULL",
+                f"{a1c} >= {lit(5.7)}", f"{glu} >= 100",
+            ]),
+            lit("elevated_a1c_glucose"),
+        )]),
+        case_ladder([(
+            fold("AND", [
+                f"{egfr} IS NOT NULL", f"{creat} IS NOT NULL",
+                f"({egfr} < 60 OR {creat} >= {lit(1.3)})",
+            ]),
+            lit("low_egfr_high_creatinine"),
+        )]),
+        case_ladder([(f"{hgb} IS NOT NULL AND {hgb} < {lit(12.0)}", lit("low_hemoglobin"))]),
     ]
-    arr = F.array(*tags)
-    return F.filter(arr, lambda x: x.isNotNull())
+    return f"filter(array({', '.join(tags)}), x_1 -> x_1 IS NOT NULL)"
 
 
-def overall_label(disease: str, pens: dict[str, Column]) -> Column:
+def overall_label(disease: str, pens: dict[str, str]) -> str:
     """SQL-style overall label from penalties (``overall_label_for_disease``,
     mrp_website.py:379-411). ``pens`` are the NULL-when-absent penalty
     columns of :func:`disease_penalty_columns`."""
-    p = {a: F.coalesce(c, F.lit(0)) for a, c in pens.items()}
-    any_present = None
-    for c in pens.values():
-        any_present = c.isNotNull() if any_present is None else (any_present | c.isNotNull())
-    max_p = F.greatest(*p.values()) if len(p) > 1 else next(iter(p.values()))
+    p = {a: f"coalesce({c}, 0)" for a, c in pens.items()}
+    any_present = fold("OR", (f"{c} IS NOT NULL" for c in pens.values()))
+    max_p = f"greatest({', '.join(p.values())})" if len(p) > 1 else next(iter(p.values()))
     if disease == "Cardiovascular":
-        label = F.when(
-            (max_p >= 3) | ((p["LDL"] >= 2) & (p["HDL"] >= 1)), "At risk"
-        ).otherwise("Likely normal")
+        label = case_ladder(
+            [(f"{max_p} >= 3 OR ({p['LDL']} >= 2 AND {p['HDL']} >= 1)", lit("At risk"))],
+            lit("Likely normal"),
+        )
     elif disease == "Prediabetes":
-        label = (
-            F.when((p["A1c"] >= 3) | (p["GlucoseBlood"] >= 3),
-                   "Diabetes likely (lab criteria met)")
-            .when((p["A1c"] >= 2) | (p["GlucoseBlood"] >= 2),
-                  "Prediabetes / Elevated risk")
-            .otherwise("Normal")
+        label = case_ladder(
+            [
+                (f"{p['A1c']} >= 3 OR {p['GlucoseBlood']} >= 3",
+                 lit("Diabetes likely (lab criteria met)")),
+                (f"{p['A1c']} >= 2 OR {p['GlucoseBlood']} >= 2",
+                 lit("Prediabetes / Elevated risk")),
+            ],
+            lit("Normal"),
         )
     elif disease == "CKD":
-        label = (
-            F.when(p["eGFR"] >= 3, "High CKD risk (eGFR < 30)")
-            .when((p["eGFR"] >= 2) | (p["Creatinine"] >= 2),
-                  "At risk (kidney impairment likely)")
-            .otherwise("Likely normal")
+        label = case_ladder(
+            [
+                (f"{p['eGFR']} >= 3", lit("High CKD risk (eGFR < 30)")),
+                (f"{p['eGFR']} >= 2 OR {p['Creatinine']} >= 2",
+                 lit("At risk (kidney impairment likely)")),
+            ],
+            lit("Likely normal"),
         )
     elif disease == "Anemia":
-        label = F.when(
-            (p["Hemoglobin"] >= 2) & (p["Hematocrit"] >= 2), "Anemia likely"
-        ).otherwise("No anemia signal")
-    elif disease == "Liver":
-        multi = sum(
-            ((p[a] >= 2).cast("int") for a in ("ALT", "AST", "Bilirubin", "Albumin")),
-            F.lit(0),
+        label = case_ladder(
+            [(f"{p['Hemoglobin']} >= 2 AND {p['Hematocrit']} >= 2", lit("Anemia likely"))],
+            lit("No anemia signal"),
         )
-        label = (
-            F.when(multi >= 2, "Liver dysfunction likely (multiple abnormalities)")
-            .when(multi == 1, "Possible liver dysfunction")
-            .otherwise("No liver dysfunction signal")
+    elif disease == "Liver":
+        multi = fold(
+            "+", ["0", *(f"CAST({p[a]} >= 2 AS INT)" for a in ("ALT", "AST", "Bilirubin", "Albumin"))]
+        )
+        label = case_ladder(
+            [
+                (f"{multi} >= 2", lit("Liver dysfunction likely (multiple abnormalities)")),
+                (f"{multi} = 1", lit("Possible liver dysfunction")),
+            ],
+            lit("No liver dysfunction signal"),
         )
     else:
-        return F.lit("Insufficient data")
-    return F.when(any_present, label).otherwise(F.lit("Insufficient data"))
+        return lit("Insufficient data")
+    return case_ladder([(any_present, label)], lit("Insufficient data"))
 
 
 # SQL-label → chip mapping (mrp_website.py:160-195 SQL_TO_CHIP).
@@ -251,11 +269,10 @@ SQL_TO_CHIP: dict[str, dict[str, str]] = {
 }
 
 
-def chip_for_label(disease: str, label: Column) -> Column:
+def chip_for_label(disease: str, label: str) -> str:
     """Overall label → chip (Normal/Watch/High), default Watch
     (mrp_website.py:434)."""
-    mapping = SQL_TO_CHIP[disease]
-    expr = None
-    for k, v in mapping.items():
-        expr = F.when(label == k, v) if expr is None else expr.when(label == k, v)
-    return expr.otherwise("Watch")
+    return case_ladder(
+        [(f"{label} = {lit(k)}", lit(v)) for k, v in SQL_TO_CHIP[disease].items()],
+        lit("Watch"),
+    )

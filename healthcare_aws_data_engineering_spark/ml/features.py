@@ -22,8 +22,9 @@ neither side is bounded; AQE may adaptively broadcast when small).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from ..functions.sqltext import isin
 from ..operators.pivot import latest_pivot
 from .params import feature_names
 
@@ -40,10 +41,10 @@ EVENTS_ML_KEYS: dict[str, str] = {
 def demographics(customer: DataFrame) -> DataFrame:
     """Synthetic-but-deterministic age/sex from the customer dim:
     age = 20 + custkey % 60, sex = custkey % 2 (M=1/F=0 per test.py:250-258)."""
-    return customer.select(
-        F.col("c_custkey").alias("patient_id"),
-        (F.lit(20) + F.col("c_custkey") % 60).cast("double").alias("age"),
-        (F.col("c_custkey") % 2).cast("double").alias("sex"),
+    return customer.selectExpr(
+        "c_custkey AS patient_id",
+        "CAST(20 + c_custkey % 60 AS DOUBLE) AS age",
+        "CAST(c_custkey % 2 AS DOUBLE) AS sex",
     )
 
 
@@ -60,21 +61,19 @@ def feature_table(events: DataFrame, customer: DataFrame) -> DataFrame:
     to broadcast at runtime when a side is genuinely small — that choice
     is adaptive and safe, an explicit hint is not."""
     labs = latest_pivot(
-        events.filter(F.col("event_type").isin(list(EVENTS_ML_KEYS.values()))),
-        F.col("user_id").alias("patient_id"),
+        events.filter(isin("event_type", EVENTS_ML_KEYS.values())),
+        "user_id AS patient_id",
         "event_type",
-        {feat: ([ev], F.col("value")) for feat, ev in EVENTS_ML_KEYS.items()},
-        [F.col("ts"), F.col("event_id")],
+        {feat: ([ev], "value") for feat, ev in EVENTS_ML_KEYS.items()},
+        ["ts", "event_id"],
     )
     demo = demographics(customer)
     joined = demo.join(labs, "patient_id", "left")
-    cols = [F.col("patient_id")]
-    for n in feature_names():
-        if n in ("age", "sex") or n in EVENTS_ML_KEYS:
-            cols.append(F.col(n).cast("double").alias(n))
-        else:
-            cols.append(F.lit(None).cast("double").alias(n))
-    return joined.select(*cols)
+    present = {"age", "sex", *EVENTS_ML_KEYS}
+    return joined.selectExpr(
+        "patient_id",
+        *[f"CAST({n if n in present else 'NULL'} AS DOUBLE) AS {n}" for n in feature_names()],
+    )
 
 
 def feature_table_sql() -> str:

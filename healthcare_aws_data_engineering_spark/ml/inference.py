@@ -3,7 +3,7 @@
 Stages (reference ``test.py:324-343`` inference chain, artifacts decoded
 by ``tools/extract_ml_params.py``):
 
-- M1 median impute   → ``F.coalesce(col, lit(median_i))`` in the JVM
+- M1 median impute   → ``COALESCE(col, median_i)`` in the JVM
   (stored medians, NOT a refit ``pyspark.ml.feature.Imputer``)
 - M2 standardize     → ``(x - mean_i) / scale_i``
 - M3 PCA 19→14       → 14 folds ``Σ c_ji (x_i - m_i)``
@@ -11,7 +11,7 @@ by ``tools/extract_ml_params.py``):
 - M5 XGB scoring ×3  → boosters traversed directly with numpy (no
   joblib/xgboost dependency); trees loaded per executor from package
   params
-- M6 threshold/band  → ``F.when`` ladder (``functions.banding.risk_prob_band``,
+- M6 threshold/band  → CASE ladder (``functions.banding.risk_prob_band``,
   test.py:157-163)
 
 M1 is JVM column math, so NULL handling is Spark's ``COALESCE``. M2–M5
@@ -44,19 +44,20 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.banding import risk_prob_band
+from ..functions.sqltext import double_lit, lit
 from .params import DISEASES, feature_names, model_features, sklearn_pipeline, xgb_trees
 
 THRESHOLD = 0.5
 
 
 # -------------------------------------------------------------------- M1 --
-def _imputed_columns() -> list[Column]:
+def _imputed_columns() -> list[str]:
     p = sklearn_pipeline()
     return [
-        F.coalesce(F.col(n).cast("double"), F.lit(float(m))).alias(n)
+        f"coalesce(CAST({n} AS DOUBLE), {double_lit(m)}) AS {n}"
         for n, m in zip(p["feature_names"], p["imputer"]["statistics"])
     ]
 
@@ -224,7 +225,7 @@ def preprocess(features: DataFrame) -> DataFrame:
     """features (19 raw columns, nulls allowed) → patient_id, 14 PCA
     components, cluster id: JVM imputation, then M2–M4 in one pandas UDF."""
     return features.select(
-        "patient_id", _preprocess_udf()(*_imputed_columns()).alias("__z")
+        "patient_id", _preprocess_udf()(*map(F.expr, _imputed_columns())).alias("__z")
     ).select("patient_id", "__z.*")
 
 
@@ -237,39 +238,24 @@ def predict_diseases(features: DataFrame) -> DataFrame:
     per byte than the shuffle heuristics assume, so AQE would otherwise
     coalesce a small feature table to ONE partition and serialize the
     scoring."""
-    scored_in = features.select("patient_id", *_imputed_columns()).repartition(
+    scored_in = features.selectExpr("patient_id", *_imputed_columns()).repartition(
         features.sparkSession.sparkContext.defaultParallelism, F.col("patient_id")
     )
     out = scored_in.select(
         "patient_id", _scoring_udf()(*feature_names()).alias("__p")
     )
-    cols = [F.col("patient_id"), F.col("__p.cluster").alias("cluster")]
+    cols = ["patient_id", "__p.cluster AS cluster"]
     for d in DISEASES:
-        p = F.col("__p")[d]
+        p = f"__p.{d}"
         cols += [
-            p.alias(f"prob_{d}"),
-            (p >= THRESHOLD).cast("int").alias(f"flag_{d}"),
-            risk_prob_band(p).alias(f"risk_{d}"),
+            f"{p} AS prob_{d}",
+            f"CAST({p} >= {lit(THRESHOLD)} AS INT) AS flag_{d}",
+            f"{risk_prob_band(p)} AS risk_{d}",
         ]
-    return out.select(*cols)
+    return out.selectExpr(*cols)
 
 
 # ------------------------------------------------------ M2–M4 DuckDB oracle --
-def _f(x: float) -> str:
-    """Shortest round-trip float literal, forced onto the DOUBLE parse
-    path in BOTH engines via an exponent suffix. Without it, DuckDB
-    parses a bare 16-digit literal as DECIMAL and its DECIMAL→DOUBLE
-    conversion is not correctly rounded — e.g. bare 0.9700000286102295
-    lands one ulp high (…96), which flipped an XGB split for feature
-    values exactly AT the split (x < cond false where numpy said false…
-    DuckDB's off-by-one-ulp cond said true) — caught at sf0.1 as a
-    35-micro-unit probability jump. `…e0` parses as DOUBLE (correctly
-    rounded strtod) in Spark and DuckDB alike; scientific reprs already
-    carry an exponent and pass through."""
-    s = repr(float(x))
-    return s if ("e" in s or "E" in s) else s + "e0"
-
-
 def _fold_sql(terms: list[str]) -> str:
     """Integer micro-unit fold of per-row double term strings (module
     docstring): ``CAST(FLOOR(t * 1e6 + 5e-1) AS BIGINT)`` per term, a
@@ -284,7 +270,8 @@ def _fold_sql(terms: list[str]) -> str:
 def _scaled_sql_map() -> dict[str, str]:
     p = sklearn_pipeline()
     return {
-        n: f"((COALESCE(CAST({n} AS DOUBLE), {_f(med)}) - {_f(mu)}) / {_f(s)})"
+        n: f"((COALESCE(CAST({n} AS DOUBLE), {double_lit(med)})"
+        f" - {double_lit(mu)}) / {double_lit(s)})"
         for n, med, mu, s in zip(
             p["feature_names"],
             p["imputer"]["statistics"],
@@ -304,7 +291,7 @@ def pca_sql_exprs() -> list[str]:
     out = []
     for row in p["pca"]["components"]:
         terms = [
-            f"{_f(c)} * ({scaled[n]} - {_f(mean[i])})"
+            f"{double_lit(c)} * ({scaled[n]} - {double_lit(mean[i])})"
             for i, (n, c) in enumerate(zip(p["feature_names"], row))
         ]
         out.append(_fold_sql(terms))
@@ -318,7 +305,7 @@ def kmeans_sql_expr(z_names: list[str]) -> str:
     dists = []
     for c in centers:
         terms = [
-            f"({z} - {_f(cj)}) * ({z} - {_f(cj)})"
+            f"({z} - {double_lit(cj)}) * ({z} - {double_lit(cj)})"
             for z, cj in zip(z_names, c)
         ]
         dists.append(_fold_sql(terms))
@@ -341,7 +328,7 @@ def _xgb_node_values() -> str:
         for ti, (left, right, feat, cond, _dleft) in enumerate(trees):
             rows.append(
                 ",".join(
-                    f"({mi},{ti},{n},{left[n]},{right[n]},{feat[n]},{_f(cond[n])})"
+                    f"({mi},{ti},{n},{left[n]},{right[n]},{feat[n]},{double_lit(cond[n])})"
                     for n in range(len(left))
                 )
             )
@@ -376,11 +363,11 @@ def xgb_walk_sql(features_cte: str) -> str:
         src = (
             "CAST(cluster AS DOUBLE)"
             if n == "cluster"
-            else f"COALESCE(CAST({n} AS DOUBLE), {_f(med[n])})"
+            else f"COALESCE(CAST({n} AS DOUBLE), {double_lit(med[n])})"
         )
         arr_elems.append(f"CAST(CAST({src} AS REAL) AS DOUBLE)")
     logits = [
-        _f(math.log(b / (1.0 - b)))
+        double_lit(math.log(b / (1.0 - b)))
         for b in (xgb_trees(d)[0] for d in DISEASES)
     ]
     prob_cols = []

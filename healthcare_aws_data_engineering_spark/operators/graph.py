@@ -13,16 +13,21 @@ cluster id. Rounds = graph diameter.
 
 Scale notes (100 TB shape)
 --------------------------
-- Each round is ONE shuffle join (edges ⋈ labels on ``src``, both sides
-  hash-partitioned on the same key) plus ONE hash aggregation — no
-  all-pairs work, nothing driver-side except a 2-value convergence
-  aggregate per round.
+- Each round is ONE shuffle, in the message-passing shape of
+  :func:`pagerank`: the per-node state ``(node, nbrs, lbl)`` carries
+  each node's neighbour list, every node emits its state row plus one
+  ``(nbr, lbl)`` message per neighbour, and one ``groupBy(node)`` takes
+  the min label and carries the state. No join, no all-pairs work,
+  nothing driver-side except a 2-value convergence aggregate per round.
+  A round shuffles |V| state rows plus 2|pairs| messages; the aggregate
+  is sort-based because the state holds an array, and a hub's neighbour
+  list travels as one row per round.
 - A lazily marked ``localCheckpoint(eager=False)`` truncates lineage
-  every round (the edge list and the initial labels are staged once,
-  eagerly); without it the plan doubles per iteration and the optimizer
-  chokes long before the data does. Lazy is not job-free: adaptive
-  execution runs the round's shuffle map stages when the checkpoint is
-  marked (see the loop).
+  every round (the state table is staged the same way once); without
+  it the plan doubles per iteration and the optimizer chokes long
+  before the data does. Lazy is not job-free: adaptive execution runs
+  the round's shuffle map stage when the checkpoint is marked (see the
+  loop).
 - Convergence detection is O(1) driver data: labels only ever decrease,
   so ``(sum(lbl), count)`` is strictly decreasing until fixpoint —
   equality of consecutive rounds IS convergence (no expensive
@@ -54,49 +59,45 @@ def connected_components(
     ``max_iter`` bounds the rounds (≥ the graph diameter for an exact
     answer); the loop stops the round after fixpoint.
     """
-    fwd = pairs.select(
+    edges = pairs.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    edges = fwd.union(
-        pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-    )
-    # Cache: re-joined every round. Pairs are already distinct per the
-    # dedup contract; a defensive distinct would add a shuffle for nothing.
-    edges = edges.localCheckpoint(eager=True)
-
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
+    ).union(pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+    # Pairs are already distinct per the dedup contract; a defensive
+    # distinct would add a shuffle for nothing.
+    state = (
+        edges.groupBy(F.col("src").alias("node"))
+        .agg(F.collect_list("dst").alias("nbrs"))
         .withColumn("lbl", F.col("node"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
 
     prev: tuple | None = None
     for _ in range(max_iter):
-        # Propagate: each node offers its label to every neighbor, then
+        # Propagate: each node offers its label to every neighbour, then
         # every node keeps the min of its own and all offered labels.
-        offered = edges.join(
-            labels.withColumnRenamed("node", "src"), "src"
-        ).select(F.col("dst").alias("node"), "lbl")
+        offered = state.select(
+            F.explode("nbrs").alias("node"),
+            F.lit(None).cast("array<long>").alias("nbrs"),
+            "lbl",
+        )
         # Not action-free: although the checkpoint is lazy, adaptive
-        # execution runs the shuffle map stages of the join and groupBy
-        # below it while its plan is built (3 jobs on a vanilla local[4]
-        # session, 4 on session.py's), and the convergence collect fires
-        # 2 more. A 7-node path takes 7 rounds: 38 and 45 jobs in all.
-        labels = (
-            labels.unionByName(offered)
+        # execution runs the shuffle map stage of the groupBy below it
+        # while its plan is built, and the convergence collect fires
+        # more jobs.
+        state = (
+            state.unionByName(offered)
             .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
+            .agg(F.max("nbrs").alias("nbrs"), F.min("lbl").alias("lbl"))
             .localCheckpoint(eager=False)
         )
-        row = labels.agg(
+        row = state.agg(
             F.sum("lbl").alias("s"), F.count(F.lit(1)).alias("n")
         ).collect()[0]
         cur = (row["s"], row["n"])
         if cur == prev:
             break
         prev = cur
-    return labels.select(F.col("node"), F.col("lbl").alias("cluster_id"))
+    return state.select(F.col("node"), F.col("lbl").alias("cluster_id"))
 
 
 def dup_clusters(

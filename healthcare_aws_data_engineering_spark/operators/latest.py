@@ -22,6 +22,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.sqltext import isin
 from .pivot import latest_leg
 
 
@@ -68,20 +69,20 @@ def height_weight(
 
     ``bmi`` (extension — the reference displays height/weight only,
     test.py:454-464): ``weight_kg / (height_cm/100)²`` when both present."""
-    is_h = F.col("code_display").isin(list(height_names))
-    is_w = F.col("code_display").isin(list(weight_names))
+    is_h = isin("code_display", height_names)
+    is_w = isin("code_display", weight_names)
     order = [
-        F.col("effective_datetime").isNotNull().cast("int"),
-        F.col("effective_datetime"),
-        F.col("observation_id"),
+        "CAST(effective_datetime IS NOT NULL AS INT)",
+        "effective_datetime",
+        "observation_id",
     ]
     hm = F.col("height_cm") / 100.0
     return (
-        obs.filter(is_h | is_w)
+        obs.filter(f"{is_h} OR {is_w}")
         .groupBy(F.col("patient_id"))
         .agg(
-            latest_leg(is_h, F.col("value_quantity"), order).alias("height_cm"),
-            latest_leg(is_w, F.col("value_quantity"), order).alias("weight_kg"),
+            F.expr(f"{latest_leg(is_h, 'value_quantity', order)} AS height_cm"),
+            F.expr(f"{latest_leg(is_w, 'value_quantity', order)} AS weight_kg"),
         )
         .withColumn(
             "bmi",

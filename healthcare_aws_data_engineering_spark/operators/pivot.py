@@ -21,28 +21,35 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from ..functions.sqltext import lit
 
 
-def latest_leg(cond: Column, value: Column, order: Sequence[Column]) -> Column:
-    """argmax(value by struct(order)) restricted to rows matching ``cond``.
+def latest_leg(cond: str, value: str, order: Sequence[str]) -> str:
+    """argmax(value by struct(order)) restricted to rows matching ``cond``,
+    as Spark SQL text.
 
     ``max_by`` ignores rows whose ordering expression is NULL, so gating the
     ordering struct with the same condition restricts the argmax to the
     matching rows without a separate filter/window.
     """
-    return F.max_by(F.when(cond, value), F.when(cond, F.struct(*order)))
+    return (
+        f"max_by(CASE WHEN {cond} THEN {value} END,"
+        f" CASE WHEN {cond} THEN struct({', '.join(order)}) END)"
+    )
 
 
 def latest_pivot(
     df: DataFrame,
-    group: Column | str,
+    group: str,
     key_col: str,
-    legs: Mapping[str, tuple[Sequence[object], Column]],
-    order: Sequence[Column],
+    legs: Mapping[str, tuple[Sequence[object], str]],
+    order: Sequence[str],
 ) -> DataFrame:
     """One hash aggregate: per ``group``, per leg, the value expression of
-    the latest (greatest ``order``) row whose ``key_col`` matches.
+    the latest (greatest ``order``) row whose ``key_col`` matches. The
+    group, value and order expressions are Spark SQL text.
 
     ``legs`` maps output name → (key list, value expression). A leg over
     several keys takes the greatest of each key's latest value, as the
@@ -52,7 +59,7 @@ def latest_pivot(
     """
     aggs = []
     for out_name, (keys, value) in legs.items():
-        per_key = [latest_leg(F.col(key_col) == k, value, order) for k in keys]
-        leg = per_key[0] if len(per_key) == 1 else F.greatest(*per_key)
-        aggs.append(leg.alias(out_name))
-    return df.groupBy(group).agg(*aggs)
+        per_key = [latest_leg(f"{key_col} = {lit(k)}", value, order) for k in keys]
+        leg = per_key[0] if len(per_key) == 1 else f"greatest({', '.join(per_key)})"
+        aggs.append(F.expr(f"{leg} AS {out_name}"))
+    return df.groupBy(F.expr(group)).agg(*aggs)

@@ -18,9 +18,10 @@ one patient-partitioned window. One shuffle total, no driver-side loops
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ..functions.banding import range_status_with_margins
+from ..functions.banding import case_ladder, range_status_with_margins
+from ..functions.sqltext import lit
 
 SEVERITY_RANK = {
     "High": 0,
@@ -32,13 +33,12 @@ SEVERITY_RANK = {
 }
 
 
-def severity_rank(status: Column) -> Column:
+def severity_rank(status: str) -> str:
     """Status → severity rank (test.py:528-533's mapping; first-match CASE
     so the oracle twin is a plain CASE expression)."""
-    expr = None
-    for s, r in SEVERITY_RANK.items():
-        expr = F.when(status == s, r) if expr is None else expr.when(status == s, r)
-    return expr.otherwise(F.lit(3))
+    return case_ladder(
+        [(f"{status} = {lit(s)}", lit(r)) for s, r in SEVERITY_RANK.items()], lit(3)
+    )
 
 
 SEVERITY_TOP_K = 3  # labs shown per patient
@@ -50,18 +50,16 @@ def severity_topk(labs: DataFrame, ranges: dict[str, tuple[float, float]]) -> Da
     ``ranges``: analyte → (low, high) reference interval; analytes absent
     from the map band as Unknown (rank 3) and never surface — only
     severity < 2 rows (High/Low/Borderline) are kept, per test.py:541."""
-    status = None
-    for analyte, (lo, hi) in ranges.items():
-        banded = range_status_with_margins(F.col("value"), lo, hi)
-        status = (
-            F.when(F.col("analyte") == analyte, banded)
-            if status is None
-            else status.when(F.col("analyte") == analyte, banded)
-        )
-    status = status.otherwise(F.lit("Unknown")) if status is not None else F.lit("Unknown")
+    status = case_ladder(
+        [
+            (f"analyte = {lit(analyte)}", range_status_with_margins("value", lo, hi))
+            for analyte, (lo, hi) in ranges.items()
+        ],
+        lit("Unknown"),
+    )
 
-    df = labs.withColumn("status", status).withColumn(
-        "severity", severity_rank(F.col("status"))
+    df = labs.withColumn("status", F.expr(status)).withColumn(
+        "severity", F.expr(severity_rank("status"))
     )
     # test.py:541: abnormal AND borderline together (severity < 2);
     # In range / Unknown rows are never selected

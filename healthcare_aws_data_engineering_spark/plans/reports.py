@@ -17,7 +17,8 @@ same groupBy(patient_id) that does the pivot —
   row-group pushdown;
 - ties on effective_datetime are broken by observation_id so results are
   deterministic and oracle-comparable (SURVEY §7.4.5);
-- banding is pure Column CASE ladders — whole-stage codegen, no UDFs.
+- banding is plain CASE ladders built as Spark SQL text and applied with
+  one ``selectExpr`` — whole-stage codegen, no UDFs.
 
 CASE ladders are ported leg-for-leg INCLUDING their gaps: e.g. hdl = 59.5
 falls through every leg of the reference's hdl ladder (`BETWEEN 40 AND 59`
@@ -28,9 +29,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.banding import case_ladder
+from ..functions.sqltext import fold, isin, lit
 from ..operators.pivot import latest_pivot
 
 # Canonical analyte keys (LOINC display strings) from
@@ -51,19 +53,25 @@ T2D_URINE_KEYS = (
 )
 
 
+def _between(value: str, low: float, high: float) -> str:
+    """``Column.between``'s tree, ``value >= low AND value <= high``
+    (SQL ``BETWEEN`` parses to another expression)."""
+    return f"({value} >= {lit(low)} AND {value} <= {lit(high)})"
+
+
 def _pivot_latest(
     obs: DataFrame,
-    legs: dict[str, tuple[Sequence[str], Column]],
+    legs: dict[str, tuple[Sequence[str], str]],
 ) -> DataFrame:
     """Per patient, per leg, the value expression of the latest qualifying
     row, over the observations of the legs' analytes only."""
     all_keys = sorted({k for keys, _ in legs.values() for k in keys})
     return latest_pivot(
-        obs.filter(F.col("code_display").isin(all_keys)),
-        F.col("patient_id").alias("patient"),
+        obs.filter(isin("code_display", all_keys)),
+        "patient_id AS patient",
         "code_display",
         legs,
-        [F.col("effective_datetime"), F.col("observation_id")],
+        ["effective_datetime", "observation_id"],
     )
 
 
@@ -73,63 +81,62 @@ def cvd_report(obs: DataFrame, keys: dict[str, str] = CVD_KEYS) -> DataFrame:
     ``obs`` columns: patient_id, code_display, value_quantity,
     effective_datetime, observation_id.
     """
-    num = F.col("value_quantity").try_cast("double")
+    num = "try_cast(value_quantity AS DOUBLE)"
     piv = _pivot_latest(
         obs, {name: ([key], num) for name, key in keys.items()}
     )
-    hdl, ldl, trig, tc = (F.col(c) for c in ("hdl", "ldl", "trig", "total_chol"))
-    return piv.select(
+    return piv.selectExpr(
         "patient",
         "hdl",
         case_ladder(
             [
-                (hdl.isNull(), F.lit("n/a")),
-                (hdl >= 60, F.lit("Protective")),
-                (hdl.between(40, 59), F.lit("Normal")),
-                (hdl < 40, F.lit("Low")),
+                ("hdl IS NULL", lit("n/a")),
+                ("hdl >= 60", lit("Protective")),
+                (_between("hdl", 40, 59), lit("Normal")),
+                ("hdl < 40", lit("Low")),
             ]
-        ).alias("hdl_status"),
+        ) + " AS hdl_status",
         "ldl",
         case_ladder(
             [
-                (ldl.isNull(), F.lit("n/a")),
-                (ldl >= 160, F.lit("High")),
-                (ldl.between(130, 159), F.lit("Borderline")),
-                (ldl.between(100, 129), F.lit("Near optimal")),
-                (ldl < 100, F.lit("Optimal")),
+                ("ldl IS NULL", lit("n/a")),
+                ("ldl >= 160", lit("High")),
+                (_between("ldl", 130, 159), lit("Borderline")),
+                (_between("ldl", 100, 129), lit("Near optimal")),
+                ("ldl < 100", lit("Optimal")),
             ]
-        ).alias("ldl_status"),
+        ) + " AS ldl_status",
         "trig",
         case_ladder(
             [
-                (trig.isNull(), F.lit("n/a")),
-                (trig >= 200, F.lit("High")),
-                (trig.between(150, 199), F.lit("Borderline")),
-                (trig < 150, F.lit("Normal")),
+                ("trig IS NULL", lit("n/a")),
+                ("trig >= 200", lit("High")),
+                (_between("trig", 150, 199), lit("Borderline")),
+                ("trig < 150", lit("Normal")),
             ]
-        ).alias("triglycerides_status"),
+        ) + " AS triglycerides_status",
         "total_chol",
         case_ladder(
             [
-                (tc.isNull(), F.lit("n/a")),
-                (tc >= 240, F.lit("High")),
-                (tc.between(200, 239), F.lit("Borderline")),
-                (tc < 200, F.lit("Desirable")),
+                ("total_chol IS NULL", lit("n/a")),
+                ("total_chol >= 240", lit("High")),
+                (_between("total_chol", 200, 239), lit("Borderline")),
+                ("total_chol < 200", lit("Desirable")),
             ]
-        ).alias("total_chol_status"),
+        ) + " AS total_chol_status",
         case_ladder(
             [
                 (
-                    (ldl >= 130) | (trig >= 150) | (hdl < 40) | (tc >= 240),
-                    F.lit("At risk"),
+                    fold("OR", ["ldl >= 130", "trig >= 150", "hdl < 40", "total_chol >= 240"]),
+                    lit("At risk"),
                 ),
                 (
-                    hdl.isNull() & ldl.isNull() & trig.isNull() & tc.isNull(),
-                    F.lit("Insufficient data"),
+                    fold("AND", [f"{c} IS NULL" for c in ("hdl", "ldl", "trig", "total_chol")]),
+                    lit("Insufficient data"),
                 ),
             ],
-            otherwise=F.lit("Likely normal"),
-        ).alias("overall_cvd_risk"),
+            otherwise=lit("Likely normal"),
+        ) + " AS overall_cvd_risk",
     )
 
 
@@ -142,68 +149,64 @@ def prediabetes_report(
 
     ``obs`` additionally needs value_string (qualitative results).
     """
-    num = F.col("value_quantity").try_cast("double")
-    txt = F.lower(F.trim(F.col("value_string")))
-    legs: dict[str, tuple[Sequence[str], Column]] = {
+    num = "try_cast(value_quantity AS DOUBLE)"
+    legs: dict[str, tuple[Sequence[str], str]] = {
         name: ([key], num) for name, key in numeric_keys.items()
     }
-    legs["glucose_urine_txt"] = (list(urine_keys), txt)
+    legs["glucose_urine_txt"] = (list(urine_keys), "lower(trim(value_string))")
     piv = _pivot_latest(obs, legs)
-    a1c, glu, urine = (
-        F.col("a1c"),
-        F.col("glucose_blood"),
-        F.col("glucose_urine_txt"),
-    )
-    return piv.select(
+    urine = "glucose_urine_txt"
+    urine_pos = isin(urine, ("positive", "pos"))
+    return piv.selectExpr(
         "patient",
         "a1c",
         case_ladder(
             [
-                (a1c.isNull(), F.lit("n/a")),
-                (a1c >= 6.5, F.lit("Diabetes")),
-                (a1c >= 5.7, F.lit("Prediabetes")),
+                ("a1c IS NULL", lit("n/a")),
+                (f"a1c >= {lit(6.5)}", lit("Diabetes")),
+                (f"a1c >= {lit(5.7)}", lit("Prediabetes")),
             ],
-            otherwise=F.lit("Normal"),
-        ).alias("a1c_status"),
+            otherwise=lit("Normal"),
+        ) + " AS a1c_status",
         "glucose_blood",
         case_ladder(
             [
-                (glu.isNull(), F.lit("n/a")),
-                (glu >= 126, F.lit("Diabetes")),
-                (glu.between(100, 125), F.lit("Prediabetes")),
-                (glu.between(70, 99), F.lit("Normal")),
-                (glu < 70, F.lit("Low")),
+                ("glucose_blood IS NULL", lit("n/a")),
+                ("glucose_blood >= 126", lit("Diabetes")),
+                (_between("glucose_blood", 100, 125), lit("Prediabetes")),
+                (_between("glucose_blood", 70, 99), lit("Normal")),
+                ("glucose_blood < 70", lit("Low")),
             ]
-        ).alias("glucose_blood_status"),
-        "glucose_urine_txt",
+        ) + " AS glucose_blood_status",
+        urine,
         case_ladder(
             [
-                (urine.isNull(), F.lit("n/a")),
-                (urine.isin("positive", "pos"), F.lit("Abnormal")),
-                (urine == "trace", F.lit("Borderline")),
-                (urine.isin("negative", "neg"), F.lit("Normal")),
+                (f"{urine} IS NULL", lit("n/a")),
+                (urine_pos, lit("Abnormal")),
+                (f"{urine} = {lit('trace')}", lit("Borderline")),
+                (isin(urine, ("negative", "neg")), lit("Normal")),
             ],
-            otherwise=F.lit("n/a"),
-        ).alias("glucose_urine_status"),
+            otherwise=lit("n/a"),
+        ) + " AS glucose_urine_status",
         case_ladder(
             [
                 (
-                    (a1c >= 6.5)
-                    | (glu >= 126)
-                    | urine.isin("positive", "pos"),
-                    F.lit("Diabetes likely (lab criteria met)"),
+                    fold("OR", [f"a1c >= {lit(6.5)}", "glucose_blood >= 126", urine_pos]),
+                    lit("Diabetes likely (lab criteria met)"),
                 ),
                 (
-                    a1c.between(5.7, 6.4)
-                    | glu.between(100, 125)
-                    | (urine == "trace"),
-                    F.lit("Prediabetes / Elevated risk"),
+                    fold("OR", [
+                        _between("a1c", 5.7, 6.4),
+                        _between("glucose_blood", 100, 125),
+                        f"{urine} = {lit('trace')}",
+                    ]),
+                    lit("Prediabetes / Elevated risk"),
                 ),
                 (
-                    a1c.isNull() & glu.isNull() & urine.isNull(),
-                    F.lit("Insufficient data"),
+                    fold("AND", [f"{c} IS NULL" for c in ("a1c", "glucose_blood", urine)]),
+                    lit("Insufficient data"),
                 ),
             ],
-            otherwise=F.lit("Normal"),
-        ).alias("overall_t2d_risk"),
+            otherwise=lit("Normal"),
+        ) + " AS overall_t2d_risk",
     )

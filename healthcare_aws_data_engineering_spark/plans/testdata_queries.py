@@ -26,6 +26,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..functions.banding import case_ladder
+from ..functions.sqltext import fold, lit
 from ..operators.latest import first_last_delta, latest_per_key
 from ..operators.pivot import latest_leg
 from ..sources.tables import load_table, observation_view_from_events, spread
@@ -62,13 +64,15 @@ def _obs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return observation_view_from_events(_events(spark, sf_dir))
 
 
-def _qualitative_value_string(props) -> F.Column:
-    k = F.regexp_extract(props, _K_REGEX, 1).try_cast("int")
-    return (
-        F.when(k < 25, F.lit("Negative"))
-        .when(k < 50, F.lit("  Trace "))
-        .when(k < 75, F.lit("POSITIVE"))
-        .otherwise(F.lit("neg"))
+def _qualitative_value_string(props: str) -> str:
+    k = f"try_cast(regexp_extract({props}, {lit(_K_REGEX)}, 1) AS INT)"
+    return case_ladder(
+        [
+            (f"{k} < 25", lit("Negative")),
+            (f"{k} < 50", lit("  Trace ")),
+            (f"{k} < 75", lit("POSITIVE")),
+        ],
+        otherwise=lit("neg"),
     )
 
 
@@ -138,7 +142,7 @@ FROM piv
 
 def q_report_prediabetes(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = _obs(spark, sf_dir).withColumn(
-        "value_string", _qualitative_value_string(F.col("value_string"))
+        "value_string", F.expr(_qualitative_value_string("value_string"))
     )
     return prediabetes_report(
         obs,
@@ -561,14 +565,17 @@ def _monthly_labs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _monthly_labs_from(ev: DataFrame) -> DataFrame:
-    month = F.date_trunc("month", F.col("ts")).cast("date")
-    order = [F.col("ts"), F.col("event_id")]
-    aggs = []
-    for analyte, (etype, scale) in _LABS_MAP.items():
-        val = latest_leg(F.col("event_type") == etype, F.col("value"), order)
-        aggs.append((val / F.lit(scale)).alias(analyte))
+    order = ["ts", "event_id"]
+    aggs = [
+        F.expr(
+            f"{latest_leg(f'event_type = {lit(etype)}', 'value', order)}"
+            f" / {lit(scale)} AS {analyte}"
+        )
+        for analyte, (etype, scale) in _LABS_MAP.items()
+    ]
     return ev.groupBy(
-        F.col("user_id").alias("patient_id"), month.alias("month")
+        F.expr("user_id AS patient_id"),
+        F.expr("CAST(date_trunc('month', ts) AS DATE) AS month"),
     ).agg(*aggs)
 
 
@@ -596,23 +603,23 @@ def q_wellness_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .wellness import score_rows
 
     labs = _monthly_labs(spark, sf_dir)
-    scored = score_rows(labs.withColumn("date", F.col("month").cast("timestamp")))
-    return scored.select(
+    scored = score_rows(labs.selectExpr("*", "CAST(month AS TIMESTAMP) AS date"))
+    return scored.selectExpr(
         "patient_id",
         "month",
-        F.col("subscore_cardiovascular").alias("sub_cardio"),
-        F.col("subscore_prediabetes").alias("sub_prediabetes"),
-        F.col("subscore_anemia").alias("sub_anemia"),
+        "subscore_cardiovascular AS sub_cardio",
+        "subscore_prediabetes AS sub_prediabetes",
+        "subscore_anemia AS sub_anemia",
         "wellness",
-        F.col("wellness_confidence").alias("confidence"),
-        F.col("label_cardiovascular").alias("cardio_label"),
-        F.col("label_prediabetes").alias("prediabetes_label"),
-        F.array_join("patterns", ",").alias("patterns"),
+        "wellness_confidence AS confidence",
+        "label_cardiovascular AS cardio_label",
+        "label_prediabetes AS prediabetes_label",
+        "array_join(patterns, ',') AS patterns",
     )
 
 
 # Penalty CASE ladders mirror functions/scoring.py::PENALTY_REFS exactly;
-# arithmetic term order mirrors the Column-expression fold so doubles match
+# arithmetic term order mirrors that module's expression fold so doubles match
 # bit-for-bit (see module docstring).
 _WELLNESS_MONTHLY_SQL = f"""
 WITH labs AS ({_MONTHLY_LABS_SQL}),
@@ -751,15 +758,21 @@ FROM fitted CROSS JOIN (SELECT unnest(generate_series(1, 12)) AS k)
 """
 
 # deterministic per-(user, analyte) coverage drops — mirrored verbatim in
-# the oracle's sparse_events CTE (lazy: Columns need an active session)
-def _confidence_sparsity_spark():
-    return ~(
-        ((F.col("user_id") % 3 == 0) & (F.col("event_type") == "click"))
-        | ((F.col("user_id") % 4 < 2) & (F.col("event_type") == "view"))
-        | ((F.col("user_id") % 2 == 0) & (F.col("event_type") == "signup"))
-        | ((F.col("user_id") % 5 == 0) & (F.col("event_type") == "purchase"))
-        | ((F.col("user_id") % 7 < 3) & (F.col("event_type") == "error"))
+# the oracle's sparse_events CTE: (user condition, event type dropped)
+_CONFIDENCE_DROPS = (
+    ("user_id % 3 = 0", "click"),
+    ("user_id % 4 < 2", "view"),
+    ("user_id % 2 = 0", "signup"),
+    ("user_id % 5 = 0", "purchase"),
+    ("user_id % 7 < 3", "error"),
+)
+
+
+def _confidence_sparsity_spark() -> str:
+    drops = fold(
+        "OR", (f"({user} AND event_type = {lit(etype)})" for user, etype in _CONFIDENCE_DROPS)
     )
+    return f"NOT {drops}"
 
 
 _CONFIDENCE_SPARSITY_SQL = """NOT (
@@ -788,14 +801,14 @@ def q_disease_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .wellness import disease_confidence
 
     events = _events(spark, sf_dir).filter(_confidence_sparsity_spark())
-    labs = _monthly_labs_from(events).select(
+    labs = _monthly_labs_from(events).selectExpr(
         "patient_id",
-        F.col("month").alias("date"),
-        F.col("ldl").alias("LDL"),
-        F.col("hdl").alias("HDL"),
-        F.col("a1c").alias("A1c"),
-        F.col("glucoseblood").alias("GlucoseBlood"),
-        F.col("hemoglobin").alias("Hemoglobin"),
+        "month AS date",
+        "ldl AS LDL",
+        "hdl AS HDL",
+        "a1c AS A1c",
+        "glucoseblood AS GlucoseBlood",
+        "hemoglobin AS Hemoglobin",
     )
     return disease_confidence(labs)
 

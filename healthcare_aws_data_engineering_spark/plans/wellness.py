@@ -13,8 +13,9 @@ same way, mrp_website.py:192-199).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
+from ..functions.banding import case_ladder
 from ..functions.scoring import (
     DISEASE_WEIGHTS,
     PENALTY_REFS,
@@ -25,14 +26,16 @@ from ..functions.scoring import (
     overall_label,
     wellness,
 )
+from ..functions.sqltext import fold, lit
 from .sqlsum import dsum
 
 ANALYTES = list(PENALTY_REFS)
 
 
-def _colmap(df: DataFrame) -> dict[str, Column]:
+def _colmap(df: DataFrame) -> dict[str, str]:
+    present = set(df.columns)
     return {
-        a: (F.col(a).cast("double") if a in df.columns else F.lit(None).cast("double"))
+        a: (f"CAST({a} AS DOUBLE)" if a in present else "CAST(NULL AS DOUBLE)")
         for a in ANALYTES
     }
 
@@ -43,47 +46,44 @@ def score_rows(labs: DataFrame) -> DataFrame:
     overall labels and chips. Projection-only — no shuffle at all.
 
     Built as three STAGED projections (penalties → subscores/labels →
-    chips/wellness), each layer referencing the previous layer's real
-    columns: a single flat projection would re-inline every penalty CASE
-    ladder into the subscore, label, chip and wellness trees (~4× the
-    expression work — Catalyst CSE does not reach into when/otherwise
-    branches, and CollapseProject refuses to merge the layers precisely
-    because the aliases are non-cheap and multiply referenced). Same
-    values, same single codegen stage."""
+    chips/wellness), each one ``selectExpr`` over the SQL text of
+    :mod:`..functions.scoring` and each referencing the previous layer's
+    real columns: a single flat projection would re-inline every penalty
+    CASE ladder into the subscore, label, chip and wellness trees (~4× the
+    expression work — Catalyst CSE does not reach into CASE branches, and
+    CollapseProject refuses to merge the layers precisely because the
+    aliases are non-cheap and multiply referenced). Same values, same
+    single codegen stage."""
     cols = _colmap(labs)
     # layer 1: every penalty ladder evaluated exactly once
-    out = labs.withColumns(
-        {
-            f"penalty_{disease.lower()}_{analyte.lower()}": pcol
+    out = labs.selectExpr(
+        "*",
+        *[
+            f"{pen} AS penalty_{disease.lower()}_{analyte.lower()}"
             for disease in DISEASE_WEIGHTS
-            for analyte, pcol in disease_penalty_columns(disease, cols).items()
-        }
+            for analyte, pen in disease_penalty_columns(disease, cols).items()
+        ],
     )
     # layer 2: subscores + labels from the staged penalty columns
-    layer2 = {}
+    layer2 = []
     for disease in DISEASE_WEIGHTS:
         key = disease.lower()
-        staged_pens = {
-            a: F.col(f"penalty_{key}_{a.lower()}") for a in DISEASE_WEIGHTS[disease]
-        }
-        layer2[f"subscore_{key}"] = subscore_from_penalties(disease, staged_pens)
-        layer2[f"label_{key}"] = overall_label(disease, staged_pens)
-    out = out.withColumns(layer2)
+        staged_pens = {a: f"penalty_{key}_{a.lower()}" for a in DISEASE_WEIGHTS[disease]}
+        layer2.append(f"{subscore_from_penalties(disease, staged_pens)} AS subscore_{key}")
+        layer2.append(f"{overall_label(disease, staged_pens)} AS label_{key}")
+    out = out.selectExpr("*", *layer2)
     # layer 3: chips from staged labels, wellness from staged subscores
-    subs = {d: F.col(f"subscore_{d.lower()}") for d in DISEASE_WEIGHTS}
-    w, conf, used = wellness(subs)
-    chips = {
-        f"chip_{d.lower()}": chip_for_label(d, F.col(f"label_{d.lower()}"))
-        for d in DISEASE_WEIGHTS
-    }
-    return out.withColumns(
-        {
-            **chips,
-            "wellness": w,
-            "wellness_confidence": conf,
-            "wellness_areas_used": used,
-            "patterns": detect_patterns(cols),
-        }
+    w, conf, used = wellness({d: f"subscore_{d.lower()}" for d in DISEASE_WEIGHTS})
+    return out.selectExpr(
+        "*",
+        *[
+            f"{chip_for_label(d, f'label_{d.lower()}')} AS chip_{d.lower()}"
+            for d in DISEASE_WEIGHTS
+        ],
+        f"{w} AS wellness",
+        f"{conf} AS wellness_confidence",
+        f"{used} AS wellness_areas_used",
+        f"{detect_patterns(cols)} AS patterns",
     )
 
 
@@ -121,29 +121,25 @@ def disease_confidence(labs: DataFrame) -> DataFrame:
     (``confidence_for_disease``, mrp_website.py:415-423): among the last 4
     records, count the disease's analytes with ≥1 non-null → High (≥2) /
     Medium (1) / Low (0)."""
-    w = W.partitionBy("patient_id").orderBy(F.col("date").desc())
-    recent = labs.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= 4
-    )
+    recent = labs.selectExpr(
+        "*", "row_number() OVER (PARTITION BY patient_id ORDER BY `date` DESC) AS __rn"
+    ).filter("__rn <= 4")
+    present_cols = set(labs.columns)
     aggs = []
     for disease, weights in DISEASE_WEIGHTS.items():
-        present = [
-            F.max(F.col(a).isNotNull().cast("int"))
-            for a in weights
-            if a in labs.columns
-        ]
-        cnt = sum(present, F.lit(0)) if present else F.lit(0)
-        aggs.append(cnt.alias(f"__n_{disease}"))
+        present = [f"max(CAST({a} IS NOT NULL AS INT))" for a in weights if a in present_cols]
+        aggs.append(F.expr(f"{fold('+', ['0', *present])} AS __n_{disease}"))
     agg = recent.groupBy("patient_id").agg(*aggs)
-    out = []
-    for disease in DISEASE_WEIGHTS:
-        n = F.col(f"__n_{disease}")
-        out.append(
-            F.when(n >= 2, "High").when(n == 1, "Medium").otherwise("Low").alias(
-                f"confidence_{disease.lower()}"
-            )
-        )
-    return agg.select("patient_id", *out)
+    return agg.selectExpr(
+        "patient_id",
+        *[
+            case_ladder(
+                [(f"__n_{d} >= 2", lit("High")), (f"__n_{d} = 1", lit("Medium"))],
+                lit("Low"),
+            ) + f" AS confidence_{d.lower()}"
+            for d in DISEASE_WEIGHTS
+        ],
+    )
 
 
 # Trend-direction semantics (mrp_website.py:534-541): for these diseases a

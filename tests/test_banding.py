@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from healthcare_aws_data_engineering_spark.functions.banding import (
     case_ladder,
@@ -10,22 +9,22 @@ from healthcare_aws_data_engineering_spark.functions.banding import (
 )
 
 
-def _eval(spark, col, values, schema="v double"):
+def _eval(spark, expr, values, schema="v double"):
     df = spark.createDataFrame([(v,) for v in values], schema)
-    return [r.out for r in df.select(col.alias("out")).collect()]
+    return [r.out for r in df.selectExpr(f"{expr} AS out").collect()]
 
 
 def test_case_ladder_first_match_wins(spark):
-    col = case_ladder(
-        [(F.col("v") < 10, F.lit("small")), (F.col("v") < 20, F.lit("medium"))],
-        otherwise=F.lit("big"),
+    expr = case_ladder(
+        [("v < 10", "'small'"), ("v < 20", "'medium'")],
+        otherwise="'big'",
     )
-    assert _eval(spark, col, [5.0, 15.0, 25.0]) == ["small", "medium", "big"]
+    assert _eval(spark, expr, [5.0, 15.0, 25.0]) == ["small", "medium", "big"]
 
 
 def test_case_ladder_no_otherwise_yields_null(spark):
-    col = case_ladder([(F.col("v") < 10, F.lit("small"))])
-    assert _eval(spark, col, [50.0]) == [None]
+    expr = case_ladder([("v < 10", "'small'")])
+    assert _eval(spark, expr, [50.0]) == [None]
 
 
 def test_case_ladder_empty_raises():
@@ -34,8 +33,8 @@ def test_case_ladder_empty_raises():
 
 
 def test_risk_prob_band(spark):
-    col = risk_prob_band(F.col("v"))
-    assert _eval(spark, col, [0.0, 0.249, 0.25, 0.49, 0.5, 0.9]) == [
+    expr = risk_prob_band("v")
+    assert _eval(spark, expr, [0.0, 0.249, 0.25, 0.49, 0.5, 0.9]) == [
         "Low",
         "Low",
         "Moderate",
@@ -47,8 +46,8 @@ def test_risk_prob_band(spark):
 
 def test_range_status_with_margins(spark):
     # reference semantics test.py:166-183 with low=10, high=20
-    col = range_status_with_margins(F.col("v"), 10.0, 20.0)
-    assert _eval(spark, col, [None, 8.9, 9.5, 10.0, 20.0, 23.9, 24.1]) == [
+    expr = range_status_with_margins("v", 10.0, 20.0)
+    assert _eval(spark, expr, [None, 8.9, 9.5, 10.0, 20.0, 23.9, 24.1]) == [
         "Unknown",
         "Low",
         "Borderline low",

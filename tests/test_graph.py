@@ -100,6 +100,28 @@ def test_star_equals_label_fixture_graphs(spark):
     assert label[1499] == 1000  # far end of the path reached
 
 
+def test_cc_round_is_one_shuffle(spark, monkeypatch):
+    """Each label round, and the neighbour-list staging before them, is
+    one Exchange in the executed plan it checkpoints: messages and
+    state rows meet in one groupBy, with no edge-label join."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def spy(self, eager=True):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    chain = [(i, i + 1) for i in range(1, 6)]
+    out = connected_components(_pairs(spark, chain))
+    assert {r.cluster_id for r in out.collect()} == {1}
+    # staging + 5 rounds to reach node 6 + 1 round to see the fixpoint
+    assert len(plans) == 7
+    assert [p.count("Exchange ") for p in plans] == [1] * 7, plans[1]
+
+
 def test_dup_clusters_keeper_and_size(spark):
     out = dup_clusters(_pairs(spark, [(10, 11), (11, 12), (30, 31)]))
     rows = {r.doc_id: r for r in out.collect()}

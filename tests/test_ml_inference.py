@@ -162,20 +162,20 @@ def test_float_literal_forces_double_parse_path():
     DECIMAL->DOUBLE conversion is not correctly rounded (bare
     0.9700000286102295 lands one ulp high), which flipped an XGB split
     for feature values exactly AT the split threshold — caught at sf0.1.
-    _f() must emit an exponent suffix so both engines take the
+    double_lit() must emit an exponent suffix so both engines take the
     correctly-rounded string->DOUBLE path."""
     import duckdb
     import numpy as np
 
-    from healthcare_aws_data_engineering_spark.ml.inference import _f
+    from healthcare_aws_data_engineering_spark.functions.sqltext import double_lit
 
     v = float(np.float32(0.97))  # the offending value from the field
-    lit = _f(v)
+    lit = double_lit(v)
     assert "e" in lit or "E" in lit
     got = duckdb.sql(f"SELECT {lit}").fetchone()[0]
     assert repr(got) == repr(v), (lit, got, v)
     # scientific reprs pass through un-mangled
-    assert _f(1e-05) == "1e-05"
+    assert double_lit(1e-05) == "1e-05"
     # and the bare-literal failure mode stays documented: DECIMAL parse
     # of the same digits mis-rounds
     bare = duckdb.sql(f"SELECT CAST({repr(v)} AS DOUBLE)").fetchone()[0]

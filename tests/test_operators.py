@@ -75,10 +75,10 @@ def test_latest_pivot_mixed_types(spark):
         group="pid",
         key_col="key",
         legs={
-            "n1": (["k1"], F.col("num")),
-            "t2": (["k2", "k3"], F.lower(F.col("txt"))),
+            "n1": (["k1"], "num"),
+            "t2": (["k2", "k3"], "lower(txt)"),
         },
-        order=[F.col("ts"), F.col("id")],
+        order=["ts", "id"],
     )
     rows = {r.pid: r for r in out.collect()}
     assert rows[1].n1 == 5.0 and rows[1].t2 == "pos"

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) for the rule-scoring layer: the
-Spark column expressions must satisfy the reference app's invariants for
+Spark SQL expressions must satisfy the reference app's invariants for
 ARBITRARY lab inputs, not just the fixtures. Each hypothesis example
 evaluates one batched DataFrame (one Spark job per example; examples kept
 small so the suite stays fast).
@@ -10,7 +10,7 @@ from __future__ import annotations
 import math
 
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from healthcare_aws_data_engineering_spark.functions.banding import (
     range_status_with_margins,
@@ -61,8 +61,8 @@ def _df(spark, rows):
 def test_penalty_bounds_and_null(spark, rows):
     """Penalty ∈ {0,1,2,3}; NULL value → 0 (never NULL, never out of range)."""
     df = _df(spark, rows)
-    out = df.select(
-        "rid", *[penalty(a, F.col(a)).alias(f"p_{a}") for a in ANALYTES]
+    out = df.selectExpr(
+        "rid", *[f"{penalty(a, f'`{a}`')} AS p_{a}" for a in ANALYTES]
     ).collect()
     for r in out:
         for a in ANALYTES:
@@ -70,8 +70,8 @@ def test_penalty_bounds_and_null(spark, rows):
             assert p in (0, 1, 2, 3), (a, p)
     # null input row → all penalties 0
     nulls = _df(spark, [{a: None for a in ANALYTES}])
-    rn = nulls.select(
-        *[penalty(a, F.col(a)).alias(f"p_{a}") for a in ANALYTES]
+    rn = nulls.selectExpr(
+        *[f"{penalty(a, f'`{a}`')} AS p_{a}" for a in ANALYTES]
     ).collect()[0]
     assert all(rn[f"p_{a}"] == 0 for a in ANALYTES)
 
@@ -82,11 +82,11 @@ def test_subscore_range_and_presence(spark, rows):
     """Subscore ∈ [0,100] when any weighted analyte is present; NULL when
     none are."""
     df = _df(spark, rows)
-    cols = {a: F.col(a) for a in ANALYTES}
-    out = df.select(
+    cols = {a: f"`{a}`" for a in ANALYTES}
+    out = df.selectExpr(
         "rid",
         *[
-            _subscore(d, cols).alias(f"s_{d}")
+            f"{_subscore(d, cols)} AS s_{d}"
             for d in DISEASE_WEIGHTS
         ],
     ).collect()
@@ -106,15 +106,15 @@ def test_wellness_is_convex_combination(spark, rows):
     """Wellness = weighted mean of present subscores → lies within their
     [min, max]; confidence equals the present weight mass."""
     df = _df(spark, rows)
-    cols = {a: F.col(a) for a in ANALYTES}
-    subs = {d: _subscore(d, cols) for d in DISEASE_WEIGHTS}
+    cols = {a: f"`{a}`" for a in ANALYTES}
+    subs = {d: f"({_subscore(d, cols)})" for d in DISEASE_WEIGHTS}
     w, conf, used = wellness(subs)
-    out = df.select(
+    out = df.selectExpr(
         "rid",
-        w.alias("w"),
-        conf.alias("conf"),
-        used.alias("used"),
-        *[subs[d].alias(f"s_{d}") for d in DISEASE_WEIGHTS],
+        f"{w} AS w",
+        f"{conf} AS conf",
+        f"{used} AS used",
+        *[f"{subs[d]} AS s_{d}" for d in DISEASE_WEIGHTS],
     ).collect()
     for r in out:
         present = [r[f"s_{d}"] for d in DISEASE_WEIGHTS if r[f"s_{d}"] is not None]
@@ -149,8 +149,8 @@ def test_range_status_partition(spark, values, low, spread):
     df = spark.createDataFrame(
         [Row(rid=i, v=v) for i, v in enumerate(values)], schema="rid int, v double"
     )
-    out = df.select(
-        "rid", "v", range_status_with_margins(F.col("v"), low, high).alias("s")
+    out = df.selectExpr(
+        "rid", "v", f"{range_status_with_margins('v', low, high)} AS s"
     ).collect()
     for r in out:
         if r.v is None:

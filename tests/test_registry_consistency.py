@@ -271,8 +271,8 @@ def test_no_oracle_carries_bare_long_float_literals():
     decimal literal as DECIMAL, and its DECIMAL->DOUBLE conversion is
     not correctly rounded (one-ulp error on e.g. 0.9700000286102295 —
     flipped an XGB split at sf0.1). Every >=15-fractional-digit float
-    literal in an oracle must carry an exponent suffix (the ``_f()``
-    convention) so both engines take the correctly-rounded
+    literal in an oracle must carry an exponent suffix (the
+    ``double_lit()`` convention) so both engines take the correctly-rounded
     string->DOUBLE path."""
     import re
 

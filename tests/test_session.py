@@ -5,20 +5,25 @@ directory re-reads on the Python workers (the package ``__init__``)."""
 
 from __future__ import annotations
 
+import importlib.util
 import sys
 import zipimport
+from pathlib import Path
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-import py4j.java_gateway
-import py4j.protocol
+import pytest
 from pyspark.sql import functions as F
 
 import healthcare_aws_data_engineering_spark as pkg
 from healthcare_aws_data_engineering_spark.plans.testdata_queries import QUERIES
 
-MEMORY_DELETE = py4j.protocol.MEMORY_COMMAND_NAME + py4j.protocol.MEMORY_DEL_SUBCOMMAND_NAME
+_spec = importlib.util.spec_from_file_location(
+    "tools_profile_queries", Path(__file__).resolve().parents[1] / "tools" / "profile_queries.py"
+)
+profile_queries = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(profile_queries)
 
 
 def test_session_turns_off_call_site_capture(spark):
@@ -84,53 +89,51 @@ def _tiny_customer(path: str) -> None:
     )
 
 
-def _count_build_commands(monkeypatch, build) -> tuple[int, object]:
-    """py4j commands one ``build()`` sends, memory deletes not counted
-    (py4j sends one from a finalizer thread for every Python-side Java
-    object the garbage collector frees), and its result."""
-    sent = [0]
-    send = py4j.java_gateway.GatewayClient.send_command
-
-    def counting(self, command, *args, **kwargs):
-        if not command.startswith(MEMORY_DELETE):
-            sent[0] += 1
-        return send(self, command, *args, **kwargs)
-
-    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command", counting)
-    df = build()
-    monkeypatch.undo()
-    return sent[0], df
+def _build_commands(spark, path: str, name: str) -> int:
+    """py4j commands one build of the registry row ``name`` sends over
+    the tiny inputs, memory deletes not counted (py4j sends one from a
+    finalizer thread for every Python-side Java object the garbage
+    collector frees, so their number depends on what earlier tests left
+    behind: about 2,000 more in some full runs)."""
+    _tiny_events(path)
+    _tiny_customer(path)
+    build = QUERIES[name]
+    build(spark, path)  # caches the table schemas
+    sent, df = profile_queries.build_commands(lambda: build(spark, path))
+    assert df.count() > 0
+    return sent
 
 
-def test_wellness_build_py4j_traffic_is_bounded(spark, tmp_path, monkeypatch):
+def test_wellness_build_py4j_traffic_is_bounded(spark, tmp_path):
     """One build of wellness_monthly sends 7,500-8,200 py4j commands with
     call-site capture on and one withColumn call per column, about 2,200
-    with capture off and one withColumns call per scoring layer.
-
-    Memory-delete commands are not counted: py4j sends one for every
-    Python-side Java object the garbage collector frees, from a finalizer
-    thread, so their number during the build depends on what earlier
-    tests left behind (about 2,000 more in some full runs)."""
-    _tiny_events(str(tmp_path))
-    build = QUERIES["wellness_monthly"]
-    build(spark, str(tmp_path))  # caches the table schema
-    sent, df = _count_build_commands(monkeypatch, lambda: build(spark, str(tmp_path)))
-    assert sent < 3500, sent
-    assert df.count() > 0
+    with capture off and one withColumns call per scoring layer, and
+    127 with each scoring layer one selectExpr of SQL text."""
+    sent = _build_commands(spark, str(tmp_path), "wellness_monthly")
+    assert sent < 150, sent
 
 
-def test_ml_risk_scores_build_py4j_traffic_is_bounded(spark, tmp_path, monkeypatch):
+def test_ml_risk_scores_build_py4j_traffic_is_bounded(spark, tmp_path):
     """One build of ml_risk_scores sends about 1,270 py4j commands with
     the z/cluster folds as 15 parsed Spark SQL expressions and 19 staged
-    scale columns, about 1,020 with JVM imputation feeding one numpy UDF;
-    the feature table is most of what remains."""
-    _tiny_events(str(tmp_path))
-    _tiny_customer(str(tmp_path))
-    build = QUERIES["ml_risk_scores"]
-    build(spark, str(tmp_path))  # caches the table schemas
-    sent, df = _count_build_commands(monkeypatch, lambda: build(spark, str(tmp_path)))
-    assert sent < 1150, sent
-    assert df.count() > 0
+    scale columns, about 1,020 with JVM imputation feeding one numpy UDF,
+    and 342 with the feature table, imputation, flags and bands as
+    SQL text: the feature table sends about 100 and the scoring UDF's
+    call over 19 columns about 100."""
+    sent = _build_commands(spark, str(tmp_path), "ml_risk_scores")
+    assert sent < 375, sent
+
+
+@pytest.mark.parametrize(
+    ("name", "bound"),
+    [("report_cvd", 110), ("report_prediabetes", 110), ("disease_confidence", 135)],
+)
+def test_clinical_row_build_py4j_traffic_is_bounded(spark, tmp_path, name, bound):
+    """The report and confidence rows send 370-480 py4j commands per build
+    with one Column call per expression node, 92-118 with each projection
+    and aggregate layer built from SQL text."""
+    sent = _build_commands(spark, str(tmp_path), name)
+    assert sent < bound, sent
 
 
 def test_ml_risk_scores_runs_one_python_node(spark, tmp_path):

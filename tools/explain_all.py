@@ -4,12 +4,16 @@ Usage: python tools/explain_all.py [sf_dir] [query ...]
 
 Prints each query's formatted physical plan (op tree plus per-node
 detail, pushed filters included) with the session-global counters in it
-renumbered per query: expression ids (``#123``), lambda variables
-(``lambda x_45``), exchange plan ids (``plan_id=6``) and the RDD ids of
-checkpointed frames (``MapPartitionsRDD[95]``) become their order of
-first appearance. Two builds of an unchanged query then print the
-same text, so ``diff`` between the output of two checkouts shows only real
-plan changes. The enforced invariants live in tests/test_plan_quality.py.
+renumbered per query: expression ids (``#123``), Catalyst's common
+subexpression names (``_common_expr_4``), exchange plan ids
+(``plan_id=6``) and the RDD ids of checkpointed frames
+(``MapPartitionsRDD[95]``) become their order of first appearance.
+Lambda variables lose PySpark's unique suffix (``lambda x_45#12`` and
+the SQL-text form ``lambda x#12`` both print ``lambda x#0``); the
+expression id still tells them apart. Two builds of an unchanged query
+then print the same text, so ``diff`` between the output of two
+checkouts shows only real plan changes. The enforced invariants live in
+tests/test_plan_quality.py.
 """
 
 from __future__ import annotations
@@ -23,12 +27,14 @@ from healthcare_aws_data_engineering_spark.session import get_spark
 from __spark_entry__ import queries
 
 _COUNTERS = (
-    r"(#)(\d+)", r"(lambda \w+?_)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)"
+    r"(#)(\d+)", r"(_common_expr_)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)"
 )
 
 
 def normalize(plan: str) -> str:
-    """Renumber each session-global counter in order of first appearance."""
+    """Drop lambda variables' unique suffix, then renumber each
+    session-global counter in order of first appearance."""
+    plan = re.sub(r"(lambda [A-Za-z]\w*?)_\d+\b", r"\1", plan)
     for pattern in _COUNTERS:
         seen: dict[str, int] = {}
         plan = re.sub(

@@ -16,6 +16,11 @@ warm-up collect and the timed samples): ``main`` is this Python process,
 the row's work), ``py`` every process under the JVM (the PySpark daemon
 and its workers, reaped ones included). Worker CPU spent after a
 ``collect()`` returns can land in the next row's window.
+
+``py4j`` is the number of py4j commands one more build of the row sends
+(:func:`build_commands`), after its timed samples: the driver-side build
+layer's traffic, which a regression in how a row assembles its plan
+raises.
 """
 
 from __future__ import annotations
@@ -25,6 +30,9 @@ import statistics
 import sys
 from collections import defaultdict
 
+import py4j.java_gateway
+import py4j.protocol
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import RUNS, median_total, time_query, warm_up
@@ -32,6 +40,30 @@ from healthcare_aws_data_engineering_spark.plans.testdata_queries import QUERIES
 from healthcare_aws_data_engineering_spark.session import get_spark
 
 CLK_TCK = os.sysconf("SC_CLK_TCK")
+MEMORY_DELETE = py4j.protocol.MEMORY_COMMAND_NAME + py4j.protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+
+def build_commands(build):
+    """(py4j commands ``build()`` sends, its result). Memory deletes are
+    not counted: py4j sends one from a finalizer thread for every
+    Python-side Java object the garbage collector frees, so their number
+    depends on what ran before."""
+    client = py4j.java_gateway.GatewayClient
+    send = client.send_command
+    sent = 0
+
+    def counting(self, command, *args, **kwargs):
+        nonlocal sent
+        if not command.startswith(MEMORY_DELETE):
+            sent += 1
+        return send(self, command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = build()
+    finally:
+        client.send_command = send
+    return sent, out
 
 
 def _stat(path: str) -> tuple[str, list[str]]:
@@ -110,13 +142,14 @@ def main() -> None:
 
     print(
         f"{'query':28} {'build':>7} {'exec':>7} {'total':>7} {'jobs':>5}"
-        f" {'main':>6} {'jvm':>6} {'py':>6}"
+        f" {'main':>6} {'jvm':>6} {'py':>6} {'py4j':>6}"
     )
     suite = 0.0
     for name in names:
         before = cpu_split()
         samples = time_query(spark, QUERIES[name], sf_dir)
         cpu = [(b - a) / (RUNS + 1) for a, b in zip(before, cpu_split())]
+        sent, _ = build_commands(lambda: QUERIES[name](spark, sf_dir))
         build = statistics.median(s[0] for s in samples)
         execute = statistics.median(s[1] for s in samples)
         total = median_total(samples)
@@ -124,7 +157,7 @@ def main() -> None:
         suite += total
         print(
             f"{name:28} {build:7.3f} {execute:7.3f} {total:7.3f} {jobs:5d}"
-            f" {cpu[0]:6.3f} {cpu[1]:6.3f} {cpu[2]:6.3f}"
+            f" {cpu[0]:6.3f} {cpu[1]:6.3f} {cpu[2]:6.3f} {sent:6d}"
         )
     print(f"{'TOTAL':28} {'':7} {'':7} {suite:7.3f}")
 
