@@ -164,35 +164,40 @@ def sample_frames(
     """Video → one row per sampled frame (1→N fan-out inside mapInPandas;
     frames for a batch are produced incrementally, never one whole video's
     frames held as a single array value)."""
-    import pandas as pd
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def do(batches):
+        # the body is a package function, so unpickling it in a Python
+        # worker imports the package (and its zip-directory shim)
         for pdf in batches:
-            ids, idxs, mss, frames = [], [], [], []
-            # zip over column Series, not iterrows (per-row Series cost)
-            for media_id, kind, content, meta in zip(
-                pdf["media_id"], pdf["kind"], pdf["content"], pdf["meta"]
-            ):
-                if kind != "video":
-                    continue
-                dur = (meta or {}).get("duration_ms") or 0
-                n = min(max_frames, max(1, dur // every_ms))
-                for i in range(int(n)):
-                    ids.append(media_id)
-                    idxs.append(i)
-                    mss.append(i * every_ms)
-                    # md5 + ASCII salt (not raw-byte salts): the DuckDB
-                    # oracle rebuilds this as md5(text || '#frame:' || i)
-                    frames.append(
-                        hashlib.md5(
-                            (content or b"") + f"#frame:{i}".encode()
-                        ).digest()
-                    )
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame_ms": mss, "frame": frames}
-            )
+            yield _frame_batch(pdf, every_ms, max_frames)
 
     return media.mapInPandas(do, schema=FRAME_SCHEMA)
+
+
+def _frame_batch(pdf, every_ms: int, max_frames: int):
+    import pandas as pd
+
+    ids, idxs, mss, frames = [], [], [], []
+    # zip over column Series, not iterrows (per-row Series cost)
+    for media_id, kind, content, meta in zip(
+        pdf["media_id"], pdf["kind"], pdf["content"], pdf["meta"]
+    ):
+        if kind != "video":
+            continue
+        dur = (meta or {}).get("duration_ms") or 0
+        n = min(max_frames, max(1, dur // every_ms))
+        for i in range(int(n)):
+            ids.append(media_id)
+            idxs.append(i)
+            mss.append(i * every_ms)
+            # md5 + ASCII salt (not raw-byte salts): the DuckDB
+            # oracle rebuilds this as md5(text || '#frame:' || i)
+            frames.append(
+                hashlib.md5((content or b"") + f"#frame:{i}".encode()).digest()
+            )
+    return pd.DataFrame(
+        {"media_id": ids, "frame_idx": idxs, "frame_ms": mss, "frame": frames}
+    )
 
 
 # --------------------------------------------------------------------------

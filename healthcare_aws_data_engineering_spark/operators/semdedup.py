@@ -14,10 +14,11 @@ Scale design (100 TB shape):
   the same broadcast-projection assignment as ``similarity.ivf_topk``);
   ``knn_graph`` pairs only within LSH signature buckets. Both cap the
   per-group membership deterministically, so no degenerate group can
-  explode the self-join.
+  explode the pair fan-out.
 - **Assignment is a projection.** Centroids / hyperplanes are literal
   arrays folded into the plan — zero shuffle, zero broadcast state; the
-  only shuffles are the group-keyed self-joins and one final window.
+  only shuffles are the group-keyed pairings, the pair dedup and one
+  final window.
 - **Exact cross-engine math.** Vectors are staged once on the scale-6
   micro-unit integer grid (``similarity.quantize_vec``); distances and
   cosines are exact long sums (+ one IEEE sqrt/divide for cosine), so
@@ -145,8 +146,8 @@ def semantic_dedup(
         F.col("__rn") <= max_cluster
     )
     # One exact long dot per pair; the norm sums ride in from the staged
-    # assignment (same hoist as knn_graph — 3× less interpreted HOF work
-    # on the pair fan-out, identical doubles for the oracle).
+    # assignment (computed once per vector, not twice per pair; identical
+    # doubles for the oracle).
     # vectorized Arrow integer dot (r15) — bit-identical to the HOF fold
     dot = dot_q_arrow()(F.col("a.__q"), F.col("b.__q"))
     sim = dot.cast("double") / (
@@ -198,9 +199,18 @@ def knn_graph(
     cosine neighbors among vectors sharing ≥1 LSH signature band.
 
     Unlike :func:`similarity.lsh_topk` (bounded query set vs corpus)
-    this is corpus × corpus — the candidate generation MUST therefore be
-    the bucket equi-join, never a cross join. Both directions of each
-    bucket pair are kept (a k-NN graph is asymmetric).
+    this is corpus × corpus — candidates MUST therefore come from within
+    a bucket, never from a cross join. Both directions of each bucket
+    pair are kept (a k-NN graph is asymmetric).
+
+    Each ``(band, band_key)`` bucket of 2..``max_bucket`` members is
+    scored once, in one grouped Arrow pass (:func:`_bucket_pairs`): the
+    bucket's exact int64 Gram matrix gives every member pair's dot and
+    both squared norms, so a vector crosses into Python once per band
+    it belongs to, never once per candidate pair. The a<b pairs are
+    deduplicated across bands, carrying ids and the cosine only, then
+    mirrored. Building the graph from a pinned ``plane_matrix`` runs no
+    Spark job.
 
     Output: ``(vec_id, neighbor_id, cosine, rank)`` with rank 1..k per
     vector (vectors sharing no bucket yield no rows — standard for an
@@ -224,116 +234,112 @@ def knn_graph(
         corpus, "embedding", plane_matrix, bands,
         target_bucket or max_bucket, 0.9, 0.8,
     )
-    # Persisted for the same index-build reason as semantic_dedup: the
-    # staging (quantize + signature HOFs) is referenced by the banding
-    # leg AND twice by the vector join-back below. The squared norm is
-    # computed HERE, once per vector — the pair stage then does ONE dot
-    # per candidate instead of dot + two norms (3× the HOF work on the
-    # fan-out side; r3 measurement: 7.3s → 2.6s at sf0.1).
-    staged = (
-        corpus.select(
-            F.col("vec_id"),
-            quantize_vec(F.col("embedding")).alias("__q"),
-        )
-        .select(
-            "vec_id",
-            "__q",
-            F.aggregate(
-                F.transform(F.col("__q"), lambda x: x * x),
-                F.lit(0).cast("long"),
-                lambda s, x: s + x,
-            ).alias("__n2"),
-            # staged: band_keys_from_chunks reads it `bands` times
-            sig_chunks_q(F.col("__q"), plane_matrix, width).alias("__sigc"),
-        )
+    staged = corpus.select(
+        F.col("vec_id"),
+        quantize_vec(F.col("embedding")).alias("__q"),
+    ).select(
+        "vec_id",
+        "__q",
+        # a real column: band_keys_from_chunks reads it `bands` times
+        sig_chunks_q(F.col("__q"), plane_matrix, width).alias("__sigc"),
     )
-    staged = staged_persist(staged, "knn_graph.staged")
-    # Candidate generation is ID-ONLY: corpus × corpus buckets fan out to
-    # ~|bucket|² pair rows per bucket, so the banding / capping / DISTINCT
-    # shuffles must carry (long, long), never the vectors — the near_dup
-    # operator can afford to carry __q through its bucket join because its
-    # post-cap pair count is tiny; a k-NN graph's is not (r3 measurement:
-    # carrying both arrays through the pair dedup was ~7× slower).
+    # Each vector travels once per band it is banded into, never once
+    # per candidate pair: the bucket is the unit of work.
     banded = staged.select(
         "vec_id",
+        "__q",
         F.posexplode(
             band_keys_from_chunks(F.col("__sigc"), width, bands)
         ).alias("band", "band_key"),
     )
     from .dedup import _bucket_cap
 
+    # The 2..max_bucket cap stays in the JVM: the window's partitioning
+    # and sort on (band, band_key) are the ones the grouped pass needs,
+    # so it adds no exchange, and an oversized bucket never reaches a
+    # Python worker.
     capped = _bucket_cap(banded, "band_key", max_bucket).select(
-        "band", "band_key", "vec_id"
+        "band", "band_key", "vec_id", "__q"
+    )
+    scored = (
+        capped.groupBy("band", "band_key")
+        .applyInArrow(
+            _bucket_pairs, schema="vec_id long, neighbor_id long, cosine double"
+        )
+        # a pair sharing several bands is scored in each, to the same
+        # bits, so its distinct rows are one row
+        .distinct()
     )
     # Bucket co-membership is symmetric, so the directed candidate set is
-    # exactly the symmetric closure of the a<b pairs — generate UNordered
-    # pairs, score each cosine ONCE, and mirror the scored rows (r16;
-    # was: != join scoring every pair twice — the probe measured 886k
-    # directed pair rows at sf0.1, i.e. 2× the distinct shuffle and 2×
-    # the 64-dim dot folds for identical output).
-    cands = (
-        capped.alias("a")
-        .join(
-            capped.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-        )
-        .dropDuplicates(["vec_id", "neighbor_id"])
-    )
-    qa = staged.select(
-        F.col("vec_id"),
-        F.col("__q").alias("qa"),
-        F.col("__n2").alias("na"),
-    )
-    qb = staged.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("__q").alias("qb"),
-        F.col("__n2").alias("nb"),
-    )
-    # dot is exact long addition; the sqrt/divide sees the identical
-    # integer operands in any engine (same recipe as
-    # similarity.embedding_near_dup's integer cosine, with the norm sums
-    # hoisted out of the pair fan-out).
-    # NOTE (r15): the Arrow dot (see semantic_dedup) was MEASURED SLOWER
-    # here — the k-NN candidate fan-out is large, and shipping both
-    # 64-long arrays per pair across the Arrow boundary cost more than
-    # the interpreted fold it replaced (17s cold vs ~5s). The in-JVM
-    # exact long fold stays. (r16 re-measured the flat element_at unroll
-    # too: 64-term codegen trees fall back to interpreted eval and run
-    # 4× slower than the fold — tools note in OPTIMIZATION_r16.md.)
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
-    )
-    sim = dot.cast("double") / (
-        F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double"))
-    )
-    # Materialized once (slim pair-bounded rows): the mirror union below
-    # references the scored table twice, and without staging each leg
-    # would recompute every dot.
-    scored = (
-        cands.join(qa, "vec_id")
-        .join(qb, "neighbor_id")
-        .select("vec_id", "neighbor_id", sim.alias("cosine"))
-        .localCheckpoint(eager=True)
-    )
-    sym = scored.unionByName(
-        scored.select(
-            F.col("neighbor_id").alias("vec_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            "cosine",
-        )
-    )
+    # the a<b pairs plus their mirror, each cosine computed once.
+    sym = scored.select(
+        F.explode(
+            F.array(
+                F.struct("vec_id", "neighbor_id", "cosine"),
+                F.struct(
+                    F.col("neighbor_id").alias("vec_id"),
+                    F.col("vec_id").alias("neighbor_id"),
+                    "cosine",
+                ),
+            )
+        ).alias("__e")
+    ).select("__e.*")
     w = W.partitionBy("vec_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
         sym.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
+    )
+
+
+def _bucket_pairs(bucket):
+    """One LSH bucket, an Arrow table of ``(band, band_key, vec_id,
+    __q)``, → its scored pairs ``(vec_id, neighbor_id, cosine)`` with
+    ``vec_id < neighbor_id``.
+
+    The bucket's Gram matrix ``G = X·Xᵀ`` is one int64 matmul, and it is
+    exact while every member's squared norm ``Σ q²`` is at most
+    ``2⁶³ − 1``: by Cauchy–Schwarz no entry of ``G``, nor any partial sum
+    on the way to one, is larger in magnitude, so nothing overflows. On
+    the micro-unit grid that bound is a vector norm of about 3,037. The
+    cosine is then ``double(G[i,j]) /
+    (sqrt(double(G[i,i])) · sqrt(double(G[j,j])))``, the operation order
+    of the oracle's SQL, so every engine gives the same bits; a zero
+    vector's cosine is NULL, as DuckDB's (1.0) and Spark's DOUBLE
+    division by zero give. A NULL ``vec_id`` counted toward the bucket
+    cap in the JVM and is never paired."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = pa.schema(
+        [("vec_id", pa.int64()), ("neighbor_id", pa.int64()),
+         ("cosine", pa.float64())]
+    )
+    bucket = bucket.filter(pc.is_valid(bucket["vec_id"])).sort_by("vec_id")
+    n = bucket.num_rows
+    if n < 2:
+        return schema.empty_table()
+    ids = bucket["vec_id"].to_numpy().astype(np.int64)
+    q = bucket["__q"].combine_chunks()
+    dims = pc.list_value_length(q).to_numpy()
+    if (dims != dims[0]).any():
+        raise ValueError("knn_graph: embeddings of unequal length in a bucket")
+    X = q.flatten().to_numpy().reshape(n, int(dims[0]))
+    G = X @ X.T
+    i, j = np.triu_indices(n, 1)
+    keep = ids[i] < ids[j]
+    i, j = i[keep], j[keep]
+    root = np.sqrt(np.diag(G).astype(np.float64))
+    den = root[i] * root[j]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = G[i, j].astype(np.float64) / den
+    return pa.table(
+        {
+            "vec_id": ids[i],
+            "neighbor_id": ids[j],
+            "cosine": pa.array(cos, mask=den == 0),
+        },
+        schema=schema,
     )

@@ -63,20 +63,28 @@ def dot_q_arrow():
     fold (r15). int64 multiplication/addition is exact and
     order-independent, so the value is bit-identical to the
     zip_with/aggregate form it replaces on every candidate-pair scoring
-    leg (knn_graph, semantic_dedup)."""
-    import pandas as pd
+    leg (semantic_dedup)."""
 
     @F.pandas_udf("long")
     def dotf(a, b):
-        import numpy as np
-
-        if len(a) == 0:
-            return pd.Series([], dtype="int64")
-        A = np.vstack(a.to_numpy())
-        B = np.vstack(b.to_numpy())
-        return pd.Series((A * B).sum(axis=1))
+        return _dot_rows(a, b)
 
     return dotf
+
+
+# Each Arrow UDF body here calls a module-level helper (this one,
+# _sign_chunks, _nearest_cell, _pq_codes): cloudpickle ships that by
+# reference, so unpickling the UDF in a Python worker imports the
+# package and its zip-directory shim.
+def _dot_rows(a, b):
+    import numpy as np
+    import pandas as pd
+
+    if len(a) == 0:
+        return pd.Series([], dtype="int64")
+    A = np.vstack(a.to_numpy())
+    B = np.vstack(b.to_numpy())
+    return pd.Series((A * B).sum(axis=1))
 
 
 def _non_null(df: DataFrame, vec_col: str) -> DataFrame:
@@ -533,8 +541,6 @@ def sig_chunks_q(
     :func:`sig_chunks_q_expr` in tests; the DuckDB oracles replay the
     same integer math in SQL, so the whole pipeline stays
     cross-checkable."""
-    import pandas as pd
-
     P_rows = [[int(c) for c in row] for row in plane_matrix]
     n_planes = len(P_rows)
     chunk_planes = _bands_per_chunk(width) * width
@@ -548,20 +554,25 @@ def sig_chunks_q(
     # maps to a scalar pandas UDF (same pattern as ml/inference.py)
     @F.pandas_udf("array<long>")
     def signs(qv):
-        import numpy as np
-
-        if len(qv) == 0:
-            return pd.Series([], dtype=object)
-        P = np.asarray(P_rows, dtype=np.int64)
-        X = np.vstack(qv.to_numpy())  # (n, dim) int64
-        bits = (X @ P.T) > 0  # (n, planes) — exact integer dots
-        outs = []
-        for lo, hi in bounds:
-            w = 1 << np.arange(hi - lo, dtype=np.int64)
-            outs.append(bits[:, lo:hi] @ w)
-        return pd.Series(list(np.stack(outs, axis=1)))
+        return _sign_chunks(qv, P_rows, bounds)
 
     return signs(qvec)
+
+
+def _sign_chunks(qv, P_rows, bounds):
+    import numpy as np
+    import pandas as pd
+
+    if len(qv) == 0:
+        return pd.Series([], dtype=object)
+    P = np.asarray(P_rows, dtype=np.int64)
+    X = np.vstack(qv.to_numpy())  # (n, dim) int64
+    bits = (X @ P.T) > 0  # (n, planes) — exact integer dots
+    outs = []
+    for lo, hi in bounds:
+        w = 1 << np.arange(hi - lo, dtype=np.int64)
+        outs.append(bits[:, lo:hi] @ w)
+    return pd.Series(list(np.stack(outs, axis=1)))
 
 
 def band_keys_from_chunks(chunks: Column, width: int, bands: int) -> Column:
@@ -791,26 +802,29 @@ def _centroid_cell(
 
 def _centroid_cell_arrow(centroids: list[list[float]]):
     """Vectorized exact-mode cell assignment (see :func:`_centroid_cell`)."""
-    import pandas as pd
-
     cents_q = [[quantize_py(x) for x in c] for c in centroids]
 
     @F.pandas_udf("int")
     def assign(qv):
-        import numpy as np
-
-        if len(qv) == 0:
-            return pd.Series([], dtype="int32")
-        X = np.vstack(qv.to_numpy())  # (n, dim) int64
-        C = np.asarray(cents_q, dtype=np.int64)  # (cells, dim)
-        d = (
-            (X * X).sum(1)[:, None]
-            + (C * C).sum(1)[None, :]
-            - 2 * (X @ C.T)
-        )
-        return pd.Series(np.argmin(d, axis=1).astype("int32"))
+        return _nearest_cell(qv, cents_q)
 
     return assign
+
+
+def _nearest_cell(qv, cents_q):
+    import numpy as np
+    import pandas as pd
+
+    if len(qv) == 0:
+        return pd.Series([], dtype="int32")
+    X = np.vstack(qv.to_numpy())  # (n, dim) int64
+    C = np.asarray(cents_q, dtype=np.int64)  # (cells, dim)
+    d = (
+        (X * X).sum(1)[:, None]
+        + (C * C).sum(1)[None, :]
+        - 2 * (X @ C.T)
+    )
+    return pd.Series(np.argmin(d, axis=1).astype("int32"))
 
 
 def _lit_nested3_long(groups: list[list[list[int]]]) -> Column:
@@ -1294,41 +1308,41 @@ def pq_encode(corpus: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
     """``vec_id, codes`` (array<int>, one code per subspace — argmin
     sub-distance, smallest code on ties). Pure projection against the
     literal codebooks: no shuffle, no vector retained."""
-    m = len(codebooks)
     d = len(codebooks[0][0])
     staged = _non_null(corpus, "embedding").select(
         F.col("vec_id").alias("vec_id"),
         quantize_vec(F.col("embedding")).alias("__q"),
     )
-    # ONE vectorized Arrow stage for all m subspace argmins (r15): the
+    # ONE vectorized Arrow stage for all subspace argmins (r15): the
     # per-row expression form ran m × codes × sub_dim interpreted HOF
     # evaluations per vector. Same exact-integer identity and
     # first-occurrence argmin as _centroid_cell — bit-identical codes
     # (subspace codebooks are quantized already).
-    import pandas as pd
-
-    books = codebooks
-
     @F.pandas_udf("array<int>")
     def encode(qv):
-        import numpy as np
-
-        if len(qv) == 0:
-            return pd.Series([], dtype=object)
-        X = np.vstack(qv.to_numpy())  # (n, dim) int64
-        out = np.empty((X.shape[0], m), dtype=np.int32)
-        for s in range(m):
-            Xs = X[:, s * d : (s + 1) * d]
-            B = np.asarray(books[s], dtype=np.int64)  # (codes, d)
-            dm = (
-                (Xs * Xs).sum(1)[:, None]
-                + (B * B).sum(1)[None, :]
-                - 2 * (Xs @ B.T)
-            )
-            out[:, s] = np.argmin(dm, axis=1)
-        return pd.Series(list(out))
+        return _pq_codes(qv, codebooks, d)
 
     return staged.select("vec_id", encode(F.col("__q")).alias("codes"))
+
+
+def _pq_codes(qv, books, d):
+    import numpy as np
+    import pandas as pd
+
+    if len(qv) == 0:
+        return pd.Series([], dtype=object)
+    X = np.vstack(qv.to_numpy())  # (n, dim) int64
+    out = np.empty((X.shape[0], len(books)), dtype=np.int32)
+    for s, book in enumerate(books):
+        Xs = X[:, s * d : (s + 1) * d]
+        B = np.asarray(book, dtype=np.int64)  # (codes, d)
+        dm = (
+            (Xs * Xs).sum(1)[:, None]
+            + (B * B).sum(1)[None, :]
+            - 2 * (Xs @ B.T)
+        )
+        out[:, s] = np.argmin(dm, axis=1)
+    return pd.Series(list(out))
 
 
 def pq_topk(

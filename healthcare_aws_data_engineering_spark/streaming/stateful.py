@@ -45,9 +45,6 @@ def stateful_latest_labs(
     per patient. Converges to the batch ``max_by((ts, id))`` pivot
     regardless of batch boundaries or arrival order (pinned by
     ``test_stateful_latest_equals_batch``)."""
-    import pandas as pd
-
-    k = len(analytes)
     out_schema = ", ".join(
         ["patient_id long", "n_events long"] + [f"{a} double" for a in analytes]
     )
@@ -55,28 +52,10 @@ def stateful_latest_labs(
         "vals array<double>, tss array<long>, ids array<long>, n long"
     )
 
-    def update(
-        key, pdfs: Iterator["pd.DataFrame"], state: GroupState
-    ) -> Iterator["pd.DataFrame"]:
-        if state.exists:
-            vals, tss, ids, n = state.get
-            vals, tss, ids = list(vals), list(tss), list(ids)
-        else:
-            vals, tss, ids, n = [None] * k, [None] * k, [None] * k, 0
-        for pdf in pdfs:
-            n += len(pdf)
-            for i, a in enumerate(analytes):
-                sub = pdf[pdf["__atype"] == a]
-                if sub.empty:
-                    continue
-                row = sub.sort_values(["__ts", "__id"]).iloc[-1]
-                cand = (int(row["__ts"]), int(row["__id"]))
-                if tss[i] is None or cand > (tss[i], ids[i]):
-                    vals[i], tss[i], ids[i] = float(row["__val"]), *cand
-        state.update((vals, tss, ids, n))
-        out = {"patient_id": key[0], "n_events": n}
-        out.update({a: vals[i] for i, a in enumerate(analytes)})
-        yield pd.DataFrame([out])
+    def update(key, pdfs, state):
+        # the body is a package function, so unpickling it in a Python
+        # worker imports the package (and its zip-directory shim)
+        return _update_latest(key, pdfs, state, analytes)
 
     prepared = events.select(
         F.col(patient_col).cast("long").alias("patient_id"),
@@ -92,3 +71,30 @@ def stateful_latest_labs(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def _update_latest(
+    key, pdfs: Iterator["pd.DataFrame"], state: GroupState, analytes
+) -> Iterator["pd.DataFrame"]:
+    import pandas as pd
+
+    k = len(analytes)
+    if state.exists:
+        vals, tss, ids, n = state.get
+        vals, tss, ids = list(vals), list(tss), list(ids)
+    else:
+        vals, tss, ids, n = [None] * k, [None] * k, [None] * k, 0
+    for pdf in pdfs:
+        n += len(pdf)
+        for i, a in enumerate(analytes):
+            sub = pdf[pdf["__atype"] == a]
+            if sub.empty:
+                continue
+            row = sub.sort_values(["__ts", "__id"]).iloc[-1]
+            cand = (int(row["__ts"]), int(row["__id"]))
+            if tss[i] is None or cand > (tss[i], ids[i]):
+                vals[i], tss[i], ids[i] = float(row["__val"]), *cand
+    state.update((vals, tss, ids, n))
+    out = {"patient_id": key[0], "n_events": n}
+    out.update({a: vals[i] for i, a in enumerate(analytes)})
+    yield pd.DataFrame([out])

@@ -34,3 +34,34 @@ def n_exchanges(plan: str) -> int:
 
     tree = plan.split("\n\n(1)")[0]
     return len(re.findall(r"[+:]- Exchange ", tree))
+
+
+def exchange_inputs(plan: str) -> list[tuple[str, list[str]]]:
+    """``(partitioning, input column names)`` of every shuffle exchange,
+    read from a formatted plan's per-node detail sections: what each
+    shuffle carries, not just what it is keyed on."""
+    import re
+
+    return [
+        (m.group(2), [c.split("#")[0] for c in m.group(1).split(", ")])
+        for m in re.finditer(
+            r"\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]\s*\n"
+            r"Arguments: (\w+\([^)]*\))",
+            plan,
+        )
+    ]
+
+
+def assert_knn_vectors_shuffle_once(plan: str) -> None:
+    """knn_graph's plan: exactly one exchange carries the quantized
+    vector, keyed on ``(band, band_key)`` (the bucket pass); every other
+    exchange (pair dedup, rank window) carries ids and the cosine only."""
+    ex = exchange_inputs(plan)
+    assert len(ex) == n_exchanges(plan), plan
+    with_q = [(part, cols) for part, cols in ex if "__q" in cols]
+    assert len(with_q) == 1, ex
+    assert with_q[0][0].startswith("hashpartitioning(band#"), with_q
+    assert ", band_key#" in with_q[0][0], with_q
+    for part, cols in ex:
+        if "__q" not in cols:
+            assert set(cols) <= {"vec_id", "neighbor_id", "cosine"}, (part, cols)

@@ -26,7 +26,7 @@ from healthcare_aws_data_engineering_spark.operators.similarity import (
     rademacher_planes,
 )
 
-from conftest import n_exchanges, plan_string
+from conftest import assert_knn_vectors_shuffle_once, n_exchanges, plan_string
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -167,21 +167,15 @@ def test_knn_graph_clone_is_rank1(spark):
 
 
 def test_knn_graph_pair_stage_carries_no_vectors(spark):
-    """The banding/capping/dedup side of the plan must shuffle only ids —
-    the quantized array may appear ONLY in the staged index subtree
-    (joined back after candidate dedup)."""
+    """The pair side of the plan must shuffle only ids and the cosine —
+    the quantized array crosses exactly one exchange, the bucket one
+    that feeds the per-bucket scoring pass."""
     embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     planes = rademacher_planes(16, 64)
     plan = plan_string(
         knn_graph(embs, k=3, plane_matrix=planes, bands=4), "formatted"
     )
-    tree = plan.split("\n\n(1)")[0]
-    import re
-
-    # every shuffle exchange row description that mentions band must not
-    # carry __q
-    for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", tree):
-        assert "__q" not in m.group(1)
+    assert_knn_vectors_shuffle_once(plan)
 
 
 # --------------------------------------------------- aggregate-style checks

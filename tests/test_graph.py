@@ -226,7 +226,7 @@ def test_pagerank_mass_conserved(spark):
     assert total <= PR_GRID
     assert total >= int(PR_GRID * 0.85)
     assert all(r["rank_u12"] > 0 for r in rows)
-    # Job-count pin over build + collect: the k-NN edge build, one
-    # adjacency stage, then 3 jobs per staged round. 24 once the session
-    # has run the row, 25 on a fresh session.
-    assert jobs <= 25, f"graph_pagerank fired {jobs} jobs"
+    # Job-count pin over build + collect: the k-NN edges build with no
+    # job, then the adjacency stage and 3 jobs per staged round. 14 once
+    # the session has run the row, 15 on a fresh session.
+    assert jobs <= 15, f"graph_pagerank fired {jobs} jobs"

@@ -18,7 +18,11 @@ from healthcare_aws_data_engineering_spark.plans import testdata_queries as tq
 SF = "/root/testdata/sf0.001"
 
 
-from conftest import n_exchanges as _n_exchanges, plan_string  # noqa: E402
+from conftest import (  # noqa: E402
+    assert_knn_vectors_shuffle_once,
+    n_exchanges as _n_exchanges,
+    plan_string,
+)
 
 
 def _plan(spark, name: str, mode: str = "formatted") -> str:
@@ -238,12 +242,18 @@ def test_semantic_dedup_no_cartesian(spark):
 
 
 def test_knn_graph_no_cartesian_and_id_only_pair_shuffles(spark):
+    """Three shuffles, and only the bucket one carries the quantized
+    vector; one grouped Arrow node scores the buckets, fed by the cap
+    window with no exchange in between; no join of any kind."""
     plan = _plan(spark, "knn_graph")
-    assert "CartesianProduct" not in plan, plan
-    # banding/pair exchanges must not carry the quantized vector
     tree = plan.split("\n\n(1)")[0]
-    for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", tree):
-        assert "__q" not in m.group(1), m.group(0)
+    assert _n_exchanges(plan) == 3, plan
+    assert_knn_vectors_shuffle_once(plan)
+    assert tree.count("FlatMapGroupsInArrow") == 1, tree
+    assert tree.count("ArrowEvalPython") == 1, tree  # the signatures
+    assert "Join" not in tree and "CartesianProduct" not in tree, tree
+    below = tree.split("FlatMapGroupsInArrow", 1)[1].split("Window", 1)[0]
+    assert "Exchange" not in below, tree
 
 
 def test_ann_multiprobe_query_side_fanout_only(spark):

@@ -127,6 +127,7 @@ def main() -> None:
                     F.col("neighbor_id").alias("dst"))
             .persist()
         )
+        edges.count()  # time PageRank alone, not the k-NN edge build
         run("pagerank_3it", lambda: pagerank(embs, edges, n_iter=3))
         edges.unpersist()
         embs.unpersist(), docs.unpersist()
