@@ -64,3 +64,21 @@ def fold(op: str, terms: Iterable[str]) -> str:
     for term in it:
         out = f"({out} {op} {term})"
     return out
+
+
+def micro_mean(s: str, n: str, idiv: str) -> str:
+    """The mean ``s / n`` of a DECIMAL(·,6) sum ``s`` over a positive
+    count ``n``, rounded half away from zero to 6 decimals in exact
+    integer arithmetic and returned as DOUBLE. ``S = s·1e6`` is exact as
+    a BIGINT, and ``sign(S)·((2|S| + n) DIV (2n))`` is the rounded mean
+    in micro-units; dividing that integer by ``1e6`` is correctly rounded
+    in every engine. ``round(s / n, 6)`` over a DOUBLE quotient is not
+    engine-neutral on a tie: the quotient lands within an ulp of the half
+    micro-unit, and Spark rounds its decimal string while DuckDB rounds
+    after scaling by 1e6. ``idiv`` is the engine's integer division
+    operator: ``div`` in Spark, ``//`` in DuckDB."""
+    big_s = f"CAST({s} * 1000000 AS BIGINT)"
+    return (
+        f"CAST(sign({big_s}) * ((2 * abs({big_s}) + {n}) {idiv} (2 * {n})) AS DOUBLE)"
+        " / 1e6"
+    )

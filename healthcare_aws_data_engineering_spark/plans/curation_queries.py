@@ -12,6 +12,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.sqltext import micro_mean
 from ..operators.decontam import (
     EVAL_PCT,
     bloom_decontaminate,
@@ -99,8 +100,9 @@ def lm_score(docs: DataFrame) -> DataFrame:
 
     Cross-engine determinism: each word's logprob is ONE ln of an
     identical rational (count/total) rounded to the DECIMAL(18,6) grid,
-    and the per-doc sum is exact decimal addition — order-free, so the
-    mean is bit-identical in DuckDB.
+    the per-doc sum is exact decimal addition — order-free — and the mean
+    is rounded in exact integer micro-units (:func:`micro_mean`), so it is
+    bit-identical in DuckDB, ties included.
 
     Scale shape: the vocabulary aggregation is one hash agg whose output
     is language-sized (bounded) → BROADCAST back; the per-doc mean is one
@@ -140,8 +142,8 @@ def lm_score(docs: DataFrame) -> DataFrame:
     return per.select(
         "doc_id",
         "n_tokens",
-        # decimal-grid snap, DOUBLE out (driver-hash-safe cell kind)
-        F2.round(mean, 6).cast("decimal(18,6)").cast("double").alias("mean_logprob"),
+        # exact half-away micro-unit mean, DOUBLE out (driver-hash-safe cell kind)
+        F2.expr(micro_mean("s", "n_tokens", "div")).alias("mean_logprob"),
         (mean < LM_THRESHOLD).alias("lm_flag"),
     )
 
@@ -168,7 +170,8 @@ def bigram_lm_score(
 
     Cross-engine determinism, same recipe as lm_score: every bigram's
     logprob is ONE ln of a rational of integers snapped to the
-    DECIMAL(18,6) grid; per-doc sums are exact decimal addition.
+    DECIMAL(18,6) grid; per-doc sums are exact decimal addition; the
+    mean is rounded in integer micro-units.
 
     Scale shape: bigram pairs are built IN-ROW (zip_with against the
     word array's own shifted slice — no token self-join); the bigram
@@ -252,9 +255,7 @@ def bigram_lm_score(
     return per.select(
         "doc_id",
         "n_bigrams",
-        F2.round(mean, 6).cast("decimal(18,6)").cast("double").alias(
-            "mean_bigram_logprob"
-        ),
+        F2.expr(micro_mean("s", "n_bigrams", "div")).alias("mean_bigram_logprob"),
         (mean < threshold).alias("bigram_lm_flag"),
     )
 
@@ -289,8 +290,7 @@ WITH
     FROM tok JOIN lp USING (w) GROUP BY doc_id
   )
 SELECT doc_id, n_tokens,
-       CAST(CAST(round(CAST(s AS DOUBLE) / n_tokens, 6) AS DECIMAL(18,6))
-            AS DOUBLE) AS mean_logprob,
+       {micro_mean("s", "n_tokens", "//")} AS mean_logprob,
        CAST(s AS DOUBLE) / n_tokens < {LM_THRESHOLD} AS lm_flag
 FROM per
 """
@@ -299,8 +299,8 @@ FROM per
 # smoothing k / threshold can never drift. Same determinism recipe as
 # _LM_SCORE_SQL: every bigram's logprob is ONE ln of a rational of
 # integers — (cb + k) / (cu + k·V) — snapped to the DECIMAL(18,6) grid,
-# per-doc sums are exact decimal addition, and the mean's final
-# round+snap matches the Spark side cast-for-cast. Self-scoring means
+# per-doc sums are exact decimal addition, and the mean is the Spark
+# side's micro_mean text with DuckDB's integer division. Self-scoring means
 # every document bigram exists in the count table, so the Spark side's
 # unseen-transition coalesce floor is dead code here and the oracle can
 # use a plain inner join.
@@ -332,8 +332,7 @@ WITH
     FROM big JOIN lp USING (bg) GROUP BY doc_id
   )
 SELECT doc_id, n_bigrams,
-       CAST(CAST(round(CAST(s AS DOUBLE) / n_bigrams, 6) AS DECIMAL(18,6))
-            AS DOUBLE) AS mean_bigram_logprob,
+       {micro_mean("s", "n_bigrams", "//")} AS mean_bigram_logprob,
        CAST(s AS DOUBLE) / n_bigrams < {BIGRAM_LM_THRESHOLD} AS bigram_lm_flag
 FROM per
 """

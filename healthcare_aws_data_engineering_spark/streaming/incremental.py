@@ -6,8 +6,8 @@ Glue run (``Glue_tranformation_json_parquet.py:52-57`` source + ``:186-199``
 append/commit): a Structured Streaming JSON file source with
 ``trigger(availableNow=True)`` drains all files not yet recorded in the
 checkpoint, runs the batch ETL's own :func:`..plans.etl.write_curated`
-inside ``foreachBatch`` (the same four extractions and Parquet appends as
-``fhir_etl``), and stops.
+inside ``foreachBatch`` (the same projection, dedup and four Parquet
+appends as ``fhir_etl``), and stops.
 Re-running after new files land processes ONLY the new files — exactly the
 job-bookmark contract (checkpoint dir ≙ bookmark state; ``job.commit()`` ≙
 checkpoint commit).
@@ -16,9 +16,9 @@ Scale notes:
 - the file source lists incrementally and splits work across executors;
   ``maxFilesPerTrigger`` (latched via ``options``) bounds batch size for
   backfills so one giant drop doesn't produce one giant micro-batch;
-- ``write_curated`` caches the exploded entries once per micro-batch,
-  fans out the four extractions and releases the cache before the batch
-  commits;
+- ``write_curated`` dedups the micro-batch's entries in one shuffle,
+  stages the result once as a lazy local checkpoint, writes the four
+  tables from it and releases it before the batch commits;
 - per-batch dedup is WITHIN the batch (matching the reference, which
   dedups within each bookmarked run, not against already-curated data —
   cross-run keyed dedup would need a MERGE-capable table format, recorded

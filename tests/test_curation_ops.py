@@ -877,6 +877,23 @@ def test_bigram_lm_flags_word_salad_where_unigram_cannot(spark):
     assert flags[21] and not any(flags[d] for d in range(1, 21))
 
 
+def test_bigram_lm_mean_on_a_half_micro_unit_matches_oracle(spark):
+    """Doc 0's six bigram logprobs sum to exactly -7.624617, so its mean
+    -1.2707695 lies on a half micro-unit. Both engines must round the
+    exact rational half away from zero (-1.27077); rounding the DOUBLE
+    quotient gave -1.270769 in Spark and -1.27077 in DuckDB."""
+    import duckdb
+    import pandas as pd
+
+    rows = [(0, "g f g e b f c"), (1, "e e f g")]
+    got = sorted(map(tuple, cq.bigram_lm_score(_docs(spark, rows)).collect()))
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = sorted(con.sql(cq._BIGRAM_LM_SCORE_SQL).fetchall())
+    assert got[0][:3] == (0, 6, -1.27077)
+    assert got == want
+
+
 def test_bigram_lm_short_docs_have_no_row_and_runs_deterministic(spark):
     docs = spark.createDataFrame(_BG_DOCS, "doc_id long, text string")
     a = sorted(map(tuple, cq.bigram_lm_score(docs).collect()))

@@ -9,6 +9,7 @@ duplicate ids for dedup, and urn:uuid reference keys.
 from __future__ import annotations
 
 import json
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -16,17 +17,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from healthcare_aws_data_engineering_spark.plans.etl import (
+    TABLES,
     extract_conditions,
     extract_encounters,
     extract_observations,
     extract_patients,
     fhir_etl,
+    write_curated,
 )
 from healthcare_aws_data_engineering_spark.plans.etl_queries import q_etl_obs_choice
 from healthcare_aws_data_engineering_spark.sources.fhir import (
     explode_entries,
     read_bundle_string,
+    read_bundles,
 )
+from healthcare_aws_data_engineering_spark.sources.writers import write_parquet
 
 PATIENT = {
     "resourceType": "Patient",
@@ -292,6 +297,97 @@ def test_etl_append_and_partitioning(spark, tmp_path):
     # partition pruning visible in the plan
     plan = obs.filter(F.col("status") == "final")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(status" in plan
+
+
+def test_etl_one_shuffle_shape_and_no_leftover_staging(spark, tmp_path):
+    """Second call on session.py's session: at most 5 jobs (the dedup's
+    shuffle map stage and the four writes), one Parquet file per table,
+    and nothing left persisted or cached after either call."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    (raw / "b1.json").write_text(bundle([PATIENT, ENCOUNTER, CONDITION_ARRAY_CC] + OBSERVATIONS))
+    (raw / "b2.json").write_text(bundle([PATIENT, CONDITION_SINGLE_CC]))
+    schema = read_bundles(spark, str(raw)).schema
+    jsc = spark.sparkContext._jsc.sc()
+    spark.catalog.clearCache()
+    for i in range(2):
+        curated = str(tmp_path / f"curated{i}")
+        j0 = jsc.dagScheduler().nextJobId()
+        paths = fhir_etl(spark, str(raw), curated, schema=schema)
+        jobs = jsc.dagScheduler().nextJobId() - j0
+    assert jobs <= 5
+    for table, path in paths.items():
+        files = [f for _, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")]
+        assert len(files) == 1, (table, files)
+    assert len(jsc.getRDDStorageInfo()) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _adversarial_entries(spark):
+    con_b = dict(CONDITION_SINGLE_CC, id="con-1")  # same id as CONDITION_ARRAY_CC
+    no_id = {k: v for k, v in ENCOUNTER.items() if k != "id"}
+    docs = [
+        # a Patient and an Observation sharing one id: both survive
+        bundle([PATIENT, dict(OBSERVATIONS[0], id="pat-1"), ENCOUNTER, CONDITION_ARRAY_CC]),
+        # same-id duplicates with different content, a NULL id, a type
+        # no table takes
+        bundle([dict(PATIENT, gender="aaa-first"), con_b, no_id] + OBSERVATIONS[1:5]),
+        bundle([{"resourceType": "Procedure", "id": "proc-1", "status": "done"}, no_id]),
+        # an entry without a resource: explode_outer's NULL-resource row
+        json.dumps({"entry": [{"fullUrl": "urn:uuid:none"}]}),
+        bundle([dict(OBSERVATIONS[5], status="amended")]),
+    ]
+    return explode_entries(spark.read.json(spark.sparkContext.parallelize(docs)))
+
+
+_EXTRACT = {
+    "patient": extract_patients,
+    "encounter": extract_encounters,
+    "condition": extract_conditions,
+    "observation": extract_observations,
+}
+
+
+@pytest.mark.parametrize("deterministic", [False, True])
+def test_write_curated_equals_per_table_extraction(spark, tmp_path, deterministic):
+    """The one-shuffle ETL writes what the per-table extractions write:
+    same schema, column order and rows, the observation table partitioned."""
+    entries = _adversarial_entries(spark)
+    parts = {"observation": ["status"]}
+    paths = write_curated(
+        entries, str(tmp_path / "one"), parts["observation"], deterministic_dedup=deterministic
+    )
+    ref = str(tmp_path / "per_table")
+    for name, extract in _EXTRACT.items():
+        write_parquet(extract(entries, deterministic), ref, name, partitions=parts.get(name))
+    for name, (rtype, columns) in TABLES.items():
+        got = spark.read.parquet(paths[name])
+        want = spark.read.parquet(f"{ref}/{name}")
+        assert got.schema == want.schema, name
+        got_rows = sorted(map(tuple, got.collect()), key=repr)
+        want_rows = sorted(map(tuple, want.collect()), key=repr)
+        keys = [r[0] for r in got_rows]
+        assert len(keys) == len(set(keys)) and set(keys) == {r[0] for r in want_rows}, name
+        if deterministic:
+            assert got_rows == want_rows, name
+            continue
+        # arbitrary mode keeps exactly one of each key's rows
+        every = entries.filter(F.col("resource.resourceType") == rtype).select(*columns(entries.schema))
+        candidates = {tuple(r[c] for c in got.columns) for r in every.collect()}
+        assert set(got_rows) <= candidates, name
+    pat = {r.patient_id: r for r in spark.read.parquet(paths["patient"]).collect()}
+    obs = {r.observation_id for r in spark.read.parquet(paths["observation"]).collect()}
+    assert "pat-1" in pat and "pat-1" in obs
+    enc = [r.encounter_id for r in spark.read.parquet(paths["encounter"]).collect()]
+    assert sorted(enc, key=str) == [None, "enc-1"]
+    con = spark.read.parquet(paths["condition"]).collect()
+    assert len(con) == 1
+    if deterministic:
+        assert pat["pat-1"].gender == "aaa-first"
+        assert con[0].code == "38341003"  # lexicographically-first row wins
+    statuses = {r.status for r in spark.read.parquet(paths["observation"]).collect()}
+    assert statuses == {"final", "amended"}
+    assert {"status=amended", "status=final"} <= set(os.listdir(paths["observation"]))
 
 
 def _events_dir(path, n: int) -> str:

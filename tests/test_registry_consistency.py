@@ -328,18 +328,50 @@ def _sources(*roots: str) -> list[tuple[str, str]]:
     return out
 
 
+def _package_imports(tree: ast.Module) -> tuple[dict[str, str], set[str]]:
+    """What a module's imports from the package bind: ``{local name:
+    imported name}`` for every ``from <package module> import f [as g]``,
+    and the set of names bound by ``import <package module> [as m]`` (or
+    ``from <package> import <module>``, which the first map holds too).
+    A package module is a relative import or one under ``PKG``."""
+    names, modules = {}, set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (
+            node.level or (node.module or "").split(".")[0] == PKG
+        ):
+            for a in node.names:
+                names[a.asname or a.name] = a.name
+                modules.add(a.asname or a.name)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == PKG:
+                    modules.add(a.asname or a.name.split(".")[0])
+    return names, modules
+
+
 def _uncalled(package: list[tuple[str, str]], callers: list[tuple[str, str]]) -> list[str]:
     """``<path under the package>::<name>`` of every top-level function
-    defined in ``package`` that no Name or Attribute node in ``package``
-    or ``callers`` references. Only AST nodes count, so a docstring or
-    comment naming a function is not a use, and neither is an import or a
-    function's reference to itself."""
+    defined in ``package`` that no module references. A reference counts
+    only when it resolves through the referring module's own top-level
+    functions or its package imports: a Name bound by ``from .x import f``
+    (or spelled like one of the module's own functions), or ``x.f`` with
+    ``x`` an imported package module. So a local variable or a third-party
+    attribute spelled like a package function is not a use, nor is a
+    docstring, a comment, an import itself, or a function's reference to
+    itself."""
     defs, refs = [], set()
     for in_package, path, src in [
         *((True, p, s) for p, s in package),
         *((False, p, s) for p, s in callers),
     ]:
-        for top in ast.parse(src).body:
+        tree = ast.parse(src)
+        imported, modules = _package_imports(tree)
+        own_defs = {
+            top.name
+            for top in tree.body
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
+        }
+        for top in tree.body:
             own = None
             if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 own = top.name
@@ -347,12 +379,15 @@ def _uncalled(package: list[tuple[str, str]], callers: list[tuple[str, str]]) ->
                     defs.append(f"{path.removeprefix(PKG + '/')}::{own}")
             for node in ast.walk(top):
                 if isinstance(node, ast.Name):
-                    name = node.id
+                    name = imported.get(node.id) or (node.id if node.id in own_defs else None)
                 elif isinstance(node, ast.Attribute):
-                    name = node.attr
+                    root = node.value
+                    while isinstance(root, ast.Attribute):
+                        root = root.value
+                    name = node.attr if isinstance(root, ast.Name) and root.id in modules else None
                 else:
                     continue
-                if name != own:
+                if name is not None and name != own:
                     refs.add(name)
     return sorted(d for d in defs if d.split("::")[1] not in refs)
 
@@ -376,10 +411,37 @@ def test_caller_scan_flags_an_uncalled_function():
     package = [
         (f"{PKG}/mod.py", "def used():\n    return used()\n\ndef unused():\n    pass\n"),
     ]
-    callers = [("tools/t.py", '"""calls unused()"""\nfrom x import used\nused()\n')]
+    callers = [("tools/t.py", f'"""calls unused()"""\nfrom {PKG}.mod import used\nused()\n')]
     assert _uncalled(package, callers) == ["mod.py::unused"]
-    assert _uncalled(package, [("tools/t.py", "import m\nm.unused()\n")]) == [
+    assert _uncalled(package, [("tools/t.py", f"from {PKG} import mod\nmod.unused()\n")]) == [
         "mod.py::used"
+    ]
+
+
+def test_caller_scan_resolves_names_through_imports():
+    """A local variable or a third-party attribute spelled like a
+    package function is not a caller; ``from .x import f as g``, a
+    package module imported under another name, and a call inside the
+    defining module are."""
+    package = [
+        (f"{PKG}/sim.py", "def cosine(a, b):\n    return a\n\ndef dot(a, b):\n    return a\n"),
+        (
+            f"{PKG}/dedup.py",
+            "from pyspark.sql import functions as F\n\n"
+            "def score(df):\n    cosine = F.cosine(df)\n    return cosine.dot\n",
+        ),
+    ]
+    assert _uncalled(package, []) == ["dedup.py::score", "sim.py::cosine", "sim.py::dot"]
+    callers = [
+        ("tools/a.py", f"from {PKG}.sim import cosine as cos\ncos(1, 2)\n"),
+        ("tools/b.py", f"import {PKG}.dedup as d\nd.score(0)\n"),
+    ]
+    assert _uncalled(package, callers) == ["sim.py::dot"]
+    package[0] = (f"{PKG}/sim.py", package[0][1] + "\ndef both(a):\n    return dot(a, a)\n")
+    assert _uncalled(package, callers) == ["sim.py::both"]
+    assert _uncalled(package, [("tools/c.py", "from . import sim\nsim.both(1)\n")]) == [
+        "dedup.py::score",
+        "sim.py::cosine",
     ]
 
 
