@@ -36,13 +36,15 @@ columns per row across Arrow (the 14 model inputs before M2–M4 moved
 into it, so 5 more) and 4 back. Per Arrow batch of n rows
 (``spark.sql.execution.arrow.maxRecordsPerBatch``, 10,000 by default)
 numpy holds the n×19 float64 inputs, one n×19 term matrix per fold at a
-time (about 1.5 MB at 10,000 rows), and the booster walk's n×trees index
-matrices; M5 is O(trees × depth) per row.
+time (about 1.5 MB at 10,000 rows), and the booster walk's five
+256×trees scratch matrices (about 2 MB, reused across row blocks); M5 is
+O(trees × depth) per row.
 """
 
 from __future__ import annotations
 
 import math
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -123,31 +125,39 @@ def _sigmoid(x):
     return 1.0 / (1.0 + np.exp(-x))
 
 
+@lru_cache(maxsize=len(DISEASES))
 def _stacked_booster(disease: str):
     """Booster compiled to ONE flat node table: all trees' nodes
     concatenated (per-tree root offsets recorded), with leaves rewritten
-    to SELF-LOOP (left=right=own index) so every (row, tree) walker can
-    advance a fixed ``depth`` times with no per-tree active-mask logic.
-    Turns scoring into ~depth × 6 numpy ops on an (n_rows × n_trees)
-    matrix instead of ~n_trees × depth × 8 ops on small arrays — the
-    per-call overhead of the latter dominated at Arrow batch sizes."""
+    to SELF-LOOP (both children their own index), so every (row, tree)
+    walker can advance a fixed number of times with no per-tree
+    active-mask logic. The children are interleaved, ``CH[2*i]`` left and
+    ``CH[2*i + 1]`` right, so one gather ``CH[2*i + go_right]`` moves a
+    walker. Leaves carry feature 0, so their gathers stay in bounds.
+
+    ``depth`` counts BFS *levels* (a root-only tree has 1), so a walker
+    at the root reaches its leaf after ``depth - 1`` advances. Cached per
+    process: reading and compiling the three boosters costs about 0.09 s,
+    and a Python worker scores every task's batches with the same
+    tables."""
     import numpy as np
 
     base_score, trees = xgb_trees(disease)
-    L, R, Fi, C, D, roots = [], [], [], [], [], []
+    CH, Fi, C, D, roots = [], [], [], [], []
     off, depth = 0, 0
     for left, right, feat, cond, dleft in trees:
         m = len(left)
         ar = np.arange(m, dtype=np.int32)
         leaf = left == -1
-        L.append(np.where(leaf, ar, left).astype(np.int32) + off)
-        R.append(np.where(leaf, ar, right).astype(np.int32) + off)
+        ch = np.empty((m, 2), dtype=np.int32)
+        ch[:, 0] = np.where(leaf, ar, left) + off
+        ch[:, 1] = np.where(leaf, ar, right) + off
+        CH.append(ch.ravel())
         Fi.append(np.where(leaf, 0, feat).astype(np.int32))
         C.append(cond)
         D.append(dleft)
         roots.append(off)
         off += m
-        # tree depth by BFS (root row can need `depth` advances)
         d, frontier = 0, [0]
         while frontier:
             d += 1
@@ -160,8 +170,7 @@ def _stacked_booster(disease: str):
         depth = max(depth, d)
     return (
         math.log(base_score / (1.0 - base_score)),
-        np.concatenate(L),
-        np.concatenate(R),
+        np.concatenate(CH),
         np.concatenate(Fi),
         np.concatenate(C),
         np.concatenate(D),
@@ -170,27 +179,77 @@ def _stacked_booster(disease: str):
     )
 
 
-_STACKED_CACHE: dict[str, tuple] = {}
+# Rows scored per pass: a 256 × 400 int32 index matrix is 400 kB, so the
+# walk's working set stays in a core's L2 cache at Arrow's 10,000-row
+# batches (SCALING.md "XGBoost scoring kernel").
+_ROW_BLOCK = 256
+
+
+def _leaf_index(X, table, idx, f, x, c, go_right):
+    """Leaf node of every (row, tree) walker for one row block ``X``
+    (b × features), written into ``idx`` (b × trees); ``f``, ``x``, ``c``
+    and ``go_right`` are scratch buffers of the same shape. Missing →
+    default_left; ``x < cond`` → left. A block without NaN skips the
+    missing-value path: ``x >= cond`` is ``not x < cond`` for every
+    non-NaN value."""
+    import numpy as np
+
+    # Every index is in range by construction; mode="clip" lets take()
+    # write straight into ``out``, which it buffers under mode="raise".
+    _, CH, Fi, C, D, roots, depth = table
+    has_nan = bool(np.isnan(X).any())
+    # Level 0: every walker sits at its root, so the features are one
+    # column gather.
+    x0 = X[:, Fi[roots]]
+    if has_nan:
+        right0 = ~np.where(np.isnan(x0), D[roots], x0 < C[roots])
+    else:
+        right0 = x0 >= C[roots]
+    np.take(CH, 2 * roots + right0, out=idx, mode="clip")
+    Xf = X.ravel()
+    row_off = np.arange(0, X.size, X.shape[1], dtype=np.int32)[:, None]
+    for _ in range(depth - 2):
+        np.take(Fi, idx, out=f, mode="clip")
+        f += row_off
+        np.take(Xf, f, out=x, mode="clip")
+        np.take(C, idx, out=c, mode="clip")
+        if has_nan:
+            np.logical_not(np.where(np.isnan(x), D.take(idx), x < c), out=go_right)
+        else:
+            np.greater_equal(x, c, out=go_right)
+        np.left_shift(idx, 1, out=f)
+        f += go_right
+        np.take(CH, f, out=idx, mode="clip")
 
 
 def _score_matrix(X, disease: str):
     """Vectorized booster traversal: every (row, tree) pair advances down
-    the stacked node table in lock-step (missing → default_left; x < cond
-    → left; leaves self-loop). Matches xgboost's binary:logistic margin
-    accumulation + base_score; ``cond`` holds the leaf weight at leaves."""
+    the stacked node table in lock-step, :data:`_ROW_BLOCK` rows at a
+    time (:func:`_leaf_index`). Matches xgboost's binary:logistic margin
+    accumulation + base_score; ``cond`` holds the leaf weight at leaves.
+    The margin is the float32 leaves in tree order, summed per row as
+    float64, so a row's probability does not depend on the block size.
+
+    Each level costs four gathers over the block's index matrix (feature,
+    value, threshold, child) plus two element-wise passes: at n = 10,000
+    the three boosters take 0.33 s in one process, against 1.86-2.00 s
+    for the earlier full-batch walk with separate left/right gathers
+    (SCALING.md "XGBoost scoring kernel")."""
     import numpy as np
 
-    if disease not in _STACKED_CACHE:
-        _STACKED_CACHE[disease] = _stacked_booster(disease)
-    base_margin, L, R, Fi, C, D, roots, depth = _STACKED_CACHE[disease]
+    table = _stacked_booster(disease)
+    base_margin, C, roots = table[0], table[3], table[5]
     n = X.shape[0]
-    idx = np.broadcast_to(roots, (n, len(roots))).copy()
-    for _ in range(depth):
-        f = Fi[idx]
-        x = np.take_along_axis(X, f, axis=1)
-        go_left = np.where(np.isnan(x), D[idx], x < C[idx])
-        idx = np.where(go_left, L[idx], R[idx])
-    margin = base_margin + C[idx].astype(np.float64).sum(axis=1)
+    shape = (min(n, _ROW_BLOCK), len(roots))
+    idx, f = np.empty(shape, np.int32), np.empty(shape, np.int32)
+    x, c = np.empty(shape, X.dtype), np.empty(shape, C.dtype)
+    go_right = np.empty(shape, bool)
+    margin = np.empty(n)
+    for s in range(0, n, _ROW_BLOCK):
+        b = min(_ROW_BLOCK, n - s)
+        bufs = [a[:b] for a in (idx, f, x, c, go_right)]
+        _leaf_index(X[s : s + b], table, *bufs)
+        margin[s : s + b] = base_margin + C.take(bufs[0]).astype(np.float64).sum(axis=1)
     return _sigmoid(margin)
 
 
@@ -237,7 +296,10 @@ def predict_diseases(features: DataFrame) -> DataFrame:
     parallelism: the 1200-tree UDF is orders of magnitude more expensive
     per byte than the shuffle heuristics assume, so AQE would otherwise
     coalesce a small feature table to ONE partition and serialize the
-    scoring."""
+    scoring. Measured at sf0.1 (15,000 patients, ``session.py``'s
+    session, 4 cores, ``tools/profile_queries.py``): the row takes
+    0.73-0.83 s as written, and 0.92-1.05 s with a coalescable
+    ``repartition(patient_id)``, where AQE put every row into one task."""
     scored_in = features.selectExpr("patient_id", *_imputed_columns()).repartition(
         features.sparkSession.sparkContext.defaultParallelism, F.col("patient_id")
     )

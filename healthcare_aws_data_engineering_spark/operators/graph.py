@@ -27,7 +27,11 @@ Scale notes (100 TB shape)
   it the plan doubles per iteration and the optimizer chokes long
   before the data does. Lazy is not job-free: adaptive execution runs
   the round's shuffle map stage when the checkpoint is marked (see the
-  loop).
+  loop). Once a round's convergence collect has materialized the new
+  generation, the previous one is released
+  (:func:`.staging.release_checkpoint`), so a call leaves one
+  persisted generation, the one its result reads, whatever the round
+  count (:func:`pagerank` does the same).
 - Convergence detection is O(1) driver data: labels only ever decrease,
   so ``(sum(lbl), count)`` is strictly decreasing until fixpoint —
   equality of consecutive rounds IS convergence (no expensive
@@ -44,6 +48,8 @@ Scale notes (100 TB shape)
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .staging import release_checkpoint
 
 
 def connected_components(
@@ -84,15 +90,19 @@ def connected_components(
         # execution runs the shuffle map stage of the groupBy below it
         # while its plan is built, and the convergence collect fires
         # more jobs.
-        state = (
+        nxt = (
             state.unionByName(offered)
             .groupBy("node")
             .agg(F.max("nbrs").alias("nbrs"), F.min("lbl").alias("lbl"))
             .localCheckpoint(eager=False)
         )
-        row = state.agg(
+        row = nxt.agg(
             F.sum("lbl").alias("s"), F.count(F.lit(1)).alias("n")
         ).collect()[0]
+        # the collect materialized the new generation: the old one has
+        # no reader left
+        release_checkpoint(state)
+        state = nxt
         cur = (row["s"], row["n"])
         if cur == prev:
             break
@@ -165,8 +175,10 @@ def pagerank(vertices: DataFrame, edges: DataFrame, n_iter: int = 3) -> DataFram
     full prior-round subtree per reference — the 3^iter blowup) and its
     dangling mass (rank summed over ``deg = 0``) is collected once and
     enters the next round as a driver LITERAL, so PageRank is an
-    iterative operator: its rounds fire jobs while it is built. The
-    final round is left lazy; the caller's action pays it directly.
+    iterative operator: its rounds fire jobs while it is built. Each
+    staged generation is released once the next one is materialized;
+    the final round is left lazy and reads the last staged generation,
+    which stays persisted for the caller's action.
 
     Output: one row per vertex, ``(id, rank_u12)`` — BIGINT grid units
     summing to ≈ PR_GRID (floor losses are deterministic).
@@ -203,6 +215,7 @@ def pagerank(vertices: DataFrame, edges: DataFrame, n_iter: int = 3) -> DataFram
     # the filtered sum is init · |dangling| — the identical BIGINT.
     dang = init * vrow["n_dang"]
     ranks = state.withColumn("rank", F.lit(init).cast("long"))
+    staged = state  # the live generation: released once the next is materialized
     for it in range(n_iter):
         sent = ranks.select(
             F.explode("st.nbrs").alias("id"),
@@ -235,6 +248,8 @@ def pagerank(vertices: DataFrame, edges: DataFrame, n_iter: int = 3) -> DataFram
                 .agg(F.coalesce(F.sum("rank"), F.lit(0)).alias("__dang"))
                 .collect()[0]["__dang"]
             )
+            release_checkpoint(staged)
+            staged = ranks
     return ranks.select(F.col("id").alias("vec_id"), F.col("rank").alias("rank_u12"))
 
 

@@ -30,6 +30,13 @@ The registry holds only DataFrame handles (plans), never rows or
 results, and is keyed by call site, never by data path — each call
 re-persists its own freshly built plan, so nothing data-derived
 survives between invocations.
+
+Iterative operators and the ETL stage with ``localCheckpoint`` instead,
+whose blocks no ``unpersist()`` on the DataFrame reaches: the
+checkpointed RDD is persisted outside the cache manager, and without an
+owner a generation stays until the ContextCleaner happens to collect
+its driver-side handle. :func:`release_checkpoint` is that owner's one
+move.
 """
 
 from __future__ import annotations
@@ -47,6 +54,14 @@ def _unpersist(df: DataFrame) -> None:
         df.unpersist()
     except Exception:
         pass  # session gone / already unpersisted — nothing to hold
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of ``df``, a DataFrame returned by
+    ``localCheckpoint``. Its lineage is truncated, so nothing may read
+    ``df`` afterwards: call it once the last reader has run, or once the
+    next generation that read it is materialized."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def staged_persist(df: DataFrame, key: str) -> DataFrame:

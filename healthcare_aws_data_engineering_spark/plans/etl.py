@@ -56,6 +56,7 @@ from ..functions.fhir_extract import (
     safe_path,
     value_x_string,
 )
+from ..operators.staging import release_checkpoint
 from ..sources.fhir import explode_entries, read_bundles
 from ..sources.writers import write_parquet
 
@@ -246,7 +247,7 @@ def write_curated(
             for name, (t, _) in TABLES.items()
         }
     finally:
-        staged._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        release_checkpoint(staged)
 
 
 def fhir_etl(

@@ -120,3 +120,27 @@ def test_concurrent_callers_leave_no_orphaned_generation(spark):
     orphans = [df for df in made if df.storageLevel.useMemory]
     assert not orphans, f"{len(orphans)} generations left cached with no owner"
     spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("row", ["graph_pagerank", "dup_clusters"])
+def test_iterative_row_call_leaves_at_most_one_checkpoint(spark, row):
+    """PageRank and connected components stage every round with a lazy
+    ``localCheckpoint``; a call must release each generation once the
+    next is materialized, so only the one its result reads stays
+    persisted, not one per round."""
+    from healthcare_aws_data_engineering_spark.plans.analytics_queries import (
+        q_graph_pagerank,
+    )
+    from healthcare_aws_data_engineering_spark.plans.training_data_queries import (
+        q_dup_clusters,
+    )
+
+    query = {"graph_pagerank": q_graph_pagerank, "dup_clusters": q_dup_clusters}[row]
+    spark.catalog.clearCache()
+    query(spark, SF).collect()
+    for _ in range(3):
+        before = _cached_rdd_count(spark)
+        query(spark, SF).collect()
+        added = _cached_rdd_count(spark) - before
+        assert added <= 1, f"{row} left {added} more persisted RDDs"
+    spark.catalog.clearCache()

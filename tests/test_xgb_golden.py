@@ -28,7 +28,9 @@ import numpy as np
 import pytest
 
 from healthcare_aws_data_engineering_spark.ml.inference import (
+    _ROW_BLOCK,
     _score_matrix,
+    _stacked_booster,
     predict_diseases,
 )
 from healthcare_aws_data_engineering_spark.ml.params import (
@@ -37,6 +39,7 @@ from healthcare_aws_data_engineering_spark.ml.params import (
     model_features,
     sklearn_pipeline,
     xgb_model,
+    xgb_trees,
 )
 
 
@@ -224,3 +227,86 @@ def test_scoring_udf_matches_golden(spark):
         assert out[case].cluster == cluster, case
         for d in DISEASES:
             assert out[case][f"prob_{d}"] == pytest.approx(want[d], abs=1e-10), (case, d)
+
+
+# ------------------------------------------- kernel vs a per-tree loop --
+def _per_tree_probs(X, disease: str):
+    """Plain per-tree numpy walk over the unstacked trees: every row
+    starts at node 0 of one tree and advances until all rows sit on a
+    leaf; the leaves land in an (n × trees) float64 matrix summed along
+    axis 1. Also counts the routing cases the rows exercised: a value
+    equal to its split's threshold, and NaN at nodes whose default is
+    left and right."""
+    base, trees = xgb_trees(disease)
+    n = X.shape[0]
+    rows = np.arange(n)
+    leaves = np.empty((n, len(trees)))
+    hits = {"equal": 0, "nan_left": 0, "nan_right": 0}
+    for t, (left, right, feat, cond, dleft) in enumerate(trees):
+        node = np.zeros(n, dtype=np.int64)
+        while True:
+            inner = left[node] != -1
+            if not inner.any():
+                break
+            x = X[rows, np.where(inner, feat[node], 0)]
+            nan = np.isnan(x) & inner
+            hits["equal"] += int((inner & (x == cond[node])).sum())
+            hits["nan_left"] += int((nan & dleft[node]).sum())
+            hits["nan_right"] += int((nan & ~dleft[node]).sum())
+            go_left = np.where(np.isnan(x), dleft[node], x < cond[node])
+            node = np.where(inner, np.where(go_left, left[node], right[node]), node)
+        leaves[:, t] = cond[node]
+    margin = math.log(base / (1.0 - base)) + leaves.sum(axis=1)
+    return 1.0 / (1.0 + np.exp(-margin)), hits
+
+
+def _adversarial_rows(n: int, with_nan: bool):
+    """Rows on the float32 grid whose every feature but the cluster id
+    takes one of that feature's split thresholds (so comparisons hit
+    ``x == cond``, which must go right), with ±inf and, when asked, NaN
+    sprinkled in; the cluster column holds ids 0-3."""
+    rng = np.random.default_rng(17)
+    conds: dict[int, list] = {}
+    for d in DISEASES:
+        for left, _, feat, cond, _ in xgb_trees(d)[1]:
+            for i in np.flatnonzero(left != -1):
+                conds.setdefault(int(feat[i]), []).append(cond[i])
+    X = rng.normal(size=(n, NF)).astype(np.float32)
+    for j, vals in conds.items():
+        X[:, j] = rng.choice(np.asarray(vals, dtype=np.float32), n)
+    X[rng.random(X.shape) < 0.03] = np.inf
+    X[rng.random(X.shape) < 0.03] = -np.inf
+    if with_nan:
+        X[rng.random(X.shape) < 0.1] = np.nan
+    X[:, model_features().index("cluster")] = rng.integers(0, 4, n)
+    return X
+
+
+@pytest.mark.parametrize("with_nan", [False, True], ids=["no_nan", "nan"])
+@pytest.mark.parametrize(
+    "n", [0, 1, _ROW_BLOCK - 1, _ROW_BLOCK, _ROW_BLOCK + 1, 10_000]
+)
+def test_kernel_bits_equal_per_tree_loop(n, with_nan):
+    """The blocked lock-step kernel gives the per-tree loop's exact bits
+    at every batch size around the row block, with and without the
+    missing-value path, on rows built to hit the routing edge cases."""
+    X = _adversarial_rows(n, with_nan)
+    for d in DISEASES:
+        want, hits = _per_tree_probs(X, d)
+        got = _score_matrix(X, d)
+        assert got.dtype == np.float64 and got.shape == (n,)
+        assert np.array_equal(got.view(np.int64), want.view(np.int64)), d
+        if n >= _ROW_BLOCK:
+            assert hits["equal"] > 0, (d, hits)
+            assert (hits["nan_left"] > 0 and hits["nan_right"] > 0) == with_nan, (d, hits)
+
+
+def test_boosters_compile_once_per_process():
+    """Repeated scoring calls reuse each disease's compiled node table:
+    the compile is what a Python worker would otherwise pay per task."""
+    _stacked_booster.cache_clear()
+    X = _adversarial_rows(8, with_nan=True)
+    for _ in range(3):
+        for d in DISEASES:
+            _score_matrix(X, d)
+    assert _stacked_booster.cache_info().misses == len(DISEASES)

@@ -1,11 +1,17 @@
 """Empirical scaling probe: replicate the sf0.1 corpus ×M (disjoint id
-spaces) and time the heavy operators at each multiplier.
+spaces) and time the heavy operators at each multiplier. The
+``ml_risk_scores`` row replicates the ``customer`` table the same way,
+with ``events`` re-keyed to match, and scores it through
+``predict_diseases``.
 
 The point is evidence for the 100 TB design claims: bucketed/banded
 operators must scale near-linearly in corpus size (cost ∝ rows, bucket
 fan-out bounded by caps), with NO quadratic blowup. Run:
 
-    python tools/scale_probe.py [multipliers ...]      # default 1 2 4
+    python tools/scale_probe.py [multipliers ...] [ops ...]
+
+Multipliers default to 1 2 4; naming operators (for example
+``ml_risk_scores``) runs only those rows.
 
 Prints one JSON line per (operator, M) with wall seconds and output
 rows; a final summary line reports the cost ratio per doubling (≈2 ⇒
@@ -22,6 +28,8 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import DataFrame, functions as F
 
+from healthcare_aws_data_engineering_spark.ml.features import feature_table
+from healthcare_aws_data_engineering_spark.ml.inference import predict_diseases
 from healthcare_aws_data_engineering_spark.operators import similarity as S
 from healthcare_aws_data_engineering_spark.operators.dedup import (
     minhash_lsh_pairs,
@@ -60,20 +68,28 @@ def timed(fn):
 
 
 def main() -> None:
-    ms = [int(x) for x in sys.argv[1:]] or [1, 2, 4]
+    args = sys.argv[1:]
+    ms = [int(x) for x in args if x.isdigit()] or [1, 2, 4]
+    ops = {x for x in args if not x.isdigit()}
     spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     embs0 = load_table(spark, SF_DIR, "embeddings")
     docs0 = load_table(spark, SF_DIR, "documents")
+    customer0 = load_table(spark, SF_DIR, "customer")
+    events0 = load_table(spark, SF_DIR, "events")
     planes = S.rademacher_planes(16, 64)
     results: dict[str, dict[int, float]] = {}
     for m in ms:
         embs = replicate(embs0, "vec_id", m).persist()
         docs = replicate(docs0, "doc_id", m).persist()
-        embs.count(), docs.count()
+        customer = replicate(customer0, "c_custkey", m).persist()
+        events = replicate(events0, "user_id", m).persist()
+        embs.count(), docs.count(), customer.count(), events.count()
         cents = S.sample_centroids(embs, 16)
 
         def run(name, fn):
+            if ops and name not in ops:
+                return
             sec, rows = timed(fn)
             results.setdefault(name, {})[m] = sec
             print(json.dumps({"op": name, "m": m, "sec": sec, "rows": rows}),
@@ -121,16 +137,26 @@ def main() -> None:
             "embedding_near_dup_derived",
             lambda: S.embedding_near_dup(embs, threshold=0.35, bands=8),
         )
-        edges = (
-            knn_graph(embs, k=3, plane_matrix=planes, bands=2)
-            .select(F.col("vec_id").alias("src"),
-                    F.col("neighbor_id").alias("dst"))
-            .persist()
+        if not ops or "pagerank_3it" in ops:
+            edges = (
+                knn_graph(embs, k=3, plane_matrix=planes, bands=2)
+                .select(F.col("vec_id").alias("src"),
+                        F.col("neighbor_id").alias("dst"))
+                .persist()
+            )
+            edges.count()  # time PageRank alone, not the k-NN edge build
+            run("pagerank_3it", lambda: pagerank(embs, edges, n_iter=3))
+            edges.unpersist()
+        # the filter reads a probability, so the count runs the scoring
+        # UDF (a bare count would prune it)
+        run(
+            "ml_risk_scores",
+            lambda: predict_diseases(feature_table(events, customer)).filter(
+                "prob_cvd >= 0"
+            ),
         )
-        edges.count()  # time PageRank alone, not the k-NN edge build
-        run("pagerank_3it", lambda: pagerank(embs, edges, n_iter=3))
-        edges.unpersist()
-        embs.unpersist(), docs.unpersist()
+        for df in (embs, docs, customer, events):
+            df.unpersist()
     # per-doubling cost ratios
     summary = {}
     for op, by_m in results.items():
